@@ -37,6 +37,20 @@ object Bench {
     "q5_supplier_volume", "multimodal_features",
     "dedup_setsim_prefix", "streaming_dedup_filesrc", "knn_ivf_pq_serve")
 
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in builder-authored SQL would otherwise make a
+    * consumer's `json.load` fail. Shared with [[Verify]]'s `oracle_sql.json`.
+    */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-bench")
@@ -98,12 +112,6 @@ object Bench {
     // the exit code stays 0 so the driver still harvests the line).
     case class QRes(name: String, sec: Double, jobs: Int, stages: Int,
         tasks: Int, spread: Double, err: Option[String])
-    def jsonStr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       val samples = (1 to runsPerQuery).map { i =>

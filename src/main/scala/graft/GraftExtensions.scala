@@ -2,58 +2,40 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.plans.{CosineSimilarity, CountMinSketchAgg, DotProductLong, MvRewrite, RewriteRankFilterToTopK, TopKStrategy, UnicodeFold, WordNgrams}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.plans.{CosineSimilarity, CountMinSketchAgg, DotProductLong, LogHistSketchAgg, TopKStrategy, UnicodeFold, WordNgrams}
 
-/** Canonical extension registration: start a session with
+/** The engine's session extensions, installed on every session by
+  * [[Sessions.build]] (`withExtensions`) — the one wiring point for:
+  *  - the SQL functions `cosine_sim`, `dot_i64`, `word_ngrams`,
+  *    `cms_sketch`, `unicode_fold` and `loghist_sketch`;
+  *  - the `table_changes(...)` table-valued function;
+  *  - the [[graft.plans.TopKPerGroupPlan]] planner strategy.
   *
-  * {{{
-  * spark.sql.extensions=graft.GraftExtensions
-  * }}}
-  *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`) and
-  * every custom piece of this engine is installed session-wide:
-  * `cosine_sim` as a SQL function and the [[graft.plans.TopKPerGroupPlan]]
-  * planner strategy. The operator entry points also self-register at first
-  * use (`CosineSimilarity.register`, `experimental.extraStrategies`), so
-  * the extension class is the deployment-grade path, not a prerequisite.
+  * No optimizer rule is injected. [[graft.plans.MvRewrite]] is armed per
+  * session clone with `MvRewrite.install`, because the MV gates use the
+  * un-armed base session as the control their answers are compared
+  * against. [[graft.plans.RewriteRankFilterToTopK]] stays opt-in, so the
+  * plans of hand-written `row_number` windows do not change under it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("dot_i64"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "dot_i64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProductLong(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordNgrams.fromExprs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("cms_sketch"),
-      new ExpressionInfo(classOf[CountMinSketchAgg].getName, "cms_sketch"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CountMinSketchAgg(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("unicode_fold"),
-      new ExpressionInfo(classOf[UnicodeFold].getName, "unicode_fold"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        UnicodeFold(exprs.head)))
-    // SQL TVF surface over the catalog change feed:
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     // SELECT * FROM table_changes('cat.ns.t', start[, end])
     e.injectTableFunction(graft.sources.v2.TableChanges.functionDescription)
     e.injectPlannerStrategy(_ => TopKStrategy)
-    // user-written `row_number().over(...) <= k` + drop(rn) windows are
-    // silently upgraded to the bounded-heap TopKPerGroup operator
-    e.injectOptimizerRule(_ => RewriteRankFilterToTopK)
-    // aggregates over a registered base table transparently answer from
-    // the materialized view when it is fresh (no-op with no registrations)
-    e.injectOptimizerRule(_ => MvRewrite)
   }
+}
+
+object GraftExtensions {
+  /** (SQL name, expression class, builder) of every injected function. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], exprs => CosineSimilarity(exprs(0), exprs(1))),
+    ("dot_i64", classOf[DotProductLong], exprs => DotProductLong(exprs(0), exprs(1))),
+    ("word_ngrams", classOf[WordNgrams], WordNgrams.fromExprs),
+    ("cms_sketch", classOf[CountMinSketchAgg], exprs => CountMinSketchAgg(exprs.head)),
+    ("unicode_fold", classOf[UnicodeFold], exprs => UnicodeFold(exprs.head)),
+    ("loghist_sketch", classOf[LogHistSketchAgg], exprs => LogHistSketchAgg(exprs.head)))
 }

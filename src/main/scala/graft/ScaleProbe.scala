@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.v2.MemCatalog.deleteRecursively
 
 /** SCALE PROBE (diagnostic artifact generator, like [[Explain]] — not
   * part of the query registry).
@@ -178,16 +179,6 @@ object ScaleProbe {
       .shuffle(a.toList).mkString
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
-
   /** Write `df` as ONE parquet FILE at `dest` (fixture layout). */
   private def writeSingleFile(df: DataFrame, dest: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -279,11 +270,9 @@ object ScaleProbe {
   private def ivmRun(spark: SparkSession, dir: String, label: String): (Long, Double, Double, Double) = {
     import graft.sources.v2.MemCatalog
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftivm",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.sources.Tables.orders(ss, dir).createOrReplaceTempView("graft_ivm_orders")
-    ss.sql(s"DROP TABLE IF EXISTS graftivm.t.base_$label")
-    ss.sql(s"DROP TABLE IF EXISTS graftivm.t.mv_$label")
+    ss.sql(s"DROP TABLE IF EXISTS graftmem.ivm.base_$label")
+    ss.sql(s"DROP TABLE IF EXISTS graftmem.ivm.mv_$label")
     // base rows ∝ dir rows (keys NOT folded — this probe is about base
     // size); MoR so the fixed change set writes O(change) deltas.
     // CONSTANT FILE SIZE, GROWING FILE COUNT — the production invariant
@@ -297,36 +286,35 @@ object ScaleProbe {
     val srcRows = graft.sources.Tables.orders(ss, dir).count()
     val parts = math.max(4L, srcRows / 10000L)
     ss.sql(
-      s"""CREATE TABLE graftivm.t.base_$label
+      s"""CREATE TABLE graftmem.ivm.base_$label
          |(k BIGINT, cat BIGINT, cents BIGINT)
          |TBLPROPERTIES ('graft.dml'='mor', 'clusterBy'='k',
          |               'clusterParts'='$parts')""".stripMargin)
     ss.sql(
-      s"""INSERT INTO graftivm.t.base_$label
+      s"""INSERT INTO graftmem.ivm.base_$label
          |SELECT o_orderkey AS k, CAST(o_orderkey % 97 AS BIGINT) AS cat,
          |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
          |FROM graft_ivm_orders""".stripMargin)
-    val baseRows = ss.sql(s"SELECT count(*) FROM graftivm.t.base_$label").head().getLong(0)
+    val baseRows = ss.sql(s"SELECT count(*) FROM graftmem.ivm.base_$label").head().getLong(0)
     // the contrast: a full recompute of the aggregate is ∝ base size
     val tr0 = System.nanoTime()
-    ss.sql(s"SELECT cat, count(*) AS n, sum(cents) AS sc FROM graftivm.t.base_$label GROUP BY cat").count()
+    ss.sql(s"SELECT cat, count(*) AS n, sum(cents) AS sc FROM graftmem.ivm.base_$label GROUP BY cat").count()
     val recompute = (System.nanoTime() - tr0) / 1e9
     // seed the MV (one recompute, not timed) and pin the version AFTER it
-    ss.sql(s"CREATE TABLE graftivm.t.mv_$label (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    ss.sql(s"INSERT INTO graftivm.t.mv_$label " +
-      s"SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat")
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftivm", s"t__base_$label")
+    ss.sql(s"CREATE TABLE graftmem.ivm.mv_$label (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
+    ss.sql(s"INSERT INTO graftmem.ivm.mv_$label " +
+      s"SELECT cat, count(*), sum(cents) FROM graftmem.ivm.base_$label GROUP BY cat")
+    val baseDir = MemCatalog.tableDir(spark, s"graftmem.ivm.base_$label")
     val vSeed = MemCatalog.currentVersion(baseDir)
     // FIXED change set, identical at every scale: 200 appended rows with
     // keys above any copy's stride, plus an update of the ≤100 smallest
     // keys (copy 0's head — the same physical rows at sf0.1 and sf1)
-    ss.sql(s"INSERT INTO graftivm.t.base_$label " +
+    ss.sql(s"INSERT INTO graftmem.ivm.base_$label " +
       "SELECT id, CAST(id % 97 AS BIGINT), id FROM range(20000000000, 20000000200)")
     val k100 = ss.sql(
-      s"SELECT max(k) FROM (SELECT k FROM graftivm.t.base_$label ORDER BY k LIMIT 100)")
+      s"SELECT max(k) FROM (SELECT k FROM graftmem.ivm.base_$label ORDER BY k LIMIT 100)")
       .head().getLong(0)
-    ss.sql(s"UPDATE graftivm.t.base_$label SET cents = cents + 1 WHERE k <= $k100")
+    ss.sql(s"UPDATE graftmem.ivm.base_$label SET cents = cents + 1 WHERE k <= $k100")
     // timed: the incremental maintenance alone — net CDF from vSeed+1,
     // signed-delta MERGE per micro-batch (Gupta–Mumick)
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ivmprobe-$label")
@@ -334,14 +322,14 @@ object ScaleProbe {
     val q = ss.readStream
       .option("changefeed", "true").option("netChanges", "true")
       .option("startingVersion", vSeed + 1)
-      .table(s"graftivm.t.base_$label")
+      .table(s"graftmem.ivm.base_$label")
       .select(col("cat"), col("cents"), col("_change_type"))
       .writeStream.option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val view = s"graft_ivm_batch_$label"
         batch.createOrReplaceTempView(view)
         batch.sparkSession.sql(
-          s"""MERGE INTO graftivm.t.mv_$label m USING (
+          s"""MERGE INTO graftmem.ivm.mv_$label m USING (
              |  SELECT cat,
              |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
              |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
@@ -362,13 +350,13 @@ object ScaleProbe {
     // correctness rider: incremental == recompute, else the timing is void
     val bad = ss.sql(
       s"""SELECT count(*) FROM (
-         |  (SELECT cat, n_rows, sum_cents FROM graftivm.t.mv_$label
+         |  (SELECT cat, n_rows, sum_cents FROM graftmem.ivm.mv_$label
          |   EXCEPT
-         |   SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat)
+         |   SELECT cat, count(*), sum(cents) FROM graftmem.ivm.base_$label GROUP BY cat)
          |  UNION ALL
-         |  (SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat
+         |  (SELECT cat, count(*), sum(cents) FROM graftmem.ivm.base_$label GROUP BY cat
          |   EXCEPT
-         |   SELECT cat, n_rows, sum_cents FROM graftivm.t.mv_$label))""".stripMargin)
+         |   SELECT cat, n_rows, sum_cents FROM graftmem.ivm.mv_$label))""".stripMargin)
       .head().getLong(0)
     require(bad == 0, s"IVM probe: maintained MV diverged from recompute at $label")
     deleteRecursively(ckpt)
@@ -378,19 +366,16 @@ object ScaleProbe {
     // aggregate above): served latency must stay flat as the base grows
     // 10×, because the rewritten plan's input is the MV's 97 rows.
     val s2 = ss.newSession()
-    s2.conf.set("spark.sql.catalog.graftivm",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.plans.MvRewrite.install(s2)
-    val mvDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftivm", s"t__mv_$label")
-    s2.sql(s"ALTER TABLE graftivm.t.mv_$label SET TBLPROPERTIES(" +
+    val mvDir = MemCatalog.tableDir(spark, s"graftmem.ivm.mv_$label")
+    s2.sql(s"ALTER TABLE graftmem.ivm.mv_$label SET TBLPROPERTIES(" +
       s"'graft.mv.basedOn' = '${MemCatalog.currentVersion(baseDir)}')")
     val d = graft.plans.MvRewrite.registerMaintained(s2,
-      s"graftivm.t.base_$label", s"graftivm.t.mv_$label", baseDir, mvDir,
+      s"graftmem.ivm.base_$label", s"graftmem.ivm.mv_$label", baseDir, mvDir,
       Seq("cat"), Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
     val serve = try {
       val aggSql = s"SELECT cat, count(*) AS n, sum(cents) AS sc " +
-        s"FROM graftivm.t.base_$label GROUP BY cat"
+        s"FROM graftmem.ivm.base_$label GROUP BY cat"
       val armed = s2.sql(aggSql).queryExecution.optimizedPlan.collect {
         case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
           s.relation.table.name()
@@ -425,32 +410,29 @@ object ScaleProbe {
     */
   private def reclusterRun(spark: SparkSession, dir: String, label: String): (Long, Long, Double) = {
     import graft.sources.v2.MemCatalog
-    spark.conf.set("spark.sql.catalog.graftrcl",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.sources.Tables.orders(spark, dir).createOrReplaceTempView(s"graft_rcl_orders_$label")
-    spark.sql(s"DROP TABLE IF EXISTS graftrcl.t.base_$label")
+    spark.sql(s"DROP TABLE IF EXISTS graftmem.rcl.base_$label")
     val srcRows = graft.sources.Tables.orders(spark, dir).count()
     val parts = math.max(4L, srcRows / 10000L)
     spark.sql(
-      s"""CREATE TABLE graftrcl.t.base_$label (k BIGINT, cents BIGINT)
+      s"""CREATE TABLE graftmem.rcl.base_$label (k BIGINT, cents BIGINT)
          |TBLPROPERTIES ('clusterBy'='k', 'clusterParts'='$parts')""".stripMargin)
     spark.sql(
-      s"""INSERT INTO graftrcl.t.base_$label
+      s"""INSERT INTO graftmem.rcl.base_$label
          |SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT)
          |FROM graft_rcl_orders_$label""".stripMargin)
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftrcl", s"t__base_$label")
-    val baseRows = spark.sql(s"SELECT count(*) FROM graftrcl.t.base_$label")
+    val tdir = MemCatalog.tableDir(spark, s"graftmem.rcl.base_$label")
+    val baseRows = spark.sql(s"SELECT count(*) FROM graftmem.rcl.base_$label")
       .head().getLong(0)
     // target = the smallest base file: every base file is ≥ target, so
     // none is a size candidate and the timed call's work is the tail only
     val target = MemCatalog.liveFiles(tdir).map(java.nio.file.Files.size).min
     // the constant stale tail: clustering unset → the writer stamps no
     // sort order; restored after → base stamps still match, tail is stale
-    spark.sql(s"ALTER TABLE graftrcl.t.base_$label UNSET TBLPROPERTIES ('clusterBy', 'clusterParts')")
-    spark.sql(s"INSERT INTO graftrcl.t.base_$label " +
+    spark.sql(s"ALTER TABLE graftmem.rcl.base_$label UNSET TBLPROPERTIES ('clusterBy', 'clusterParts')")
+    spark.sql(s"INSERT INTO graftmem.rcl.base_$label " +
       "SELECT 2000000000 + id, id * 7 FROM range(0, 20000)")
-    spark.sql(s"ALTER TABLE graftrcl.t.base_$label SET TBLPROPERTIES " +
+    spark.sql(s"ALTER TABLE graftmem.rcl.base_$label SET TBLPROPERTIES " +
       s"('clusterBy'='k', 'clusterParts'='$parts')")
     val staleRows = 20000L
     val t0 = System.nanoTime()
@@ -461,7 +443,7 @@ object ScaleProbe {
     require(entries.nonEmpty && entries.forall(e =>
       e.sortedBy.contains("k") && !e.stats.contains("#run")),
       s"recluster probe: post-OPTIMIZE state not converged at $label")
-    val n = spark.sql(s"SELECT count(*) FROM graftrcl.t.base_$label").head().getLong(0)
+    val n = spark.sql(s"SELECT count(*) FROM graftmem.rcl.base_$label").head().getLong(0)
     require(n == baseRows + staleRows,
       s"recluster probe: row count diverged at $label ($n vs ${baseRows + staleRows})")
     (baseRows, staleRows, maintain)
@@ -481,22 +463,19 @@ object ScaleProbe {
     */
   private def routeAbRun(spark: SparkSession, dir: String): String = {
     import graft.sources.v2.MemCatalog
-    spark.conf.set("spark.sql.catalog.graftrab",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.sources.Tables.orders(spark, dir).createOrReplaceTempView("graft_rab_orders")
     def mk(label: String, props: String): (Double, java.nio.file.Path) = {
-      spark.sql(s"DROP TABLE IF EXISTS graftrab.t.$label")
-      spark.sql(s"CREATE TABLE graftrab.t.$label (band BIGINT, cents BIGINT) " +
+      spark.sql(s"DROP TABLE IF EXISTS graftmem.rab.$label")
+      spark.sql(s"CREATE TABLE graftmem.rab.$label (band BIGINT, cents BIGINT) " +
         s"TBLPROPERTIES ($props)")
       val t0 = System.nanoTime()
       spark.sql(
-        s"""INSERT INTO graftrab.t.$label
+        s"""INSERT INTO graftmem.rab.$label
            |SELECT CAST(o_custkey % 64 AS BIGINT),
            |       CAST(round(o_totalprice * 100) AS BIGINT)
            |FROM graft_rab_orders""".stripMargin)
       ((System.nanoTime() - t0) / 1e9,
-        java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), "graft-memcat-graftrab", s"t__$label"))
+        MemCatalog.tableDir(spark, s"graftmem.rab.$label"))
     }
     val (wRoute, dRoute) = mk("route",
       "'graft.partition'='identity(band)','graft.partitionRoute'='true'," +
@@ -516,7 +495,7 @@ object ScaleProbe {
     val (nfR, awR, mwR, fpkR) = layout(dRoute)
     val (nfC, awC, mwC, fpkC) = layout(dClust)
     def probe(tbl: String, d: java.nio.file.Path): (Double, Int, Int) = {
-      val sql = s"SELECT count(*), sum(cents) FROM graftrab.t.$tbl WHERE band = 17"
+      val sql = s"SELECT count(*), sum(cents) FROM graftmem.rab.$tbl WHERE band = 17"
       spark.sql(sql).collect() // warm (file listing + codegen)
       val t0 = System.nanoTime()
       spark.sql(sql).collect()

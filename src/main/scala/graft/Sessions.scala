@@ -2,7 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory shared by Verify/Bench/tests.
+/** Session factory shared by Verify/Bench/tests, and the ONE place a
+  * session is wired. Besides the tuning confs below, every session built
+  * here carries:
+  *  - the `graftmem` ([[graft.sources.v2.MemCatalog]]) and `graftcat`
+  *    ([[graft.sources.v2.SeqCatalog]]) catalogs, as builder configs;
+  *  - [[GraftExtensions]]: the engine's SQL functions, the `table_changes`
+  *    TVF and the top-k planner strategy.
+  * Builder options and extensions carry over to `spark.newSession()`
+  * clones, so a clone is wired exactly like its parent and no query ever
+  * sets a catalog or registers a function on a live session (`Verify`
+  * runs 8 queries at once on one session).
   *
   * The reference's whole control plane — 1 s heartbeat polling, 4 s
   * (disabled) timeout, death-triggered task reassignment, the `tasks==4`
@@ -53,5 +63,8 @@ object Sessions {
       // events.ts is TIMESTAMP(NANOS); surface as long, converted in Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.catalog.graftmem", classOf[graft.sources.v2.MemCatalog].getName)
+      .config("spark.sql.catalog.graftcat", classOf[graft.sources.v2.SeqCatalog].getName)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.Bench.jsonStr
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
@@ -43,13 +45,7 @@ object Verify {
           val d = Paths.get(s"$outDir/$name")
           try {
             // replace any partial dump with an explicit error marker
-            if (Files.exists(d)) {
-              import scala.jdk.CollectionConverters._
-              val walk = Files.walk(d)
-              try walk.sorted(java.util.Comparator.reverseOrder())
-                .iterator().asScala.foreach(Files.deleteIfExists(_))
-              finally walk.close()
-            }
+            graft.sources.v2.MemCatalog.deleteRecursively(d)
             Files.createDirectories(d)
             Files.writeString(d.resolve("_GRAFT_ERROR.txt"), msg + "\n")
           } catch { case _: Throwable => () }
@@ -60,26 +56,14 @@ object Verify {
     scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures), 60.minutes)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (!errors.isEmpty) {
       import scala.jdk.CollectionConverters._
       val errJson = errors.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
     }
     spark.stop()

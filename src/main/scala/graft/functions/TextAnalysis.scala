@@ -182,7 +182,6 @@ object TextAnalysis {
     */
   def winnowing(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.WordNgrams.register(spark)
     val w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-3, 0)
     graft.operators.Dedup.widen(Tables.documents(spark, dir))
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
@@ -273,7 +272,6 @@ object TextAnalysis {
     * averages of identical per-row doubles, rounded at 4dp.
     */
   def bigramLogprob(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.WordNgrams.register(spark)
     val docs = graft.operators.Dedup.widen(Tables.documents(spark, dir))
     val words = docs.select(col("doc_id"),
       split(trim(TextPipeline.normalize(col("text"))), "\\s+").as("words"))
@@ -618,7 +616,6 @@ object TextAnalysis {
   val BoilerplateMinDf = 3
 
   def boilerplateNgrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.WordNgrams.register(spark)
     graft.operators.Dedup.widen(Tables.documents(spark, dir))
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= BoilerplateN)
@@ -673,7 +670,6 @@ object TextAnalysis {
 
   private def bpeTrain(spark: SparkSession, dir: String): (Seq[DataFrame], DataFrame) = {
     import org.apache.spark.sql.DataFrame
-    graft.plans.WordNgrams.register(spark)
     val words = graft.operators.TextPipeline.tokenize(Tables.documents(spark, dir))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .withColumn("seq", concat(lit(" "),
@@ -741,7 +737,6 @@ object TextAnalysis {
 
   def bpeMergesBatched(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.DataFrame
-    graft.plans.WordNgrams.register(spark)
     val words = graft.operators.TextPipeline.tokenize(Tables.documents(spark, dir))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .withColumn("seq", concat(lit(" "),
@@ -922,7 +917,6 @@ object TextAnalysis {
     * path at corpus scale.
     */
   def accentFold(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.UnicodeFold.register(spark)
     Tables.documents(spark, dir)
       .withColumn("accented",
         when(col("doc_id") % 3 === 0, translate(col("text"), "aeioun", "áéíóúñ"))

@@ -83,7 +83,6 @@ object Dedup {
     * HOF pitfall); the generator streams shingles row-at-a-time.
     */
   def shinglesRaw(docs: DataFrame): DataFrame = {
-    graft.plans.WordNgrams.register(docs.sparkSession)
     widen(docs)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= 5)
@@ -267,7 +266,6 @@ object Dedup {
   }
 
   private def docWords(docs: DataFrame): DataFrame = {
-    graft.plans.WordNgrams.register(docs.sparkSession)
     docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
   }
 

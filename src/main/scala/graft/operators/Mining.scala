@@ -37,7 +37,6 @@ object Mining {
     * in text order — shared by [[skipgramPairsOn]] and [[pmiRatioOn]].
     */
   private def windowPairs(docs: DataFrame): DataFrame = {
-    graft.plans.WordNgrams.register(docs.sparkSession)
     val words = docs
       .select(split(trim(TextPipeline.normalize(col("text"))), "\\s+").as("words"))
     def endpoints(n: Int): DataFrame =
@@ -642,7 +641,6 @@ object Mining {
     * correctness, not just closeness.
     */
   def quantileSketchMerge(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.LogHistQuantiles.register(spark)
     import graft.plans.LogHistQuantiles.SubBuckets
     val cents = Tables.orders(spark, dir)
       .select(col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -673,7 +671,6 @@ object Mining {
     * the ungrouped query deliberately bounds by sketch size.
     */
   def quantileSketchGrouped(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.LogHistQuantiles.register(spark)
     import graft.plans.LogHistQuantiles.SubBuckets
     val v = Tables.lineitem(spark, dir)
       .select(col("l_returnflag"),

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.CosineSimilarity
 import graft.sources.Tables
 
 /** Parameterized sign-LSH: n deterministic integer hyperplanes over the FULL
@@ -84,8 +83,6 @@ object Similarity {
 
   /** Embedding widened to double (cosine math must be f64 on both engines). */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.plans.DotProductLong.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS double))").as("v"))
@@ -129,7 +126,6 @@ object Similarity {
     * partition pruning, so candidate volume is the class size, not N.
     */
   def knnFiltered(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val all = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS double))").as("v"))
@@ -680,9 +676,6 @@ object Similarity {
     * with the same codebooks would produce.
     */
   private[graft] def encodeWith(idx: DataFrame, vecsQv: DataFrame): DataFrame = {
-    // the input may be synthetic (not routed through vecs()), and on a
-    // warm artifact nothing else registers the native kernel first
-    graft.plans.DotProductLong.register(vecsQv.sparkSession)
     // ONE pass (r14): the previous shape ran FIVE argmin chains — coarse
     // assignCells plus one assignSub per subspace, each a crossJoin +
     // rank window + rn=1 filter — then joined the five frames back on
@@ -931,8 +924,6 @@ object Similarity {
     * scheduled rebuild.
     */
   def knnIvfPqLivePipeline(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     val cat = graft.sources.v2.MemCatalog
     val idx = ivfPqIndex(spark, dir)
     ivfPqCodes(spark, dir).count() // ensure the canonical lists exist
@@ -940,8 +931,7 @@ object Similarity {
     val live = cloneCodesDir(canonical, "graft-ivfpq-livepipe")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.annliv")
     spark.sql("CREATE TABLE graftmem.tmp.annliv (vec_id BIGINT, vec ARRAY<BIGINT>)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__annliv")
+    val tdir = graft.sources.v2.MemCatalog.tableDir(spark, "graftmem.tmp.annliv")
     val watermark = new java.util.concurrent.atomic.AtomicLong(-1L)
     cat.onCommit(tdir) { () =>
       val from = watermark.get()
@@ -1159,7 +1149,6 @@ object Similarity {
     * sums are partial/final split, and the wide vectors never shuffle.
     */
   def embeddingCentroids(spark: SparkSession, dir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("label"),
         expr(SignLsh.quantExpr("transform(embedding, x -> CAST(x AS double))")).as("qv"))

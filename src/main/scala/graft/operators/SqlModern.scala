@@ -82,7 +82,7 @@ object SqlModern {
   def sqlUdf(spark: SparkSession, dir: String): DataFrame = {
     // create-if-absent: a repeated run's OR REPLACE would spam the
     // SimpleFunctionRegistry "replaced a previously registered function"
-    // WARN into every bench/verify log (same discipline as FunctionReg)
+    // WARN into every bench/verify log
     if (!spark.catalog.functionExists("graft_band"))
       spark.sql(
         """CREATE TEMPORARY FUNCTION graft_band(p DOUBLE) RETURNS STRING

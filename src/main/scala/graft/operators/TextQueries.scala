@@ -52,7 +52,6 @@ object TextQueries {
     // cell analytically (sum of counts of ALL colliding corpus words), so
     // the gate verifies the sketch's exact collision algebra, not a bound.
     "cms_word_freq" -> ((s, d) => {
-      graft.plans.CountMinSketchAgg.register(s)
       import graft.plans.CountMinSketchAgg.{Depth, Width}
       val toks = TextPipeline.tokenize(Tables.documents(s, d))
       val sketch = toks.agg(expr("cms_sketch(word)").as("sk"))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,13 +73,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register `cosine_sim(a, b)` in the session's function registry so it
-    * is usable from both `expr(...)` and SQL text. Idempotent.
-    */
-  def register(spark: SparkSession): Unit =
-    FunctionReg.ensure(spark,
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)))
 }

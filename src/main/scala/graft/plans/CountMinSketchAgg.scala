@@ -3,7 +3,6 @@ package graft.plans
 import java.nio.ByteBuffer
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -94,10 +93,4 @@ case class CountMinSketchAgg(
 object CountMinSketchAgg {
   /** Hash rows (independent estimators) and counters per row. */
   val Depth = 4
-  val Width = 64
-
-  /** Register `cms_sketch(col)` as a SQL aggregate. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    FunctionReg.ensure(spark,
-      "cms_sketch", exprs => CountMinSketchAgg(exprs.head))
-}
+  val Width = 64}

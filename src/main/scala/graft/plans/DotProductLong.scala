@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,11 +63,4 @@ case class DotProductLong(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProductLong {
-  /** Register `dot_i64(a, b)` in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    FunctionReg.ensure(spark,
-      "dot_i64", exprs => DotProductLong(exprs(0), exprs(1)))
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -107,10 +106,4 @@ object LogHistQuantiles {
     val off = v - (1L << e)
     val sub = if (e >= 5) (off >> (e - 5)).toInt else ((off << 5) >> e).toInt
     e * SubBuckets + sub
-  }
-
-  /** Register `loghist_sketch(col)` as a SQL aggregate. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    FunctionReg.ensure(spark,
-      "loghist_sketch", exprs => LogHistSketchAgg(exprs.head))
-}
+  }}

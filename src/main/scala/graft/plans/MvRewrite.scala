@@ -61,14 +61,16 @@ import org.apache.spark.sql.types.DoubleType
   * one MV serving two aggregates in a single query never duplicates
   * attribute ids.
   *
-  * INSTALLATION: `injectOptimizerRule` via [[graft.GraftExtensions]]
-  * (runs inside the operator-optimization batch, pre-V2-pushdown — the
-  * base appears as [[DataSourceV2Relation]]) or per-session
-  * [[MvRewrite.install]] (`experimental.extraOptimizations`, the "User
-  * Provided Optimizers" batch, post-pushdown — the base appears as
-  * [[DataSourceV2ScanRelation]]). The matcher accepts both node shapes;
-  * the grafted MV subtree is the already-pushed-down scan relation
-  * captured at registration, valid in either position.
+  * INSTALLATION: per session clone through [[MvRewrite.install]]
+  * (`experimental.extraOptimizations`, the "User Provided Optimizers"
+  * batch, post-pushdown — the base appears as
+  * [[DataSourceV2ScanRelation]]). It is deliberately NOT a session-wide
+  * extension: the MV gates compare the armed clone's answer against the
+  * un-armed base session, and arming every session would compare the MV
+  * with itself. The matcher also accepts the pre-pushdown
+  * [[DataSourceV2Relation]] shape; the grafted MV subtree is the
+  * already-pushed-down scan relation captured at registration, valid in
+  * either position.
   *
   * At 100 TB this is the difference between a dashboard aggregate
   * costing O(MV) — thousands of rows — and O(base) — the full fact scan:

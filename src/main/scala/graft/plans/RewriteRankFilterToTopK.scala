@@ -23,7 +23,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    heap would need the full composite ordering — not yet implemented);
   *  - the enclosing Project DROPS the rank column (so no output needs it).
   *
-  * Installed via [[graft.GraftExtensions]] (`injectOptimizerRule`).
+  * Not installed on any session: arming it would change the plan of every
+  * hand-written `row_number` window. Apply it explicitly to a plan.
   */
 object RewriteRankFilterToTopK extends Rule[LogicalPlan] {
 

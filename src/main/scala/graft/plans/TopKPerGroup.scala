@@ -31,7 +31,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * inherits SortExec's spill machinery rather than OOMing.
   *
   * Wiring: [[TopKPerGroupPlan]] (logical) → [[TopKStrategy]] (planner rule,
-  * injected via `spark.experimental.extraStrategies`) → [[TopKPerGroupExec]]
+  * injected by [[graft.GraftExtensions]]) → [[TopKPerGroupExec]]
   * (physical). Entry point: [[TopKPerGroup.apply]].
   */
 case class TopKPerGroupPlan(
@@ -159,9 +159,6 @@ object TopKPerGroup {
       desc: Boolean = true,
       sortBased: Boolean = false): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
-    }
     val lp = df.queryExecution.analyzed
     val resolve = lp.output.map(a => a.name -> a).toMap
     def attr(name: String): Attribute =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -75,8 +74,4 @@ object UnicodeFold {
     }
     true
   }
-
-  def register(spark: SparkSession): Unit =
-    FunctionReg.ensure(spark,
-      "unicode_fold", exprs => UnicodeFold(exprs.head))
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -79,9 +78,4 @@ object WordNgrams {
     require(v != null && v.isInstanceOf[Number],
       s"word_ngrams(words, n) requires a non-null integer literal n, got $v")
     WordNgrams(exprs(0), v.asInstanceOf[Number].intValue())
-  }
-
-  /** Register `word_ngrams(words, n)` in the session registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    FunctionReg.ensure(spark, "word_ngrams", fromExprs)
-}
+  }}

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.v2.MemCatalog
 
 /** Non-parquet SOURCE coverage at the verified-query level: SinksSpec
   * proves CSV/JSON/ORC round-trips in-process, but a registry query must
@@ -77,11 +78,7 @@ object Formats {
     // materialize before deleting the temp export (the returned plan is
     // re-executed by Verify/Bench after this function returns)
     val pinned = csvQuarantinePlan(spark, dir, path.toString).localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(path)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(path)
     pinned
   }
 
@@ -244,7 +241,7 @@ object Formats {
   }
 
   /** STORAGE-PARTITIONED JOIN ON CATALOG TABLES — the Iceberg SPJ on
-    * [[graft.sources.v2.MemCatalog]] tables: two tables sharing the
+    * [[MemCatalog]] tables: two tables sharing the
     * partition spec `bucket(8,k)` (routed, so every file is
     * partition-pure), read with `.option("groupByPartition", "true")`
     * (Iceberg's preserve-data-grouping — one input partition per
@@ -263,8 +260,6 @@ object Formats {
     * (task count = partition count) for exchange elimination.
     */
   def dsv2SpjCatalog(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     def mk(name: String, rows: Long, mul: Long): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS graftmem.tmp.$name")
       spark.sql(
@@ -305,8 +300,6 @@ object Formats {
     * prefix-colliding raw values must refuse to group.
     */
   def dsv2SpjString(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     val langs = "array('en','de','fr','es','pt','zh','ja','ko')"
     def mk(name: String, rows: Long, mul: Long): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS graftmem.tmp.$name")
@@ -347,8 +340,6 @@ object Formats {
     * commit, never a data job.
     */
   def dsv2SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.evo")
     spark.sql("CREATE TABLE graftmem.tmp.evo (cat BIGINT, amt BIGINT, junk STRING)")
     Tables.orders(spark, dir).createOrReplaceTempView("graft_evo_orders")
@@ -406,16 +397,12 @@ object Formats {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("total_cents"))
       .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(path)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(path)
     pinned
   }
 
   /** ATOMIC CTAS through the WRITABLE V2 catalog
-    * ([[graft.sources.v2.MemCatalog]], a `StagingTableCatalog`):
+    * ([[MemCatalog]], a `StagingTableCatalog`):
     * `CREATE OR REPLACE TABLE ... AS SELECT` stages every part file in an
     * invisible directory and publishes with one atomic move — then an
     * `INSERT INTO` appends through the two-phase part-file commit, and the
@@ -427,8 +414,6 @@ object Formats {
     * CTAS leaves no table; a failing REPLACE leaves the old data intact.
     */
   def dsv2CatalogCtas(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_ctas_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.ord_sum AS
@@ -449,8 +434,6 @@ object Formats {
     * the post-delete table from the fixture.
     */
   def dsv2CatalogDelete(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_del_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.clerk_bands AS
@@ -474,8 +457,6 @@ object Formats {
     * arithmetic over the fixture aggregate.
     */
   def dsv2CatalogUpdate(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_upd_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.upd_bands AS
@@ -501,8 +482,6 @@ object Formats {
     * are Spark's rewrite, the connector only swaps files.
     */
   def dsv2CatalogMerge(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_mrg_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mrg_status AS
@@ -527,7 +506,7 @@ object Formats {
     * statement publishes a `_v<N>.manifest` file list, DML retires files
     * from the manifest instead of deleting them, and
     * `TableCatalog.loadTable(ident, version)` pins an older manifest
-    * ([[graft.sources.v2.MemCatalog]]). The query walks a table through
+    * ([[MemCatalog]]). The query walks a table through
     * its whole DML life (CTAS → INSERT → COW UPDATE → metadata DELETE)
     * and then reads ALL FOUR snapshots in one statement — the
     * audit/debug/reproduce-yesterday's-report surface every lakehouse
@@ -540,8 +519,6 @@ object Formats {
     * a VACUUM — a documented trade, not a hidden one.
     */
   def dsv2TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_tt_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.tt_bands AS
@@ -596,9 +573,6 @@ object Formats {
     */
   def dsv2TableChangesTvf(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.sources.v2.TableChanges.register(ss)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_tvf_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.tvf_t AS
@@ -661,7 +635,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val drained = ss.table(qname).localCheckpoint(true)
     ss.catalog.dropTempView(qname)
-    graft.sources.v2.MemCatalog.deleteRecursively(ckpt)
+    MemCatalog.deleteRecursively(ckpt)
     val tvfRows = ss.sql(
       """SELECT k, n, cents, _change_type
         |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)""".stripMargin)
@@ -718,9 +692,6 @@ object Formats {
     */
   def dsv2TvfStream(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.sources.v2.TableChanges.register(ss)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_tvs_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.tvs AS
@@ -745,7 +716,7 @@ object Formats {
       q.recentProgress.filter(_.numInputRows > 0).length == 4
     val drained = ss.table(qname).localCheckpoint(true)
     ss.catalog.dropTempView(qname)
-    graft.sources.v2.MemCatalog.deleteRecursively(ckpt)
+    MemCatalog.deleteRecursively(ckpt)
     val batch = ss.sql(
       """SELECT k, n, cents, _change_type, _commit_version
         |FROM table_changes('graftmem.tmp.tvs', 0, 3)""".stripMargin)
@@ -778,9 +749,6 @@ object Formats {
     * what keeps the MERGE's join broadcast-able at 100 TB).
     */
   def dsv2MvSqlIncremental(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.sources.v2.TableChanges.register(spark)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_sqlivm_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.sqlivm_base AS
@@ -805,9 +773,8 @@ object Formats {
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L)
     // rider: the TVF reports DELTA bytes, strictly under the base scan —
     // the statistic that keeps the maintenance join broadcast-able
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__sqlivm_base")
-    val baseBytes = graft.sources.v2.MemCatalog.liveFiles(baseDir)
+    val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.sqlivm_base")
+    val baseBytes = MemCatalog.liveFiles(baseDir)
       .map(java.nio.file.Files.size).sum
     val tvfBytes = spark.sql(tvfSql).queryExecution.optimizedPlan.stats.sizeInBytes
     val statsBounded = tvfBytes > 0 && tvfBytes < BigInt(baseBytes)
@@ -845,8 +812,6 @@ object Formats {
   }
 
   def dsv2ChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_cf_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cf_bands AS
@@ -882,8 +847,6 @@ object Formats {
     * states as the row count.
     */
   def dsv2CatalogFunction(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftcat",
-      classOf[graft.sources.v2.SeqCatalog].getName)
     spark.sql(
       """SELECT bucket, count(*) AS n_rows,
         |       sum(graftcat.gen.knuth_val(id)) AS sum_fn,
@@ -904,8 +867,6 @@ object Formats {
     * oracle replays the arithmetic over `generate_series`.
     */
   def dsv2CatalogAggFunction(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftcat",
-      classOf[graft.sources.v2.SeqCatalog].getName)
     spark.sql(
       """SELECT bucket, count(*) AS n_rows,
         |       graftcat.gen.knuth_checksum(id) AS cksum
@@ -946,18 +907,16 @@ object Formats {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_rows"), sum("val").as("sum_val"))
 
-  /** SQL over the CUSTOM V2 CATALOG: registers
-    * [[graft.sources.v2.SeqCatalog]] under `spark.sql.catalog.graftcat`
-    * (idempotent — catalogs resolve lazily from conf) and queries a table
-    * by pure SQL identifier. Same pushdown story as `dsv2_seq_agg`: the
-    * id-range predicate lands in the connector scan, so only 32 768 of the
-    * 65 536 virtual rows ever materialize; the bucket aggregate is one
-    * exchange. This is the Iceberg/Delta integration surface — SQL text
-    * never mentions the implementation class.
+  /** SQL over the CUSTOM V2 CATALOG: queries a table of
+    * [[graft.sources.v2.SeqCatalog]] (wired as `graftcat` by
+    * `graft.Sessions.build`) by pure SQL identifier. Same pushdown story
+    * as `dsv2_seq_agg`: the id-range predicate lands in the connector
+    * scan, so only 32 768 of the 65 536 virtual rows ever materialize;
+    * the bucket aggregate is one exchange. This is the Iceberg/Delta
+    * integration surface — SQL text never mentions the implementation
+    * class.
     */
   def dsv2CatalogSql(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftcat",
-      classOf[graft.sources.v2.SeqCatalog].getName)
     spark.sql(
       """SELECT bucket, count(*) AS n_rows, sum(val) AS sum_val
         |FROM graftcat.gen.seq_65536_8
@@ -992,11 +951,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val out = ss.table(qname).localCheckpoint(true)
     ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     out
   }
 
@@ -1014,8 +969,6 @@ object Formats {
     * ALTER is one metadata write, history files never migrate.
     */
   def dsv2CatalogEvolution(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_evo_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.evo_bands AS
@@ -1052,8 +1005,6 @@ object Formats {
     * falls out of stats the writers were already positioned to record.
     */
   def dsv2DataSkipping(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_skip_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.skip_bands")
     spark.sql(
@@ -1073,7 +1024,7 @@ object Formats {
   /** SMALL-FILE COMPACTION (OPTIMIZE) on the versioned catalog table —
     * the maintenance op every frequently-appended lakehouse table needs:
     * eight per-band INSERTs leave eight tiny part files (one scan
-    * partition each), and [[graft.sources.v2.MemCatalog.compact]]
+    * partition each), and [[MemCatalog.compact]]
     * bin-packs them into target-size files in ONE manifest commit that
     * RETIRES the inputs (pre-compaction snapshots stay byte-identical
     * under time travel; a concurrent reader plans from whichever
@@ -1087,8 +1038,6 @@ object Formats {
     * (greeter_server.cc:116) to in-place table maintenance.
     */
   def dsv2Compaction(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_opt_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.opt_bands")
     spark.sql(
@@ -1099,11 +1048,10 @@ object Formats {
          |SELECT CAST($b AS BIGINT), o_orderstatus, count(*),
          |       sum(CAST(round(o_totalprice * 100) AS BIGINT))
          |FROM graft_opt_orders WHERE o_custkey % 8 = $b GROUP BY 2""".stripMargin))
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__opt_bands")
-    val before = graft.sources.v2.MemCatalog.liveEntries(tableDir).size
-    val (retired, created) = graft.sources.v2.MemCatalog.compact(tableDir)
-    val after = graft.sources.v2.MemCatalog.liveEntries(tableDir).size
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.opt_bands")
+    val before = MemCatalog.liveEntries(tableDir).size
+    val (retired, created) = MemCatalog.compact(tableDir)
+    val after = MemCatalog.liveEntries(tableDir).size
     // the boolean rides the oracle gate: false (hash mismatch) if the
     // maintenance op didn't actually collapse the small files
     spark.sql("SELECT band, status, n_orders, cents FROM graftmem.tmp.opt_bands")
@@ -1128,8 +1076,6 @@ object Formats {
     * in DESCRIBE HISTORY.
     */
   def dsv2Rollback(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_wap_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.wap_orders")
     spark.sql(
@@ -1140,26 +1086,25 @@ object Formats {
       """INSERT INTO graftmem.tmp.wap_orders
         |SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT)
         |FROM graft_wap_orders WHERE o_orderstatus = 'O'""".stripMargin) // v1: last good
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__wap_orders")
-    val vGood = graft.sources.v2.MemCatalog.currentVersion(tableDir)
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.wap_orders")
+    val vGood = MemCatalog.currentVersion(tableDir)
     // the BAD batch: a corrupted upstream delivery (negative money)
     spark.sql("INSERT INTO graftmem.tmp.wap_orders " +
       "SELECT id, -1 * id FROM range(900000, 900050)") // v2: bad
-    val vBad = graft.sources.v2.MemCatalog.currentVersion(tableDir)
+    val vBad = MemCatalog.currentVersion(tableDir)
     // AUDIT: the pre-publish quality gate
     val badRows = spark.sql(
       "SELECT count(*) FROM graftmem.tmp.wap_orders WHERE cents < 0").head().getLong(0)
     val auditCaught = badRows == 50L
     val vNew =
-      if (auditCaught) graft.sources.v2.MemCatalog.rollback(tableDir, vGood) else -1
+      if (auditCaught) MemCatalog.rollback(tableDir, vGood) else -1
     // the bad snapshot is STILL time-travelable (history immutable)...
     val historyKept = spark.sql(
       s"SELECT count(*) FROM graftmem.tmp.wap_orders VERSION AS OF $vBad WHERE cents < 0")
       .head().getLong(0) == 50L
     // ...and the rollback is itself an op-tagged audit-trail commit
     val opTagged = vNew > 0 &&
-      graft.sources.v2.MemCatalog.readManifestFull(tableDir, vNew).op == "rollback"
+      MemCatalog.readManifestFull(tableDir, vNew).op == "rollback"
     // the post-rollback head must equal the two good slices — which is
     // exactly what the oracle replays, so the equality rides the hash
     spark.sql(
@@ -1200,8 +1145,6 @@ object Formats {
     * aggregate: re-clustering must be content-neutral.
     */
   def dsv2ClusterEvolution(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_cev_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.cev_orders")
     // CONSTANT FILE SIZE, GROWING FILE COUNT — the production layout (a
@@ -1224,22 +1167,21 @@ object Formats {
         |SELECT o_orderkey, CAST(o_custkey % 8 AS BIGINT),
         |       CAST(round(o_totalprice * 100) AS BIGINT)
         |FROM graft_cev_orders""".stripMargin)
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cev_orders")
-    val vPre = graft.sources.v2.MemCatalog.currentVersion(tableDir)
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.cev_orders")
+    val vPre = MemCatalog.currentVersion(tableDir)
     val nPre = spark.sql("SELECT count(*) FROM graftmem.tmp.cev_orders").head().getLong(0)
     spark.sql("ALTER TABLE graftmem.tmp.cev_orders SET TBLPROPERTIES ('clusterBy'='band')")
     // target ≈ a third of the live bytes, so the re-sort splits into
     // several disjoint-band files (not one megafile); waves ≈ an eighth
     // so the sort phase fans out across ~8 parallel runs
-    val total = graft.sources.v2.MemCatalog.liveFiles(tableDir)
+    val total = MemCatalog.liveFiles(tableDir)
       .map(java.nio.file.Files.size).sum
     val target = math.max(1024L, total / 3)
-    val (retired, created) = graft.sources.v2.MemCatalog.compact(
+    val (retired, created) = MemCatalog.compact(
       tableDir, target, waveBytes = math.max(2048L, total / 16))
     // second OPTIMIZE: parallel range-merge of the runs → converged
-    graft.sources.v2.MemCatalog.compact(tableDir, target)
-    val entries = graft.sources.v2.MemCatalog.liveEntries(tableDir)
+    MemCatalog.compact(tableDir, target)
+    val entries = MemCatalog.liveEntries(tableDir)
     val converged = entries.forall(e => !e.stats.contains("#run"))
     val restamped = entries.nonEmpty && entries.forall(_.sortedBy.contains("band"))
     // disjoint new-key ranges across the rewritten files (adjacent files
@@ -1301,8 +1243,6 @@ object Formats {
     * declaratively.
     */
   def dsv2PartitionEvolution(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_pev_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.pev_orders")
     spark.sql(
@@ -1316,8 +1256,7 @@ object Formats {
          |SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT)
          |FROM graft_pev_orders
          |WHERE o_custkey % 2 = 0 AND pmod(o_orderkey * 2654435761, 4) = $b""".stripMargin))
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__pev_orders")
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.pev_orders")
     // probe at the MEDIAN key: it sits inside every bucket-pure file's
     // raw-key range (the hash spreads small and large keys across all
     // buckets), so zone maps keep all files and any pruning observed is
@@ -1334,8 +1273,8 @@ object Formats {
     def bucketOf(v: Long, n: Long): Long = java.lang.Math.floorMod(v * 2654435761L, n)
     def outside(b: Long, range: (Long, Long)): Boolean = b < range._1 || b > range._2
     def provedPruned(expectPrunable: Int,
-        prunable: graft.sources.v2.MemCatalog.FileEntry => Boolean): Boolean = {
-      val entries = graft.sources.v2.MemCatalog.liveEntries(tableDir)
+        prunable: MemCatalog.FileEntry => Boolean): Boolean = {
+      val entries = MemCatalog.liveEntries(tableDir)
       val hidden = entries.filter(prunable)
       if (hidden.size != expectPrunable) return false
       val probeSql = s"SELECT count(*) FROM graftmem.tmp.pev_orders WHERE okey = $k0"
@@ -1354,7 +1293,7 @@ object Formats {
     val prunedOldSpec = provedPruned(3,
       _.stats.get("pt:bucket(4,okey)").exists(outside(bucketOf(k0, 4), _)))
     // EVOLVE the spec — metadata only, nothing rewrites
-    val filesPre = graft.sources.v2.MemCatalog.liveEntries(tableDir).map(_.name).toSet
+    val filesPre = MemCatalog.liveEntries(tableDir).map(_.name).toSet
     spark.sql("ALTER TABLE graftmem.tmp.pev_orders " +
       "SET TBLPROPERTIES ('graft.partition'='bucket(2,okey)')")
     // wave 2 (odd customers) lands bucket-pure under the NEW spec
@@ -1364,7 +1303,7 @@ object Formats {
          |FROM graft_pev_orders
          |WHERE o_custkey % 2 = 1 AND pmod(o_orderkey * 2654435761, 2) = $b""".stripMargin))
     val noRewrite = filesPre.subsetOf(
-      graft.sources.v2.MemCatalog.liveEntries(tableDir).map(_.name).toSet)
+      MemCatalog.liveEntries(tableDir).map(_.name).toSet)
     // the same probe now prunes OLD files under the OLD spec (3 of 4
     // dropped) AND new files under the NEW one (1 of 2) — per-file specs
     // honored simultaneously, proven by hiding all 4 prunable files
@@ -1381,7 +1320,7 @@ object Formats {
   }
 
   /** STREAMING READ OF THE CATALOG TABLE — `readStream.table(t)` on the
-    * versioned [[graft.sources.v2.MemCatalog]] table: the manifest log IS
+    * versioned [[MemCatalog]] table: the manifest log IS
     * the changelog (the Delta-streaming-source model), offsets are
     * manifest versions, and each micro-batch is one commit's file delta,
     * so the bounded drain replays the table's history commit-by-commit
@@ -1394,8 +1333,6 @@ object Formats {
     */
   def dsv2StreamTable(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_stt_orders")
     def slice(pri: String): String =
       s"""SELECT o_orderkey, o_orderpriority AS pri,
@@ -1415,11 +1352,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val out = ss.table(qname).localCheckpoint(true)
     ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     out
   }
 
@@ -1444,8 +1377,6 @@ object Formats {
     */
   def dsv2CdfStream(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_cdf_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdf_bands AS
@@ -1467,11 +1398,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val drained = ss.table(qname).localCheckpoint(true)
     ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     // fold the feed: the net change per key IS the final table
     val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
     drained
@@ -1503,8 +1430,6 @@ object Formats {
     */
   def dsv2CdfNet(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_cdfnet_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdfnet_bands AS
@@ -1515,13 +1440,12 @@ object Formats {
     ss.sql("INSERT INTO graftmem.tmp.cdfnet_bands VALUES (77, 'Z', 5, 1234)")
     ss.sql("UPDATE graftmem.tmp.cdfnet_bands SET cents = cents + n_orders WHERE band >= 3")
     ss.sql("DELETE FROM graftmem.tmp.cdfnet_bands WHERE band = 1")
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdfnet_bands")
-    val vBefore = graft.sources.v2.MemCatalog.currentVersion(tableDir)
-    graft.sources.v2.MemCatalog.compact(tableDir)
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.cdfnet_bands")
+    val vBefore = MemCatalog.currentVersion(tableDir)
+    MemCatalog.compact(tableDir)
     val compacted =
-      graft.sources.v2.MemCatalog.currentVersion(tableDir) == vBefore + 1 &&
-        graft.sources.v2.MemCatalog.readManifestFull(tableDir, vBefore + 1).op == "optimize"
+      MemCatalog.currentVersion(tableDir) == vBefore + 1 &&
+        MemCatalog.readManifestFull(tableDir, vBefore + 1).op == "optimize"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdfnet-ckpt")
     val qname = "graft_memcdfnet_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = ss.readStream
@@ -1534,11 +1458,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val drained = ss.table(qname).localCheckpoint(true)
     ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     drained
       .groupBy(col("_change_type").as("change_type"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1567,8 +1487,6 @@ object Formats {
     */
   def dsv2CdcPipeline(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcp_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdc_src AS
@@ -1609,11 +1527,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val out = ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdc_dst")
       .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     out
   }
 
@@ -1638,8 +1552,6 @@ object Formats {
     */
   def dsv2MvIncremental(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_mvinc_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mv_src AS
@@ -1682,11 +1594,7 @@ object Formats {
     try q.processAllAvailable() finally q.stop()
     val out = ss.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.mv")
       .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     out
   }
 
@@ -1714,8 +1622,6 @@ object Formats {
     * contract (Goldstein & Larson, SIGMOD'01).
     */
   def dsv2MvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_mvr_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvr_base AS
@@ -1727,8 +1633,6 @@ object Formats {
     // session-local), so the concurrent verify sweep never sees it; the
     // main session doubles as the disarmed control
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.plans.MvRewrite.install(s2)
     def refreshMv(): Unit = s2.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvr_mv AS
@@ -1736,8 +1640,7 @@ object Formats {
         |       min(cents) AS min_cents, max(cents) AS max_cents
         |FROM graftmem.tmp.mvr_base GROUP BY k, cat""".stripMargin)
     refreshMv()
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvr_base")
+    val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvr_base")
     def reg() = graft.plans.MvRewrite.register(s2, "graftmem.tmp.mvr_base",
       "graftmem.tmp.mvr_mv", baseDir, Seq("k", "cat"),
       Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents",
@@ -1800,8 +1703,6 @@ object Formats {
     */
   def dsv2CdcSidecar(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_csc_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdcsc AS
@@ -1813,8 +1714,7 @@ object Formats {
     // directly and rightly gets no sidecar
     ss.sql("INSERT INTO graftmem.tmp.cdcsc " +
       "SELECT CAST(900 + id AS BIGINT), CAST(id * 7 AS BIGINT) FROM range(0, 5)") // v2
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcsc")
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.cdcsc")
     def sidecar(v: Int, side: String) = tableDir.resolve(s"_cdc-v$v-$side.bin")
     val sidecarWritten =
       java.nio.file.Files.exists(sidecar(1, "pre")) &&
@@ -1836,11 +1736,7 @@ object Formats {
           ()
         }.start()
       try q.processAllAvailable() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
+      MemCatalog.deleteRecursively(ckpt)
       got.toSeq
     }
     val viaSidecar = drain()
@@ -1887,8 +1783,6 @@ object Formats {
     * engine surface consistent.
     */
   def dsv2RowPolicy(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_pol_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.pol_t AS
@@ -1936,8 +1830,6 @@ object Formats {
     * dropping the mask restores the raw values (nothing was rewritten).
     */
   def dsv2ColumnMask(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_msk_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.msk_f AS
@@ -1987,8 +1879,6 @@ object Formats {
     * the same plan-time freshness guarantee as the single-table path.
     */
   def dsv2MvStar(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_mvt_orders")
     Tables.customer(spark, dir).createOrReplaceTempView("graft_mvt_customer")
     spark.sql(
@@ -2002,8 +1892,6 @@ object Formats {
         |       CAST(c_nationkey % 5 AS BIGINT) AS nat
         |FROM graft_mvt_customer""".stripMargin)
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.plans.MvRewrite.install(s2)
     def refreshMv(): Unit = s2.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvt_mv AS
@@ -2011,8 +1899,7 @@ object Formats {
         |FROM graftmem.tmp.mvt_f f JOIN graftmem.tmp.mvt_d d ON f.ck = d.dk
         |GROUP BY seg, nat""".stripMargin)
     refreshMv()
-    val dirs = Seq("mvt_f", "mvt_d").map(n => java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__$n"))
+    val dirs = Seq("mvt_f", "mvt_d").map(n => MemCatalog.tableDir(spark, s"graftmem.tmp.$n"))
     def reg() = graft.plans.MvRewrite.registerJoin(s2, "graftmem.tmp.mvt_mv",
       "graftmem.tmp.mvt_f", "graftmem.tmp.mvt_d", "ck", "dk", dirs,
       Seq("seg", "nat"),
@@ -2074,8 +1961,6 @@ object Formats {
     */
   def dsv2MvServe(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_mvs_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvs_base AS
@@ -2084,10 +1969,8 @@ object Formats {
         |FROM graft_mvs_orders""".stripMargin) // v0
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mvs_mv")
     ss.sql("CREATE TABLE graftmem.tmp.mvs_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvs_base")
-    val mvDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvs_mv")
+    val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvs_base")
+    val mvDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvs_mv")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-mvserve-ckpt")
     // one maintenance CYCLE: drain every unabsorbed base commit (one per
     // epoch), folding each into the MV and stamping the watermark in the
@@ -2127,8 +2010,6 @@ object Formats {
       try q.processAllAvailable() finally q.stop()
     }
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.plans.MvRewrite.install(s2)
     val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvs_base",
       "graftmem.tmp.mvs_mv", baseDir, mvDir, Seq("cat"),
@@ -2160,18 +2041,16 @@ object Formats {
         .withColumn("mv_stale_disarms", lit(staleDisarms))
         .withColumn("mv_rearms_after_drain", lit(rearms))
         .localCheckpoint(true)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
       out
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
+    } finally {
+      MemCatalog.deleteRecursively(ckpt)
+      graft.plans.MvRewrite.unregister(d.baseName)
+    }
   }
 
   /** MV AUTO-REFRESH VIA COMMIT HOOK — the last manual step of
     * [[dsv2MvServe]]'s continuously-serving loop removed: nobody calls
-    * the maintenance cycle anymore. [[graft.sources.v2.MemCatalog.onCommit]]
+    * the maintenance cycle anymore. [[MemCatalog.onCommit]]
     * registers the cycle as a CATALOG COMMIT HOOK on the base table —
     * every main-chain snapshot publish flips a dirty bit and the shared
     * maintenance thread drains the change feed (MERGE the net changes,
@@ -2183,7 +2062,7 @@ object Formats {
     * plans onto the MV and matches the base), `storm_coalesced_serves`
     * (two back-to-back commits — an UPDATE and a group-erasing DELETE —
     * coalesce and the MV still serves the exact post-storm truth),
-    * `dropped_hook_disarms` (after [[graft.sources.v2.MemCatalog.dropCommitHook]]
+    * `dropped_hook_disarms` (after [[MemCatalog.dropCommitHook]]
     * a further commit leaves the MV stale and the watermark freshness
     * gate disarms the rewrite — answers fall back to the base table,
     * correct, never stale). At 100 TB this closes the loop: ingest
@@ -2192,11 +2071,7 @@ object Formats {
     * plan-time watermark check — no scheduler, no cron, no stale cache.
     */
   def dsv2MvAutorefresh(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_mvar_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvar_base AS
@@ -2205,10 +2080,8 @@ object Formats {
         |FROM graft_mvar_orders""".stripMargin) // v0
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mvar_mv")
     ss.sql("CREATE TABLE graftmem.tmp.mvar_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvar_base")
-    val mvDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvar_mv")
+    val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvar_base")
+    val mvDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvar_mv")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-mvauto-ckpt")
     // one maintenance cycle == dsv2MvServe's: drain every unabsorbed base
     // commit (one per epoch), fold it into the MV, stamp the watermark —
@@ -2223,11 +2096,14 @@ object Formats {
     // ~1 s driver-side stall between job bursts). Dropping the commit hook
     // tears the stream down too, so a post-drop commit still leaves the MV
     // stale exactly as before (the watermark-disarm leg is unchanged).
+    // Once `teardown` has run, `closed` keeps a late hook from starting
+    // the stream again.
     var mq: org.apache.spark.sql.streaming.StreamingQuery = null
+    var closed = false
     val mqLock = new Object
     def cycle(): Unit = {
       val q = mqLock.synchronized {
-        if (mq == null) mq = ss.readStream
+        if (mq == null && !closed) mq = ss.readStream
           .option("changefeed", "true").option("netChanges", "true")
           .table("graftmem.tmp.mvar_base")
           .select(col("cat"), col("cents"), col("_change_type"))
@@ -2256,19 +2132,24 @@ object Formats {
           .start()
         mq
       }
-      q.processAllAvailable()
+      if (q != null) q.processAllAvailable()
     }
-    def stopCycleStream(): Unit = mqLock.synchronized {
-      if (mq != null) { mq.stop(); mq = null }
+    // drop the hook, let any in-flight hook run finish, then stop the
+    // stream for good (idempotent: the gate body and `finally` both call it)
+    def teardown(): Unit = {
+      MemCatalog.dropCommitHook(baseDir)
+      MemCatalog.awaitCommitHooks()
+      mqLock.synchronized {
+        closed = true
+        if (mq != null) { mq.stop(); mq = null }
+      }
     }
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     graft.plans.MvRewrite.install(s2)
     val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvar_base",
       "graftmem.tmp.mvar_mv", baseDir, mvDir, Seq("cat"),
       Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    graft.sources.v2.MemCatalog.onCommit(baseDir)(() => cycle())
+    MemCatalog.onCommit(baseDir)(() => cycle())
     try {
       val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
         "FROM graftmem.tmp.mvar_base GROUP BY cat"
@@ -2287,7 +2168,7 @@ object Formats {
           .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
       // v1: the commit ITSELF triggers maintenance (drains v0 and v1)
       ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 7 WHERE cat = 3")
-      graft.sources.v2.MemCatalog.awaitCommitHooks()
+      MemCatalog.awaitCommitHooks()
       val served1 = s2.sql(sql)
       val autoServes = scansMvOnly(served1) && matches(served1)
       // commit storm: two back-to-back commits coalesce into ≤2 hook
@@ -2295,14 +2176,13 @@ object Formats {
       // group-retiring DELETE leg through the auto path
       ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 11 WHERE cat = 5")
       ss.sql("DELETE FROM graftmem.tmp.mvar_base WHERE cat = 0")
-      graft.sources.v2.MemCatalog.awaitCommitHooks()
+      MemCatalog.awaitCommitHooks()
       val served2 = s2.sql(sql)
       val stormServes = scansMvOnly(served2) && matches(served2)
       // hook dropped: the next commit leaves the MV stale; the watermark
       // gate disarms the rewrite and answers stay correct from base —
       // the maintenance stream is torn down WITH the hook
-      graft.sources.v2.MemCatalog.dropCommitHook(baseDir)
-      stopCycleStream()
+      teardown()
       ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 1 WHERE cat = 1")
       val served3 = s2.sql(sql)
       val droppedDisarms = !scansMvOnly(served3) && matches(served3)
@@ -2311,15 +2191,10 @@ object Formats {
         .withColumn("storm_coalesced_serves", lit(stormServes))
         .withColumn("dropped_hook_disarms", lit(droppedDisarms))
         .localCheckpoint(true)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
       out
     } finally {
-      graft.sources.v2.MemCatalog.dropCommitHook(baseDir)
-      stopCycleStream()
+      teardown()
+      MemCatalog.deleteRecursively(ckpt)
       graft.plans.MvRewrite.unregister(d.baseName)
     }
   }
@@ -2339,15 +2214,12 @@ object Formats {
     * leased against vacuum (the complete pre-vacuum picture).
     */
   def dsv2SnapshotsMeta(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    val cat = graft.sources.v2.MemCatalog
+    val cat = MemCatalog
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.snm")
     spark.sql("CREATE TABLE graftmem.tmp.snm (k BIGINT)")
     spark.sql("INSERT INTO graftmem.tmp.snm VALUES (CAST(1 AS BIGINT))")
     spark.sql("INSERT INTO graftmem.tmp.snm VALUES (CAST(2 AS BIGINT))")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__snm")
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.snm")
     cat.dropBranch(tdir, "exp")
     cat.createTag(tdir, "rc", 1)
     cat.createBranch(tdir, "exp") // forks at the head, v2
@@ -2374,15 +2246,12 @@ object Formats {
     * leasing 1), replayed as literals.
     */
   def dsv2RefsMeta(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    val cat = graft.sources.v2.MemCatalog
+    val cat = MemCatalog
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.rfm")
     spark.sql("CREATE TABLE graftmem.tmp.rfm (k BIGINT)")
     spark.sql("INSERT INTO graftmem.tmp.rfm VALUES (CAST(1 AS BIGINT))") // v1
     spark.sql("INSERT INTO graftmem.tmp.rfm VALUES (CAST(2 AS BIGINT))") // v2
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__rfm")
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.rfm")
     cat.dropBranch(tdir, "exp"); cat.dropBranch(tdir, "idle")
     cat.createTag(tdir, "rc", 1)
     cat.createBranch(tdir, "exp") // forks at v2
@@ -2415,15 +2284,12 @@ object Formats {
     * declared window on every ingest.
     */
   def dsv2AutoVacuum(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    val cat = graft.sources.v2.MemCatalog
+    val cat = MemCatalog
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.avt")
     spark.sql("CREATE TABLE graftmem.tmp.avt (k BIGINT, v BIGINT)")
     spark.sql("ALTER TABLE graftmem.tmp.avt " +
       "SET TBLPROPERTIES('graft.autoVacuumKeep'='2')")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__avt")
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.avt")
     (1 to 3).foreach(i => spark.sql(
       s"INSERT INTO graftmem.tmp.avt VALUES (CAST($i AS BIGINT), CAST(${i * 10} AS BIGINT))"))
     cat.createTag(tdir, "audited", 3) // lease v3 against the policy
@@ -2458,8 +2324,6 @@ object Formats {
     * the rollup all agree with the arithmetic definition.
     */
   def dsv2PartitionsMeta(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.pmt")
     spark.sql(
       """CREATE TABLE graftmem.tmp.pmt (k BIGINT, v BIGINT)
@@ -2500,17 +2364,14 @@ object Formats {
     * transform bit-for-bit).
     */
   def dsv2PartitionRoute(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.prt")
     spark.sql(
       """CREATE TABLE graftmem.tmp.prt (k BIGINT, v BIGINT)
         |TBLPROPERTIES ('graft.partition'='bucket(4,k)',
         |               'graft.partitionRoute'='true', 'clusterParts'='4')""".stripMargin)
     spark.sql("INSERT INTO graftmem.tmp.prt SELECT id, id * 3 FROM range(0, 60)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__prt")
-    val entries = graft.sources.v2.MemCatalog.liveEntries(tdir)
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.prt")
+    val entries = MemCatalog.liveEntries(tdir)
     val ranges = entries.flatMap(_.stats.get("pt:bucket(4,k)"))
     val pure = entries.nonEmpty && ranges.size == entries.size &&
       ranges.forall { case (lo, hi) => lo == hi }
@@ -2548,8 +2409,6 @@ object Formats {
     * day×key query reads exactly one file group.
     */
   def dsv2PartitionMulti(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.pmu")
     spark.sql(
       """CREATE TABLE graftmem.tmp.pmu (ts BIGINT, k BIGINT, v BIGINT)
@@ -2559,9 +2418,8 @@ object Formats {
     // because the Knuth constant is ≡ 1 (mod 4); day = id mod 3)
     spark.sql("INSERT INTO graftmem.tmp.pmu " +
       "SELECT (id % 3) * 86400 + id, id, id * 7 FROM range(0, 120)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__pmu")
-    val cat = graft.sources.v2.MemCatalog
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.pmu")
+    val cat = MemCatalog
     def dayOf(ts: Long): Long = java.lang.Math.floorDiv(ts, 86400L)
     def bucketOf(v: Long): Long = java.lang.Math.floorMod(v * 2654435761L, 4L)
     def outside(t: Long, r: (Long, Long)): Boolean = t < r._1 || t > r._2
@@ -2580,7 +2438,7 @@ object Formats {
     // structural pruning proof, one dimension at a time: hide the files
     // the transform rule says the scan must skip, re-run, same answer
     def provedPruned(expectHidden: Int, probeSql: String,
-        prunable: graft.sources.v2.MemCatalog.FileEntry => Boolean): Boolean = {
+        prunable: MemCatalog.FileEntry => Boolean): Boolean = {
       val live = cat.liveEntries(tdir)
       val hidden = live.filter(prunable)
       if (hidden.size != expectHidden) return false
@@ -2637,8 +2495,6 @@ object Formats {
     * arithmetic on every distinct key.
     */
   def dsv2PartitionString(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.pst")
     spark.sql(
       """CREATE TABLE graftmem.tmp.pst (lang STRING, doc BIGINT)
@@ -2647,9 +2503,8 @@ object Formats {
     spark.sql("INSERT INTO graftmem.tmp.pst " +
       "SELECT element_at(array('en','de','fr','ja','zh'), CAST(id % 5 AS INT) + 1), id " +
       "FROM range(0, 100)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__pst")
-    val cat = graft.sources.v2.MemCatalog
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.pst")
+    val cat = MemCatalog
     val MemPart = graft.sources.v2.MemPart
     def code(s: String): Long = MemPart.prefixCode(s.getBytes("UTF-8"))
     def outside(t: Long, r: (Long, Long)): Boolean = t < r._1 || t > r._2
@@ -2659,7 +2514,7 @@ object Formats {
       pts.forall(r => r._1 == r._2) &&
       pts.map(_._1).toSet == Set("en", "de", "fr", "ja", "zh").map(code)
     def provedPruned(expectHidden: Int, probeSql: String,
-        prunable: graft.sources.v2.MemCatalog.FileEntry => Boolean): Boolean = {
+        prunable: MemCatalog.FileEntry => Boolean): Boolean = {
       val live = cat.liveEntries(tdir)
       val hidden = live.filter(prunable)
       if (hidden.size != expectHidden) return false
@@ -2719,8 +2574,6 @@ object Formats {
     * with no epoch-seconds conversion shim at the edge.
     */
   def dsv2PartitionTimestamp(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.pts")
     spark.sql(
       """CREATE TABLE graftmem.tmp.pts (ts TIMESTAMP, k BIGINT)
@@ -2730,15 +2583,14 @@ object Formats {
     spark.sql("INSERT INTO graftmem.tmp.pts " +
       "SELECT timestamp_micros((id % 3) * 86400000000 + id * 1000000), id " +
       "FROM range(0, 90)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__pts")
-    val cat = graft.sources.v2.MemCatalog
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.pts")
+    val cat = MemCatalog
     val entries = cat.liveEntries(tdir)
     val ranges = entries.flatMap(_.stats.get("pt:days(ts)"))
     val onePerDay = entries.size == 3 && ranges.size == 3 &&
       ranges.forall(r => r._1 == r._2) && ranges.map(_._1).sorted == Seq(0L, 1L, 2L)
     def provedPruned(expectHidden: Int, probeSql: String,
-        prunable: graft.sources.v2.MemCatalog.FileEntry => Boolean): Boolean = {
+        prunable: MemCatalog.FileEntry => Boolean): Boolean = {
       val hidden = cat.liveEntries(tdir).filter(prunable)
       if (hidden.size != expectHidden) return false
       val want = spark.sql(probeSql).head().getLong(0)
@@ -2784,8 +2636,6 @@ object Formats {
     * have.
     */
   def dsv2PartitionDate(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.pdt")
     spark.sql(
       """CREATE TABLE graftmem.tmp.pdt (d DATE, k BIGINT)
@@ -2795,9 +2645,8 @@ object Formats {
     spark.sql("INSERT INTO graftmem.tmp.pdt " +
       "SELECT date_add(DATE'1970-01-01', CAST((id % 3) * 31 + id % 20 AS INT)), id " +
       "FROM range(0, 90)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__pdt")
-    val cat = graft.sources.v2.MemCatalog
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.pdt")
+    val cat = MemCatalog
     val entries = cat.liveEntries(tdir)
     val ranges = entries.flatMap(_.stats.get("pt:months(d)"))
     val onePerMonth = entries.size == 3 && ranges.size == 3 &&
@@ -2844,8 +2693,6 @@ object Formats {
     * replay IS the semantic spec).
     */
   def dsv2MergeBySource(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_mrg_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mrg_t AS
@@ -2878,8 +2725,6 @@ object Formats {
     * same oracle replay, the write mode chosen per table by a property.
     */
   def dsv2MergeBySourceMor(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_mrgm_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mrgm_t
@@ -2887,9 +2732,8 @@ object Formats {
         |SELECT CAST(o_orderkey % 29 AS BIGINT) AS k, count(*) AS n,
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_mrgm_orders GROUP BY 1""".stripMargin) // target: k = 0..28
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mrgm_t")
-    val preNames = graft.sources.v2.MemCatalog.liveEntries(tdir).map(_.name).toSet
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.mrgm_t")
+    val preNames = MemCatalog.liveEntries(tdir).map(_.name).toSet
     spark.sql("SELECT CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n, " +
       "CAST(id * 1000 AS BIGINT) AS cents FROM range(18, 40)")
       .createOrReplaceTempView("graft_mrgm_src") // 18..28 match, 29..39 new
@@ -2901,13 +2745,13 @@ object Formats {
         |WHEN NOT MATCHED BY SOURCE AND t.k % 3 = 0 THEN DELETE
         |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET cents = -t.cents""".stripMargin)
     val writeCheap = preNames.subsetOf(
-      graft.sources.v2.MemCatalog.liveEntries(tdir).map(_.name).toSet)
+      MemCatalog.liveEntries(tdir).map(_.name).toSet)
     spark.sql("SELECT k, n, cents FROM graftmem.tmp.mrgm_t")
       .withColumn("mor_write_cheap", lit(writeCheap))
   }
 
   /** AUTO-COMPACTION VIA COMMIT HOOK —
-    * [[graft.sources.v2.MemCatalog.autoCompact]]: the live-file-count
+    * [[MemCatalog.autoCompact]]: the live-file-count
     * threshold registered as the table's commit hook, so every ingest
     * commit that pushes the table over `maxFiles` triggers OPTIMIZE
     * asynchronously (Delta auto-optimize / Iceberg commit-triggered
@@ -2924,13 +2768,10 @@ object Formats {
     * instead of degrading until a nightly OPTIMIZE.
     */
   def dsv2AutoCompact(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    val cat = graft.sources.v2.MemCatalog
+    val cat = MemCatalog
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.act")
     spark.sql("CREATE TABLE graftmem.tmp.act (k BIGINT, v BIGINT)")
-    val tdir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__act")
+    val tdir = MemCatalog.tableDir(spark, "graftmem.tmp.act")
     cat.autoCompact(tdir, maxFiles = 4)
     try {
       (0 until 8).foreach(i => spark.sql(
@@ -2952,7 +2793,7 @@ object Formats {
   }
 
   /** ZERO-COPY SHALLOW CLONE — Delta's `CREATE TABLE ... SHALLOW CLONE`
-    * ([[graft.sources.v2.MemCatalog.cloneTable]]): the clone's v0
+    * ([[MemCatalog.cloneTable]]): the clone's v0
     * manifest references the source's live files by absolute path, so
     * cloning a 100 TB table is O(live files) manifest work and zero data
     * bytes — the dev/test-sandbox and experiment-branching primitive
@@ -2966,19 +2807,15 @@ object Formats {
     * post-clone source INSERT is invisible to the clone).
     */
   def dsv2ShallowClone(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_cl_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.clsrc AS
         |SELECT CAST(o_orderkey % 23 AS BIGINT) AS k, count(*) AS n,
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_cl_orders GROUP BY 1""".stripMargin)
-    val cat = graft.sources.v2.MemCatalog
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__clsrc")
-    val dstDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cldst")
+    val cat = MemCatalog
+    val srcDir = MemCatalog.tableDir(spark, "graftmem.tmp.clsrc")
+    val dstDir = MemCatalog.tableDir(spark, "graftmem.tmp.cldst")
     cat.deleteRecursively(dstDir)
     cat.cloneTable(srcDir, dstDir)
     import scala.jdk.CollectionConverters._
@@ -3008,7 +2845,7 @@ object Formats {
       .withColumn("clone_isolated", lit(cloneIsolated))
   }
 
-  /** CLONE PROMOTION — [[graft.sources.v2.MemCatalog.promoteClone]]: the
+  /** CLONE PROMOTION — [[MemCatalog.promoteClone]]: the
     * lazy deep-copy upgrade that completes the clone lifecycle. A
     * shallow clone starts zero-copy ([[dsv2ShallowClone]]) and carries
     * one documented hazard: vacuuming the SOURCE can reclaim files the
@@ -3024,8 +2861,6 @@ object Formats {
     * reference from the clone's UPDATE was never copied).
     */
   def dsv2ClonePromote(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_clp_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.clpsrc AS
@@ -3033,11 +2868,9 @@ object Formats {
         |  SELECT CAST(o_orderkey % 19 AS BIGINT) AS k, count(*) AS n,
         |         sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |  FROM graft_clp_orders GROUP BY 1)""".stripMargin)
-    val cat = graft.sources.v2.MemCatalog
-    val srcDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__clpsrc")
-    val dstDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__clpdst")
+    val cat = MemCatalog
+    val srcDir = MemCatalog.tableDir(spark, "graftmem.tmp.clpsrc")
+    val dstDir = MemCatalog.tableDir(spark, "graftmem.tmp.clpdst")
     cat.deleteRecursively(dstDir)
     cat.cloneTable(srcDir, dstDir)
     val refsAtClone = cat.liveEntries(dstDir)
@@ -3088,8 +2921,6 @@ object Formats {
     * cardinality).
     */
   def dsv2MetadataTables(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.mdt")
     spark.sql("CREATE TABLE graftmem.tmp.mdt (k BIGINT, v BIGINT)") // v0 create
     spark.sql("INSERT INTO graftmem.tmp.mdt SELECT id, id * 10 FROM range(0, 40)") // v1
@@ -3133,8 +2964,6 @@ object Formats {
     * diffs (file, dv) snapshots, not file names.
     */
   def dsv2MorDml(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_mor_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mor_t
@@ -3144,12 +2973,11 @@ object Formats {
         |FROM graft_mor_orders GROUP BY 1""".stripMargin) // v0
     spark.sql("INSERT INTO graftmem.tmp.mor_t " +
       "SELECT id, 1, id * 100 FROM range(500, 510)") // v1
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mor_t")
-    val baseNames = graft.sources.v2.MemCatalog.liveEntries(tableDir).map(_.name).toSet
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.mor_t")
+    val baseNames = MemCatalog.liveEntries(tableDir).map(_.name).toSet
     spark.sql("UPDATE graftmem.tmp.mor_t SET cents = cents - n_orders WHERE k % 3 = 1") // v2
     spark.sql("DELETE FROM graftmem.tmp.mor_t WHERE k % 5 = 2") // v3
-    val liveNow = graft.sources.v2.MemCatalog.liveEntries(tableDir)
+    val liveNow = MemCatalog.liveEntries(tableDir)
     // the MoR write contract, gated: no pre-DML base file was rewritten,
     // and the deletes really are vectors (some entry carries one)
     val morBaseKept = baseNames.subsetOf(liveNow.map(_.name).toSet) &&
@@ -3180,8 +3008,6 @@ object Formats {
     * outputs (file:116); this is the row-level delete its model lacks.
     */
   def dsv2MorEqDelete(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_eqd_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.eqdel_t
@@ -3191,20 +3017,19 @@ object Formats {
         |FROM graft_eqd_orders GROUP BY 1""".stripMargin) // v0
     spark.sql("INSERT INTO graftmem.tmp.eqdel_t " +
       "SELECT id, 1, id * 100 FROM range(600, 610)") // v1
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__eqdel_t")
-    val preDel = graft.sources.v2.MemCatalog.liveEntries(tableDir)
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.eqdel_t")
+    val preDel = MemCatalog.liveEntries(tableDir)
       .map(e => (e.name, e.dv)).toSet
     spark.sql("DELETE FROM graftmem.tmp.eqdel_t WHERE k IN (2, 9, 607)") // v2
-    val postDel = graft.sources.v2.MemCatalog.liveEntries(tableDir)
+    val postDel = MemCatalog.liveEntries(tableDir)
       .map(e => (e.name, e.dv)).toSet
     // the write-cheap contract, gated: the DELETE touched NO data file
     // (same live set, no vector composed) and published an #eqdel line
     val eqNoRewrite = preDel == postDel &&
-      graft.sources.v2.MemCatalog.eqDeletes(tableDir).nonEmpty
+      MemCatalog.eqDeletes(tableDir).nonEmpty
     spark.sql("INSERT INTO graftmem.tmp.eqdel_t VALUES (2, 77, 7700)") // v3: k=2 reborn
-    graft.sources.v2.MemCatalog.compact(tableDir) // v4: materialize + GC
-    val eqDeleteGcd = graft.sources.v2.MemCatalog.eqDeletes(tableDir).isEmpty
+    MemCatalog.compact(tableDir) // v4: materialize + GC
+    val eqDeleteGcd = MemCatalog.eqDeletes(tableDir).isEmpty
     // the final read scans the MATERIALIZED files — the oracle hash gates
     // that rewrite-time application equals read-time merge
     spark.sql("SELECT k, n_orders, cents FROM graftmem.tmp.eqdel_t")
@@ -3233,8 +3058,6 @@ object Formats {
     * a separate ANALYZE scan over the table.
     */
   def dsv2NdvStats(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_ndv_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.ndv_fact AS
@@ -3248,9 +3071,8 @@ object Formats {
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.ndv_dim0 AS
         |SELECT o_orderkey AS k, o_custkey AS ck FROM graft_ndv_orders""".stripMargin)
-    val cat = graft.sources.v2.MemCatalog
-    val dimDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__ndv_dim")
+    val cat = MemCatalog
+    val dimDir = MemCatalog.tableDir(spark, "graftmem.tmp.ndv_dim")
     val entries = cat.liveEntries(dimDir)
     // the estimator itself, gated against the exact count (o_orderkey is
     // unique, so exact NDV == the manifest's exact row count)
@@ -3265,8 +3087,6 @@ object Formats {
     // estimate can take it under
     val dimBytes = entries.map(e => java.nio.file.Files.size(dimDir.resolve(e.name))).sum
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     s2.conf.set("spark.sql.cbo.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", math.max(1024L, dimBytes / 2).toString)
     def initialPlan(dim: String): String = s2.sql(
@@ -3304,8 +3124,6 @@ object Formats {
     * expiry itself O(live files) manifest work regardless of data size.
     */
   def dsv2RetentionExpire(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_ret_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.ret_t AS
@@ -3316,9 +3134,8 @@ object Formats {
       "SELECT id, id * 2 FROM range(100, 120)") // v1 (seq 1)
     spark.sql("INSERT INTO graftmem.tmp.ret_t " +
       "SELECT id, id * 3 FROM range(200, 230)") // v2 (seq 2)
-    val cat = graft.sources.v2.MemCatalog
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__ret_t")
+    val cat = MemCatalog
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.ret_t")
     val preNames = cat.liveEntries(tableDir).map(_.name).toSet
     val preCount = spark.table("graftmem.tmp.ret_t").count()
     cat.expireBefore(tableDir, 2L) // v3: only the v2 wave survives
@@ -3365,8 +3182,6 @@ object Formats {
     * millions of rows materializes a shuffle the cluster never needed.
     */
   def dsv2HistJoinCbo(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_hj_orders")
     // side A: hot keys 0..9 (95%), shared band 1e6+orderkey (5%, ~unique)
     spark.sql(
@@ -3396,13 +3211,10 @@ object Formats {
         |SELECT CAST(o_orderkey % 50 AS BIGINT) AS ck,
         |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         |FROM graft_hj_orders""".stripMargin)
-    val aDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__hj_a")
-    val aBytes = graft.sources.v2.MemCatalog.liveEntries(aDir)
+    val aDir = MemCatalog.tableDir(spark, "graftmem.tmp.hj_a")
+    val aBytes = MemCatalog.liveEntries(aDir)
       .map(e => java.nio.file.Files.size(aDir.resolve(e.name))).sum
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     s2.conf.set("spark.sql.cbo.enabled", "true")
     // threshold = HALF of one input: neither base table can broadcast,
     // only a correctly-estimated (small) join intermediate can
@@ -3480,8 +3292,6 @@ object Formats {
     */
   def dsv2StreamCdcUpsert(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcup_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdcup_t
@@ -3494,9 +3304,8 @@ object Formats {
       """CREATE TABLE graftmem.tmp.cdcup_log
         |(op STRING, k BIGINT, n_orders BIGINT, cents BIGINT)
         |TBLPROPERTIES ('graft.applyCdcTo'='tmp.cdcup_t', 'graft.cdcOp'='op')""".stripMargin)
-    val cat = graft.sources.v2.MemCatalog
-    val targetDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcup_t")
+    val cat = MemCatalog
+    val targetDir = MemCatalog.tableDir(spark, "graftmem.tmp.cdcup_t")
     val preLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
     // three epoch files, one micro-batch each (mtime order is the
     // file-source schedule under maxFilesPerTrigger=1)
@@ -3560,7 +3369,7 @@ object Formats {
     * equality-delete sidecar commit on the BRANCH manifest chain
     * (branch-relative sequences, branch-local `queryId -> epoch`
     * replay watermark), main never sees mid-audit state, and
-    * [[graft.sources.v2.MemCatalog.fastForward]] publishes the audited
+    * [[MemCatalog.fastForward]] publishes the audited
     * result in ONE commit — converting the branch-born eq-deletes to
     * positional deletion vectors so main's sequencing invariant holds
     * and zero data files are rewritten. This is Iceberg's
@@ -3580,8 +3389,6 @@ object Formats {
     */
   def dsv2CdcBranchApply(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcbr_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdcbr_t
@@ -3589,9 +3396,8 @@ object Formats {
         |SELECT CAST(o_orderkey % 37 AS BIGINT) AS k, count(*) AS n_orders,
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_cdcbr_orders GROUP BY 1""".stripMargin) // v0
-    val cat = graft.sources.v2.MemCatalog
-    val targetDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcbr_t")
+    val cat = MemCatalog
+    val targetDir = MemCatalog.tableDir(spark, "graftmem.tmp.cdcbr_t")
     cat.dropBranch(targetDir, "audit")
     cat.createBranch(targetDir, "audit")
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdcbr_log")
@@ -3691,8 +3497,6 @@ object Formats {
     * ANALYZE scan.
     */
   def dsv2HistCbo(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_hist_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.hist_fact AS
@@ -3721,9 +3525,8 @@ object Formats {
       """CREATE OR REPLACE TABLE graftmem.tmp.hist_dim1
         |TBLPROPERTIES ('ndvFor'='v') AS
         |SELECT k, v FROM graftmem.tmp.hist_dim""".stripMargin)
-    val cat = graft.sources.v2.MemCatalog
-    val dimDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__hist_dim")
+    val cat = MemCatalog
+    val dimDir = MemCatalog.tableDir(spark, "graftmem.tmp.hist_dim")
     val entries = cat.liveEntries(dimDir)
     val merged = graft.sources.v2.MemHist.merge(entries.map(_.hists("v")))
     val trueRows = spark.table("graftmem.tmp.hist_dim")
@@ -3740,8 +3543,6 @@ object Formats {
     // never take the filtered dim under it, only the histogram's ~5% can
     val dimBytes = entries.map(e => java.nio.file.Files.size(dimDir.resolve(e.name))).sum
     val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     s2.conf.set("spark.sql.cbo.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", math.max(1024L, dimBytes / 5).toString)
     def initialPlan(dim: String): String = s2.sql(
@@ -3784,8 +3585,6 @@ object Formats {
     * the staged data — audit isolation without copying the table.
     */
   def dsv2BranchWap(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     val orders = Tables.orders(spark, dir)
     orders.createOrReplaceTempView("graft_wap_orders")
     spark.sql(
@@ -3793,9 +3592,8 @@ object Formats {
         |SELECT CAST(o_orderkey % 33 AS BIGINT) AS k,
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_wap_orders GROUP BY 1""".stripMargin) // v0
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__wap_t")
-    val cat = graft.sources.v2.MemCatalog
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.wap_t")
+    val cat = MemCatalog
     cat.createBranch(tableDir, "audit") // base = v0
     // WRITE: a real DataFrameWriterV2 append routed to the branch
     spark.sql("SELECT id AS k, id * 7 AS cents FROM range(700, 710)")
@@ -3853,8 +3651,6 @@ object Formats {
     * materialized by maintenance.
     */
   def dsv2BranchMor(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_bmor_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.bmor_t
@@ -3862,9 +3658,8 @@ object Formats {
         |SELECT CAST(o_orderkey % 29 AS BIGINT) AS k,
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_bmor_orders GROUP BY 1""".stripMargin) // v0
-    val cat = graft.sources.v2.MemCatalog
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__bmor_t")
+    val cat = MemCatalog
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.bmor_t")
     def mainChecksum(): Long = spark.sql(
       """SELECT sum(CAST(conv(substring(md5(concat(k, '|', cents)), 1, 8), 16, 10) AS BIGINT))
         |FROM graftmem.tmp.bmor_t""".stripMargin).collect()(0).getLong(0)
@@ -3892,7 +3687,7 @@ object Formats {
     // the final hash gates publish-then-materialize == declarative replay
     cat.fastForward(tableDir, "fix")
     cat.dropBranch(tableDir, "fix")
-    graft.sources.v2.MemCatalog.compact(tableDir)
+    MemCatalog.compact(tableDir)
     spark.sql("SELECT k, cents FROM graftmem.tmp.bmor_t")
       .withColumn("staged_isolated", lit(stagedIsolated))
       .withColumn("branch_dvs_staged", lit(branchDvsStaged))
@@ -3925,8 +3720,6 @@ object Formats {
     * name, and the masks ride deletion vectors).
     */
   def dsv2BranchEqDelete(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_beq_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.beq_t
@@ -3936,9 +3729,8 @@ object Formats {
         |FROM graft_beq_orders GROUP BY 1""".stripMargin) // v0
     spark.sql("INSERT INTO graftmem.tmp.beq_t " +
       "SELECT id, CAST(1 AS BIGINT), id * 10 FROM range(500, 510)") // v1
-    val cat = graft.sources.v2.MemCatalog
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__beq_t")
+    val cat = MemCatalog
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.beq_t")
     val preParts = cat.partFiles(tableDir).map(_.getFileName.toString).toSet
     val preMainCount = spark.table("graftmem.tmp.beq_t").count()
     cat.createBranch(tableDir, "ing")
@@ -3994,22 +3786,19 @@ object Formats {
     * chose to keep.
     */
   def dsv2SnapshotTag(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_tag_orders")
     spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.tag_t AS
         |SELECT CAST(o_orderkey % 30 AS BIGINT) AS k,
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_tag_orders GROUP BY 1""".stripMargin) // v0
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__tag_t")
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.tag_t")
     // REPLACE swapped in a fresh dir, so the tag namespace starts empty
-    graft.sources.v2.MemCatalog.createTag(tableDir, "baseline", 0)
+    MemCatalog.createTag(tableDir, "baseline", 0)
     spark.sql("INSERT INTO graftmem.tmp.tag_t VALUES (555, 42)") // v1
     spark.sql("UPDATE graftmem.tmp.tag_t SET cents = cents + 1 WHERE k % 2 = 0") // v2
     // keepVersions=1 would reclaim v0 and v1 — the tag leases v0
-    graft.sources.v2.MemCatalog.vacuum(tableDir, keepVersions = 1)
+    MemCatalog.vacuum(tableDir, keepVersions = 1)
     spark.sql(
       """SELECT 'current' AS snapshot, k, cents FROM graftmem.tmp.tag_t
         |UNION ALL
@@ -4035,8 +3824,6 @@ object Formats {
     * scan is the same O(table) read Delta pays, administrative not hot.
     */
   def dsv2CheckConstraint(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_chk_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.chk_t")
     spark.sql("CREATE TABLE graftmem.tmp.chk_t (k BIGINT, cents BIGINT) " +
@@ -4083,8 +3870,6 @@ object Formats {
     * the doc-id / join-key probe shape of a retrieval corpus.
     */
   def dsv2BloomSkipping(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_bloom_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.bloom_t")
     spark.sql("CREATE TABLE graftmem.tmp.bloom_t (prio STRING, cents BIGINT) " +
@@ -4100,16 +3885,15 @@ object Formats {
     // per-table seam (lastSkipByDir), not the global lastSkip: the verify
     // sweep plans other catalog scans concurrently, and the global is
     // whoever planned last
-    val bloomDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__bloom_t")
+    val bloomDir = MemCatalog.tableDir(spark, "graftmem.tmp.bloom_t")
     val hit = spark.sql(
       "SELECT count(*) FROM graftmem.tmp.bloom_t WHERE prio = '3-MEDIUM'")
       .head().getLong(0)
-    val (kHit, tHit) = graft.sources.v2.MemCatalog.lastSkipByDir.get(bloomDir)
+    val (kHit, tHit) = MemCatalog.lastSkipByDir.get(bloomDir)
     val miss = spark.sql(
       "SELECT count(*) FROM graftmem.tmp.bloom_t WHERE prio = '9-NEVER'")
       .head().getLong(0)
-    val (kMiss, tMiss) = graft.sources.v2.MemCatalog.lastSkipByDir.get(bloomDir)
+    val (kMiss, tMiss) = MemCatalog.lastSkipByDir.get(bloomDir)
     val pruned = hit > 0 && miss == 0L &&
       kHit < tHit && tMiss == tHit && kMiss == 0
     spark.sql(
@@ -4138,8 +3922,6 @@ object Formats {
     * costing a full scan and costing one manifest read.
     */
   def dsv2MetadataAgg(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_metaagg_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.meta_t")
     spark.sql(
@@ -4148,12 +3930,11 @@ object Formats {
         |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
         |FROM graft_metaagg_orders GROUP BY 1""".stripMargin)
     spark.sql("INSERT INTO graftmem.tmp.meta_t SELECT id, id * 11 FROM range(600, 610)")
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__meta_t")
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.meta_t")
     // the structural proof: with every part file hidden, only a
     // manifest-answered plan can produce the row
     val hidden = java.nio.file.Files.createDirectories(tableDir.resolve("_hid"))
-    val parts = graft.sources.v2.MemCatalog.partFiles(tableDir)
+    val parts = MemCatalog.partFiles(tableDir)
     parts.foreach(p => java.nio.file.Files.move(p, hidden.resolve(p.getFileName),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING))
     val answered = scala.util.Try(spark.sql(
@@ -4181,7 +3962,7 @@ object Formats {
     * statement records its OPERATION in the manifest (`#op:`, Delta's
     * commitInfo.operation), so the commit log doubles as the table's
     * audit history: which verb produced each snapshot, read with
-    * [[graft.sources.v2.MemCatalog.history]] (O(#versions) manifest
+    * [[MemCatalog.history]] (O(#versions) manifest
     * reads, exactly a Delta `DESCRIBE HISTORY` listing). The query walks
     * all seven verbs — CTAS, INSERT, UPDATE, COW DELETE, INSERT
     * OVERWRITE, two more INSERTs, OPTIMIZE — and joins each history row
@@ -4192,8 +3973,6 @@ object Formats {
     * is layout-dependent, cardinality is declarative.
     */
   def dsv2History(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     spark.sql(
       "CREATE OR REPLACE TABLE graftmem.tmp.hist AS " +
         "SELECT id, id * 2 AS v FROM range(100)") // v0 create: 100 rows
@@ -4203,13 +3982,12 @@ object Formats {
     spark.sql("INSERT OVERWRITE graftmem.tmp.hist SELECT id, id AS v FROM range(40)") // v4
     spark.sql("INSERT INTO graftmem.tmp.hist SELECT id, id FROM range(40, 60)") // v5
     spark.sql("INSERT INTO graftmem.tmp.hist SELECT id, id FROM range(60, 80)") // v6
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__hist")
-    graft.sources.v2.MemCatalog.compact(tableDir) // v7 optimize: content-preserving
+    val tableDir = MemCatalog.tableDir(spark, "graftmem.tmp.hist")
+    MemCatalog.compact(tableDir) // v7 optimize: content-preserving
     import spark.implicits._
     // history() is a driver-side MANIFEST listing (metadata plane, like
     // SHOW TABLES) — no data-plane collect here
-    val histSeq = graft.sources.v2.MemCatalog.history(tableDir)
+    val histSeq = MemCatalog.history(tableDir)
     val hist = histSeq.map { case (ver, op, _) => (ver.toLong, op) }.toDF("version", "op")
     val counts = histSeq.map(_._1).map { v =>
       spark.sql(s"SELECT CAST($v AS BIGINT) AS version, count(*) AS n_rows " +
@@ -4230,8 +4008,6 @@ object Formats {
     * faithfully).
     */
   def dsv2CatalogOverwrite(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_ovw_orders")
     def agg(status: String): String =
       s"""SELECT o_orderpriority AS pri, count(*) AS n_orders,
@@ -4260,8 +4036,6 @@ object Formats {
     * identical table WITHOUT `clusterBy` cannot skip at all.
     */
   def dsv2ClusteredWrite(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     Tables.orders(spark, dir).createOrReplaceTempView("graft_clus_orders")
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.clus_bands")
     spark.sql(
@@ -4292,8 +4066,6 @@ object Formats {
     */
   def dsv2StreamSink(spark: SparkSession, dir: String): DataFrame = {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.sink_seq")
     ss.sql("CREATE TABLE graftmem.tmp.sink_seq (id BIGINT, val BIGINT, bucket BIGINT)")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-memsink-ckpt")
@@ -4306,11 +4078,7 @@ object Formats {
       """SELECT bucket, count(*) AS n_rows, sum(val) AS sum_val
         |FROM graftmem.tmp.sink_seq GROUP BY bucket""".stripMargin)
       .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    MemCatalog.deleteRecursively(ckpt)
     out
   }
 
@@ -4610,17 +4378,9 @@ object Formats {
         sum(col("h")).as("checksum"))
     // pin before deleting the temp layouts (Verify/Bench re-execute the plan)
     val pinned = audit.localCheckpoint(true)
-    deleteTree(small)
-    deleteTree(big)
+    MemCatalog.deleteRecursively(small)
+    MemCatalog.deleteRecursively(big)
     pinned
-  }
-
-  private def deleteTree(path: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(path)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -80,11 +80,6 @@ class MemCatalog extends TableCatalog with StagingTableCatalog
     root.resolve(flat)
   }
 
-  /** The table's backing directory — the seam SQL surfaces outside the
-    * connector SPI (the `table_changes` TVF) resolve through.
-    */
-  def tableDir(ident: Identifier): Path = dirOf(ident)
-
   // ---- FunctionCatalog: the partition-transform SYSTEM FUNCTIONS ----
   // `bucket(N, col)` / `days(col)` — the same arithmetic [[MemPart]]
   // stamps in per-file `pt:` stats, exposed the Iceberg way: (a) SQL can
@@ -846,9 +841,25 @@ object MemCatalog {
     case other => other
   }
 
+  /** The directory backing the table `name` (`catalog.ns.table`), looked up
+    * through `spark`'s catalog manager: the one place outside the catalog
+    * instance that maps a table name to its files.
+    */
+  def tableDir(spark: org.apache.spark.sql.SparkSession, name: String): Path = {
+    val parts = name.split("\\.")
+    require(parts.length >= 3,
+      s"table name must be fully qualified ('catalog.namespace.table'), got '$name'")
+    spark.sessionState.catalogManager.catalog(parts(0)) match {
+      case m: MemCatalog => m.dirOf(Identifier.of(parts.slice(1, parts.length - 1), parts.last))
+      case other => throw new IllegalArgumentException(
+        s"catalog '${parts(0)}' is not a graft mem catalog (got ${other.getClass.getName})")
+    }
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
   def deleteRecursively(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
+    if (Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.deleteIfExists(_))
@@ -1684,9 +1695,7 @@ object MemCatalog {
   /** Parse any manifest file (main or branch) — the read core
     * [[readManifestFull]] wraps for main versions.
     */
-  val manifestReads = new java.util.concurrent.atomic.AtomicLong(0) // GRAFT-SCRATCH
   def readManifestPath(p: Path): Manifest = {
-    manifestReads.incrementAndGet() // GRAFT-SCRATCH
     val lines = new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
     val (metaLines, entryLines) = lines.tail.filter(_.nonEmpty).partition(_.startsWith("#"))
     val (opLines, rest) = metaLines.partition(_.startsWith("#op:"))

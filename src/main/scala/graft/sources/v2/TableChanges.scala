@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -45,8 +45,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * column masks filter/tokenize inside the readers, same as every other
   * read surface.
   *
-  * Installed per-session ([[TableChanges.register]]) or session-wide via
-  * `graft.GraftExtensions` (`injectTableFunction`). The reference has no
+  * Installed on every session by `graft.GraftExtensions`
+  * (`injectTableFunction`). The reference has no
   * CDC at all; this is the SQL-entry leg of the lakehouse CDC family
   * (`dsv2_change_feed` / `dsv2_cdf_stream` / `dsv2_cdc_pipeline`).
   */
@@ -88,19 +88,7 @@ object TableChanges {
     val start = ver(exprs(1), "start_version")
     require(start >= 0, s"$FunctionName: start_version must be >= 0, got $start")
 
-    val spark = SparkSession.active
-    val parts = name.split("\\.")
-    require(parts.length >= 3,
-      s"$FunctionName: table_name must be fully qualified " +
-        s"('catalog.namespace.table'), got '$name'")
-    val cat = spark.sessionState.catalogManager.catalog(parts(0)) match {
-      case m: MemCatalog => m
-      case other => throw new IllegalArgumentException(
-        s"$FunctionName: catalog '${parts(0)}' is not a change-feed-capable " +
-          s"graft catalog (got ${other.getClass.getName})")
-    }
-    val ident = Identifier.of(parts.slice(1, parts.length - 1), parts.last)
-    val dir = cat.tableDir(ident)
+    val dir = MemCatalog.tableDir(SparkSession.active, name)
     require(java.nio.file.Files.exists(dir.resolve("_schema.json")),
       s"$FunctionName: table '$name' does not exist")
     val head = MemCatalog.currentVersion(dir)
@@ -123,13 +111,6 @@ object TableChanges {
     val table = new MemChangesTable(name, dir, MemCatalog.readSchema(dir),
       start, end, net)
     DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty())
-  }
-
-  /** Arm the TVF on `spark`'s session (idempotent, WARN-free). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.tableFunctionRegistry
-    if (!reg.functionExists(FunctionIdentifier(FunctionName)))
-      reg.createOrReplaceTempFunction(FunctionName, builder, "scala_udf")
   }
 
   val functionDescription: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =

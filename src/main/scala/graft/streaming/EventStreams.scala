@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import java.sql.Timestamp
+import graft.sources.v2.MemCatalog.deleteRecursively
 
 /** Structured Streaming surface: the streaming twins of the batch event
   * analytics in [[graft.operators.Events]].
@@ -234,16 +235,6 @@ object EventStreams {
     // bookkeeping it skips is evidently on a path the join provider relies
     // on; the default (true) stays.
     ss
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
   }
 
   /** ORACLE-VERIFIED streaming run: the tumbling-window aggregation executed
@@ -909,7 +900,6 @@ object EventStreams {
     // duplicate-sensitive, so redelivery would be visible, unlike HLL)
     val drained = runBoundedFileSource(spark, dir, "sketch", 2, OutputMode.Complete()) {
       stream =>
-        graft.plans.LogHistQuantiles.register(stream.sparkSession)
         stream.select(round(col("value") * 100).cast("long").as("cents"))
           .agg(expr("loghist_sketch(cents)").as("sk"))
     }

@@ -10,7 +10,6 @@ class CountMinSketchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def sketchOf(parts: Int): Array[Long] = {
-    CountMinSketchAgg.register(spark)
     TextPipeline.tokenize(Tables.documents(spark, TestSpark.sf))
       .repartition(parts)
       .agg(expr("cms_sketch(word)"))

@@ -9,7 +9,6 @@ class DedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("word_ngrams generator is row-identical to the HOF shingle formulation") {
-    graft.plans.WordNgrams.register(spark)
     val docs = Seq(
       (1L, "a b c d e f g"),          // 3 shingles
       (2L, "a b c d"),                // too short: none

@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.MvRewrite
+import graft.sources.v2.MemCatalog
+import scala.jdk.CollectionConverters._
 
 /** [[graft.plans.MvRewrite]] unit contracts under the oracle-gated query
   * (`dsv2_mv_rewrite`): the rewrite is plan-verified MV-only when it
@@ -21,8 +23,6 @@ class MvRewriteSpec extends AnyFunSuite {
   // session is the disarmed control)
   private lazy val s2: SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     MvRewrite.install(s)
     s
   }
@@ -37,8 +37,6 @@ class MvRewriteSpec extends AnyFunSuite {
 
   /** Build base (with NULL cents every 5th key) + MV, register, run. */
   private def withMv[A](tag: String)(body: (String, String, MvRewrite.MvDef) => A): A = {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     val base = s"graftmem.tmp.smvr_${tag}_base"
     val mv = s"graftmem.tmp.smvr_${tag}_mv"
     s2.sql(
@@ -53,8 +51,7 @@ class MvRewriteSpec extends AnyFunSuite {
          |       sum(cents) AS sum_cents, min(cents) AS min_cents,
          |       max(cents) AS max_cents
          |FROM $base GROUP BY k, cat""".stripMargin)
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__smvr_${tag}_base")
+    val baseDir = MemCatalog.tableDir(spark, s"graftmem.tmp.smvr_${tag}_base")
     val d = MvRewrite.register(s2, base, mv, baseDir, Seq("k", "cat"),
       Map(("count", "*") -> "n_rows", ("count", "cents") -> "n_cents",
         ("sum", "cents") -> "sum_cents", ("min", "cents") -> "min_cents",
@@ -131,10 +128,8 @@ class MvRewriteSpec extends AnyFunSuite {
   test("maintained registration: freshness follows the persisted watermark, not re-registration") {
     withMv("wm") { (base, mv, d0) =>
       MvRewrite.unregister(d0.baseName) // replace the pinned registration
-      val baseDir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__smvr_wm_base")
-      val mvDir = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__smvr_wm_mv")
+      val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.smvr_wm_base")
+      val mvDir = MemCatalog.tableDir(spark, "graftmem.tmp.smvr_wm_mv")
       s2.sql(s"ALTER TABLE $mv UNSET TBLPROPERTIES IF EXISTS ('graft.mv.basedOn')")
       val d = MvRewrite.registerMaintained(s2, base, mv, baseDir, mvDir,
         Seq("k", "cat"), Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
@@ -190,8 +185,6 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("star-schema MV: aggregates over the registered join rewrite; others refuse") {
-    spark.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
     s2.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.smvr_star_f AS
         |SELECT CAST(id % 50 AS BIGINT) AS ck, CAST(id * 3 AS BIGINT) AS cents
@@ -206,8 +199,8 @@ class MvRewriteSpec extends AnyFunSuite {
         |SELECT seg, nat, count(*) AS n_rows, sum(cents) AS sum_cents
         |FROM graftmem.tmp.smvr_star_f f JOIN graftmem.tmp.smvr_star_d d
         |ON f.ck = d.dk GROUP BY seg, nat""".stripMargin)
-    val dirs = Seq("smvr_star_f", "smvr_star_d").map(n => java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__$n"))
+    val dirs = Seq("smvr_star_f", "smvr_star_d")
+      .map(n => MemCatalog.tableDir(spark, s"graftmem.tmp.$n"))
     val d = MvRewrite.registerJoin(s2, "graftmem.tmp.smvr_star_mv",
       "graftmem.tmp.smvr_star_f", "graftmem.tmp.smvr_star_d", "ck", "dk",
       dirs, Seq("seg", "nat"),
@@ -285,5 +278,22 @@ class MvRewriteSpec extends AnyFunSuite {
            |  (SELECT cat, count(*) AS n FROM $base WHERE k < 3 GROUP BY cat) b
            |ON a.cat = b.cat""".stripMargin)))
     }
+  }
+
+  test("dsv2_mv_serve and dsv2_mv_autorefresh leave no checkpoint directory behind") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    def ckptDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-mvserve-ckpt") || n.startsWith("graft-mvauto-ckpt"))
+        .toSet
+      finally ls.close()
+    }
+    val before = ckptDirs()
+    Seq("dsv2_mv_serve", "dsv2_mv_autorefresh").foreach { name =>
+      assert(SparkEntry.queries(name)(spark, TestSpark.sf).collect().nonEmpty, name)
+    }
+    val left = ckptDirs() diff before
+    assert(left.isEmpty, s"checkpoint directories left behind: $left")
   }
 }

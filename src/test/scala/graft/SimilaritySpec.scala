@@ -148,7 +148,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("native CosineSimilarity expression agrees with the HOF formulation and hand math") {
     import org.apache.spark.sql.functions._
-    graft.plans.CosineSimilarity.register(spark)
     val pairs = Seq(
       (Array(1.0, 2.0, 3.0), Array(1.0, 2.0, 3.0)),   // identical → 1.0
       (Array(1.0, 0.0), Array(0.0, 1.0)),             // orthogonal → 0.0
@@ -165,7 +164,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("native cosine works from SQL text and inside codegen'd plans") {
-    graft.plans.CosineSimilarity.register(spark)
     val r = spark.sql("SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
       .as[Double].head()
     assert(math.abs(r - 1.0) < 1e-12)
@@ -173,7 +171,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("native dot_i64 agrees with the HOF formulation and hand math") {
     import org.apache.spark.sql.functions._
-    graft.plans.DotProductLong.register(spark)
     val pairs = Seq(
       (Array(1L, 2L, 3L), Array(4L, 5L, 6L)),       // 4+10+18 = 32
       (Array(-7L, 1000L), Array(3L, -2L)),          // -21-2000 = -2021

@@ -108,7 +108,7 @@ class TopKPerGroupSpec extends AnyFunSuite {
   }
 
   test("optimizer rule rewrites row_number<=k windows to TopKPerGroupPlan, results identical") {
-    import graft.plans.{RewriteRankFilterToTopK, TopKStrategy}
+    import graft.plans.RewriteRankFilterToTopK
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc)
     val df = Tables.orders(spark, TestSpark.sf)
@@ -119,9 +119,6 @@ class TopKPerGroupSpec extends AnyFunSuite {
     val rewritten = RewriteRankFilterToTopK(optimized)
     assert(rewritten.collect { case p: graft.plans.TopKPerGroupPlan => p }.nonEmpty,
       s"rule did not fire on:\n$optimized")
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
-    }
     val viaRule = graft.sparkutil.DatasetFactory.ofRows(spark, rewritten)
       .as[(Long, Long, Double)].collect().toSet
     val viaWindowPlan = df.as[(Long, Long, Double)].collect().toSet

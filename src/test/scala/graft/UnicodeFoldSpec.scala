@@ -32,7 +32,6 @@ class UnicodeFoldSpec extends AnyFunSuite {
 
   test("interpreted eval, codegen, and SQL registration agree") {
     import spark.implicits._
-    UnicodeFold.register(spark)
     val rows = Seq("résumé", "Ñandú 42", "plain", "ﬁne über").toDF("s")
       .select(expr("unicode_fold(s)").as("f")).as[String].collect().toSeq
     assert(rows == Seq("resume", "Nandu 42", "plain", "fine uber"))
@@ -45,7 +44,6 @@ class UnicodeFoldSpec extends AnyFunSuite {
   test("the expression stays inside whole-stage codegen") {
     // a local relation constant-folds at the driver (LocalTableScan), so
     // drive the expression over a real file scan to see the codegen span
-    UnicodeFold.register(spark)
     val df = graft.sources.Tables.documents(spark, TestSpark.sf)
       .select(expr("unicode_fold(text)").as("f"))
     val p = df.queryExecution.executedPlan.toString

@@ -85,7 +85,6 @@ class MemCatalogSpec extends AnyFunSuite {
   }
 
   test("the V2 catalog function resolves by SQL identifier and matches the generator") {
-    spark.conf.set("spark.sql.catalog.graftcat", classOf[SeqCatalog].getName)
     val r = spark.sql(
       "SELECT count(*) AS n, count(CASE WHEN graftcat.gen.knuth_val(id) = val THEN 1 END) AS ok " +
         "FROM graftcat.gen.seq_1000_2").collect()(0)

@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.file.Paths
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -13,14 +11,9 @@ import graft.TestSpark
   * audit branch refuses at start instead of silently applying to main.
   */
 class MemCdcBranchSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graftmem", classOf[MemCatalog].getName)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
-  private def tdir(name: String) = Paths.get(
-    sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__$name")
+  private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
 
   private def mk(name: String): java.nio.file.Path = {
     spark.sql(s"DROP TABLE IF EXISTS graftmem.tmp.$name")

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -12,14 +12,9 @@ import graft.TestSpark
   * caveat), and the clone's v0 time-travels to the exact clone-point rows.
   */
 class MemCloneSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graftmem", classOf[MemCatalog].getName)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
-  private def tdir(name: String) = Paths.get(
-    sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__$name")
+  private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
 
   test("a source with pending equality deletes refuses to clone") {
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.cls_eq")

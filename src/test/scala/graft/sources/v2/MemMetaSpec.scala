@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.file.Paths
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -13,14 +11,9 @@ import graft.TestSpark
   * handle suffix shadows the handle (resolution order).
   */
 class MemMetaSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graftmem", classOf[MemCatalog].getName)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
-  private def tdir(name: String) = Paths.get(
-    sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__$name")
+  private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
 
   test("files relation mirrors the live manifest; history hides vacuumed versions") {
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.meta_t")
@@ -110,8 +103,7 @@ class MemMetaSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.refspec")
     spark.sql("CREATE TABLE graftmem.tmp.refspec (k BIGINT)")
     spark.sql("INSERT INTO graftmem.tmp.refspec VALUES (CAST(1 AS BIGINT))")
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__refspec")
+    val dir = MemCatalog.tableDir(spark, "graftmem.tmp.refspec")
     assert(spark.sql("SELECT count(*) FROM graftmem.tmp.refspec.refs")
       .head().getLong(0) == 0, "no refs yet — the relation must be empty")
     MemCatalog.createTag(dir, "t1", 1)

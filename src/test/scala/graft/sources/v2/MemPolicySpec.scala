@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.file.Paths
-
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -12,14 +10,9 @@ import graft.TestSpark
   * it, and a masked value is never written back as data.
   */
 class MemPolicySpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSpark.spark
-    s.conf.set("spark.sql.catalog.graftmem", classOf[MemCatalog].getName)
-    s
-  }
+  private lazy val spark = TestSpark.spark
 
-  private def tdir(name: String) = Paths.get(
-    sys.props("java.io.tmpdir"), "graft-memcat-graftmem", s"tmp__$name")
+  private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
 
   test("maintenance preserves policy-hidden rows: compact + policy-drop round-trips") {
     spark.sql("DROP TABLE IF EXISTS graftmem.tmp.polc")

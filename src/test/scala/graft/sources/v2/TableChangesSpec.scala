@@ -16,7 +16,6 @@ class TableChangesSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory(s"graft-tvf-spec-$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    TableChanges.register(spark)
     (name, root)
   }
 
