@@ -181,20 +181,11 @@ object ScaleProbe {
 
   /** Write `df` as ONE parquet FILE at `dest` (fixture layout). */
   private def writeSingleFile(df: DataFrame, dest: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-probe-part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = {
-      val ls = java.nio.file.Files.list(tmp)
-      try ls.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-      finally ls.close()
-    }
     // a prior-generation probe run left $dest as a parquet DIRECTORY —
-    // move(REPLACE_EXISTING) cannot replace a non-empty dir, so clear it
+    // the staged file cannot replace a non-empty dir, so clear it
     deleteRecursively(dest)
-    java.nio.file.Files.move(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(tmp)
+    graft.streaming.BoundedDrain.stageFile(dest.getParent, df, dest.getFileName.toString,
+      System.currentTimeMillis())
   }
 
   /** Synthesize `copies`× the sf0.1 tables into `dst` (see class doc for
@@ -317,35 +308,20 @@ object ScaleProbe {
     ss.sql(s"UPDATE graftmem.ivm.base_$label SET cents = cents + 1 WHERE k <= $k100")
     // timed: the incremental maintenance alone — net CDF from vSeed+1,
     // signed-delta MERGE per micro-batch (Gupta–Mumick)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ivmprobe-$label")
     val t0 = System.nanoTime()
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .option("startingVersion", vSeed + 1)
-      .table(s"graftmem.ivm.base_$label")
-      .select(col("cat"), col("cents"), col("_change_type"))
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    graft.streaming.BoundedDrain.once(
+      ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .option("startingVersion", vSeed + 1)
+        .table(s"graftmem.ivm.base_$label")
+        .select(col("cat"), col("cents"), col("_change_type")),
+      graft.streaming.BoundedDrain.Sink.ForeachBatch { (batch, _) =>
         val view = s"graft_ivm_batch_$label"
         batch.createOrReplaceTempView(view)
         batch.sparkSession.sql(
-          s"""MERGE INTO graftmem.ivm.mv_$label m USING (
-             |  SELECT cat,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN cents ELSE -cents END) AS d_cents
-             |  FROM $view GROUP BY cat) d
-             |ON m.cat = d.cat
-             |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET
-             |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-             |WHEN NOT MATCHED THEN
-             |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+          graft.plans.MvRewrite.signedDeltaMerge(s"graftmem.ivm.mv_$label", view))
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     val maintain = (System.nanoTime() - t0) / 1e9
     // correctness rider: incremental == recompute, else the timing is void
     val bad = ss.sql(
@@ -359,7 +335,6 @@ object ScaleProbe {
          |   SELECT cat, n_rows, sum_cents FROM graftmem.ivm.mv_$label))""".stripMargin)
       .head().getLong(0)
     require(bad == 0, s"IVM probe: maintained MV diverged from recompute at $label")
-    deleteRecursively(ckpt)
     // SERVING flat-line — the read half ([[graft.plans.MvRewrite]]): the
     // watermark-armed rewrite answers the SAME aggregate from the
     // maintained MV. Timed against `recompute` (the direct base

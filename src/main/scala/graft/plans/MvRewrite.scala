@@ -187,6 +187,29 @@ object MvRewrite extends Rule[LogicalPlan] {
     d
   }
 
+  /** The signed-delta maintenance statement for a `(cat, n_rows,
+    * sum_cents)` MV (the Gupta–Mumick rule for SUM/COUNT views): each net
+    * change row in `changes` (a relation with `cat`, `cents`,
+    * `_change_type` — a batch view or a `table_changes(...)` call)
+    * counts +1/+cents as `insert`/`update_postimage` and −1/−cents
+    * otherwise; the per-group deltas then UPDATE matched groups, INSERT
+    * new ones, and DELETE a group whose count reaches zero.
+    */
+  def signedDeltaMerge(mv: String, changes: String): String =
+    s"""MERGE INTO $mv m USING (
+       |  SELECT cat,
+       |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
+       |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
+       |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
+       |                  THEN cents ELSE -cents END) AS d_cents
+       |  FROM $changes GROUP BY cat) d
+       |ON m.cat = d.cat
+       |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
+       |WHEN MATCHED THEN UPDATE SET
+       |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
+       |WHEN NOT MATCHED THEN
+       |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin
+
   /** STAR-SCHEMA registration: the MV aggregates over
     * `leftIdent ⋈_{leftKey = rightKey} rightIdent` (INNER, single
     * equi-key; key names must differ). A query aggregate over the SAME

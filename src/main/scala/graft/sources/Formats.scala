@@ -2,7 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.sources.v2.MemCatalog
+import graft.streaming.BoundedDrain
+import graft.streaming.BoundedDrain.Sink
 
 /** Non-parquet SOURCE coverage at the verified-query level: SinksSpec
   * proves CSV/JSON/ORC round-trips in-process, but a registry query must
@@ -624,18 +627,10 @@ object Formats {
         netRows.map(_.getLong(1)).sum == netW2
     // rider 1: the TVF is multiset-identical to a REAL drained streaming
     // change-feed run over the same versions
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tvf-ckpt")
-    val qname = "graft_tvf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.option("changefeed", "true")
-      .table("graftmem.tmp.tvf_t")
-      .select(col("k"), col("n"), col("cents"), col("_change_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    MemCatalog.deleteRecursively(ckpt)
+    val drained = BoundedDrain.once(
+      ss.readStream.option("changefeed", "true").table("graftmem.tmp.tvf_t")
+        .select(col("k"), col("n"), col("cents"), col("_change_type")),
+      Sink.Memory(OutputMode.Append())).out.get
     val tvfRows = ss.sql(
       """SELECT k, n, cents, _change_type
         |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)""".stripMargin)
@@ -701,22 +696,15 @@ object Formats {
     ss.sql("INSERT INTO graftmem.tmp.tvs VALUES (601, 1, 222)") // v1
     ss.sql("UPDATE graftmem.tmp.tvs SET cents = cents + 2 WHERE k % 7 = 3") // v2
     ss.sql("DELETE FROM graftmem.tmp.tvs WHERE k % 11 = 5") // v3
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tvs-ckpt")
-    val qname = "graft_tvs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.option("maxVersionsPerTrigger", "1")
-      .table("graftmem.tmp.tvs.changes_0_3")
-      .select(col("k"), col("n"), col("cents"),
-        col("_change_type"), col("_commit_version"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
+    val run = BoundedDrain.once(
+      ss.readStream.option("maxVersionsPerTrigger", "1")
+        .table("graftmem.tmp.tvs.changes_0_3")
+        .select(col("k"), col("n"), col("cents"),
+          col("_change_type"), col("_commit_version")),
+      Sink.Memory(OutputMode.Append()))
     // pacing: four commits, four non-empty micro-batches (one each)
-    val paced = q.recentProgress.count(_.numInputRows > 0) == 4 &&
-      q.recentProgress.filter(_.numInputRows > 0).length == 4
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    MemCatalog.deleteRecursively(ckpt)
+    val paced = run.progress.count(_.numInputRows > 0) == 4
+    val drained = run.out.get
     val batch = ss.sql(
       """SELECT k, n, cents, _change_type, _commit_version
         |FROM table_changes('graftmem.tmp.tvs', 0, 3)""".stripMargin)
@@ -779,21 +767,8 @@ object Formats {
     val tvfBytes = spark.sql(tvfSql).queryExecution.optimizedPlan.stats.sizeInBytes
     val statsBounded = tvfBytes > 0 && tvfBytes < BigInt(baseBytes)
     // THE maintenance statement: one SQL MERGE over the net window
-    spark.sql(
-      """MERGE INTO graftmem.tmp.sqlivm_mv m USING (
-        |  SELECT cat,
-        |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-        |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-        |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-        |                  THEN cents ELSE -cents END) AS d_cents
-        |  FROM table_changes('graftmem.tmp.sqlivm_base', 1, 3, true)
-        |  GROUP BY cat) d
-        |ON m.cat = d.cat
-        |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET
-        |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-        |WHEN NOT MATCHED THEN
-        |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+    spark.sql(graft.plans.MvRewrite.signedDeltaMerge("graftmem.tmp.sqlivm_mv",
+      "table_changes('graftmem.tmp.sqlivm_base', 1, 3, true)"))
     // the gate that makes the timing claim honest: maintained == recompute
     val bad = spark.sql(
       """SELECT count(*) FROM (
@@ -939,20 +914,12 @@ object Formats {
     // EventStreams.streamingSession) — the ~n/step batches each commit
     // per-partition state, so 32 stores was pure fixed cost here too
     val ss = graft.streaming.EventStreams.streamingSession(spark)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-seq-stream-ckpt")
-    val qname = "graft_seq_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.format("graft.sources.v2.SeqStreamSource")
-      .option("n", "50000").option("step", "10000").option("parts", "4").load()
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_rows"), sum("val").as("sum_val"))
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    MemCatalog.deleteRecursively(ckpt)
-    out
+    BoundedDrain.once(
+      ss.readStream.format("graft.sources.v2.SeqStreamSource")
+        .option("n", "50000").option("step", "10000").option("parts", "4").load()
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("n_rows"), sum("val").as("sum_val")),
+      Sink.Memory(OutputMode.Complete())).out.get
   }
 
   /** SCHEMA EVOLUTION through the catalog SPI (`alterTable` +
@@ -1341,19 +1308,11 @@ object Formats {
     ss.sql(s"CREATE OR REPLACE TABLE graftmem.tmp.stt_orders AS ${slice("1-URGENT")}")
     ss.sql(s"INSERT INTO graftmem.tmp.stt_orders ${slice("2-HIGH")}")
     ss.sql(s"INSERT INTO graftmem.tmp.stt_orders ${slice("3-MEDIUM")}")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memtail-ckpt")
-    val qname = "graft_memtail_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.table("graftmem.tmp.stt_orders")
-      .groupBy(col("pri"))
-      .agg(count(lit(1)).as("n_orders"), sum("cents").as("cents"))
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    MemCatalog.deleteRecursively(ckpt)
-    out
+    BoundedDrain.once(
+      ss.readStream.table("graftmem.tmp.stt_orders")
+        .groupBy(col("pri"))
+        .agg(count(lit(1)).as("n_orders"), sum("cents").as("cents")),
+      Sink.Memory(OutputMode.Complete())).out.get
   }
 
   /** STREAMING CHANGE FEED of the catalog table — the row-level CDF tail
@@ -1387,18 +1346,11 @@ object Formats {
     ss.sql("INSERT INTO graftmem.tmp.cdf_bands VALUES (77, 'Z', 5, 1234)")
     ss.sql("UPDATE graftmem.tmp.cdf_bands SET cents = cents + n_orders WHERE band >= 3")
     ss.sql("DELETE FROM graftmem.tmp.cdf_bands WHERE band = 1")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdf-ckpt")
-    val qname = "graft_memcdf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.option("changefeed", "true").table("graftmem.tmp.cdf_bands")
-      .select(col("band"), col("status"), col("n_orders"), col("cents"),
-        col("_change_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    MemCatalog.deleteRecursively(ckpt)
+    val drained = BoundedDrain.once(
+      ss.readStream.option("changefeed", "true").table("graftmem.tmp.cdf_bands")
+        .select(col("band"), col("status"), col("n_orders"), col("cents"),
+          col("_change_type")),
+      Sink.Memory(OutputMode.Append())).out.get
     // fold the feed: the net change per key IS the final table
     val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
     drained
@@ -1446,20 +1398,12 @@ object Formats {
     val compacted =
       MemCatalog.currentVersion(tableDir) == vBefore + 1 &&
         MemCatalog.readManifestFull(tableDir, vBefore + 1).op == "optimize"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdfnet-ckpt")
-    val qname = "graft_memcdfnet_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .table("graftmem.tmp.cdfnet_bands")
-      .select(col("n_orders"), col("cents"), col("_change_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    MemCatalog.deleteRecursively(ckpt)
-    drained
+    BoundedDrain.once(
+      ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .table("graftmem.tmp.cdfnet_bands")
+        .select(col("n_orders"), col("cents"), col("_change_type")),
+      Sink.Memory(OutputMode.Append())).out.get
       .groupBy(col("_change_type").as("change_type"))
       .agg(count(lit(1)).as("n_rows"),
         sum("n_orders").as("sum_orders"),
@@ -1498,13 +1442,12 @@ object Formats {
     ss.sql("DELETE FROM graftmem.tmp.cdc_src WHERE k >= 35 AND k < 40") // v3: COW
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdc_dst")
     ss.sql("CREATE TABLE graftmem.tmp.cdc_dst (k BIGINT, n_orders BIGINT, cents BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdcp-ckpt")
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .table("graftmem.tmp.cdc_src")
-      .select(col("k"), col("n_orders"), col("cents"), col("_change_type"))
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    BoundedDrain.once(
+      ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .table("graftmem.tmp.cdc_src")
+        .select(col("k"), col("n_orders"), col("cents"), col("_change_type")),
+      Sink.ForeachBatch { (batch, _) =>
         val view = "graft_cdcp_batch"
         batch.createOrReplaceTempView(view)
         batch.sparkSession.sql(
@@ -1522,13 +1465,8 @@ object Formats {
              |WHEN NOT MATCHED AND s.ord = 1 THEN
              |  INSERT (k, n_orders, cents) VALUES (s.k, s.n_orders, s.cents)""".stripMargin)
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdc_dst")
-      .localCheckpoint(true)
-    MemCatalog.deleteRecursively(ckpt)
-    out
+      })
+    ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdc_dst").localCheckpoint(true)
   }
 
   /** INCREMENTAL MATERIALIZED-VIEW MAINTENANCE from the net change feed
@@ -1565,37 +1503,18 @@ object Formats {
     ss.sql("DELETE FROM graftmem.tmp.mv_src WHERE k % 7 = 3") // v3: whole group vanishes
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mv")
     ss.sql("CREATE TABLE graftmem.tmp.mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memmvinc-ckpt")
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .table("graftmem.tmp.mv_src")
-      .select(col("cat"), col("cents"), col("_change_type"))
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val view = "graft_mvinc_batch"
-        batch.createOrReplaceTempView(view)
+    BoundedDrain.once(
+      ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .table("graftmem.tmp.mv_src")
+        .select(col("cat"), col("cents"), col("_change_type")),
+      Sink.ForeachBatch { (batch, _) =>
+        batch.createOrReplaceTempView("graft_mvinc_batch")
         batch.sparkSession.sql(
-          s"""MERGE INTO graftmem.tmp.mv m USING (
-             |  SELECT cat,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN cents ELSE -cents END) AS d_cents
-             |  FROM $view GROUP BY cat) d
-             |ON m.cat = d.cat
-             |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET
-             |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-             |WHEN NOT MATCHED THEN
-             |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+          graft.plans.MvRewrite.signedDeltaMerge("graftmem.tmp.mv", "graft_mvinc_batch"))
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.mv")
-      .localCheckpoint(true)
-    MemCatalog.deleteRecursively(ckpt)
-    out
+      })
+    ss.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.mv").localCheckpoint(true)
   }
 
   /** TRANSPARENT MATERIALIZED-VIEW QUERY REWRITE
@@ -1720,23 +1639,21 @@ object Formats {
       java.nio.file.Files.exists(sidecar(1, "pre")) &&
         java.nio.file.Files.exists(sidecar(1, "post")) &&
         !java.nio.file.Files.exists(sidecar(2, "pre"))
+    // each drain replays the feed from v1 over its OWN fresh checkpoint
     def drain(): Seq[(Long, Long, String)] = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcsc-ckpt")
       val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-      val q = ss.readStream
-        .option("changefeed", "true").option("netChanges", "true")
-        .option("startingVersion", 1)
-        .table("graftmem.tmp.cdcsc")
-        .select(col("k"), col("cents"), col("_change_type"))
-        .writeStream.option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      BoundedDrain.once(
+        ss.readStream
+          .option("changefeed", "true").option("netChanges", "true")
+          .option("startingVersion", 1)
+          .table("graftmem.tmp.cdcsc")
+          .select(col("k"), col("cents"), col("_change_type")),
+        Sink.ForeachBatch { (b, _) =>
           got.synchronized {
             got ++= b.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
           }
           ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      MemCatalog.deleteRecursively(ckpt)
+        })
       got.toSeq
     }
     val viaSidecar = drain()
@@ -1971,50 +1888,33 @@ object Formats {
     ss.sql("CREATE TABLE graftmem.tmp.mvs_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
     val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvs_base")
     val mvDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvs_mv")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-mvserve-ckpt")
-    // one maintenance CYCLE: drain every unabsorbed base commit (one per
-    // epoch), folding each into the MV and stamping the watermark in the
-    // SAME foreachBatch (the scheduled-maintenance shape; restarts
-    // resume from the checkpoint)
-    def cycle(): Unit = {
-      val q = ss.readStream
-        .option("changefeed", "true").option("netChanges", "true")
-        .table("graftmem.tmp.mvs_base")
-        .select(col("cat"), col("cents"), col("_change_type"))
-        .writeStream.option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-          val view = "graft_mvs_batch"
-          batch.createOrReplaceTempView(view)
+    val s2 = spark.newSession()
+    graft.plans.MvRewrite.install(s2)
+    val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvs_base",
+      "graftmem.tmp.mvs_mv", baseDir, mvDir, Seq("cat"),
+      Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
+    // the maintenance cycles share ONE checkpoint: the second is a restart
+    try BoundedDrain.scope { maint =>
+      // one maintenance CYCLE: drain every unabsorbed base commit (one per
+      // epoch), folding each into the MV and stamping the watermark in the
+      // SAME foreachBatch (the scheduled-maintenance shape; restarts
+      // resume from the checkpoint)
+      def cycle(): Unit = maint.drain(
+        ss.readStream
+          .option("changefeed", "true").option("netChanges", "true")
+          .table("graftmem.tmp.mvs_base")
+          .select(col("cat"), col("cents"), col("_change_type")),
+        Sink.ForeachBatch { (batch, epoch) =>
+          batch.createOrReplaceTempView("graft_mvs_batch")
           batch.sparkSession.sql(
-            s"""MERGE INTO graftmem.tmp.mvs_mv m USING (
-               |  SELECT cat,
-               |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-               |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-               |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-               |                  THEN cents ELSE -cents END) AS d_cents
-               |  FROM $view GROUP BY cat) d
-               |ON m.cat = d.cat
-               |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-               |WHEN MATCHED THEN UPDATE SET
-               |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-               |WHEN NOT MATCHED THEN
-               |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+            graft.plans.MvRewrite.signedDeltaMerge("graftmem.tmp.mvs_mv", "graft_mvs_batch"))
           // the absorbed base version == the epoch id (one version per
           // epoch from initial offset -1); stamped HERE so watermark and
           // fold publish from the same maintenance step
           batch.sparkSession.sql("ALTER TABLE graftmem.tmp.mvs_mv " +
             s"SET TBLPROPERTIES('graft.mv.basedOn' = '$epoch')")
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val s2 = spark.newSession()
-    graft.plans.MvRewrite.install(s2)
-    val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvs_base",
-      "graftmem.tmp.mvs_mv", baseDir, mvDir, Seq("cat"),
-      Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    try {
+        })
       val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
         "FROM graftmem.tmp.mvs_base GROUP BY cat"
       def scansMvOnly(): Boolean = {
@@ -2036,16 +1936,12 @@ object Formats {
       val rearms = scansMvOnly() &&
         s2.sql(sql).collect().map(_.toString).sorted
           .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      val out = spark.sql(sql)
+      spark.sql(sql)
         .withColumn("mv_serves_fresh", lit(freshServes))
         .withColumn("mv_stale_disarms", lit(staleDisarms))
         .withColumn("mv_rearms_after_drain", lit(rearms))
         .localCheckpoint(true)
-      out
-    } finally {
-      MemCatalog.deleteRecursively(ckpt)
-      graft.plans.MvRewrite.unregister(d.baseName)
-    }
+    } finally graft.plans.MvRewrite.unregister(d.baseName)
   }
 
   /** MV AUTO-REFRESH VIA COMMIT HOOK — the last manual step of
@@ -2109,22 +2005,9 @@ object Formats {
           .select(col("cat"), col("cents"), col("_change_type"))
           .writeStream.option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-            val view = "graft_mvar_batch"
-            batch.createOrReplaceTempView(view)
+            batch.createOrReplaceTempView("graft_mvar_batch")
             batch.sparkSession.sql(
-              s"""MERGE INTO graftmem.tmp.mvar_mv m USING (
-                 |  SELECT cat,
-                 |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-                 |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-                 |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-                 |                  THEN cents ELSE -cents END) AS d_cents
-                 |  FROM $view GROUP BY cat) d
-                 |ON m.cat = d.cat
-                 |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-                 |WHEN MATCHED THEN UPDATE SET
-                 |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-                 |WHEN NOT MATCHED THEN
-                 |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+              graft.plans.MvRewrite.signedDeltaMerge("graftmem.tmp.mvar_mv", "graft_mvar_batch"))
             batch.sparkSession.sql("ALTER TABLE graftmem.tmp.mvar_mv " +
               s"SET TBLPROPERTIES('graft.mv.basedOn' = '$epoch')")
             ()
@@ -3309,42 +3192,29 @@ object Formats {
     val preLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
     // three epoch files, one micro-batch each (mtime order is the
     // file-source schedule under maxFilesPerTrigger=1)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-cdcup-src")
     val t0 = System.currentTimeMillis() - 60000
-    def epochFile(name: String, sql: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdcup-stage")
-      ss.sql(sql).coalesce(1).write.mode("overwrite").parquet(s"$tmp/d")
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/d"))
-        .filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      val dst = srcDir.resolve(name)
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-      cat.deleteRecursively(tmp)
+    BoundedDrain.scope { s =>
+      def epochFile(name: String, sql: String, mtime: Long): Unit =
+        BoundedDrain.stageFile(s.sourceDir, ss.sql(sql), name, mtime)
+      epochFile("e1.parquet",
+        """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
+          |CAST(id * 100 AS BIGINT) AS cents FROM range(600, 610)""".stripMargin, t0)
+      epochFile("e2.parquet",
+        """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
+          |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (14), (600) AS u(k)
+          |UNION ALL
+          |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
+          |FROM VALUES (2), (9), (601) AS d(k)""".stripMargin, t0 + 10000)
+      epochFile("e3.parquet",
+        """SELECT 'I' AS op, CAST(2 AS BIGINT) AS k, CAST(5 AS BIGINT) AS n_orders,
+          |       CAST(555 AS BIGINT) AS cents
+          |UNION ALL SELECT 'U', CAST(9 AS BIGINT), CAST(6 AS BIGINT),
+          |       CAST(666 AS BIGINT)""".stripMargin, t0 + 20000)
+      s.drain(ss.readStream
+        .schema("op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")
+        .option("maxFilesPerTrigger", "1").parquet(s.sourceDir.toString),
+        Sink.ToTable("graftmem.tmp.cdcup_log"))
     }
-    epochFile("e1.parquet",
-      """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
-        |CAST(id * 100 AS BIGINT) AS cents FROM range(600, 610)""".stripMargin, t0)
-    epochFile("e2.parquet",
-      """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
-        |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (14), (600) AS u(k)
-        |UNION ALL
-        |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM VALUES (2), (9), (601) AS d(k)""".stripMargin, t0 + 10000)
-    epochFile("e3.parquet",
-      """SELECT 'I' AS op, CAST(2 AS BIGINT) AS k, CAST(5 AS BIGINT) AS n_orders,
-        |       CAST(555 AS BIGINT) AS cents
-        |UNION ALL SELECT 'U', CAST(9 AS BIGINT), CAST(6 AS BIGINT),
-        |       CAST(666 AS BIGINT)""".stripMargin, t0 + 20000)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcup-ckpt")
-    val q = ss.readStream
-      .schema("op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .toTable("graftmem.tmp.cdcup_log")
-    try q.processAllAvailable() finally q.stop()
     // the write-cheap contract: three epochs of deletes/upserts touched
     // ZERO pre-existing files — appends and manifest lines only
     val postLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
@@ -3354,8 +3224,6 @@ object Formats {
       ss.table("graftmem.tmp.cdcup_log").count() == 18 // 10 + 6 + 2 raw changes
     cat.compact(targetDir) // materialize the masks; GC applied deletes
     val eqGcd = cat.eqDeletes(targetDir).isEmpty
-    cat.deleteRecursively(srcDir)
-    cat.deleteRecursively(ckpt)
     ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcup_t")
       .withColumn("cdc_write_cheap", lit(cdcWriteCheap))
       .withColumn("eqdel_per_epoch", lit(eqdelPerEpoch))
@@ -3410,37 +3278,24 @@ object Formats {
     val preRows = ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcbr_t")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val preNames = cat.liveEntries(targetDir).map(_.name).toSet
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-cdcbr-src")
     val t0 = System.currentTimeMillis() - 60000
-    def epochFile(name: String, sql: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdcbr-stage")
-      ss.sql(sql).coalesce(1).write.mode("overwrite").parquet(s"$tmp/d")
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/d"))
-        .filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      val dst = srcDir.resolve(name)
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-      cat.deleteRecursively(tmp)
+    BoundedDrain.scope { s =>
+      def epochFile(name: String, sql: String, mtime: Long): Unit =
+        BoundedDrain.stageFile(s.sourceDir, ss.sql(sql), name, mtime)
+      epochFile("e1.parquet",
+        """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
+          |CAST(id * 100 AS BIGINT) AS cents FROM range(500, 505)""".stripMargin, t0)
+      epochFile("e2.parquet",
+        """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
+          |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (500) AS u(k)
+          |UNION ALL
+          |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
+          |FROM VALUES (2), (501) AS d(k)""".stripMargin, t0 + 10000)
+      s.drain(ss.readStream
+        .schema("op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")
+        .option("maxFilesPerTrigger", "1").parquet(s.sourceDir.toString),
+        Sink.ToTable("graftmem.tmp.cdcbr_log"))
     }
-    epochFile("e1.parquet",
-      """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
-        |CAST(id * 100 AS BIGINT) AS cents FROM range(500, 505)""".stripMargin, t0)
-    epochFile("e2.parquet",
-      """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
-        |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (500) AS u(k)
-        |UNION ALL
-        |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM VALUES (2), (501) AS d(k)""".stripMargin, t0 + 10000)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcbr-ckpt")
-    val q = ss.readStream
-      .schema("op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .toTable("graftmem.tmp.cdcbr_log")
-    try q.processAllAvailable() finally q.stop()
     // the merged truth the branch must already read and main must not
     val expected = preRows.filterNot(r => r._1 == 2L || r._1 == 3L) ++
       Set((3L, 77L, 3000L), (500L, 77L, 500000L),
@@ -3460,8 +3315,6 @@ object Formats {
       preNames.subsetOf(cat.liveEntries(targetDir).map(_.name).toSet) &&
       rowsOf("graftmem.tmp.cdcbr_t") == expected
     cat.dropBranch(targetDir, "audit")
-    cat.deleteRecursively(srcDir)
-    cat.deleteRecursively(ckpt)
     ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcbr_t")
       .withColumn("main_isolated_mid_audit", lit(mainIsolated))
       .withColumn("branch_watermarked", lit(branchWatermarked))
@@ -4068,18 +3921,14 @@ object Formats {
     val ss = graft.streaming.EventStreams.streamingSession(spark)
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.sink_seq")
     ss.sql("CREATE TABLE graftmem.tmp.sink_seq (id BIGINT, val BIGINT, bucket BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memsink-ckpt")
-    val q = ss.readStream.format("graft.sources.v2.SeqStreamSource")
-      .option("n", "40000").option("step", "10000").option("parts", "4").load()
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .toTable("graftmem.tmp.sink_seq")
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.sql(
+    BoundedDrain.once(
+      ss.readStream.format("graft.sources.v2.SeqStreamSource")
+        .option("n", "40000").option("step", "10000").option("parts", "4").load(),
+      Sink.ToTable("graftmem.tmp.sink_seq"))
+    ss.sql(
       """SELECT bucket, count(*) AS n_rows, sum(val) AS sum_val
         |FROM graftmem.tmp.sink_seq GROUP BY bucket""".stripMargin)
       .localCheckpoint(true)
-    MemCatalog.deleteRecursively(ckpt)
-    out
   }
 
   /** Export path for the custom V2 WRITE connector round-trip. */

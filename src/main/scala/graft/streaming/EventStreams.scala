@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import java.sql.Timestamp
-import graft.sources.v2.MemCatalog.deleteRecursively
+import graft.streaming.BoundedDrain.{Sink, stageFile}
 
 /** Structured Streaming surface: the streaming twins of the batch event
   * analytics in [[graft.operators.Events]].
@@ -78,7 +78,7 @@ object EventStreams {
     * so the oracle is the 4-way slide replay in SQL.
     */
   def slidingFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "sliding", 1, OutputMode.Complete())(slidingCounts)
+    drainFixture(spark, dir, 1, OutputMode.Complete())(slidingCounts)
 
   /** Streaming twin of the reference's flagship word count: incremental
     * per-word running totals over a document stream (update mode). The
@@ -92,110 +92,60 @@ object EventStreams {
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
-  /** Shared harness for the ORACLE-VERIFIED bounded streaming runs: links
-    * the fixture parquet `copies` times into a fresh monitored directory (a
-    * file stream source monitors a DIRECTORY; >1 copy is the file-source
-    * equivalent of at-least-once redelivery), runs `build(stream)` to a
-    * memory sink, drains with `processAllAvailable`, then MATERIALIZES the
-    * sink table off the view (`localCheckpoint`) so the temp view, the
-    * checkpoint dir, and the source dir can all be torn down before
-    * returning — repeated invocations leak nothing.
-    * `maxFilesPerTrigger=1` makes multi-copy runs deterministically
-    * multi-batch, so redelivery crosses a real batch boundary.
+  /** Micro-batch file stream over `srcDir`: `maxFilesPerTrigger=1` admits
+    * one file per batch, oldest mtime first, so the staged file set IS the
+    * batch schedule (and >1 link to one fixture is the file-source form of
+    * at-least-once redelivery, across a real batch boundary). Any fixture
+    * ts encoding (nanos-long, TIMESTAMP_NTZ) is normalized to plain
+    * TimestampType BEFORE watermarks — streaming event-time requires it,
+    * and the session zone is pinned UTC so the NTZ cast matches the
+    * oracle's naive-epoch reading.
     */
-  private def runBoundedFileSource(spark: SparkSession, dir: String,
-      tag: String, copies: Int, mode: OutputMode, table: String = "events",
+  private def fileStream(ss: SparkSession, srcDir: java.nio.file.Path,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    graft.sources.Tables.normalizeTs(ss.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
+
+  /** Drain `build(stream)` over a source dir that `stage` fills, on a
+    * [[streamingSession]] clone, and return the pinned result. Append-mode
+    * gates sink to PARQUET and read back distributed (the memory sink
+    * collects every output row onto the driver per batch, the one
+    * driver-in-the-data-path posture a 100 TB stream cannot keep);
+    * Complete/Update gates keep the memory sink (the file sink is
+    * append-only by contract).
+    */
+  private def drainStaged(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, mode: OutputMode,
       partitions: Option[String] = None,
+      extraConf: Map[String, String] = Map.empty)(
+      stage: java.nio.file.Path => Unit)(build: DataFrame => DataFrame): DataFrame = {
+    val ss = streamingSession(spark, partitions, extraConf)
+    BoundedDrain.scope { s =>
+      stage(s.sourceDir)
+      val sink =
+        if (mode == OutputMode.Append()) Sink.Parquet
+        else Sink.Memory(mode)
+      s.drain(build(fileStream(ss, s.sourceDir, schema)), sink).out.get
+    }
+  }
+
+  /** [[drainStaged]] over `copies` links of the fixture `$dir/$table.parquet`. */
+  private def drainFixture(spark: SparkSession, dir: String, copies: Int,
+      mode: OutputMode, table: String = "events", partitions: Option[String] = None,
       extraConf: Map[String, String] = Map.empty)(
       build: DataFrame => DataFrame): DataFrame = {
     val src = s"$dir/$table.parquet"
-    val rawSchema = spark.read.parquet(src).schema
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-src")
-    (1 to copies).foreach { i =>
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve(s"${table}_copy$i.parquet"), java.nio.file.Path.of(src))
-    }
-    runStreamOnDir(spark, srcDir, tag, mode, rawSchema, partitions, extraConf)(build)
+    drainStaged(spark, spark.read.parquet(src).schema, mode, partitions, extraConf)(
+      linkCopies(_, dir, table, copies))(build)
   }
 
-  /** Inner runner over a PREPARED source directory (the file set and their
-    * modification times define the micro-batch schedule under
-    * `maxFilesPerTrigger=1` — oldest mtime first). Tears down the source
-    * dir, checkpoint, and memory-sink view before returning.
-    */
-  private def runStreamOnDir(spark: SparkSession, srcDir: java.nio.file.Path,
-      tag: String, mode: OutputMode,
-      rawSchema: org.apache.spark.sql.types.StructType,
-      partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val ss = streamingSession(spark, partitions, extraConf)
-    val dbg = sys.env.contains("GRAFT_STREAM_PHASE_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(p: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      System.err.println(f"[phase] $tag $p ${(t - t0) / 1e9}%.3f")
-      t0 = t
+  /** Link the fixture `$fixture/$table.parquet` into `dir` `copies` times. */
+  private def linkCopies(dir: java.nio.file.Path, fixture: String, table: String,
+      copies: Int): Unit =
+    (1 to copies).foreach { i =>
+      java.nio.file.Files.createSymbolicLink(dir.resolve(s"${table}_copy$i.parquet"),
+        java.nio.file.Path.of(s"$fixture/$table.parquet"))
     }
-    val qname = s"graft_stream_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    // Append-mode gates sink to PARQUET and read back distributed (guide
-    // §5: the driver does no data work) — the memory sink collects every
-    // output row onto the driver per batch, which is the one
-    // driver-in-the-data-path posture a 100 TB stream cannot keep. The
-    // file sink's per-batch commit rides the same checkpoint machinery,
-    // and the read-back pins the result into distributed block storage so
-    // the sink dir tears down with the rest. Complete/Update gates keep
-    // the memory sink (the file sink is append-only by contract).
-    val isAppend = mode == OutputMode.Append()
-    val outDir =
-      if (isAppend) Some(java.nio.file.Files.createTempDirectory(s"graft-sink-$tag"))
-      else None
-    try {
-      val stream0 = ss.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      mark("setup")
-      // normalize any fixture ts encoding (nanos-long, TIMESTAMP_NTZ) to
-      // plain TimestampType BEFORE watermarks — streaming event-time
-      // requires TimestampType, and the session zone is pinned UTC so the
-      // NTZ cast matches the oracle's naive-epoch reading
-      val stream = graft.sources.Tables.normalizeTs(stream0)
-      val built = build(stream)
-      val writer = built.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-      val q = outDir match {
-        case Some(d) => writer.format("parquet").option("path", d.toString).start()
-        case None => writer.format("memory").queryName(qname).start()
-      }
-      mark("start")
-      try {
-        q.processAllAvailable(); mark("drain")
-        // per-batch duration breakdown (addBatch = plan+execute, commitOffsets
-        // = checkpoint WAL, stateStore commit rides addBatch) — the drain
-        // phase above is opaque without it
-        if (dbg) q.recentProgress.foreach(p => System.err.println(
-          s"[phase] $tag batch ${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
-      } finally q.stop()
-      mark("stop")
-      // pin the result into block-manager storage, then tear everything down
-      val out = outDir match {
-        case Some(d) =>
-          // explicit schema: a zero-row sink has a metadata log but no
-          // footer to infer from
-          ss.read.schema(built.schema).parquet(d.toString).localCheckpoint(true)
-        case None =>
-          val t = ss.table(qname).localCheckpoint(true)
-          ss.catalog.dropTempView(qname)
-          t
-      }
-      mark("pin")
-      out
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      outDir.foreach(deleteRecursively)
-    }
-  }
 
   /** Per-run session CLONE (`newSession`: isolated SQLConf over the shared
     * SparkContext) for every bounded streaming run. Two reasons:
@@ -248,7 +198,7 @@ object EventStreams {
     * drops nothing because the final complete-mode state includes all rows.)
     */
   def tumblingFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "tumbling", 1, OutputMode.Complete())(tumblingCounts)
+    drainFixture(spark, dir, 1, OutputMode.Complete())(tumblingCounts)
 
   /** Streaming exact dedup — the at-least-once ingestion guard: duplicate
     * event ids arriving within the watermark horizon are dropped.
@@ -271,11 +221,14 @@ object EventStreams {
     * equivalent of at-least-once redelivery), so the dedup state is doing
     * real work: every event arrives at least twice and must emit exactly
     * once. Append mode — `dropDuplicatesWithinWatermark` emits first-seen
-    * rows immediately (no window finalization wait), the memory-sink table
-    * is the emitted stream, and the oracle is simply the distinct fixture.
+    * rows immediately (no window finalization wait), and the oracle is
+    * simply the distinct fixture. The sink is the exactly-once PARQUET file
+    * sink (commits recorded in `_spark_metadata` by the same checkpointed
+    * transaction as the state update; only committed files are read back),
+    * so this one run also serves `streaming_sink_parquet`.
     */
   def dedupFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "dedup", 2, OutputMode.Append()) { stream =>
+    drainFixture(spark, dir, 2, OutputMode.Append()) { stream =>
       dedupStream(stream).select("event_id", "user_id", "event_type", "value")
     }
 
@@ -309,48 +262,22 @@ object EventStreams {
     * final unfinished hour), never ∝ stream history.
     */
   def lateDataFileSource(spark: SparkSession, dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val tsCol = graft.sources.Tables
       .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
     val tmax = probeMaxTs(spark, dir)
     val lateCut = Timestamp.from(tmax.toInstant.minus(java.time.Duration.ofDays(1)))
     val isStraggler = col("event_id") % 7 === 0 && tsCol < lit(lateCut)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-late")
-    def dump(df: DataFrame, name: String, ageSec: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-late-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.toString.endsWith(".parquet")).get
-      val dest = srcDir.resolve(name)
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageSec * 1000))
-      deleteRecursively(tmp)
-    }
-    dump(raw.filter(!isStraggler && tsCol < lit(tmax)), "a_bulk.parquet", 300)
-    dump(raw.filter(tsCol === lit(tmax)), "b_advance.parquet", 150)
-    dump(raw.filter(isStraggler), "c_stragglers.parquet", 0)
-    runStreamOnDir(spark, srcDir, "late", OutputMode.Append(), raw.schema)(tumblingCounts)
+    drainStaged(spark, raw.schema, OutputMode.Append()) { d =>
+      stageFile(d, raw.filter(!isStraggler && tsCol < lit(tmax)),
+        "a_bulk.parquet", secondsAgo(300))
+      stageFile(d, raw.filter(tsCol === lit(tmax)), "b_advance.parquet", secondsAgo(150))
+      stageFile(d, raw.filter(isStraggler), "c_stragglers.parquet", secondsAgo(0))
+    }(tumblingCounts)
   }
 
-  /** Write `df` as ONE parquet file named `name` into `srcDir`, with its
-    * mtime backdated `ageSec` seconds — file order (oldest first) is the
-    * micro-batch schedule under `maxFilesPerTrigger=1`.
-    */
-  private def dumpOneFile(srcDir: java.nio.file.Path)(
-      df: DataFrame, name: String, ageSec: Long): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dump-part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = java.nio.file.Files.list(tmp).iterator().asScala
-      .find(_.toString.endsWith(".parquet")).get
-    val dest = srcDir.resolve(name)
-    java.nio.file.Files.move(part, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageSec * 1000))
-    deleteRecursively(tmp)
-  }
+  /** Epoch millis `sec` seconds ago — a staged file's mtime. */
+  private def secondsAgo(sec: Long): Long = System.currentTimeMillis() - sec * 1000
 
   /** ORACLE-VERIFIED streaming CDC apply — the `foreachBatch` MERGE sink:
     * the change log (inserts, then updates, then tombstone deletes — the
@@ -382,39 +309,28 @@ object EventStreams {
     val del = o.filter(col("o_orderkey") % 13 === 0)
       .select(col("o_orderkey"), lit(3).as("version"), lit("D").as("op"),
         lit(null).cast("long").as("cents"))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-cdc")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-cdc")
-    try {
-      dumpOneFile(srcDir)(ins, "a_v1_inserts.parquet", 300)
-      dumpOneFile(srcDir)(upd, "b_v2_updates.parquet", 150)
-      dumpOneFile(srcDir)(del, "c_v3_deletes.parquet", 0)
-      val schema = ins.schema
+    val schema = ins.schema
+    var state: DataFrame =
+      ss.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    BoundedDrain.scope { s =>
+      stageFile(s.sourceDir, ins, "a_v1_inserts.parquet", secondsAgo(300))
+      stageFile(s.sourceDir, upd, "b_v2_updates.parquet", secondsAgo(150))
+      stageFile(s.sourceDir, del, "c_v3_deletes.parquet", secondsAgo(0))
       val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      var state: DataFrame =
-        ss.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val latest = batch.groupBy("o_orderkey").agg(
-            max("version").as("version"),
-            expr("max_by(op, version)").as("op"),
-            expr("max_by(cents, version)").as("cents"))
-            .select("o_orderkey", "version", "op", "cents")
-          state = state
-            .join(latest.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
-            .union(latest)
-            .localCheckpoint(true)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      state.filter(col("op") =!= "D").select("o_orderkey", "version", "cents")
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
+        .option("maxFilesPerTrigger", "1").parquet(s.sourceDir.toString)
+      s.drain(stream, Sink.ForeachBatch { (batch, _) =>
+        val latest = batch.groupBy("o_orderkey").agg(
+          max("version").as("version"),
+          expr("max_by(op, version)").as("op"),
+          expr("max_by(cents, version)").as("cents"))
+          .select("o_orderkey", "version", "op", "cents")
+        state = state
+          .join(latest.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
+          .union(latest)
+          .localCheckpoint(true)
+      })
     }
+    state.filter(col("op") =!= "D").select("o_orderkey", "version", "cents")
   }
 
   /** ORACLE-VERIFIED stream-stream join run: [[clickPurchaseJoin]] — a real
@@ -432,7 +348,7 @@ object EventStreams {
     // fixture-scale RocksDB bring-up; at 100 TB this knob goes UP. Join
     // state format v3 folds the 4 stores into one per partition (measured
     // 0.55-0.77× on the outer-join gates; see sentinelOuterRun).
-    runBoundedFileSource(spark, dir, "join", 1, OutputMode.Append(),
+    drainFixture(spark, dir, 1, OutputMode.Append(),
       partitions = Some("4"),
       extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3"))(clickPurchaseJoin)
 
@@ -456,7 +372,7 @@ object EventStreams {
     * one stateful shape tumbling/dedup/join runs don't cover.
     */
   def sessionFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "session", 1, OutputMode.Complete())(sessionWindowCounts)
+    drainFixture(spark, dir, 1, OutputMode.Complete())(sessionWindowCounts)
 
   /** DYNAMIC-gap streaming sessions: the timeout is a per-event expression
     * (purchase 1 h, error 5 min, else 30 min — the batch
@@ -486,7 +402,7 @@ object EventStreams {
     * must equal the batch interval-union islanding oracle exactly.
     */
   def sessionDynamicFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "sessdyn", 1, OutputMode.Complete())(sessionDynamicCounts)
+    drainFixture(spark, dir, 1, OutputMode.Complete())(sessionDynamicCounts)
 
   /** ORACLE-VERIFIED streaming flagship: the reference's own word count
     * ([[streamingWordCount]]) as a bounded document stream in complete
@@ -495,7 +411,7 @@ object EventStreams {
     * batch/stream/oracle triangle on the flagship query itself.
     */
   def wordCountFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "wc", 1, OutputMode.Complete(), table = "documents")(
+    drainFixture(spark, dir, 1, OutputMode.Complete(), table = "documents")(
       streamingWordCount)
 
   /** Streaming TOP-K — the reference's interactive top-N as an incremental
@@ -506,49 +422,8 @@ object EventStreams {
     * triangle closed on the reference's second query shape.
     */
   def topkFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "topk", 1, OutputMode.Complete(), table = "documents")(
+    drainFixture(spark, dir, 1, OutputMode.Complete(), table = "documents")(
       docs => streamingWordCount(docs).orderBy(col("cnt").desc, col("word").asc).limit(20))
-
-  /** ORACLE-VERIFIED streaming FILE SINK — the exactly-once ETL shape: the
-    * deduped stream is written to a PARQUET DIRECTORY sink (file commits
-    * recorded in `_spark_metadata` by the same checkpointed transaction as
-    * the state update, so replays never double-write), then the committed
-    * files are read back as the verified result. Same oracle as
-    * `streaming_dedup_filesrc` (the distinct fixture) — what's new under
-    * test is the transactional file-output leg every production streaming
-    * pipeline ends in, instead of the in-memory sink.
-    */
-  def dedupToParquetSink(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val src = s"$dir/events.parquet"
-    val rawSchema = ss.read.parquet(src).schema
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-psink-ckpt")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-psink-src")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-psink-out")
-    try {
-      (1 to 2).foreach { i =>
-        java.nio.file.Files.createSymbolicLink(
-          srcDir.resolve(s"events_copy$i.parquet"), java.nio.file.Path.of(src))
-      }
-      val stream0 = ss.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val stream = graft.sources.Tables.normalizeTs(stream0)
-      val q = dedupStream(stream)
-        .select("event_id", "user_id", "event_type", "value")
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", outDir.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // read back through _spark_metadata (only COMMITTED files are listed),
-      // pin the rows, then tear the temp dirs down
-      ss.read.parquet(outDir.toString).localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
-    }
-  }
 
   /** ORACLE-VERIFIED `Trigger.AvailableNow` run — the SELF-TERMINATING
     * catch-up trigger that production scheduled streaming jobs use (each
@@ -570,29 +445,15 @@ object EventStreams {
     val ss = streamingSession(spark)
     val raw = ss.read.parquet(s"$dir/events.parquet")
     val mid = probeMidId(ss, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-avnow-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-avnow-ckpt")
-    val qname = s"graft_stream_avnow_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try {
-      dumpOneFile(srcDir)(raw.filter(col("event_id") < mid), "a_first_half.parquet", 300)
-      dumpOneFile(srcDir)(raw.filter(col("event_id") >= mid), "b_second_half.parquet", 0)
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = tumblingCounts(stream)
-        .writeStream.outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName(qname).start()
-      // no stop() and no processAllAvailable(): AvailableNow must end the
-      // query on its own once both admitted batches have committed
-      q.awaitTermination()
-      val out = ss.table(qname).localCheckpoint(true)
-      ss.catalog.dropTempView(qname)
-      out
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
+    BoundedDrain.scope { s =>
+      stageFile(s.sourceDir, raw.filter(col("event_id") < mid),
+        "a_first_half.parquet", secondsAgo(300))
+      stageFile(s.sourceDir, raw.filter(col("event_id") >= mid),
+        "b_second_half.parquet", secondsAgo(0))
+      // AvailableNow ends the query on its own once both admitted batches
+      // have committed: the drain awaits that termination
+      s.drain(tumblingCounts(fileStream(ss, s.sourceDir, raw.schema)),
+        Sink.Memory(OutputMode.Complete()), Trigger.AvailableNow()).out.get
     }
   }
 
@@ -615,30 +476,17 @@ object EventStreams {
     val ss = streamingSession(spark)
     val raw = ss.read.parquet(s"$dir/events.parquet")
     val mid = probeMidId(ss, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-restart-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-restart-out")
-    def incarnation(): Unit = {
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = stream.select("event_id", "user_id", "event_type", "value")
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", outDir.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    try {
-      dumpOneFile(srcDir)(raw.filter(col("event_id") < mid), "a_first_half.parquet", 300)
+    BoundedDrain.scope { s =>
+      def incarnation() = s.drain(
+        fileStream(ss, s.sourceDir, raw.schema)
+          .select("event_id", "user_id", "event_type", "value"),
+        Sink.Parquet)
+      stageFile(s.sourceDir, raw.filter(col("event_id") < mid),
+        "a_first_half.parquet", secondsAgo(300))
       incarnation() // phase 1: ingest the first half, then "fail"
-      dumpOneFile(srcDir)(raw.filter(col("event_id") >= mid), "b_second_half.parquet", 0)
-      incarnation() // phase 2: recover and ingest ONLY the new file
-      ss.read.parquet(outDir.toString).localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
+      stageFile(s.sourceDir, raw.filter(col("event_id") >= mid),
+        "b_second_half.parquet", secondsAgo(0))
+      incarnation().out.get // phase 2: recover and ingest ONLY the new file
     }
   }
 
@@ -664,30 +512,13 @@ object EventStreams {
     val tsCol = graft.sources.Tables
       .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
     val tmax = probeMaxTs(ss, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-rstate-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rstate-ckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-rstate-out")
-    def incarnation(): Unit = {
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = tumblingCounts(stream)
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", outDir.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    try {
-      dumpOneFile(srcDir)(raw.filter(tsCol < lit(tmax)), "a_bulk.parquet", 300)
+    BoundedDrain.scope { s =>
+      def incarnation() =
+        s.drain(tumblingCounts(fileStream(ss, s.sourceDir, raw.schema)), Sink.Parquet)
+      stageFile(s.sourceDir, raw.filter(tsCol < lit(tmax)), "a_bulk.parquet", secondsAgo(300))
       incarnation() // build window state, then "fail"
-      dumpOneFile(srcDir)(raw.filter(tsCol === lit(tmax)), "b_advance.parquet", 0)
-      incarnation() // recover state, advance watermark, finalize windows
-      ss.read.parquet(outDir.toString).localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
+      stageFile(s.sourceDir, raw.filter(tsCol === lit(tmax)), "b_advance.parquet", secondsAgo(0))
+      incarnation().out.get // recover state, advance watermark, finalize windows
     }
   }
 
@@ -710,7 +541,7 @@ object EventStreams {
     * `streaming_join_filesrc`).
     */
   def enrichFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "enrich", 1, OutputMode.Complete()) { stream =>
+    drainFixture(spark, dir, 1, OutputMode.Complete()) { stream =>
       enrichStream(stream,
         graft.sources.Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"))
     }
@@ -787,7 +618,7 @@ object EventStreams {
     * stream length.
     */
   def outerJoinFileSource(spark: SparkSession, dir: String): DataFrame =
-    sentinelOuterRun(spark, dir, "outerjoin")(clickPurchaseOuterJoin)
+    sentinelOuterRun(spark, dir)(clickPurchaseOuterJoin)
       .filter(col("purchase_id") > 0)
 
   /** Stream-stream FULL OUTER join — both unmatched classes at once:
@@ -818,7 +649,7 @@ object EventStreams {
   }
 
   def fullOuterJoinFileSource(spark: SparkSession, dir: String): DataFrame =
-    sentinelOuterRun(spark, dir, "fullouter")(clickPurchaseFullOuterJoin)
+    sentinelOuterRun(spark, dir)(clickPurchaseFullOuterJoin)
       .filter((col("purchase_id").isNull || col("purchase_id") > 0) &&
         (col("click_id").isNull || col("click_id") > 0))
 
@@ -829,10 +660,9 @@ object EventStreams {
     * unmatched-row state. Sentinel exclusion belongs to the CALLER, on
     * the drained batch table (see the pushdown pitfall below).
     */
-  private def sentinelOuterRun(spark: SparkSession, dir: String, tag: String)(
+  private def sentinelOuterRun(spark: SparkSession, dir: String)(
       build: DataFrame => DataFrame): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = java.nio.file.Files.createTempDirectory(s"graft-stream-$tag")
     val bump: Column => Column = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         c => c + lit(2L * 86400L * 1000000000L) // nanos-long fixture encoding
@@ -847,13 +677,6 @@ object EventStreams {
             lit(999992L).as("user_id"), lit("purchase").as("event_type"),
             lit(0.0).as("value"), lit("").as("props")))).as("s"))
         .select("s.*")
-    dumpOneFile(srcDir)(raw, "a_events.parquet", 300)
-    // two sentinel batches: the first ADVANCES the watermark (recorded at
-    // its batch end), the second is the data batch that EXECUTES under it
-    // and flushes the remaining unmatched-left state (the late_data
-    // lesson: eviction is batch-boundary-granular and data-batch-driven)
-    dumpOneFile(srcDir)(sentinels((-1L, -2L)), "b_sentinels.parquet", 60)
-    dumpOneFile(srcDir)(sentinels((-3L, -4L)), "c_sentinels.parquet", 0)
     // MEASURED PITFALL: the sentinel exclusion must live HERE, on the
     // drained batch table — a `purchase_id > 0` filter inside the
     // streaming plan is pushed through the left-outer join into the
@@ -870,9 +693,16 @@ object EventStreams {
     // cut in per-batch open/commit/changelog fixed cost at any partition
     // count (the checkpoint is created fresh per run, so no compatibility
     // constraint applies).
-    runStreamOnDir(spark, srcDir, tag, OutputMode.Append(), raw.schema,
-      partitions = Some("4"),
-      extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3"))(build)
+    drainStaged(spark, raw.schema, OutputMode.Append(), partitions = Some("4"),
+      extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3")) { d =>
+      stageFile(d, raw, "a_events.parquet", secondsAgo(300))
+      // two sentinel batches: the first ADVANCES the watermark (recorded at
+      // its batch end), the second is the data batch that EXECUTES under it
+      // and flushes the remaining unmatched-left state (the late_data
+      // lesson: eviction is batch-boundary-granular and data-batch-driven)
+      stageFile(d, sentinels((-1L, -2L)), "b_sentinels.parquet", secondsAgo(60))
+      stageFile(d, sentinels((-3L, -4L)), "c_sentinels.parquet", secondsAgo(0))
+    }(build)
   }
 
   /** SKETCH-TYPED STREAMING STATE: the native log-histogram quantile
@@ -898,7 +728,7 @@ object EventStreams {
     // the doubled-corpus oracle if batch 1's state-store sketch survives
     // serialization and MERGES with batch 2's partials (counters add —
     // duplicate-sensitive, so redelivery would be visible, unlike HLL)
-    val drained = runBoundedFileSource(spark, dir, "sketch", 2, OutputMode.Complete()) {
+    val drained = drainFixture(spark, dir, 2, OutputMode.Complete()) {
       stream =>
         stream.select(round(col("value") * 100).cast("long").as("cents"))
           .agg(expr("loghist_sketch(cents)").as("sk"))
@@ -945,7 +775,7 @@ object EventStreams {
     */
   def nearDupFileSource(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    runBoundedFileSource(spark, dir, "neardup", 2, OutputMode.Complete(), table = "documents") {
+    drainFixture(spark, dir, 2, OutputMode.Complete(), table = "documents") {
       stream =>
         val corpus = graft.sources.Tables.documents(stream.sparkSession, dir)
           .filter(col("doc_id") % 10 =!= 7)
@@ -1057,56 +887,40 @@ object EventStreams {
     * batch recompute EXACTLY — proving the engine's progress accounting
     * loses and double-counts nothing across batch boundaries (the same
     * exactly-once property the restart runs prove for STATE, proven here
-    * for TELEMETRY). Reads `q.recentProgress` synchronously after
-    * `processAllAvailable` — no listener race.
+    * for TELEMETRY). Reads the drain's `recentProgress` synchronously
+    * once the query has stopped — no listener race.
     */
   def observeFileSource(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark)
     val src = s"$dir/events.parquet"
     val rawSchema = ss.read.parquet(src).schema
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-obs")
-    (1 to 2).foreach { i =>
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve(s"events_copy$i.parquet"), java.nio.file.Path.of(src))
-    }
-    val qname = s"graft_stream_obs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-obs-ckpt")
-    try {
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(rawSchema).option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = stream
+    val (progress, table) = BoundedDrain.scope { s =>
+      linkCopies(s.sourceDir, dir, "events", 2)
+      val d = s.drain(fileStream(ss, s.sourceDir, rawSchema)
         .observe("graft_obs",
           count(lit(1)).as("rows_seen"),
           sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents_seen"))
         .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName(qname).start()
-      try q.processAllAvailable() finally q.stop()
-      // sum observed metrics across all micro-batches (synchronous read)
-      var rowsSeen = 0L
-      var centsSeen = 0L
-      q.recentProgress.foreach { p =>
-        val m = p.observedMetrics.get("graft_obs")
-        if (m != null) {
-          rowsSeen += m.getAs[Long]("rows_seen")
-          centsSeen += m.getAs[Long]("cents_seen")
-        }
-      }
-      val table = ss.table(qname).localCheckpoint(true)
-      ss.catalog.dropTempView(qname)
-      import ss.implicits._
-      // the fixture streamed TWICE (2 symlinked copies) — halve to the
-      // per-copy totals the oracle states from the batch table
-      Seq((rowsSeen / 2, centsSeen / 2)).toDF("rows_seen", "cents_seen")
-        .crossJoin(broadcast(
-          table.agg(count(lit(1)).as("n_types"),
-            (sum("n_events") / 2).cast("long").as("n_rows_table"))))
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
+        .agg(count(lit(1)).as("n_events")), Sink.Memory(OutputMode.Complete()))
+      (d.progress, d.out.get)
     }
+    // sum observed metrics across all micro-batches (synchronous read)
+    var rowsSeen = 0L
+    var centsSeen = 0L
+    progress.foreach { p =>
+      val m = p.observedMetrics.get("graft_obs")
+      if (m != null) {
+        rowsSeen += m.getAs[Long]("rows_seen")
+        centsSeen += m.getAs[Long]("cents_seen")
+      }
+    }
+    import ss.implicits._
+    // the fixture streamed TWICE (2 symlinked copies) — halve to the
+    // per-copy totals the oracle states from the batch table
+    Seq((rowsSeen / 2, centsSeen / 2)).toDF("rows_seen", "cents_seen")
+      .crossJoin(broadcast(
+        table.agg(count(lit(1)).as("n_types"),
+          (sum("n_events") / 2).cast("long").as("n_rows_table"))))
   }
 
   case class TimerSession(user_id: Long, session_start_epoch: Long, n_events: Long, total_cents: Long)
@@ -1195,7 +1009,6 @@ object EventStreams {
     */
   def twsTimersFileSource(spark: SparkSession, dir: String): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-twstimer")
     val bump: Column => Column = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         c => c + lit(2L * 86400L * 1000000000L)
@@ -1206,10 +1019,11 @@ object EventStreams {
         lit(id).as("event_id"), bump(col("mts")).as("ts"),
         lit(999999L).as("user_id"), lit("view").as("event_type"),
         lit(0.0).as("value"), lit("").as("props"))
-    dumpOneFile(srcDir)(raw, "a_events.parquet", 300)
-    dumpOneFile(srcDir)(sentinel(-1L), "b_sentinel.parquet", 60)
-    dumpOneFile(srcDir)(sentinel(-2L), "c_sentinel.parquet", 0)
-    val drained = runStreamOnDir(spark, srcDir, "twstimer", OutputMode.Append(), raw.schema) { df =>
+    val drained = drainStaged(spark, raw.schema, OutputMode.Append()) { d =>
+      stageFile(d, raw, "a_events.parquet", secondsAgo(300))
+      stageFile(d, sentinel(-1L), "b_sentinel.parquet", secondsAgo(60))
+      stageFile(d, sentinel(-2L), "c_sentinel.parquet", secondsAgo(0))
+    } { df =>
       import spark.implicits._
       df.withWatermark("ts", "10 minutes")
         .as[Event].groupByKey(_.user_id)
@@ -1229,7 +1043,7 @@ object EventStreams {
     * the bounded-state shape that survives an unbounded stream.
     */
   def twsFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "tws", 1, OutputMode.Append()) { df =>
+    drainFixture(spark, dir, 1, OutputMode.Append()) { df =>
       import spark.implicits._
       df.as[Event].groupByKey(_.user_id)
         .transformWithState(new RunningCentsProcessor,
@@ -1253,7 +1067,7 @@ object EventStreams {
     "streaming_session_filesrc" -> sessionFileSource _,
     "streaming_session_dynamic" -> sessionDynamicFileSource _,
     "streaming_enrich_filesrc" -> enrichFileSource _,
-    "streaming_sink_parquet" -> dedupToParquetSink _,
+    "streaming_sink_parquet" -> dedupFileSource _,
     "streaming_topk_filesrc" -> topkFileSource _,
     "streaming_cdc_filesrc" -> cdcMergeFileSource _,
     "streaming_tws_filesrc" -> twsFileSource _,

@@ -285,7 +285,7 @@ class MvRewriteSpec extends AnyFunSuite {
     def ckptDirs(): Set[String] = {
       val ls = java.nio.file.Files.list(tmp)
       try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("graft-mvserve-ckpt") || n.startsWith("graft-mvauto-ckpt"))
+        .filter(n => n.startsWith("graft-ckpt") || n.startsWith("graft-mvauto-ckpt"))
         .toSet
       finally ls.close()
     }
