@@ -50,7 +50,7 @@ object TextAnalysis {
     val nToks = size(toks(col("text"))).cast("double")
     val stopHits =
       expr("size(filter(split(trim(text), '\\\\s+'), w -> w IN ('the', 'a', 'of', 'and', 'to')))").cast("double")
-    val symbols = (length(col("text")) - length(regexp_replace(col("text"), "[^a-zA-Z0-9\\s]", ""))).cast("double")
+    val symbols = (length(col("text")) - length(TextPipeline.normalize(col("text")))).cast("double")
     val chars = length(col("text")).cast("double")
     round(
       least(lit(1.0),
@@ -64,7 +64,7 @@ object TextAnalysis {
     val stopHits =
       expr("size(filter(split(trim(text), '\\\\s+'), w -> w IN ('the', 'a', 'of', 'and', 'to')))").cast("double")
     val digits = (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", ""))).cast("double")
-    val symbols = (length(col("text")) - length(regexp_replace(col("text"), "[^a-zA-Z0-9\\s]", ""))).cast("double")
+    val symbols = (length(col("text")) - length(TextPipeline.normalize(col("text")))).cast("double")
     val chars = length(col("text")).cast("double")
     Tables.documents(spark, dir).select(
       col("doc_id"),
@@ -274,7 +274,7 @@ object TextAnalysis {
   def bigramLogprob(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.operators.Dedup.widen(Tables.documents(spark, dir))
     val words = docs.select(col("doc_id"),
-      split(trim(TextPipeline.normalize(col("text"))), "\\s+").as("words"))
+      TextPipeline.tokens(col("text")).as("words"))
       .filter(size(col("words")) >= 2)
     val bg = words.selectExpr("doc_id", "word_ngrams(words, 2)")
       .toDF("doc_id", "pos", "bigram")

@@ -38,7 +38,7 @@ object Mining {
     */
   private def windowPairs(docs: DataFrame): DataFrame = {
     val words = docs
-      .select(split(trim(TextPipeline.normalize(col("text"))), "\\s+").as("words"))
+      .select(TextPipeline.tokens(col("text")).as("words"))
     def endpoints(n: Int): DataFrame =
       words.filter(size(col("words")) >= n)
         .selectExpr(s"word_ngrams(words, $n)")

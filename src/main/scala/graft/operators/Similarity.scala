@@ -1229,7 +1229,7 @@ object Similarity {
   def searchPhrase(spark: SparkSession, dir: String): DataFrame = {
     val pos = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        posexplode(split(trim(graft.operators.TextPipeline.normalize(col("text"))), "\\s+")))
+        posexplode(graft.operators.TextPipeline.tokens(col("text"))))
       .toDF("doc_id", "pos", "word")
       .filter(col("word") =!= "")
     val a = pos.filter(col("word") === PhraseTerms._1)

@@ -196,9 +196,11 @@ object SqlModern {
     * agree).
     */
   def sqlScripting(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    Tables.orders(spark, dir).createOrReplaceTempView("graft_script_orders")
-    spark.sql(
+    // a clone, so the caller's conf and temp views stay as they were
+    val s = spark.newSession()
+    s.conf.set("spark.sql.scripting.enabled", "true")
+    Tables.orders(s, dir).createOrReplaceTempView("graft_script_orders")
+    s.sql(
       """BEGIN
         |  DECLARE t BIGINT DEFAULT 0;
         |  WHILE (SELECT count(*) FROM graft_script_orders WHERE o_totalprice > t) > 1000 DO

@@ -22,9 +22,9 @@ object TextQueries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "wordcount" -> ((s, d) =>
-      TextPipeline.wordCount(Tables.documents(s, d))),
+      TextPipeline.wordCountPlan(Tables.documents(s, d))),
     "wordcount_topn" -> ((s, d) =>
-      TextPipeline.topN(TextPipeline.wordCount(Tables.documents(s, d)), 20)),
+      TextPipeline.topN(TextPipeline.wordCountPlan(Tables.documents(s, d)), 20)),
     "tokenize" -> ((s, d) =>
       TextPipeline.tokenize(Tables.documents(s, d))),
     "normalize_project" -> ((s, d) =>
@@ -41,7 +41,7 @@ object TextQueries {
     "tokenize_pos" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
-          posexplode(split(trim(TextPipeline.normalize(col("text"))), "\\s+")))
+          posexplode(TextPipeline.tokens(col("text"))))
         .toDF("doc_id", "pos", "word")
         .filter(col("word") =!= "")
         .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("word"))),
@@ -88,7 +88,7 @@ object TextQueries {
     // map-side until the single count aggregate
     "ngram_counts" -> ((s, d) =>
       Tables.documents(s, d)
-        .select(split(trim(TextPipeline.normalize(col("text"))), "\\s+").as("words"))
+        .select(TextPipeline.tokens(col("text")).as("words"))
         .filter(size(col("words")) >= 2)
         .select(explode(expr(
           "transform(sequence(0, size(words) - 2), i -> array_join(slice(words, i + 1, 2), ' '))"))

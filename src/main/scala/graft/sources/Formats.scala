@@ -4115,7 +4115,7 @@ object Formats {
   def textSourceWordcount(spark: SparkSession, dir: String): DataFrame = {
     Sinks.writeText(Tables.documents(spark, dir).select(col("text")), TextExportPath)
     spark.read.text(TextExportPath)
-      .select(explode(split(trim(graft.operators.TextPipeline.normalize(col("value"))), "\\s+")).as("word"))
+      .select(explode(graft.operators.TextPipeline.tokens(col("value"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))

@@ -49,7 +49,7 @@ class SessionWiringSpec extends AnyFunSuite {
   test("stream, graftcat and graftmem gates leave the session conf unchanged") {
     val s = fresh()
     val before = s.conf.getAll
-    Seq("dsv2_tvf_stream", "dsv2_catalog_sql", "dsv2_catalog_ctas").foreach { name =>
+    Seq("dsv2_tvf_stream", "dsv2_catalog_sql", "dsv2_catalog_ctas", "sql_scripting").foreach { name =>
       assert(SparkEntry.queries(name)(s, TestSpark.sf).collect().nonEmpty, name)
     }
     val after = s.conf.getAll

@@ -59,6 +59,66 @@ class TextPipelineSpec extends AnyFunSuite {
     assert(dfCounts == rddCounts)
   }
 
+  test("RDD twin, DataFrame plan and hand counts agree on non-ASCII text, in any locale") {
+    // é ï İ NBSP and the Kelvin sign are dropped (not letters, not
+    // whitespace); U+001C is not in Java's \s set, so "x\u001cy" is one token
+    val docs = df(Seq(
+      (1L, "Caf\u00e9 na\u00efve \u0130stanbul a\u00a0b x\u001cy \u212a"),
+      (2L, "CAF nave TITLE")))
+    val want = Map("caf" -> 2L, "nave" -> 2L, "stanbul" -> 1L, "ab" -> 1L, "xy" -> 1L,
+      "title" -> 1L)
+    val dfCounts = TextPipeline.wordCount(docs).as[(String, Long)].collect().toMap
+    val saved = java.util.Locale.getDefault
+    // Turkish lowercases I to dotless ı: a locale-dependent lower would miss "title"
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    val rddCounts =
+      try TextPipeline.wordCountRdd(spark, docs).collect().toMap
+      finally java.util.Locale.setDefault(saved)
+    assert(dfCounts == want)
+    assert(rddCounts == want)
+  }
+
+  test("a word-count op scans the documents once: wordCount, then the sink and topN") {
+    import org.apache.spark.scheduler._
+    val docs = Tables.documents(spark, TestSpark.sf)
+    val rowCount = docs.count()
+    val sc = spark.sparkContext
+    val group = s"scan-once-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    def jobGroup(js: SparkListenerJobStart) =
+      Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        if (jobGroup(js) == group) js.stageInfos.foreach(si => groupStages.add(si.stageId))
+        if (jobGroup(js) == sentinel) sentinelSeen.countDown()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (groupStages.contains(te.stageId) && te.taskMetrics != null)
+          recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-scan-once")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "wordcount_corpus op")
+      val wc = TextPipeline.wordCount(docs)
+      TextPipeline.writeWordCounts(wc, out.resolve("sink").toString)
+      assert(TextPipeline.topN(wc, 20).collect().length == 20)
+      // listener events arrive in order: once the sentinel job's start is
+      // delivered, every task of the op before it has been counted
+      sc.setJobGroup(sentinel, "listener sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      graft.sources.v2.MemCatalog.deleteRecursively(out)
+    }
+    assert(recordsRead.get == rowCount, s"documents rows read: ${recordsRead.get}, rows: $rowCount")
+  }
+
   test("RDD takeOrdered agrees with topN under the same total order") {
     val docs = Tables.documents(spark, TestSpark.sf)
     val viaDf = TextPipeline.topN(TextPipeline.wordCount(docs), 10)
