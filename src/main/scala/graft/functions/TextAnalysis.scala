@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.TextPipeline
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline: token counting
@@ -21,13 +22,11 @@ object TextAnalysis {
     */
   val BpePattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
-  private def toks(c: Column): Column = split(trim(c), "\\s+")
-
   /** Whitespace tokens, BPE-ish tokens, char count, avg token length. */
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
       col("doc_id"),
-      size(toks(col("text"))).cast("long").as("n_ws_tokens"),
+      size(TextPipeline.words(col("text"))).cast("long").as("n_ws_tokens"),
       regexp_count(col("text"), lit(BpePattern)).cast("long").as("n_bpe_tokens"),
       length(col("text")).cast("long").as("n_chars_calc"),
       // sum of token lengths == chars remaining after stripping ALL
@@ -35,7 +34,7 @@ object TextAnalysis {
       // as the former interpreted aggregate-over-transform lambda chain,
       // but pure codegen'd string functions
       round(length(regexp_replace(trim(col("text")), "\\s+", "")).cast("double")
-          / size(toks(col("text"))), 4).as("avg_token_len"))
+          / size(TextPipeline.words(col("text"))), 4).as("avg_token_len"))
 
   /** Quality signals: stopword ratio, digit ratio, symbol ratio, mean word
     * length — combined into a bounded [0,1] score. Heuristics follow the
@@ -46,26 +45,21 @@ object TextAnalysis {
     * [[qualityScore]] and [[cleanCorpus]] so the composite pipeline can
     * fold it into one projection instead of joining a second scan.
     */
-  private def qualityCol: Column = {
-    val nToks = size(toks(col("text"))).cast("double")
-    val stopHits =
-      expr("size(filter(split(trim(text), '\\\\s+'), w -> w IN ('the', 'a', 'of', 'and', 'to')))").cast("double")
-    val symbols = (length(col("text")) - length(TextPipeline.normalize(col("text")))).cast("double")
-    val chars = length(col("text")).cast("double")
+  private def qualityCol: Column =
     round(
       least(lit(1.0),
         lit(0.5) * least(lit(1.0), nToks / lit(50.0))
           + lit(0.3) * least(lit(1.0), stopHits / nToks * lit(10.0))
           + lit(0.2) * (lit(1.0) - symbols / chars)), 4)
-  }
+
+  private def nToks = size(TextPipeline.words(col("text"))).cast("double")
+  private def stopHits =
+    size(filter(TextPipeline.words(col("text")), _.isin("the", "a", "of", "and", "to"))).cast("double")
+  private def symbols = (length(col("text")) - length(TextPipeline.normalize(col("text")))).cast("double")
+  private def chars = length(col("text")).cast("double")
 
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val nToks = size(toks(col("text"))).cast("double")
-    val stopHits =
-      expr("size(filter(split(trim(text), '\\\\s+'), w -> w IN ('the', 'a', 'of', 'and', 'to')))").cast("double")
     val digits = (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", ""))).cast("double")
-    val symbols = (length(col("text")) - length(TextPipeline.normalize(col("text")))).cast("double")
-    val chars = length(col("text")).cast("double")
     Tables.documents(spark, dir).select(
       col("doc_id"),
       round(stopHits / nToks, 4).as("stopword_ratio"),
@@ -87,7 +81,7 @@ object TextAnalysis {
     */
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(toks(col("text"))).as("word"))
+      .select(col("doc_id"), explode(TextPipeline.words(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
@@ -113,7 +107,7 @@ object TextAnalysis {
   def termLabelChi2(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cell = Tables.documents(spark, dir)
-      .select(col("lang"), explode(toks(col("text"))).as("word"))
+      .select(col("lang"), explode(TextPipeline.words(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy("lang", "word").agg(count(lit(1)).as("a"))
     val wordTot = cell.groupBy("word").agg(sum("a").as("wt"))
@@ -143,7 +137,7 @@ object TextAnalysis {
     */
   def langId(spark: SparkSession, dir: String): DataFrame = {
     def hits(words: Seq[String]): Column =
-      expr(s"size(filter(split(trim(lower(text)), '\\\\s+'), w -> w IN (${words.map(w => s"'$w'").mkString(", ")})))")
+      size(filter(TextPipeline.words(lower(col("text"))), _.isin(words: _*)))
     val es = hits(Seq("el", "la", "los", "de", "que", "y"))
     val de = hits(Seq("der", "die", "das", "und", "ist"))
     val fr = hits(Seq("le", "les", "des", "est", "et"))
@@ -184,7 +178,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-3, 0)
     graft.operators.Dedup.widen(Tables.documents(spark, dir))
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
       .filter(size(col("words")) >= 5)
       .selectExpr("doc_id", "word_ngrams(words, 5)")
       .withColumn("h", conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long"))
@@ -375,7 +369,7 @@ object TextAnalysis {
     val w = Window.partitionBy("lang").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), size(toks(col("text"))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), col("lang"), size(TextPipeline.words(col("text"))).cast("long").as("n_tokens"))
       .withColumn("cum", sum("n_tokens").over(w))
       .select(col("doc_id"), col("lang"),
         floor((col("cum") - col("n_tokens")) / ShardBudget).as("shard_id"))
@@ -403,7 +397,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val counts = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(TextPipeline.words(col("text"))).cast("long").as("n_tokens"))
     val sorted = counts.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
     val local = sorted.as[(Long, Long)]
       .mapPartitions { it =>
@@ -450,7 +444,7 @@ object TextAnalysis {
 
   def docChunksOn(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), toks(col("text")).as("words"))
+      .select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
       .withColumn("n_words", size(col("words")))
       // k = 1 + ceil((n - C) / S) = 1 + (n - C + S - 1) div S for n > C
       .withColumn("k",
@@ -523,7 +517,7 @@ object TextAnalysis {
         col("doc_id"),
         md5(TextPipeline.normalize(col("text"))).as("fp"),
         qualityCol.as("quality_score"),
-        size(toks(col("text"))).cast("long").as("n_ws_tokens"))
+        size(TextPipeline.words(col("text"))).cast("long").as("n_ws_tokens"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("quality_score") >= 0.5)
       .select("doc_id", "quality_score", "n_ws_tokens")
@@ -563,7 +557,7 @@ object TextAnalysis {
     */
   def lengthOutliers(spark: SparkSession, dir: String): DataFrame = {
     val lens = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(toks(col("text"))).cast("double").as("len"))
+      .select(col("doc_id"), size(TextPipeline.words(col("text"))).cast("double").as("len"))
     val med = lens.agg(expr("percentile(len, 0.5)").as("med"))
     val mad = lens.crossJoin(broadcast(med))
       .agg(expr("percentile(abs(len - med), 0.5)").as("mad"))
@@ -584,7 +578,7 @@ object TextAnalysis {
     */
   def lengthOutliersApprox(spark: SparkSession, dir: String): DataFrame = {
     val lens = Tables.documents(spark, dir)
-      .select(col("doc_id"), size(toks(col("text"))).cast("double").as("len"))
+      .select(col("doc_id"), size(TextPipeline.words(col("text"))).cast("double").as("len"))
     val med = lens.agg(
       expr("approx_percentile(len, 0.5, 10000)").as("amed"),
       expr("percentile(len, array(0.48, 0.52))").as("mbands"))
@@ -617,7 +611,7 @@ object TextAnalysis {
 
   def boilerplateNgrams(spark: SparkSession, dir: String): DataFrame = {
     graft.operators.Dedup.widen(Tables.documents(spark, dir))
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
       .filter(size(col("words")) >= BoilerplateN)
       .selectExpr("doc_id", s"word_ngrams(words, $BoilerplateN)")
       .select(col("doc_id"), col("shingle").as("passage"))
@@ -779,57 +773,20 @@ object TextAnalysis {
     rounds.reduce(_ unionByName _)
   }
 
-  /** Fingerprinted on-disk location of the trained BPE merge table for
-    * `dir` — same discipline as the persisted IVF-PQ index
-    * (Similarity.indexDir): the key hashes the corpus path, its bytes,
-    * its mtime and the trainer version, so a corpus change or algorithm
-    * bump trains a NEW artifact while the old one keeps serving readers
-    * mid-flight.
+  /** Trainer version of the persisted BPE merge table: part of its
+    * artifact key, so an algorithm bump trains a NEW artifact.
     */
   val BpeArtifactVersion = 1
 
-  private def bpeArtifactDir(dir: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(dir, "documents.parquet")
-    val fp = graft.sparkutil.CorpusKey.token(src) // recursive, see CorpusKey
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.toAbsolutePath}|$fp|$BpeMergeRounds|$BpeArtifactVersion"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-bpe-merges", key)
-  }
-
   /** Load the PERSISTED merge table for `dir`, training + publishing it
-    * first if absent. Publish is staging-dir + atomic move with only the
-    * two lost-race shapes absorbed (a real IO failure surfaces as
-    * itself), then a `_SUCCESS` assert — the IVF-PQ index's publish
-    * discipline verbatim.
+    * first if absent ([[graft.sparkutil.CorpusKey.buildOnce]], keyed by
+    * the corpus, the merge rounds and the trainer version).
     */
   private[graft] def bpeArtifact(spark: SparkSession, dir: String): DataFrame = {
-    val path = bpeArtifactDir(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      java.nio.file.Files.createDirectories(path.getParent)
-      val staging = path.resolveSibling(
-        path.getFileName.toString + ".staging-" + java.util.UUID.randomUUID())
+    val path = graft.sparkutil.CorpusKey.buildOnce("graft-bpe-merges",
+        java.nio.file.Paths.get(dir, "documents.parquet"),
+        s"$BpeMergeRounds|$BpeArtifactVersion") { staging =>
       bpeMerges(spark, dir).coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      try java.nio.file.Files.move(staging, path)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        case _: java.nio.file.DirectoryNotEmptyException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        // the THIRD lost-race shape (caught live in a verify sweep):
-        // Linux rename(2) onto an existing non-empty dir returns
-        // ENOTEMPTY, which Java surfaces as a plain FileSystemException
-        // ("Directory not empty"), not DirectoryNotEmptyException —
-        // matched by reason so genuine IO failures still surface
-        case e: java.nio.file.FileSystemException
-            if e.getReason != null &&
-              e.getReason.toLowerCase.contains("not empty") =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-      }
-      require(java.nio.file.Files.exists(path.resolve("_SUCCESS")),
-        s"graft bpe artifact publish failed: $path has no _SUCCESS " +
-          "(the move neither succeeded nor lost a race to a complete winner)")
     }
     spark.read.parquet(path.toString)
   }
@@ -1010,9 +967,7 @@ object TextAnalysis {
     val out = (1 to BpeMergeRounds)
       .map(r => s"SELECT $r AS merge_rank, pair, cnt FROM m$r")
       .mkString(" UNION ALL ")
-    s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
-       |  FROM documents),
+    s"""${Oracle.tokensCte},
        |wf AS (SELECT word, count(*) AS n FROM toks WHERE word <> '' GROUP BY word),
        |s0 AS (SELECT n, ' ' || array_to_string(
        |  list_transform(generate_series(1, length(word)), i -> substr(word, i, 1)), ' ') || ' ' AS seq
@@ -1041,9 +996,7 @@ object TextAnalysis {
          |m$r AS (SELECT pair FROM p$r ORDER BY cnt DESC, pair ASC LIMIT 1),
          |${applyCte(s"s${r - 1}", s"m$r", s"s$r")}""".stripMargin
     }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
-       |  FROM documents),
+    s"""${Oracle.tokensCte},
        |wf AS (SELECT word, count(*) AS n FROM toks WHERE word <> '' GROUP BY word),
        |s0 AS (SELECT word, n, ' ' || array_to_string(
        |  list_transform(generate_series(1, length(word)), i -> substr(word, i, 1)), ' ') || ' ' AS seq
@@ -1085,9 +1038,7 @@ object TextAnalysis {
     val out = (1 to BpeBatchRounds)
       .map(r => s"SELECT $r AS merge_round, pair, cnt FROM sel$r")
       .mkString(" UNION ALL ")
-    s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
-       |  FROM documents),
+    s"""${Oracle.tokensCte},
        |wf AS (SELECT word, count(*) AS n FROM toks WHERE word <> '' GROUP BY word),
        |s0 AS (SELECT n, ' ' || array_to_string(
        |  list_transform(generate_series(1, length(word)), i -> substr(word, i, 1)), ' ') || ' ' AS seq
@@ -1118,8 +1069,8 @@ object TextAnalysis {
     "bpe_encode_persisted" -> bpeEncodeOracleSql,
     "bpe_merges_batched" -> bpeBatchedOracleSql,
     "length_outliers" ->
-      """WITH lens AS (
-        |  SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::DOUBLE AS len
+      s"""WITH lens AS (
+        |  SELECT doc_id, len(${Oracle.words("text")})::DOUBLE AS len
         |  FROM documents),
         |med AS (SELECT quantile_cont(len, 0.5) AS med FROM lens),
         |mad AS (SELECT quantile_cont(abs(len - med), 0.5) AS mad FROM lens, med)
@@ -1127,11 +1078,11 @@ object TextAnalysis {
         | abs(len - med) > mad * 3 AS is_outlier
         |FROM lens, med, mad""".stripMargin,
     "length_outliers_approx" ->
-      """SELECT doc_id, len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
+      s"""SELECT doc_id, len(${Oracle.words("text")})::BIGINT AS n_tokens,
         | true AS approx_med_ok, true AS approx_mad_ok
         |FROM documents""".stripMargin,
     "doc_chunking" ->
-      s"""WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
          |base AS (SELECT doc_id, words, len(words) AS n_words,
          |  CASE WHEN len(words) <= $ChunkSize THEN 1
          |       ELSE 1 + (len(words) - $ChunkSize + $ChunkStride - 1) // $ChunkStride END AS k
@@ -1143,7 +1094,7 @@ object TextAnalysis {
          | array_to_string(words[chunk_id * $ChunkStride + 1 : chunk_id * $ChunkStride + $ChunkSize], ' ') AS chunk_text
          |FROM ch""".stripMargin,
     "boilerplate_ngrams" ->
-      s"""WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
          |g AS (SELECT DISTINCT doc_id,
          |   array_to_string(words[i:i+${BoilerplateN - 1}], ' ') AS passage
          |  FROM (SELECT doc_id, words, unnest(generate_series(1, len(words) - ${BoilerplateN - 1})) AS i
@@ -1151,17 +1102,14 @@ object TextAnalysis {
          |SELECT passage, count(DISTINCT doc_id)::BIGINT AS df
          |FROM g GROUP BY passage HAVING count(DISTINCT doc_id) >= $BoilerplateMinDf""".stripMargin,
     "text_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+')) AS word
-        |  FROM documents),
+      s"""${Oracle.tokensCte},
         |tc AS (SELECT doc_id, word, count(*) AS c FROM toks WHERE word <> '' GROUP BY 1, 2)
         |SELECT doc_id, sum(c)::BIGINT AS n_tokens,
         | round(1 - count(*) * 1.0 / sum(c), 4) AS dup_word_ratio,
         | round(max(c) * 1.0 / sum(c), 4) AS top_word_ratio
         |FROM tc GROUP BY doc_id""".stripMargin,
     "decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
         |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
         |        FROM w WHERE len(words) >= 5),
         |sh AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+4], ' ') AS shingle FROM pos),
@@ -1171,10 +1119,7 @@ object TextAnalysis {
         |WHERE s.doc_id >= 10
         |GROUP BY s.doc_id""".stripMargin,
     "text_unigram_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+')) AS word
-        |  FROM documents),
+      s"""${Oracle.tokensCte},
         |tk AS (SELECT doc_id, word FROM toks WHERE word <> ''),
         |vocab AS (SELECT word, count(*) AS wcnt FROM tk GROUP BY 1),
         |total AS (SELECT sum(wcnt)::DOUBLE AS total_tokens FROM vocab)
@@ -1183,9 +1128,9 @@ object TextAnalysis {
         |FROM tk JOIN vocab USING (word), total
         |GROUP BY doc_id""".stripMargin,
     "text_bigram_logprob" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id,
-        |   string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+') AS words
+        |   ${Oracle.tokens("text")} AS words
         |  FROM documents),
         |tk AS (SELECT doc_id, unnest(words) AS word FROM w),
         |tk2 AS (SELECT doc_id, word FROM tk WHERE word <> ''),
@@ -1200,10 +1145,7 @@ object TextAnalysis {
         |JOIN uni ON split_part(bigram, ' ', 1) = word
         |GROUP BY doc_id""".stripMargin,
     "quality_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+')) AS word
-        |  FROM documents),
+      s"""${Oracle.tokensCte},
         |tk AS (SELECT doc_id, word FROM toks WHERE word <> ''),
         |vocab AS (SELECT word, count(*) AS wcnt FROM tk GROUP BY 1),
         |total AS (SELECT sum(wcnt)::DOUBLE AS total_tokens FROM vocab),
@@ -1232,13 +1174,13 @@ object TextAnalysis {
         | ((sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id)
         |    - n_tokens) // $ShardBudget)::BIGINT AS shard_id
         |FROM (SELECT doc_id, lang,
-        |       len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens
+        |       len(${Oracle.words("text")})::BIGINT AS n_tokens
         |      FROM documents)""".stripMargin,
     // the sequential form of the same packing: one windowed cumsum over
     // the doc_id order — must equal the distributed two-level prefix
     "sequence_packing" ->
       s"""WITH t AS (SELECT doc_id,
-         |        len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens
+         |        len(${Oracle.words("text")})::BIGINT AS n_tokens
          |       FROM documents),
          |c AS (SELECT doc_id, n_tokens,
          |       (sum(n_tokens) OVER (ORDER BY doc_id
@@ -1272,10 +1214,7 @@ object TextAnalysis {
         |WHERE ('0x' || substr(md5('strat:' || doc_id), 1, 6))::BIGINT % 1000
         |      < (CASE WHEN lang = 'en' THEN 300 ELSE 600 END)""".stripMargin,
     "tfidf_top_terms" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+')) AS word
-        |  FROM documents),
+      s"""${Oracle.tokensCte},
         |tf AS (SELECT doc_id, word, count(*) AS tf FROM toks WHERE word <> '' GROUP BY doc_id, word),
         |df AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
         |n AS (SELECT count(*)::DOUBLE AS n FROM documents),
@@ -1286,20 +1225,20 @@ object TextAnalysis {
         |  FROM tf JOIN df USING (word) CROSS JOIN n)
         |SELECT doc_id, word, rank FROM scored WHERE rank <= 3""".stripMargin,
     "training_corpus_funnel" ->
-      """WITH fp AS (
-        |  SELECT doc_id, md5(lower(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) AS fp
+      s"""WITH fp AS (
+        |  SELECT doc_id, md5(${Oracle.normalize("text")}) AS fp
         |  FROM documents),
         |survivors AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp),
         |q AS (
         |  SELECT d.doc_id, d.text FROM documents d JOIN survivors s ON d.doc_id = s.doc_id
         |  WHERE round(least(1.0,
-        |     0.5 * least(1.0, len(string_split_regex(trim(text), '\s+')) * 1.0 / 50.0)
-        |     + 0.3 * least(1.0, len(list_filter(string_split_regex(trim(text), '\s+'),
+        |     0.5 * least(1.0, len(${Oracle.words("text")}) * 1.0 / 50.0)
+        |     + 0.3 * least(1.0, len(list_filter(${Oracle.words("text")},
         |         w -> w IN ('the', 'a', 'of', 'and', 'to'))) * 1.0
-        |         / len(string_split_regex(trim(text), '\s+')) * 10.0)
-        |     + 0.2 * (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) * 1.0
+        |         / len(${Oracle.words("text")}) * 10.0)
+        |     + 0.2 * (1.0 - (length(text) - length(${Oracle.normalize("text")})) * 1.0
         |         / length(text))), 4) >= 0.5),
-        |w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM q),
+        |w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM q),
         |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
         |        FROM w WHERE len(words) >= 5),
         |sh AS (SELECT doc_id, i, array_to_string(words[i:i+4], ' ') AS shingle FROM pos),
@@ -1314,7 +1253,7 @@ object TextAnalysis {
         |          THEN NULL ELSE w.words[i] END), x -> x IS NOT NULL), ' '), '') AS ctext,
         |   (len(w.words) - coalesce(len(cov.cov), 0)) AS n_kept
         |  FROM w LEFT JOIN cov USING (doc_id)),
-        |nz AS (SELECT doc_id, string_split_regex(trim(ctext), '\s+') AS words
+        |nz AS (SELECT doc_id, ${Oracle.words("ctext")} AS words
         |       FROM clean WHERE n_kept > 0),
         |base AS (SELECT doc_id, len(words) AS n_words,
         |  CASE WHEN len(words) <= 64 THEN 1 ELSE 1 + (len(words) - 64 + 47) // 48 END AS k
@@ -1329,26 +1268,26 @@ object TextAnalysis {
         | (SELECT count(*) FROM chtok)::BIGINT AS n_chunks,
         | (SELECT sum(n_chunk_tokens) FROM chtok)::BIGINT AS n_tokens""".stripMargin,
     "pipeline_clean_corpus" ->
-      """WITH fp AS (
-        |  SELECT doc_id, md5(lower(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) AS fp
+      s"""WITH fp AS (
+        |  SELECT doc_id, md5(${Oracle.normalize("text")}) AS fp
         |  FROM documents),
         |survivors AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp),
         |q AS (
         |  SELECT doc_id,
         |   round(least(1.0,
-        |     0.5 * least(1.0, len(string_split_regex(trim(text), '\s+')) * 1.0 / 50.0)
-        |     + 0.3 * least(1.0, len(list_filter(string_split_regex(trim(text), '\s+'),
+        |     0.5 * least(1.0, len(${Oracle.words("text")}) * 1.0 / 50.0)
+        |     + 0.3 * least(1.0, len(list_filter(${Oracle.words("text")},
         |         w -> w IN ('the', 'a', 'of', 'and', 'to'))) * 1.0
-        |         / len(string_split_regex(trim(text), '\s+')) * 10.0)
-        |     + 0.2 * (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) * 1.0
+        |         / len(${Oracle.words("text")}) * 10.0)
+        |     + 0.2 * (1.0 - (length(text) - length(${Oracle.normalize("text")})) * 1.0
         |         / length(text))), 4) AS quality_score,
-        |   len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_ws_tokens
+        |   len(${Oracle.words("text")})::BIGINT AS n_ws_tokens
         |  FROM documents)
         |SELECT s.doc_id, q.quality_score, q.n_ws_tokens
         |FROM survivors s JOIN q ON s.doc_id = q.doc_id
         |WHERE q.quality_score >= 0.5""".stripMargin,
     "doc_winnowing" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
         |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
         |        FROM w WHERE len(words) >= 5),
         |sh AS (SELECT doc_id, i - 1 AS pos,
@@ -1359,14 +1298,14 @@ object TextAnalysis {
         |SELECT DISTINCT doc_id, fp FROM wm WHERE pos >= 3""".stripMargin,
     "text_langid_ngram" -> langNgramOracle,
     "text_token_counts" ->
-      """WITH w AS (SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS words FROM documents)
+      s"""WITH w AS (SELECT doc_id, text, ${Oracle.words("text")} AS words FROM documents)
         |SELECT doc_id, len(words)::BIGINT AS n_ws_tokens,
-        | len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]'))::BIGINT AS n_bpe_tokens,
+        | len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9${Oracle.Space}]'))::BIGINT AS n_bpe_tokens,
         | length(text)::BIGINT AS n_chars_calc,
         | round(list_sum(list_transform(words, w -> length(w))) * 1.0 / len(words), 4) AS avg_token_len
         |FROM w""".stripMargin,
     "text_lexical_diversity" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS word
+      s"""WITH w AS (SELECT doc_id, unnest(${Oracle.words("text")}) AS word
         |           FROM documents),
         |c AS (SELECT doc_id, word, count(*)::BIGINT AS c FROM w
         |      WHERE word <> '' GROUP BY 1, 2)
@@ -1376,7 +1315,7 @@ object TextAnalysis {
         |   AS entropy_bits
         |FROM c GROUP BY 1""".stripMargin,
     "term_label_chi2" ->
-      """WITH t AS (SELECT lang, unnest(string_split_regex(trim(text), '\s+')) AS word
+      s"""WITH t AS (SELECT lang, unnest(${Oracle.words("text")}) AS word
         |           FROM documents),
         |cell AS (SELECT lang, word, count(*)::BIGINT AS a FROM t
         |         WHERE word <> '' GROUP BY 1, 2),
@@ -1399,13 +1338,13 @@ object TextAnalysis {
         |  FROM scored)
         |WHERE rank <= 5""".stripMargin,
     "text_quality" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, text,
-        |   len(string_split_regex(trim(text), '\s+')) * 1.0 AS n_toks,
-        |   len(list_filter(string_split_regex(trim(text), '\s+'),
+        |   len(${Oracle.words("text")}) * 1.0 AS n_toks,
+        |   len(list_filter(${Oracle.words("text")},
         |       w -> w IN ('the', 'a', 'of', 'and', 'to'))) * 1.0 AS stop_hits,
         |   (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) * 1.0 AS digits,
-        |   (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) * 1.0 AS symbols,
+        |   (length(text) - length(${Oracle.normalize("text")})) * 1.0 AS symbols,
         |   length(text) * 1.0 AS chars
         |  FROM documents)
         |SELECT doc_id,
@@ -1418,9 +1357,9 @@ object TextAnalysis {
         |   + 0.2 * (1.0 - symbols / chars)), 4) AS quality_score
         |FROM w""".stripMargin,
     "text_langid" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, lang AS lang_actual,
-        |   string_split_regex(trim(lower(text)), '\s+') AS words FROM documents),
+        |   ${Oracle.words("lower(text)")} AS words FROM documents),
         |h AS (
         |  SELECT doc_id, lang_actual,
         |   len(list_filter(words, w -> w IN ('el','la','los','de','que','y'))) AS es,
@@ -1435,8 +1374,8 @@ object TextAnalysis {
         |      ELSE 'en' END AS lang_pred
         |FROM h""".stripMargin,
     "doc_fingerprint" ->
-      """WITH n AS (SELECT doc_id,
-        |  lower(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g')) AS norm FROM documents)
+      s"""WITH n AS (SELECT doc_id,
+        |  ${Oracle.normalize("text")} AS norm FROM documents)
         |SELECT doc_id, md5(norm) AS fp,
         | ('0x' || substr(md5(norm), 1, 15))::BIGINT AS fp60
         |FROM n""".stripMargin,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Behavioral / commerce analytics and feature-engineering operators:
@@ -275,7 +276,7 @@ object Analytics {
 
   def corpusMixtureWeightsOn(docs: DataFrame): DataFrame = {
     val perSrc = docs
-      .select(col("source"), size(split(trim(col("text")), "\\s+")).cast("long").as("toks"))
+      .select(col("source"), size(TextPipeline.words(col("text"))).cast("long").as("toks"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
     val tot = perSrc.agg(sum("n_tokens").as("total_tokens"), count(lit(1)).as("n_sources"))
@@ -327,7 +328,7 @@ object Analytics {
     lengthBucketsOn(Tables.documents(spark, dir))
 
   def lengthBucketsOn(docs: DataFrame): DataFrame =
-    docs.select(size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+    docs.select(size(TextPipeline.words(col("text"))).cast("long").as("n_tokens"))
       .withColumn("bucket", length(bin(col("n_tokens"))).cast("long"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("total_tokens"),
@@ -1052,9 +1053,9 @@ object Analytics {
         | true AS no_false_negatives, true AS fp_rate_bounded
         |FROM probes""".stripMargin,
     "corpus_mixture_weights" ->
-      """WITH per_src AS (
+      s"""WITH per_src AS (
         |  SELECT source, count(*) AS n_docs,
-        |    sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS n_tokens
+        |    sum(len(${Oracle.words("text")}))::BIGINT AS n_tokens
         |  FROM documents GROUP BY source),
         |tot AS (SELECT sum(n_tokens)::BIGINT AS total_tokens, count(*) AS n_sources FROM per_src)
         |SELECT source, n_docs, n_tokens,
@@ -1063,9 +1064,9 @@ object Analytics {
         | (total_tokens + n_sources * n_tokens - 1) // (n_sources * n_tokens) AS epochs
         |FROM per_src CROSS JOIN tot""".stripMargin,
     "mixture_sample" ->
-      """WITH per_src AS (
+      s"""WITH per_src AS (
         |  SELECT source, count(*) AS n_docs,
-        |    sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS n_tokens
+        |    sum(len(${Oracle.words("text")}))::BIGINT AS n_tokens
         |  FROM documents GROUP BY source),
         |tot AS (SELECT sum(n_tokens)::BIGINT AS total_tokens, count(*) AS n_sources FROM per_src),
         |w AS (SELECT source,
@@ -1082,8 +1083,8 @@ object Analytics {
         | round(sum(CASE WHEN r < least(weight, 1.0) * 1000000 THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS achieved_rate
         |FROM d JOIN w USING (source) GROUP BY d.source""".stripMargin,
     "length_buckets" ->
-      """WITH toks AS (
-        |  SELECT len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens FROM documents)
+      s"""WITH toks AS (
+        |  SELECT len(${Oracle.words("text")})::BIGINT AS n_tokens FROM documents)
         |SELECT length(bin(n_tokens))::BIGINT AS bucket, count(*) AS n_docs,
         | sum(n_tokens)::BIGINT AS total_tokens,
         | min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens

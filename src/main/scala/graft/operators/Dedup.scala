@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.TextPipeline
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Deduplication suite for a training-data pipeline: exact (content hash),
@@ -84,7 +85,7 @@ object Dedup {
     */
   def shinglesRaw(docs: DataFrame): DataFrame = {
     widen(docs)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
       .filter(size(col("words")) >= 5)
       .selectExpr("doc_id", "word_ngrams(words, 5)")
       .select(col("doc_id"), col("shingle"))
@@ -266,7 +267,7 @@ object Dedup {
   }
 
   private def docWords(docs: DataFrame): DataFrame = {
-    docs.select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+    docs.select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
   }
 
   def spanCoverageOn(docs: DataFrame): DataFrame = {
@@ -631,7 +632,7 @@ object Dedup {
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val cand = lshCandidates(Tables.documents(spark, dir))
     val shingleSets = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
       .filter(size(col("words")) >= 5)
       .select(col("doc_id"),
         array_distinct(expr("transform(sequence(0, size(words) - 5), i -> array_join(slice(words, i + 1, 5), ' '))"))
@@ -672,7 +673,7 @@ object Dedup {
       .select(col("c.doc_a").as("doc_a"), col("c.doc_b").as("doc_b"),
         agree.as("n_agree"))
     val shingleSets = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), TextPipeline.words(col("text")).as("words"))
       .filter(size(col("words")) >= 5)
       .select(col("doc_id"),
         array_distinct(expr("transform(sequence(0, size(words) - 5), i -> array_join(slice(words, i + 1, 5), ' '))"))
@@ -958,7 +959,7 @@ object Dedup {
       .mkString(" + ")
     s"""toks AS (
       |  SELECT DISTINCT doc_id,
-      |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
+      |   unnest(${Oracle.tokens("text")}) AS word
       |  FROM documents),
       |th AS (
       |  SELECT doc_id, word, ('0x' || substr(md5(word), 1, 8))::BIGINT AS h
@@ -978,7 +979,7 @@ object Dedup {
       .mkString(" + ")
     s"""toks AS (
       |  SELECT DISTINCT doc_id,
-      |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
+      |   unnest(${Oracle.tokens("text")}) AS word
       |  FROM documents),
       |th AS (
       |  SELECT doc_id, word,
@@ -992,7 +993,7 @@ object Dedup {
 
   /** Shared DuckDB CTE fragments (dialect mirror of [[shingles]]). */
   private val shinglesCte =
-    """w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+    s"""w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
       |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
       |        FROM w WHERE len(words) >= 5),
       |sh AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+4], ' ') AS shingle FROM pos)""".stripMargin
@@ -1231,7 +1232,7 @@ object Dedup {
         |FROM e e1 JOIN e e2 ON e1.dst = e2.src
         |WHERE EXISTS (SELECT 1 FROM e e3 WHERE e3.src = e1.src AND e3.dst = e2.dst)""".stripMargin,
     "dedup_exact" ->
-      """SELECT md5(lower(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) AS fp,
+      s"""SELECT md5(${Oracle.normalize("text")}) AS fp,
         | min(doc_id) AS keep_id, count(*) AS n_copies
         |FROM documents GROUP BY 1""".stripMargin,
     "dedup_containment" ->
@@ -1320,9 +1321,9 @@ object Dedup {
         |SELECT doc_id, min(level)::BIGINT AS level FROM bfs GROUP BY doc_id""".stripMargin,
     "dedup_lsh_recall" -> lshRecallOracleSql,
     "golden_record" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id, n_chars,
-        |   md5(lower(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) AS fp
+        |   md5(${Oracle.normalize("text")}) AS fp
         |  FROM documents),
         |ranked AS (
         |  SELECT fp, doc_id, n_chars,
@@ -1332,8 +1333,8 @@ object Dedup {
         |SELECT fp, doc_id AS survivor_id, n_chars, n_dups
         |FROM ranked WHERE rn = 1""".stripMargin,
     "dedup_incremental" ->
-      """WITH fp AS (
-        |  SELECT doc_id, md5(lower(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))) AS fp
+      s"""WITH fp AS (
+        |  SELECT doc_id, md5(${Oracle.normalize("text")}) AS fp
         |  FROM documents)
         |SELECT min(doc_id) AS doc_id, fp
         |FROM fp b
@@ -1387,7 +1388,7 @@ object Dedup {
         |SELECT 0.9::DOUBLE, sum(CASE WHEN jaccard >= 0.9 THEN 1 ELSE 0 END)::BIGINT FROM j""".stripMargin,
     "dedup_consensus" ->
       s"""WITH f AS (
-        |  SELECT doc_id, md5(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g'))) AS fp
+        |  SELECT doc_id, md5(${Oracle.normalize("text")}) AS fp
         |  FROM documents),
         |exact_d AS (
         |  SELECT DISTINCT doc_id FROM (
@@ -1407,7 +1408,7 @@ object Dedup {
         | count(*) AS n_methods
         |FROM flags GROUP BY doc_id""".stripMargin,
     "dedup_span_coverage" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
         |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
         |        FROM w WHERE len(words) >= 5),
         |sh AS (SELECT doc_id, i, array_to_string(words[i:i+4], ' ') AS shingle FROM pos),
@@ -1421,7 +1422,7 @@ object Dedup {
         | round(coalesce(cnt.covered, 0) * 1.0 / len(w.words), 4) AS dup_frac
         |FROM w LEFT JOIN cnt USING (doc_id)""".stripMargin,
     "dedup_span_excise" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
         |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
         |        FROM w WHERE len(words) >= 5),
         |sh AS (SELECT doc_id, i, array_to_string(words[i:i+4], ' ') AS shingle FROM pos),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Corpus- and behavior-mining operators a training-data pipeline runs
@@ -726,8 +727,8 @@ object Mining {
     * and window-endpoint pairs (mirrors the `word_ngrams` extraction).
     */
   private val wordsCte =
-    """w AS (
-      |  SELECT string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+') AS words
+    s"""w AS (
+      |  SELECT ${Oracle.tokens("text")} AS words
       |  FROM documents)""".stripMargin
 
   private val pairsCte =
@@ -793,7 +794,7 @@ object Mining {
       s"""WITH $pairsCte,
          |p AS (SELECT least(a, b) AS w1, greatest(a, b) AS w2 FROM u),
          |pcnt AS (SELECT w1, w2, count(*) AS pc FROM p GROUP BY 1, 2),
-         |${TextQueries.tokensCte.stripPrefix("WITH ")},
+         |${Oracle.tokensCte.stripPrefix("WITH ")},
          |uni AS (SELECT word, count(*) AS wc FROM toks WHERE word <> '' GROUP BY 1),
          |tot AS (SELECT (SELECT count(*) FROM p) AS np, (SELECT sum(wc) FROM uni)::BIGINT AS nu)
          |SELECT pcnt.w1, pcnt.w2, pcnt.pc,
@@ -803,12 +804,12 @@ object Mining {
          |JOIN uni cb ON cb.word = pcnt.w2
          |CROSS JOIN tot""".stripMargin,
     "feature_hashing" ->
-      s"""${TextQueries.tokensCte}
+      s"""${Oracle.tokensCte}
          |SELECT doc_id, ('0x' || substr(md5(word), 1, 8))::BIGINT % 64 AS bucket,
          | count(*) AS cnt
          |FROM toks WHERE word <> '' GROUP BY 1, 2""".stripMargin,
     "vocab_coverage" ->
-      s"""${TextQueries.tokensCte},
+      s"""${Oracle.tokensCte},
          |t AS (SELECT doc_id, word FROM toks WHERE word <> ''),
          |vocab AS (SELECT word FROM (SELECT word, count(*) AS wc FROM t GROUP BY 1)
          |          ORDER BY wc DESC, word ASC LIMIT 20)

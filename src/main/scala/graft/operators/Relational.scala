@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Relational extension surface (SURVEY §2.2): the operator categories the
@@ -1811,9 +1812,8 @@ object Relational {
         |FROM keys a JOIN keys b ON a.key = b.key AND a.word < b.word
         |WHERE levenshtein(a.word, b.word) <= 1""".stripMargin,
     "edit_distance_join" ->
-      """WITH dw AS (
-        |  SELECT unnest(string_split_regex(trim(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', '', 'g')), '\s+')) AS w
+      s"""WITH dw AS (
+        |  SELECT unnest(${Oracle.tokens("text")}) AS w
         |  FROM documents),
         |pw AS (SELECT unnest(string_split(p_name, ' ')) AS w FROM part),
         |words AS (

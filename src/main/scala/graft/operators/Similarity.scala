@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Parameterized sign-LSH: n deterministic integer hyperplanes over the FULL
@@ -552,17 +553,8 @@ object Similarity {
 
   private val IndexCodeVersion = "v1"
 
-  private def indexDir(dir: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    // recursive content fingerprint (names+sizes+mtimes+count) — see
-    // [[graft.sparkutil.CorpusKey]]; nested/partitioned layouts and
-    // in-place rewrites retrain instead of serving a stale index
-    val fp = graft.sparkutil.CorpusKey.token(src)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.toAbsolutePath}|$fp|$IndexCodeVersion".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-ivfpq-index", key)
-  }
+  private def embeddingsSrc(dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(dir, "embeddings.parquet")
 
   /** Load the persisted index for `dir`, training and persisting it
     * first if absent. One parquet table: (space: coarse|raw|res,
@@ -571,8 +563,8 @@ object Similarity {
     * index — never a torn one.
     */
   private def ivfPqIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = indexDir(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
+    val path = graft.sparkutil.CorpusKey.buildOnce(
+        "graft-ivfpq-index", embeddingsSrc(dir), IndexCodeVersion) { staging =>
       val qvs = qvecs(spark, dir).select("vec_id", "qv")
       // standalone training chains: eager per-iteration checkpoints cut
       // the multiplicative lineage (see pqSubspace) — the right mode for
@@ -588,34 +580,7 @@ object Similarity {
       val all = (coarse.select(
         lit("coarse").as("space"), lit(-1).as("m"), col("cent_id"), col("cv")) +:
         (raw ++ res)).reduce(_ unionAll _)
-      val staging = path.resolveSibling(
-        path.getFileName.toString + ".staging-" + java.util.UUID.randomUUID())
       all.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      try java.nio.file.Files.move(staging, path)
-      catch {
-        // a concurrent trainer won the publish: same deterministic
-        // content — drop ours and read the winner's. ONLY the two
-        // lost-race shapes are absorbed; a genuine IO failure (ENOSPC,
-        // permissions, cross-device tmp) must surface as itself, not be
-        // misread as a race and turned into an obscure missing-path
-        // error at the read below.
-        case _: java.nio.file.FileAlreadyExistsException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        case _: java.nio.file.DirectoryNotEmptyException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        // the THIRD lost-race shape (caught live in a verify sweep):
-        // Linux rename(2) onto an existing non-empty dir returns
-        // ENOTEMPTY, which Java surfaces as a plain FileSystemException
-        // ("Directory not empty"), not DirectoryNotEmptyException —
-        // matched by reason so genuine IO failures still surface
-        case e: java.nio.file.FileSystemException
-            if e.getReason != null &&
-              e.getReason.toLowerCase.contains("not empty") =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-      }
-      require(java.nio.file.Files.exists(path.resolve("_SUCCESS")),
-        s"graft ivf-pq index publish failed: $path has no _SUCCESS " +
-          "(the move neither succeeded nor lost a race to a complete winner)")
     }
     spark.read.parquet(path.toString)
   }
@@ -662,11 +627,8 @@ object Similarity {
   /** The persisted CODES table's location — keyed by the SAME corpus
     * fingerprint as the codebook index, so both go stale together.
     */
-  private def codesDirOf(dir: String): java.nio.file.Path = {
-    val idx = indexDir(dir)
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-ivfpq-codes",
-      idx.getFileName.toString)
-  }
+  private def codesDirOf(dir: String): java.nio.file.Path =
+    graft.sparkutil.CorpusKey.dir("graft-ivfpq-codes", embeddingsSrc(dir), IndexCodeVersion)
 
   /** FROZEN-CODEBOOK ENCODER — the one function that turns vectors into
     * index entries: coarse-cell assignment + per-subspace code words,
@@ -718,32 +680,10 @@ object Similarity {
     * artifact; the shared fingerprint retires both on any corpus change.
     */
   private[graft] def ivfPqCodes(spark: SparkSession, dir: String): DataFrame = {
-    val path = codesDirOf(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      java.nio.file.Files.createDirectories(path.getParent)
-      val staging = path.resolveSibling(
-        path.getFileName.toString + ".staging-" + java.util.UUID.randomUUID())
+    val path = graft.sparkutil.CorpusKey.buildOnce(
+        "graft-ivfpq-codes", embeddingsSrc(dir), IndexCodeVersion) { staging =>
       encodeWith(ivfPqIndex(spark, dir), qvecs(spark, dir).select("vec_id", "qv"))
         .write.partitionBy("cell").mode("overwrite").parquet(staging.toString)
-      try java.nio.file.Files.move(staging, path)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        case _: java.nio.file.DirectoryNotEmptyException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        // the THIRD lost-race shape (caught live in a verify sweep):
-        // Linux rename(2) onto an existing non-empty dir returns
-        // ENOTEMPTY, which Java surfaces as a plain FileSystemException
-        // ("Directory not empty"), not DirectoryNotEmptyException —
-        // matched by reason so genuine IO failures still surface
-        case e: java.nio.file.FileSystemException
-            if e.getReason != null &&
-              e.getReason.toLowerCase.contains("not empty") =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-      }
-      require(java.nio.file.Files.exists(path.resolve("_SUCCESS")),
-        s"graft ivf-pq codes publish failed: $path has no _SUCCESS " +
-          "(the move neither succeeded nor lost a race to a complete winner)")
     }
     spark.read.parquet(path.toString)
   }
@@ -1260,16 +1200,6 @@ object Similarity {
       .digest(word.getBytes("UTF-8")).take(2).map("%02x".format(_)).mkString, 16) %
       IndexShards
 
-  private def tokenIndexDir(dir: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(dir, "documents.parquet")
-    val fp = graft.sparkutil.CorpusKey.token(src) // recursive, see CorpusKey
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.toAbsolutePath}|$fp|$IndexShards|$TokenIndexVersion"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-token-index", key)
-  }
-
   /** Build-once PERSISTED INVERTED INDEX: (word, doc_id, tf) postings,
     * hive-partitioned by token-hash shard, fingerprinted to the corpus
     * (bytes + mtime + layout + version) with the staging-move publish
@@ -1277,35 +1207,14 @@ object Similarity {
     * amortizes across every subsequent search.
     */
   private[graft] def tokenIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = tokenIndexDir(dir)
-    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
-      java.nio.file.Files.createDirectories(path.getParent)
-      val staging = path.resolveSibling(
-        path.getFileName.toString + ".staging-" + java.util.UUID.randomUUID())
+    val path = graft.sparkutil.CorpusKey.buildOnce("graft-token-index",
+        java.nio.file.Paths.get(dir, "documents.parquet"),
+        s"$IndexShards|$TokenIndexVersion") { staging =>
       graft.operators.TextPipeline.tokenize(Tables.documents(spark, dir))
         .groupBy("word", "doc_id").agg(count(lit(1)).as("tf"))
         .withColumn("shard", expr(
           s"CAST(conv(substring(md5(word), 1, 4), 16, 10) AS INT) % $IndexShards"))
         .write.partitionBy("shard").mode("overwrite").parquet(staging.toString)
-      try java.nio.file.Files.move(staging, path)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        case _: java.nio.file.DirectoryNotEmptyException =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-        // the THIRD lost-race shape (caught live in a verify sweep):
-        // Linux rename(2) onto an existing non-empty dir returns
-        // ENOTEMPTY, which Java surfaces as a plain FileSystemException
-        // ("Directory not empty"), not DirectoryNotEmptyException —
-        // matched by reason so genuine IO failures still surface
-        case e: java.nio.file.FileSystemException
-            if e.getReason != null &&
-              e.getReason.toLowerCase.contains("not empty") =>
-          graft.sources.v2.MemCatalog.deleteRecursively(staging)
-      }
-      require(java.nio.file.Files.exists(path.resolve("_SUCCESS")),
-        s"graft token index publish failed: $path has no _SUCCESS " +
-          "(the move neither succeeded nor lost a race to a complete winner)")
     }
     spark.read.parquet(path.toString)
   }
@@ -1821,10 +1730,7 @@ object Similarity {
 
   /** Shared by the corpus-rescan and index-served boolean retrievals. */
   private val searchBooleanAndOracle: String =
-    s"""WITH toks AS (
-      |  SELECT doc_id,
-      |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
-      |  FROM documents)
+    s"""${Oracle.tokensCte}
       |SELECT doc_id, count(*)::BIGINT AS total_tf
       |FROM toks WHERE word IN (${Bm25Terms.map(t => s"'$t'").mkString(", ")})
       |GROUP BY doc_id
@@ -1888,7 +1794,7 @@ object Similarity {
     "search_index_served" -> searchBooleanAndOracle,
     "search_phrase" ->
       s"""WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')), '\\s+') AS words
+        |  SELECT doc_id, ${Oracle.tokens("text")} AS words
         |  FROM documents),
         |p AS (SELECT doc_id, words, unnest(generate_series(1, len(words))) AS pos FROM w),
         |tok AS (SELECT doc_id, pos, words[pos] AS word FROM p WHERE words[pos] <> '')
@@ -1899,10 +1805,7 @@ object Similarity {
         |WHERE a.word = '${PhraseTerms._1}' AND b.word = '${PhraseTerms._2}'
         |GROUP BY a.doc_id""".stripMargin,
     "bm25_ranking" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+')) AS word
-        |  FROM documents),
+      s"""${Oracle.tokensCte},
         |tk AS (SELECT doc_id, word FROM toks WHERE word <> ''),
         |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY doc_id),
         |stats AS (SELECT avg(dl) AS avgdl, count(*) AS n FROM dl),
@@ -1934,7 +1837,7 @@ object Similarity {
         |FROM piv JOIN dl USING (doc_id) CROSS JOIN stats CROSS JOIN dfs
         |ORDER BY bm25 DESC, doc_id ASC LIMIT 20""".stripMargin,
     "rrf_fusion" ->
-      s"""${graft.operators.TextQueries.tokensCte},
+      s"""${Oracle.tokensCte},
         |kw0 AS (SELECT doc_id, count(*) AS tf FROM toks WHERE word = 'spark'
         |        GROUP BY 1 ORDER BY tf DESC, doc_id ASC LIMIT 20),
         |kw AS (SELECT doc_id, row_number() OVER (ORDER BY tf DESC, doc_id ASC) AS r_kw FROM kw0),

@@ -49,8 +49,33 @@ object TextPipeline {
     * empty-string filter in callers reproduce C++ `operator>>`, which can
     * never emit an empty token where Spark's `split` can.
     */
-  def tokens(c: Column): Column =
-    split(trim(normalize(c)), "\\s+")
+  def tokens(c: Column): Column = words(normalize(c))
+
+  /** Raw words: `c` split on whitespace runs, not normalized. */
+  def words(c: Column): Column = split(trim(c), "\\s+")
+
+  /** The same rule as DuckDB SQL, for the oracle queries; each takes a SQL
+    * expression and returns one. RE2's `\s` lacks the vertical tab that
+    * Java's `\s` has, so the class is spelled out; DuckDB's `lower` is
+    * Unicode-aware (`İ`, the Kelvin sign), so [[normalize]] strips first
+    * and lowers only what is left, which is ASCII; and DuckDB's one-arg
+    * `trim` also drops NBSP and the other Unicode spaces, where Spark's
+    * drops only `' '`.
+    */
+  object Oracle {
+    /** Java's `\s`, as the body of an RE2 character class. */
+    val Space = """ \t\n\x0B\f\r"""
+    private val Dropped = "'[^a-zA-Z0-9" + Space + "]'"
+    private val Runs = "'[" + Space + "]+'"
+
+    def normalize(e: String): String = "lower(regexp_replace(" + e + ", " + Dropped + ", '', 'g'))"
+    def words(e: String): String = "string_split_regex(trim(" + e + ", ' '), " + Runs + ")"
+    def tokens(e: String): String = words(normalize(e))
+
+    /** The `toks(doc_id, word)` CTE: one row per token of `documents.text`. */
+    val tokensCte: String =
+      "WITH toks AS (\n  SELECT doc_id, unnest(" + tokens("text") + ") AS word\n  FROM documents\n)"
+  }
 
   /** One row per (doc, token). */
   def tokenize(docs: DataFrame): DataFrame =

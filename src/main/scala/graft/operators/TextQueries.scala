@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.TextPipeline.Oracle
 import graft.sources.Tables
 
 /** Driver-verifiable queries for the reference's own surface (SURVEY §2.1).
@@ -9,16 +10,6 @@ import graft.sources.Tables
   * and deterministic values.
   */
 object TextQueries {
-
-  /** Shared DuckDB-dialect token CTE: must match [[TextPipeline.tokens]]
-    * exactly (regexp_replace needs the 'g' flag in DuckDB; Spark replaces
-    * globally by default).
-    */
-  private[graft] val tokensCte =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+')) AS word
-      |  FROM documents
-      |)""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "wordcount" -> ((s, d) =>
@@ -108,7 +99,7 @@ object TextQueries {
 
   def oracle: Map[String, String] = Map(
     "cms_word_freq" ->
-      s"""$tokensCte,
+      s"""${Oracle.tokensCte},
         |wc AS (SELECT word, count(*)::BIGINT AS cnt FROM toks
         |       WHERE word <> '' GROUP BY word),
         |probes(word) AS (VALUES $cmsValuesSql),
@@ -129,29 +120,29 @@ object TextQueries {
         |SELECT e.word, e.est_cnt, coalesce(wc.cnt, 0)::BIGINT AS exact_cnt
         |FROM est e LEFT JOIN wc ON wc.word = e.word""".stripMargin,
     "wordcount" ->
-      s"$tokensCte SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
+      s"${Oracle.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
     "wordcount_topn" ->
-      s"$tokensCte SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 20",
+      s"${Oracle.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 20",
     "tokenize" ->
-      s"$tokensCte SELECT doc_id, word FROM toks WHERE word <> ''",
+      s"${Oracle.tokensCte} SELECT doc_id, word FROM toks WHERE word <> ''",
     "normalize_project" ->
-      "SELECT doc_id, lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')) AS norm_text FROM documents",
+      s"SELECT doc_id, ${Oracle.normalize("text")} AS norm_text FROM documents",
     "wordcount_rdd" ->
-      s"$tokensCte SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
+      s"${Oracle.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
     "tokenize_pos" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+') AS words
+      s"""WITH w AS (
+        |  SELECT doc_id, ${Oracle.tokens("text")} AS words
         |  FROM documents),
         |p AS (SELECT doc_id, words, unnest(generate_series(1, len(words))) AS pos FROM w)
         |SELECT doc_id, pos::BIGINT AS pos, words[pos] AS word
         |FROM p WHERE words[pos] <> ''""".stripMargin,
     "heavy_hitters" ->
-      s"""$tokensCte SELECT word, count(*) AS cnt, true AS in_sketch_top5
+      s"""${Oracle.tokensCte} SELECT word, count(*) AS cnt, true AS in_sketch_top5
         |FROM toks WHERE word <> '' GROUP BY word
         |ORDER BY cnt DESC, word ASC LIMIT 5""".stripMargin,
     "ngram_counts" ->
-      """WITH w AS (
-        |  SELECT string_split_regex(trim(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')), '\s+') AS words
+      s"""WITH w AS (
+        |  SELECT ${Oracle.tokens("text")} AS words
         |  FROM documents),
         |pos AS (SELECT words, unnest(generate_series(1, len(words) - 1)) AS i
         |        FROM w WHERE len(words) >= 2)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.operators.TextPipeline.Oracle
 import graft.sources.v2.MemCatalog
 import graft.streaming.BoundedDrain
 import graft.streaming.BoundedDrain.Sink
@@ -1156,27 +1157,11 @@ object Formats {
     val ranges = entries.flatMap(_.stats.get("band")).sortBy(_._1)
     val disjoint = ranges.size >= 2 &&
       ranges.sliding(2).forall { case Seq((_, hi1), (lo2, _)) => lo2 >= hi1; case _ => true }
-    // a new-key filter prunes files now (the point of re-clustering) —
-    // proven STRUCTURALLY, not via the shared lastSkip seam (the verify
-    // driver runs queries concurrently, and a global counter would race):
-    // physically hide every file whose recorded band range provably
-    // cannot match, re-run the probe, and require the identical answer —
-    // a scan that skips never learns they were gone, a scan that doesn't
-    // dies on the missing path
-    val probeSql = "SELECT count(*) FROM graftmem.tmp.cev_orders WHERE band >= 6"
-    val want = spark.sql(probeSql).head().getLong(0)
+    // a new-key filter prunes files now (the point of re-clustering):
+    // every file whose recorded band range cannot match is provably skipped
     val prunable = entries.filter(_.stats.get("band").exists { case (_, hi) => hi < 6 })
-    val stash = java.nio.file.Files.createTempDirectory("graft-cev-hide")
-    val prunes = prunable.nonEmpty && {
-      prunable.foreach(e => java.nio.file.Files.move(
-        tableDir.resolve(e.name), stash.resolve(e.name)))
-      try spark.sql(probeSql).head().getLong(0) == want
-      catch { case _: Throwable => false }
-      finally prunable.foreach { e =>
-        if (java.nio.file.Files.exists(stash.resolve(e.name)))
-          java.nio.file.Files.move(stash.resolve(e.name), tableDir.resolve(e.name))
-      }
-    }
+    val prunes = prunable.nonEmpty && MemCatalog.proveFilesPruned(spark, tableDir, prunable,
+      "SELECT count(*) FROM graftmem.tmp.cev_orders WHERE band >= 6")
     // evolution rewrites the PRESENT only: the pre-evolution snapshot is
     // still readable and complete
     val ttOk = spark.sql(
@@ -1231,30 +1216,15 @@ object Formats {
     val k0 = spark.sql(
       "SELECT CAST(percentile_approx(okey, 0.5) AS BIGINT) FROM graftmem.tmp.pev_orders")
       .head().getLong(0)
-    // STRUCTURAL pruning proof (race-free under the concurrent verify
-    // driver — no shared plan-count seam): replicate the transform rule
-    // driver-side over the manifest, physically HIDE every file it says
-    // the scan must prune, re-run the probe, and require the identical
-    // answer — a pruning scan never touches the hidden files, a broken
-    // one dies on the missing path
+    // replicate the transform rule driver-side over the manifest and
+    // prove the scan skips every file it says must be pruned
     def bucketOf(v: Long, n: Long): Long = java.lang.Math.floorMod(v * 2654435761L, n)
     def outside(b: Long, range: (Long, Long)): Boolean = b < range._1 || b > range._2
     def provedPruned(expectPrunable: Int,
         prunable: MemCatalog.FileEntry => Boolean): Boolean = {
-      val entries = MemCatalog.liveEntries(tableDir)
-      val hidden = entries.filter(prunable)
-      if (hidden.size != expectPrunable) return false
-      val probeSql = s"SELECT count(*) FROM graftmem.tmp.pev_orders WHERE okey = $k0"
-      val want = spark.sql(probeSql).head().getLong(0)
-      val stash = java.nio.file.Files.createTempDirectory("graft-pev-hide")
-      hidden.foreach(e => java.nio.file.Files.move(
-        tableDir.resolve(e.name), stash.resolve(e.name)))
-      try spark.sql(probeSql).head().getLong(0) == want
-      catch { case _: Throwable => false }
-      finally hidden.foreach { e =>
-        if (java.nio.file.Files.exists(stash.resolve(e.name)))
-          java.nio.file.Files.move(stash.resolve(e.name), tableDir.resolve(e.name))
-      }
+      val hidden = MemCatalog.liveEntries(tableDir).filter(prunable)
+      hidden.size == expectPrunable && MemCatalog.proveFilesPruned(spark, tableDir, hidden,
+        s"SELECT count(*) FROM graftmem.tmp.pev_orders WHERE okey = $k0")
     }
     // the old spec prunes 3 of 4 bucket-pure files on the okey probe
     val prunedOldSpec = provedPruned(3,
@@ -2322,19 +2292,8 @@ object Formats {
     // the transform rule says the scan must skip, re-run, same answer
     def provedPruned(expectHidden: Int, probeSql: String,
         prunable: MemCatalog.FileEntry => Boolean): Boolean = {
-      val live = cat.liveEntries(tdir)
-      val hidden = live.filter(prunable)
-      if (hidden.size != expectHidden) return false
-      val want = spark.sql(probeSql).head().getLong(0)
-      val stash = java.nio.file.Files.createTempDirectory("graft-pmu-hide")
-      hidden.foreach(e => java.nio.file.Files.move(
-        tdir.resolve(e.name), stash.resolve(e.name)))
-      try spark.sql(probeSql).head().getLong(0) == want
-      catch { case _: Throwable => false }
-      finally hidden.foreach { e =>
-        if (java.nio.file.Files.exists(stash.resolve(e.name)))
-          java.nio.file.Files.move(stash.resolve(e.name), tdir.resolve(e.name))
-      }
+      val hidden = cat.liveEntries(tdir).filter(prunable)
+      hidden.size == expectHidden && cat.proveFilesPruned(spark, tdir, hidden, probeSql)
     }
     val probeTs = 2L * 86400 + 50 // day 2, k=50 (day 50%3=2 ✓), bucket 50%4=2
     // the days dimension alone: ts equality keeps day 2's four files
@@ -2398,19 +2357,8 @@ object Formats {
       pts.map(_._1).toSet == Set("en", "de", "fr", "ja", "zh").map(code)
     def provedPruned(expectHidden: Int, probeSql: String,
         prunable: MemCatalog.FileEntry => Boolean): Boolean = {
-      val live = cat.liveEntries(tdir)
-      val hidden = live.filter(prunable)
-      if (hidden.size != expectHidden) return false
-      val want = spark.sql(probeSql).head().getLong(0)
-      val stash = java.nio.file.Files.createTempDirectory("graft-pst-hide")
-      hidden.foreach(e => java.nio.file.Files.move(
-        tdir.resolve(e.name), stash.resolve(e.name)))
-      try spark.sql(probeSql).head().getLong(0) == want
-      catch { case _: Throwable => false }
-      finally hidden.foreach { e =>
-        if (java.nio.file.Files.exists(stash.resolve(e.name)))
-          java.nio.file.Files.move(stash.resolve(e.name), tdir.resolve(e.name))
-      }
+      val hidden = cat.liveEntries(tdir).filter(prunable)
+      hidden.size == expectHidden && cat.proveFilesPruned(spark, tdir, hidden, probeSql)
     }
     // string EQUALITY prunes through the identity transform's code
     val prunedEq = provedPruned(4,
@@ -2475,17 +2423,7 @@ object Formats {
     def provedPruned(expectHidden: Int, probeSql: String,
         prunable: MemCatalog.FileEntry => Boolean): Boolean = {
       val hidden = cat.liveEntries(tdir).filter(prunable)
-      if (hidden.size != expectHidden) return false
-      val want = spark.sql(probeSql).head().getLong(0)
-      val stash = java.nio.file.Files.createTempDirectory("graft-pts-hide")
-      hidden.foreach(e => java.nio.file.Files.move(
-        tdir.resolve(e.name), stash.resolve(e.name)))
-      try spark.sql(probeSql).head().getLong(0) == want
-      catch { case _: Throwable => false }
-      finally hidden.foreach { e =>
-        if (java.nio.file.Files.exists(stash.resolve(e.name)))
-          java.nio.file.Files.move(stash.resolve(e.name), tdir.resolve(e.name))
-      }
+      hidden.size == expectHidden && cat.proveFilesPruned(spark, tdir, hidden, probeSql)
     }
     // ts >= day 2's first instant keeps only day 2's file — the range
     // tier of the days transform (monotone) plus the plain ts zone map
@@ -2536,19 +2474,8 @@ object Formats {
       ranges.forall(r => r._1 == r._2) && ranges.map(_._1).sorted == Seq(0L, 1L, 2L)
     // hide Jan + Feb; a March-start range probe must still be exact
     val hidden = entries.filter(_.stats.get("pt:months(d)").exists(_._2 < 2L))
-    val probe = "SELECT count(*) FROM graftmem.tmp.pdt WHERE d >= DATE'1970-03-01'"
-    val prunedDateRange = hidden.size == 2 && {
-      val want = spark.sql(probe).head().getLong(0)
-      val stash = java.nio.file.Files.createTempDirectory("graft-pdt-hide")
-      hidden.foreach(e => java.nio.file.Files.move(
-        tdir.resolve(e.name), stash.resolve(e.name)))
-      try spark.sql(probe).head().getLong(0) == want
-      catch { case _: Throwable => false }
-      finally hidden.foreach { e =>
-        if (java.nio.file.Files.exists(stash.resolve(e.name)))
-          java.nio.file.Files.move(stash.resolve(e.name), tdir.resolve(e.name))
-      }
-    }
+    val prunedDateRange = hidden.size == 2 && cat.proveFilesPruned(spark, tdir, hidden,
+      "SELECT count(*) FROM graftmem.tmp.pdt WHERE d >= DATE'1970-03-01'")
     val fnAgrees = spark.sql(
       """SELECT count(*) FROM graftmem.tmp.pdt
         |WHERE graftmem.sys.months(d) <> k % 3""".stripMargin).head().getLong(0) == 0L
@@ -4367,7 +4294,7 @@ object Formats {
          |GROUP BY o_month""".stripMargin,
     "text_source_wordcount" ->
       s"""WITH toks AS (
-         |  SELECT unnest(string_split_regex(trim(regexp_replace(lower(content), '[^a-z0-9\\s]', '', 'g')), '\\s+')) AS word
+         |  SELECT unnest(${Oracle.tokens("content")}) AS word
          |  FROM read_text('$TextExportPath/part-*'))
          |SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word""".stripMargin,
     "csv_source_agg" ->

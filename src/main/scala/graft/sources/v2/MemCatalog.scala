@@ -1754,6 +1754,30 @@ object MemCatalog {
   def liveFiles(dir: Path, version: Option[Int] = None): Seq[Path] =
     liveEntries(dir, version).map(e => dir.resolve(e.name))
 
+  /** STRUCTURAL pruning proof, race-free under concurrent queries (no
+    * shared plan-count seam): run the count query `probeSql`, move the
+    * `hidden` files of `tableDir` into a stash, run it again and require
+    * the same count. A scan that prunes them never opens the missing
+    * paths; one that does not fails, which reads as `false`. The files go
+    * back and the stash dir is deleted whatever happens.
+    */
+  def proveFilesPruned(spark: org.apache.spark.sql.SparkSession, tableDir: Path,
+      hidden: Seq[FileEntry], probeSql: String): Boolean = {
+    val want = spark.sql(probeSql).head().getLong(0)
+    val stash = Files.createTempDirectory("graft-prune-hide")
+    try {
+      hidden.foreach(e => Files.move(tableDir.resolve(e.name), stash.resolve(e.name)))
+      try spark.sql(probeSql).head().getLong(0) == want
+      catch { case _: Throwable => false }
+    } finally {
+      hidden.foreach { e =>
+        if (Files.exists(stash.resolve(e.name)))
+          Files.move(stash.resolve(e.name), tableDir.resolve(e.name))
+      }
+      Files.delete(stash)
+    }
+  }
+
   /** VACUUM — the retention side of time travel: drop every manifest
     * older than the last `keepVersions` and delete any part file no KEPT
     * manifest references. Time travel to a vacuumed version then fails

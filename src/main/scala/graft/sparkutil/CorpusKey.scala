@@ -1,10 +1,13 @@
 package graft.sparkutil
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, FileSystemException, Files, Path, Paths}
+
+import graft.sources.v2.MemCatalog
 
 /** Corpus fingerprint for persisted serving artifacts (IVF-PQ index, BPE
   * merge table, inverted postings): one token that changes whenever the
-  * corpus does, so "corpus change retrains" is a real contract.
+  * corpus does, so "corpus change retrains" is a real contract; and the
+  * one build-once publish those artifacts share ([[buildOnce]]).
   *
   * The walk is RECURSIVE and the digest covers every regular file's
   * relative name, size and a CONTENT SAMPLE (first + last 4 KiB) plus the
@@ -60,5 +63,50 @@ object CorpusKey {
       sample(md, p, sz)
     }
     md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** The artifact dir `<tmpdir>/<name>/<md5(src path|token(src)|salt)>`:
+    * a corpus change or a `salt` bump (recipe or version) keys a new one,
+    * while the old one keeps serving readers mid-flight.
+    */
+  def dir(name: String, src: Path, salt: String): Path = {
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"${src.toAbsolutePath}|${token(src)}|$salt".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    Paths.get(sys.props("java.io.tmpdir"), name, key)
+  }
+
+  /** Build the artifact [[dir]]`(name, src, salt)` once and return it.
+    * If it has no `_SUCCESS`, `write` fills a fresh sibling staging dir,
+    * which is then moved into place, so a reader never sees a torn
+    * artifact. A concurrent writer that wins the move wrote the same
+    * deterministic content: ours is dropped. Only the three lost-race
+    * shapes are absorbed; a genuine IO failure (ENOSPC, permissions,
+    * cross-device tmp) surfaces as itself.
+    */
+  def buildOnce(name: String, src: Path, salt: String)(write: Path => Unit): Path = {
+    val path = dir(name, src, salt)
+    if (!Files.exists(path.resolve("_SUCCESS"))) {
+      Files.createDirectories(path.getParent)
+      val staging = path.resolveSibling(
+        path.getFileName.toString + ".staging-" + java.util.UUID.randomUUID())
+      write(staging)
+      try Files.move(staging, path)
+      catch {
+        case _: FileAlreadyExistsException => MemCatalog.deleteRecursively(staging)
+        case _: DirectoryNotEmptyException => MemCatalog.deleteRecursively(staging)
+        // Linux rename(2) onto an existing non-empty dir returns
+        // ENOTEMPTY, which Java surfaces as a plain FileSystemException
+        // ("Directory not empty"): matched by reason, so genuine IO
+        // failures still surface
+        case e: FileSystemException
+            if e.getReason != null && e.getReason.toLowerCase.contains("not empty") =>
+          MemCatalog.deleteRecursively(staging)
+      }
+      require(Files.exists(path.resolve("_SUCCESS")),
+        s"$name publish failed: $path has no _SUCCESS " +
+          "(the move neither succeeded nor lost a race to a complete winner)")
+    }
+    path
   }
 }

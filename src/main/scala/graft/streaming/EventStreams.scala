@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import java.sql.Timestamp
+import graft.operators.TextPipeline.Oracle
 import graft.streaming.BoundedDrain.{Sink, stageFile}
 
 /** Structured Streaming surface: the streaming twins of the batch event
@@ -787,7 +788,7 @@ object EventStreams {
         val incomingSig = stream
           .filter(col("doc_id") % 10 === 7)
           .select(col("doc_id").cast("long").as("doc_id"),
-            split(trim(col("text")), "\\s+").as("words"))
+            graft.operators.TextPipeline.words(col("text")).as("words"))
           .filter(size(col("words")) >= 5)
           .withColumn("shs", expr(
             "transform(sequence(0, size(words) - 5), i -> array_join(slice(words, i + 1, 5), ' '))"))
@@ -1152,7 +1153,7 @@ object EventStreams {
         val cols = (0 until 4).map(r => s"m${b * 4 + r}").mkString(", ")
         s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS band_sig FROM hmin"
       }.mkString(" UNION ALL ")
-      s"""WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS words FROM documents),
+      s"""WITH w AS (SELECT doc_id, ${Oracle.words("text")} AS words FROM documents),
         |pos AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 4)) AS i
         |        FROM w WHERE len(words) >= 5),
         |sh AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+4], ' ') AS shingle FROM pos),
@@ -1235,10 +1236,10 @@ object EventStreams {
         | AND epoch(c.ts::TIMESTAMP) <= epoch(p.ts::TIMESTAMP)""".stripMargin,
     // the drained complete-mode state == the batch wordcount (same oracle)
     "streaming_wordcount_filesrc" ->
-      s"${graft.operators.TextQueries.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
+      s"${Oracle.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word",
     // the drained complete-mode top-20 == the batch wordcount_topn
     "streaming_topk_filesrc" ->
-      s"${graft.operators.TextQueries.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 20",
+      s"${Oracle.tokensCte} SELECT word, count(*) AS cnt FROM toks WHERE word <> '' GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 20",
     // the drained enriched aggregate == the batch events ⋈ customer rollup
     "streaming_enrich_filesrc" ->
       """SELECT c_mktsegment, event_type, count(*) AS n_events,

@@ -9,6 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps per-query session wiring out of the main tree: catalogs are
   * configured only by `Sessions.build`, only `MemCatalog` knows where a
   * table's files live, and only `BoundedDrain` starts a bounded stream.
+  * Also keeps one copy of each shared decision: the text rule on both
+  * sides of the oracle (`TextPipeline`), the structural pruning proof
+  * (`MemCatalog.proveFilesPruned`) and the build-once artifact publish
+  * (`CorpusKey.buildOnce`).
   */
 class WiringGuardSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
@@ -69,5 +73,22 @@ class WiringGuardSpec extends AnyFunSuite {
   test("no setLastModifiedTime outside BoundedDrain.stageFile") {
     val hits = offenders("setLastModifiedTime", "BoundedDrain.scala")
     assert(hits.isEmpty, s"stage files with BoundedDrain.stageFile: ${hits.mkString(", ")}")
+  }
+
+  test("no tokenizer regex outside TextPipeline.scala") {
+    val hits = Seq("regexp_replace(lower(", "[^a-zA-Z0-9\\s]", "'\\s+'", "'\\\\s+'",
+      "'\\\\\\\\s+'", "), \"\\\\s+\")").flatMap(offenders(_, "TextPipeline.scala"))
+    assert(hits.isEmpty,
+      s"use TextPipeline.words/tokens/normalize or TextPipeline.Oracle: ${hits.mkString(", ")}")
+  }
+
+  test("no hide-and-probe stash dir outside MemCatalog.proveFilesPruned") {
+    val hits = offenders("-hide\")", "MemCatalog.scala")
+    assert(hits.isEmpty, s"prove pruning with MemCatalog.proveFilesPruned: ${hits.mkString(", ")}")
+  }
+
+  test("no .staging- publish outside CorpusKey.scala and MemCatalog.scala") {
+    val hits = offenders(".staging-", "CorpusKey.scala").filterNot(_.contains("/MemCatalog.scala:"))
+    assert(hits.isEmpty, s"publish build-once artifacts with CorpusKey.buildOnce: ${hits.mkString(", ")}")
   }
 }

@@ -461,4 +461,40 @@ class MemPartSpec extends AnyFunSuite {
       "unreferenced promoted-dv-* sidecar must be reclaimed")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t.v").head().getLong(0) == 1)
   }
+
+  private def hideDirs(): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("graft-") && n.contains("-hide")).toSet
+    finally ls.close()
+  }
+
+  test("dsv2_partition_multi and dsv2_partition_date prove pruning and leave no stash dir") {
+    val before = hideDirs()
+    val multi = graft.SparkEntry.queries("dsv2_partition_multi")(spark, TestSpark.sf).collect()
+    assert(multi.nonEmpty && multi.forall(r =>
+      Seq("pruned_days", "pruned_bucket", "pruned_conjunction").forall(c => r.getAs[Boolean](c))))
+    val date = graft.SparkEntry.queries("dsv2_partition_date")(spark, TestSpark.sf).collect()
+    assert(date.nonEmpty && date.forall(_.getAs[Boolean]("pruned_date_range")))
+    val left = hideDirs() diff before
+    assert(left.isEmpty, s"stash directories left behind: $left")
+  }
+
+  test("proveFilesPruned is false when the probe needs a hidden file, and restores it") {
+    val (cat, root) = fresh("prove")
+    spark.sql(s"CREATE TABLE $cat.t.p (k BIGINT)")
+    spark.sql(s"INSERT INTO $cat.t.p VALUES (1)")
+    spark.sql(s"INSERT INTO $cat.t.p VALUES (2)")
+    val dir = root.resolve("t__p")
+    val live = MemCatalog.liveEntries(dir)
+    assert(live.size == 2)
+    val before = hideDirs()
+    // a predicate no file statistic can answer, so the scan must open files
+    assert(!MemCatalog.proveFilesPruned(spark, dir, live,
+      s"SELECT count(*) FROM $cat.t.p WHERE k % 2 = 0"))
+    assert(live.forall(e => java.nio.file.Files.exists(dir.resolve(e.name))))
+    assert(hideDirs() == before)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.t.p").head().getLong(0) == 2)
+  }
 }
