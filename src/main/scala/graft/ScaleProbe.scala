@@ -260,8 +260,7 @@ object ScaleProbe {
     */
   private def ivmRun(spark: SparkSession, dir: String, label: String): (Long, Double, Double, Double) = {
     import graft.sources.v2.MemCatalog
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    graft.sources.Tables.orders(ss, dir).createOrReplaceTempView("graft_ivm_orders")
+    val ss = graft.sources.Formats.ordersSession(spark, dir, "graft_ivm_orders")
     ss.sql(s"DROP TABLE IF EXISTS graftmem.ivm.base_$label")
     ss.sql(s"DROP TABLE IF EXISTS graftmem.ivm.mv_$label")
     // base rows ∝ dir rows (keys NOT folded — this probe is about base

@@ -49,8 +49,8 @@ object TextAnalysis {
     round(
       least(lit(1.0),
         lit(0.5) * least(lit(1.0), nToks / lit(50.0))
-          + lit(0.3) * least(lit(1.0), stopHits / nToks * lit(10.0))
-          + lit(0.2) * (lit(1.0) - symbols / chars)), 4)
+          + lit(0.3) * least(lit(1.0), try_divide(stopHits, nToks) * lit(10.0))
+          + lit(0.2) * (lit(1.0) - try_divide(symbols, chars))), 4)
 
   private def nToks = size(TextPipeline.words(col("text"))).cast("double")
   private def stopHits =
@@ -62,9 +62,9 @@ object TextAnalysis {
     val digits = (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", ""))).cast("double")
     Tables.documents(spark, dir).select(
       col("doc_id"),
-      round(stopHits / nToks, 4).as("stopword_ratio"),
-      round(digits / chars, 4).as("digit_ratio"),
-      round(symbols / chars, 4).as("symbol_ratio"),
+      round(try_divide(stopHits, nToks), 4).as("stopword_ratio"),
+      round(try_divide(digits, chars), 4).as("digit_ratio"),
+      round(try_divide(symbols, chars), 4).as("symbol_ratio"),
       qualityCol.as("quality_score"))
   }
 
@@ -861,7 +861,7 @@ object TextAnalysis {
   }
 
   /** Unicode ACCENT FOLDING over the corpus via the native
-    * [[graft.plans.UnicodeFold]] expression (NFKD + combining-mark strip —
+    * [[graft.plans.UnicodeFold]] expression (NFD + combining-mark strip —
     * the multilingual normalize step before tokenization/fingerprinting).
     * The ASCII fixture can't exercise it on its own (the vacuous-pass
     * trap), so accents are INJECTED deterministically per doc_id residue
@@ -1048,7 +1048,10 @@ object TextAnalysis {
   }
 
   def oracle: Map[String, String] = Map(
-    // same deterministic accent injection, folded back with strip_accents
+    // same deterministic accent injection, folded back with strip_accents.
+    // DuckDB's strip_accents stops at the first U+0000 of a non-ASCII
+    // string (strip_accents('ab' || chr(0) || 'cdé') = 'ab'), so each
+    // NUL-separated piece is folded on its own and the NULs put back
     "text_accent_fold" ->
       """WITH a AS (
         |  SELECT doc_id % 3 AS grp, text,
@@ -1057,12 +1060,17 @@ object TextAnalysis {
         |      WHEN 1 THEN translate(text, 'u', 'ü')
         |      ELSE text END AS accented
         |  FROM documents
+        |), f AS (
+        |  SELECT grp, text, accented,
+        |    array_to_string(list_transform(string_split(accented, chr(0)),
+        |      x -> strip_accents(x)), chr(0)) AS folded
+        |  FROM a
         |)
         |SELECT grp, count(*) AS n_docs,
         |  sum(CASE WHEN accented <> text THEN 1 ELSE 0 END)::BIGINT AS n_mutated,
-        |  sum(CASE WHEN strip_accents(accented) = text THEN 1 ELSE 0 END)::BIGINT AS n_roundtrip_ok,
-        |  sum(length(strip_accents(accented)))::BIGINT AS total_chars
-        |FROM a GROUP BY 1""".stripMargin,
+        |  sum(CASE WHEN folded = text THEN 1 ELSE 0 END)::BIGINT AS n_roundtrip_ok,
+        |  sum(length(folded))::BIGINT AS total_chars
+        |FROM f GROUP BY 1""".stripMargin,
     "bpe_merges" -> bpeOracleSql,
     "bpe_encode" -> bpeEncodeOracleSql,
     // artifact-encode == train-encode by construction; one oracle pins both

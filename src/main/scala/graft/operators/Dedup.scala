@@ -697,7 +697,8 @@ object Dedup {
     * (Jaccard ≥ 0.8, fixture-scale only — exact all-pairs is the thing LSH
     * exists to avoid at 100 TB). Recall = truth pairs surfaced as
     * candidates; precision = candidates that are true near-dups. One row;
-    * ratios are exact integer divisions (bit-stable cross-engine).
+    * ratios are exact integer divisions (bit-stable cross-engine), NULL
+    * over an empty pair set as in DuckDB.
     */
   def lshRecall(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -711,8 +712,8 @@ object Dedup {
       .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
       .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
       .select(col("n_truth"), col("n_candidates"), col("n_hits"),
-        (col("n_hits").cast("double") / col("n_truth")).as("recall_frac"),
-        (col("n_hits").cast("double") / col("n_candidates")).as("precision_frac"))
+        try_divide(col("n_hits").cast("double"), col("n_truth")).as("recall_frac"),
+        try_divide(col("n_hits").cast("double"), col("n_candidates")).as("precision_frac"))
   }
 
   /** Incremental dedup — the operational "new batch vs existing corpus"

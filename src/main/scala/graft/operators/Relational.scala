@@ -81,37 +81,29 @@ object Relational {
     * fact rows that cannot match are dropped at the scan instead of
     * shuffling. The default thresholds assume production sizes
     * (application side ≥ 10 GB), so this query plans itself under
-    * scaled-down thresholds (set → force optimization → RESTORE; the
-    * materialized `queryExecution` keeps the injected filter, later
-    * queries see untouched confs). `autoBroadcastJoinThreshold=-1` forces
-    * the shuffle-join shape the filter exists for — at real scale neither
-    * side broadcasts on its own. The filter only PRUNES (false positives
-    * shuffle and fail the join predicate); results are identical, which
-    * is what the oracle checks. PlanShapeSpec asserts the bloom subtree.
+    * scaled-down thresholds, set on a `newSession()` clone: the returned
+    * frame plans and runs under them while the caller's conf is never
+    * touched (`Verify` runs 8 queries at once on one session).
+    * `autoBroadcastJoinThreshold=-1` forces the shuffle-join shape the
+    * filter exists for — at real scale neither side broadcasts on its own.
+    * The filter only PRUNES (false positives shuffle and fail the join
+    * predicate); results are identical, which is what the oracle checks.
+    * PlanShapeSpec asserts the bloom subtree.
     */
   def joinBloomPruned(spark: SparkSession, dir: String): DataFrame = {
-    val scaled = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "10KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scaled.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    scaled.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val urgent = Tables.orders(spark, dir)
-        .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 250000)
-      val out = Tables.lineitem(spark, dir)
-        .join(urgent, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          count(lit(1)).as("n_lines"),
-          countDistinct("o_orderkey").as("n_orders"),
-          round(sum("l_quantity"), 2).as("sum_qty"))
-      out.queryExecution.executedPlan // force optimization under scaled confs
-      out
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "10KB")
+    ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val urgent = Tables.orders(ss, dir)
+      .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 250000)
+    Tables.lineitem(ss, dir)
+      .join(urgent, col("l_orderkey") === col("o_orderkey"))
+      .groupBy("o_orderpriority")
+      .agg(
+        count(lit(1)).as("n_lines"),
+        countDistinct("o_orderkey").as("n_orders"),
+        round(sum("l_quantity"), 2).as("sum_qty"))
   }
 
   /** Left-semi join (EXISTS): customers that placed at least one order. */

@@ -5,12 +5,14 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: Unicode ACCENT FOLDING — NFKD
-  * normalization followed by combining-mark removal (`résumé` → `resume`,
+/** Native Catalyst expression: Unicode ACCENT FOLDING — canonical (NFD)
+  * decomposition followed by combining-mark removal (`résumé` → `resume`,
   * `Ñandú` → `Nandu`), the canonical text-normalization step every
   * multilingual training-data pipeline runs before tokenization /
   * fingerprinting (Unicode TR#15; the "strip_accents" of scikit-learn /
-  * Lucene ASCIIFolding / DuckDB). No Spark built-in exists; the UDF
+  * Lucene ASCIIFolding / DuckDB). Canonical, not compatibility (NFKD),
+  * decomposition: DuckDB's `strip_accents` keeps `ª`, `²`, NBSP, ligatures
+  * and full-width forms, and so does this. No Spark built-in exists; the UDF
   * alternative would box every row and block whole-stage codegen — this
   * expression participates in codegen via [[doGenCode]] (the generated
   * code calls the same static fold as the interpreted path, so both modes
@@ -45,11 +47,11 @@ case class UnicodeFold(child: Expression) extends UnaryExpression {
 object UnicodeFold {
   /** Static fold shared by interpreted eval and generated code. */
   def fold(s: UTF8String): UTF8String = {
-    // ASCII fast path: NFKD is identity on ASCII and there are no marks
+    // ASCII fast path: NFD is identity on ASCII and there are no marks
     // to strip — return the input buffer untouched
     if (isAscii(s)) s
     else {
-      val n = java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFKD)
+      val n = java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFD)
       val sb = new java.lang.StringBuilder(n.length)
       var i = 0
       while (i < n.length) {

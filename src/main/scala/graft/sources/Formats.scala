@@ -505,6 +505,17 @@ object Formats {
     spark.sql("SELECT status, n_orders, cents FROM graftmem.tmp.mrg_status")
   }
 
+  /** A streaming session clone sized from the fixture `orders` table (see
+    * [[graft.streaming.EventStreams.streamingSession]]), with that table
+    * registered on it as `view`: the source of every orders-fed catalog
+    * stream gate. */
+  private[graft] def ordersSession(spark: SparkSession, dir: String, view: String): SparkSession = {
+    import graft.streaming.EventStreams
+    val ss = EventStreams.streamingSession(spark, EventStreams.tableBytes(dir, "orders"))
+    Tables.orders(ss, dir).createOrReplaceTempView(view)
+    ss
+  }
+
   /** TIME TRAVEL (`VERSION AS OF`) through the writable catalog: the
     * table is snapshot-versioned Iceberg-style — every committing
     * statement publishes a `_v<N>.manifest` file list, DML retires files
@@ -576,8 +587,7 @@ object Formats {
     * `_commit_version` column covers exactly 0..head).
     */
   def dsv2TableChangesTvf(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_tvf_orders")
+    val ss = ordersSession(spark, dir, "graft_tvf_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.tvf_t AS
         |SELECT CAST(o_orderkey % 37 AS BIGINT) AS k, count(*) AS n,
@@ -687,8 +697,7 @@ object Formats {
     * ever scanning the base table.
     */
   def dsv2TvfStream(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_tvs_orders")
+    val ss = ordersSession(spark, dir, "graft_tvs_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.tvs AS
         |SELECT CAST(o_orderkey % 41 AS BIGINT) AS k, count(*) AS n,
@@ -910,11 +919,10 @@ object Formats {
     * across the ~n/step micro-batches.
     */
   def dsv2StreamAgg(spark: SparkSession, dir: String): DataFrame = {
-    // same per-run session clone as every bounded streaming run: isolated
-    // SQLConf, fixture-scale state-store partitioning (see
-    // EventStreams.streamingSession) — the ~n/step batches each commit
-    // per-partition state, so 32 stores was pure fixed cost here too
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
+    // same per-run session clone as every bounded streaming run (see
+    // EventStreams.streamingSession); a generated source reads no files, so
+    // its ~n/step batches each commit ONE state store
+    val ss = graft.streaming.EventStreams.streamingSession(spark, 0L)
     BoundedDrain.once(
       ss.readStream.format("graft.sources.v2.SeqStreamSource")
         .option("n", "50000").option("step", "10000").option("parts", "4").load()
@@ -1269,8 +1277,7 @@ object Formats {
     * writes, AND a streaming tail — the full lakehouse table contract.
     */
   def dsv2StreamTable(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_stt_orders")
+    val ss = ordersSession(spark, dir, "graft_stt_orders")
     def slice(pri: String): String =
       s"""SELECT o_orderkey, o_orderpriority AS pri,
          |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -1305,8 +1312,7 @@ object Formats {
     * result is layout-independent by construction.
     */
   def dsv2CdfStream(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdf_orders")
+    val ss = ordersSession(spark, dir, "graft_cdf_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdf_bands AS
         |SELECT CAST(o_custkey % 5 AS BIGINT) AS band, o_orderstatus AS status,
@@ -1351,8 +1357,7 @@ object Formats {
     * rows: any leak would inflate a class count and break the hash).
     */
   def dsv2CdfNet(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdfnet_orders")
+    val ss = ordersSession(spark, dir, "graft_cdfnet_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdfnet_bands AS
         |SELECT CAST(o_custkey % 5 AS BIGINT) AS band, o_orderstatus AS status,
@@ -1400,8 +1405,7 @@ object Formats {
     * the MERGE is the same statement; only the COW group sizes grow.
     */
   def dsv2CdcPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcp_orders")
+    val ss = ordersSession(spark, dir, "graft_cdcp_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdc_src AS
         |SELECT CAST(o_orderkey % 40 AS BIGINT) AS k, count(*) AS n_orders,
@@ -1459,8 +1463,7 @@ object Formats {
     * groups whose keys changed.
     */
   def dsv2MvIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_mvinc_orders")
+    val ss = ordersSession(spark, dir, "graft_mvinc_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mv_src AS
         |SELECT k, CAST(k % 7 AS BIGINT) AS cat, cents FROM (
@@ -1591,8 +1594,7 @@ object Formats {
     * (the sidecar path preserves the op-tag classification).
     */
   def dsv2CdcSidecar(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_csc_orders")
+    val ss = ordersSession(spark, dir, "graft_csc_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdcsc AS
         |SELECT CAST(o_orderkey % 31 AS BIGINT) AS k,
@@ -1847,8 +1849,7 @@ object Formats {
     * watermark lives in the catalog, not in anyone's memory.
     */
   def dsv2MvServe(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_mvs_orders")
+    val ss = ordersSession(spark, dir, "graft_mvs_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvs_base AS
         |SELECT CAST(o_orderkey % 6 AS BIGINT) AS cat,
@@ -1937,8 +1938,7 @@ object Formats {
     * plan-time watermark check — no scheduler, no cron, no stale cache.
     */
   def dsv2MvAutorefresh(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_mvar_orders")
+    val ss = ordersSession(spark, dir, "graft_mvar_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvar_base AS
         |SELECT CAST(o_orderkey % 7 AS BIGINT) AS cat,
@@ -3101,8 +3101,7 @@ object Formats {
     * this is the row-level streaming change model its design lacks.
     */
   def dsv2StreamCdcUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcup_orders")
+    val ss = ordersSession(spark, dir, "graft_cdcup_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdcup_t
         |TBLPROPERTIES ('graft.dml'='mor', 'graft.eqDeleteKeys'='k') AS
@@ -3183,8 +3182,7 @@ object Formats {
     * having been readable from main.
     */
   def dsv2CdcBranchApply(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcbr_orders")
+    val ss = ordersSession(spark, dir, "graft_cdcbr_orders")
     ss.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.cdcbr_t
         |TBLPROPERTIES ('graft.dml'='mor', 'graft.eqDeleteKeys'='k') AS
@@ -3845,7 +3843,7 @@ object Formats {
     * exactly-once across all four epochs or the hash breaks.
     */
   def dsv2StreamSink(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
+    val ss = graft.streaming.EventStreams.streamingSession(spark, 0L) // generated source
     ss.sql("DROP TABLE IF EXISTS graftmem.tmp.sink_seq")
     ss.sql("CREATE TABLE graftmem.tmp.sink_seq (id BIGINT, val BIGINT, bucket BIGINT)")
     BoundedDrain.once(

@@ -108,35 +108,37 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
 
   /** Drain `build(stream)` over a source dir that `stage` fills, on a
-    * [[streamingSession]] clone, and return the pinned result. Append-mode
-    * gates sink to PARQUET and read back distributed (the memory sink
-    * collects every output row onto the driver per batch, the one
-    * driver-in-the-data-path posture a 100 TB stream cannot keep);
-    * Complete/Update gates keep the memory sink (the file sink is
-    * append-only by contract).
+    * [[streamingSession]] clone sized from the staged bytes its plan scans,
+    * and return the pinned result. Append-mode gates sink to PARQUET and
+    * read back distributed (the memory sink collects every output row onto
+    * the driver per batch, the one driver-in-the-data-path posture a 100 TB
+    * stream cannot keep); Complete/Update gates keep the memory sink (the
+    * file sink is append-only by contract).
     */
   private def drainStaged(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, mode: OutputMode,
-      partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty)(
-      stage: java.nio.file.Path => Unit)(build: DataFrame => DataFrame): DataFrame = {
-    val ss = streamingSession(spark, partitions, extraConf)
+      schema: org.apache.spark.sql.types.StructType, mode: OutputMode)(
+      stage: java.nio.file.Path => Unit)(build: DataFrame => DataFrame): DataFrame =
     BoundedDrain.scope { s =>
       stage(s.sourceDir)
+      val ss = streamingSession(spark, 0L)
+      val stream = build(fileStream(ss, s.sourceDir, schema))
+      // each streaming scan reads the staged bytes once: a stream-stream
+      // self-join reads them twice (measured at sf0.1, 4 cores: the inner
+      // join gate took 2.98 s at width 4 and 3.50 s at width 2)
+      val scans = stream.queryExecution.logical.collectLeaves().count(_.isStreaming)
+      setWidth(spark, ss, scans * bytesUnder(s.sourceDir))
       val sink =
         if (mode == OutputMode.Append()) Sink.Parquet
         else Sink.Memory(mode)
-      s.drain(build(fileStream(ss, s.sourceDir, schema)), sink).out.get
+      s.drain(stream, sink).out.get
     }
-  }
 
   /** [[drainStaged]] over `copies` links of the fixture `$dir/$table.parquet`. */
   private def drainFixture(spark: SparkSession, dir: String, copies: Int,
-      mode: OutputMode, table: String = "events", partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty)(
+      mode: OutputMode, table: String = "events")(
       build: DataFrame => DataFrame): DataFrame = {
     val src = s"$dir/$table.parquet"
-    drainStaged(spark, spark.read.parquet(src).schema, mode, partitions, extraConf)(
+    drainStaged(spark, spark.read.parquet(src).schema, mode)(
       linkCopies(_, dir, table, copies))(build)
   }
 
@@ -155,29 +157,26 @@ object EventStreams {
     * restore could flip a restart query's second incarnation to another
     * state-store provider mid-recovery); the RocksDB provider is pinned
     * in [[graft.Sessions]] builder options, which `newSession` inherits.
-    * (2) state-store sizing — a streaming aggregation opens one state
-    * store PER shuffle partition, frozen into the checkpoint at first
-    * start; 32 RocksDB instances × init/commit dominated fixture-scale
-    * wall time (7 s runs measured in r6) while 8 keeps the identical
-    * partitioned-state posture at a quarter the fixed cost. At 100 TB
-    * this knob goes UP (sized to the stream's key volume); a per-query
-    * clone is where that sizing belongs either way.
+    * (2) state-store width — a stateful operator opens one state store PER
+    * shuffle partition, and each store pays a fixed RocksDB open/commit
+    * cost every batch whatever it holds. The clone's shuffle width and
+    * scan floor are [[streamWidth]] of `sourceBytes`, the bytes the stream
+    * will read: 1 at fixture scale, up to the core count as input grows.
     */
-  private[graft] def streamingSession(spark: SparkSession,
-      partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty): SparkSession = {
+  private[graft] def streamingSession(spark: SparkSession, sourceBytes: Long): SparkSession = {
     val ss = spark.newSession()
-    extraConf.foreach { case (k, v) => ss.conf.set(k, v) }
-    val n = partitions.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    ss.conf.set("spark.sql.shuffle.partitions", n)
-    // scan-side floor to match: the batch sessions force minPartitionNum=32
-    // to widen explosive map stages, but a micro-batch reads ONE file here
-    ss.conf.set("spark.sql.files.minPartitionNum", n)
+    setWidth(spark, ss, sourceBytes)
     // per-batch changelog uploads instead of full RocksDB snapshot uploads
     // — the production checkpoint posture for high-frequency triggers, and
     // it removes the snapshot cost from every fixture micro-batch
     ss.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    // stream-stream joins: state format v3 folds a join's 4 state stores
+    // per partition (left/right × keyToNumValues/keyWithIndexToValue) into
+    // ONE RocksDB instance via virtual column families — a 4× cut in
+    // per-batch open/commit/changelog fixed cost (measured 0.55-0.77× on
+    // the outer-join gates); every checkpoint here starts fresh, so no
+    // format compatibility constraint applies
+    ss.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
     // MEASURED NEGATIVE (r14, do not re-try):
     // `rocksdb.trackTotalNumberOfRows=false` — the documented "first knob
     // for put-heavy state" — made the stream-stream outer join 2.3× SLOWER
@@ -187,6 +186,47 @@ object EventStreams {
     // on; the default (true) stays.
     ss
   }
+
+  /** Set the clone `ss`'s shuffle width and scan floor (a micro-batch reads
+    * ONE file) to [[streamWidth]] of `sourceBytes` under `spark`'s conf. */
+  private def setWidth(spark: SparkSession, ss: SparkSession, sourceBytes: Long): Unit = {
+    val n = streamWidth(spark, sourceBytes).toString
+    ss.conf.set("spark.sql.shuffle.partitions", n)
+    ss.conf.set("spark.sql.files.minPartitionNum", n)
+  }
+
+  /** Shuffle and state-store width for a stream over `sourceBytes`:
+    * `ceil(sourceBytes / minPartitionSize)` clamped to [1, core count],
+    * with `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB
+    * by default) as the per-partition target — the smallest partition AQE
+    * already treats as worth a task. The width is frozen into the
+    * checkpoint at first start (a restart reads it back from the offset
+    * log), so it is a pure function of the input and the cluster: the same
+    * input always gets the same width.
+    *
+    * MEASURED (4 cores): 8 near-empty stores cost the sf0.01 dedup gate
+    * 0.54 s of state commit per op (1 store: 0.02 s); at sf0.1 a width of
+    * 1 slowed that gate 3.14 → 3.83 s, and this rule gives it 4.
+    */
+  private[graft] def streamWidth(spark: SparkSession, sourceBytes: Long): Int = {
+    val target = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val n = math.ceil(sourceBytes.toDouble / target)
+    math.max(1.0, math.min(n, spark.sparkContext.defaultParallelism.toDouble)).toInt
+  }
+
+  /** Bytes of every regular file under `p`, links followed: a staged link
+    * to a fixture counts the fixture once per link. */
+  private[graft] def bytesUnder(p: java.nio.file.Path): Long = {
+    import java.nio.file.Files
+    val walk = Files.walk(p, java.nio.file.FileVisitOption.FOLLOW_LINKS)
+    try walk.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+    finally walk.close()
+  }
+
+  /** Bytes of the fixture table `$dir/$table.parquet`. */
+  private[graft] def tableBytes(dir: String, table: String): Long =
+    bytesUnder(java.nio.file.Path.of(s"$dir/$table.parquet"))
 
   /** ORACLE-VERIFIED streaming run: the tumbling-window aggregation executed
     * as a REAL bounded Structured Streaming query — file source over the
@@ -300,7 +340,7 @@ object EventStreams {
     * key; the per-batch algebra is identical.
     */
   def cdcMergeFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
+    val ss = streamingSession(spark, tableBytes(dir, "orders"))
     val o = ss.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
     val ins = o.select(col("o_orderkey"), lit(1).as("version"), lit("I").as("op"), col("cents"))
@@ -343,15 +383,7 @@ object EventStreams {
     * batch join's rows and the oracle is the equivalent batch SQL.
     */
   def joinFileSource(spark: SparkSession, dir: String): DataFrame =
-    // a stream-stream join opens FOUR state stores per shuffle partition
-    // (left/right × keyToNumValues/keyWithIndexToValue) — 4 partitions
-    // keeps the same partitioned-state posture at half the family's
-    // fixture-scale RocksDB bring-up; at 100 TB this knob goes UP. Join
-    // state format v3 folds the 4 stores into one per partition (measured
-    // 0.55-0.77× on the outer-join gates; see sentinelOuterRun).
-    drainFixture(spark, dir, 1, OutputMode.Append(),
-      partitions = Some("4"),
-      extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3"))(clickPurchaseJoin)
+    drainFixture(spark, dir, 1, OutputMode.Append())(clickPurchaseJoin)
 
   /** Native session-window aggregation for streams: per-user sessions
     * closed by 30 min inactivity, watermark bounds the merge state — the
@@ -443,7 +475,7 @@ object EventStreams {
     * semantics but batch-shaped resource usage.
     */
   def availableNowFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
+    val ss = streamingSession(spark, tableBytes(dir, "events"))
     val raw = ss.read.parquet(s"$dir/events.parquet")
     val mid = probeMidId(ss, dir)
     BoundedDrain.scope { s =>
@@ -474,7 +506,9 @@ object EventStreams {
     * pipeline relies on, under the correctness gate.
     */
   def restartResumeFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
+    // sized from the whole fixture both incarnations read, not from the
+    // half staged before the first start that freezes the width
+    val ss = streamingSession(spark, tableBytes(dir, "events"))
     val raw = ss.read.parquet(s"$dir/events.parquet")
     val mid = probeMidId(ss, dir)
     BoundedDrain.scope { s =>
@@ -508,7 +542,8 @@ object EventStreams {
     * stream relies on after an executor or driver loss.
     */
   def restartStatefulFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
+    // sized from the whole fixture, as in restartResumeFileSource
+    val ss = streamingSession(spark, tableBytes(dir, "events"))
     val raw = ss.read.parquet(s"$dir/events.parquet")
     val tsCol = graft.sources.Tables
       .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
@@ -554,7 +589,13 @@ object EventStreams {
     * stream, the canonical attribute-funnel join. Works identically as a
     * batch plan (spec asserts parity).
     */
-  def clickPurchaseJoin(events: DataFrame): DataFrame = {
+  def clickPurchaseJoin(events: DataFrame): DataFrame = clickPurchase(events, "inner")
+
+  /** The click/purchase join as `joinType`: both sides watermarked one
+    * hour, each purchase against the same user's clicks in the hour
+    * before it; the user key coalesces across sides, since a purchase-less
+    * row of a full outer join has only the click side's. */
+  private def clickPurchase(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user_id"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
@@ -566,8 +607,10 @@ object EventStreams {
     purchases.join(clicks,
       col("user_id") === col("c_user_id") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") <= col("purchase_ts"))
-      .select(col("user_id"), col("purchase_id"), col("click_id"),
+        col("click_ts") <= col("purchase_ts"),
+      joinType)
+      .select(coalesce(col("user_id"), col("c_user_id")).as("user_id"),
+        col("purchase_id"), col("click_id"),
         unix_timestamp(col("purchase_ts")).as("purchase_epoch"),
         unix_timestamp(col("click_ts")).as("click_epoch"),
         col("value"))
@@ -581,25 +624,7 @@ object EventStreams {
     * matching right row can still arrive, so correctness of the nulls IS
     * correctness of the eviction machinery.
     */
-  def clickPurchaseOuterJoin(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("purchase_ts"),
-        col("event_id").as("purchase_id"), col("value"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("c_user_id") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") <= col("purchase_ts"),
-      "left_outer")
-      .select(col("user_id"), col("purchase_id"), col("click_id"),
-        unix_timestamp(col("purchase_ts")).as("purchase_epoch"),
-        unix_timestamp(col("click_ts")).as("click_epoch"),
-        col("value"))
-  }
+  def clickPurchaseOuterJoin(events: DataFrame): DataFrame = clickPurchase(events, "left_outer")
 
   /** ORACLE-VERIFIED stream-stream OUTER join run. The bounded-drain trap
     * this run exists to document: `processAllAvailable` alone CANNOT make
@@ -628,31 +653,20 @@ object EventStreams {
     * has no purchase-side user). Same watermark/sentinel machinery as the
     * left-outer run; the drained sink hash-matches the batch FULL JOIN.
     */
-  def clickPurchaseFullOuterJoin(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("purchase_ts"),
-        col("event_id").as("purchase_id"), col("value"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("c_user_id") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") <= col("purchase_ts"),
-      "full_outer")
-      .select(coalesce(col("user_id"), col("c_user_id")).as("user_id"),
-        col("purchase_id"), col("click_id"),
-        unix_timestamp(col("purchase_ts")).as("purchase_epoch"),
-        unix_timestamp(col("click_ts")).as("click_epoch"),
-        col("value"))
-  }
+  def clickPurchaseFullOuterJoin(events: DataFrame): DataFrame = clickPurchase(events, "full_outer")
 
   def fullOuterJoinFileSource(spark: SparkSession, dir: String): DataFrame =
     sentinelOuterRun(spark, dir)(clickPurchaseFullOuterJoin)
       .filter((col("purchase_id").isNull || col("purchase_id") > 0) &&
         (col("click_id").isNull || col("click_id") > 0))
+
+  /** Two days past a fixture `ts`, in the fixture's own encoding: a
+    * sentinel event time beyond every real event's watermark horizon. */
+  private def twoDaysLater(raw: DataFrame): Column => Column = raw.schema("ts").dataType match {
+    case org.apache.spark.sql.types.LongType =>
+      c => c + lit(2L * 86400L * 1000000000L) // nanos-long fixture encoding
+    case _ => c => c + expr("INTERVAL 2 DAYS") // timestamp / ntz
+  }
 
   /** Shared harness for the outer-join runs: fixture events as batch 0,
     * then TWO far-future sentinel batches (one row per join side each) —
@@ -664,11 +678,7 @@ object EventStreams {
   private def sentinelOuterRun(spark: SparkSession, dir: String)(
       build: DataFrame => DataFrame): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val bump: Column => Column = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        c => c + lit(2L * 86400L * 1000000000L) // nanos-long fixture encoding
-      case _ => c => c + expr("INTERVAL 2 DAYS") // timestamp / ntz
-    }
+    val bump = twoDaysLater(raw)
     def sentinels(ids: (Long, Long)): DataFrame =
       raw.agg(max(col("ts")).as("mts")).select(explode(array(
           struct(lit(ids._1).as("event_id"), bump(col("mts")).as("ts"),
@@ -687,15 +697,7 @@ object EventStreams {
     // query watermark stalls, and the trailing unmatched purchases
     // silently never emit (4 rows short at sf0.01). Pushdown is usually
     // the optimization; here it removed the watermark driver.
-    // 4 shuffle partitions: see joinFileSource — stream-stream joins pay
-    // 4 state-store instances per partition, the family's dominant fixed
-    // cost. Join state format v3 (Spark 4) folds those 4 stores into ONE
-    // RocksDB instance per partition via virtual column families — a 4×
-    // cut in per-batch open/commit/changelog fixed cost at any partition
-    // count (the checkpoint is created fresh per run, so no compatibility
-    // constraint applies).
-    drainStaged(spark, raw.schema, OutputMode.Append(), partitions = Some("4"),
-      extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3")) { d =>
+    drainStaged(spark, raw.schema, OutputMode.Append()) { d =>
       stageFile(d, raw, "a_events.parquet", secondsAgo(300))
       // two sentinel batches: the first ADVANCES the watermark (recorded at
       // its batch end), the second is the data batch that EXECUTES under it
@@ -892,7 +894,7 @@ object EventStreams {
     * once the query has stopped — no listener race.
     */
   def observeFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
+    val ss = streamingSession(spark, 2 * tableBytes(dir, "events")) // two linked copies
     val src = s"$dir/events.parquet"
     val rawSchema = ss.read.parquet(src).schema
     val (progress, table) = BoundedDrain.scope { s =>
@@ -1010,11 +1012,7 @@ object EventStreams {
     */
   def twsTimersFileSource(spark: SparkSession, dir: String): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val bump: Column => Column = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        c => c + lit(2L * 86400L * 1000000000L)
-      case _ => c => c + expr("INTERVAL 2 DAYS")
-    }
+    val bump = twoDaysLater(raw)
     def sentinel(id: Long): DataFrame =
       raw.agg(max(col("ts")).as("mts")).select(
         lit(id).as("event_id"), bump(col("mts")).as("ts"),

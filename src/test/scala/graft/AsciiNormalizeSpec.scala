@@ -6,11 +6,10 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextPipeline
-import graft.sources.v2.MemCatalog
 
 /** The byte-level normalize expression gives exactly the values of the
   * regex form it replaced, in generated code and interpreted alike. */
-class AsciiNormalizeSpec extends AnyFunSuite {
+class AsciiNormalizeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def regexNormalize(c: Column): Column =
@@ -34,17 +33,14 @@ class AsciiNormalizeSpec extends AnyFunSuite {
     * evaluated at the driver) and returns the plan and any mismatches. */
   private def compare(s: SparkSession): (String, Seq[(Long, String, String)]) = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-asciinorm")
-    try {
-      val path = dir.resolve("in").toString
-      inputs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-        .write.parquet(path)
-      val df = s.read.parquet(path).select(col("id"),
-        TextPipeline.normalize(col("text")).as("got"), regexNormalize(col("text")).as("want"))
-      val rows = df.as[(Long, String, String)].collect().toSeq
-      assert(rows.size == inputs.size)
-      (df.queryExecution.executedPlan.toString, rows.filter(r => r._2 != r._3))
-    } finally MemCatalog.deleteRecursively(dir)
+    val path = tempDir("graft-asciinorm").resolve("in").toString
+    inputs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .write.parquet(path)
+    val df = s.read.parquet(path).select(col("id"),
+      TextPipeline.normalize(col("text")).as("got"), regexNormalize(col("text")).as("want"))
+    val rows = df.as[(Long, String, String)].collect().toSeq
+    assert(rows.size == inputs.size)
+    (df.queryExecution.executedPlan.toString, rows.filter(r => r._2 != r._3))
   }
 
   test("matches lower(regexp_replace(c, '[^a-zA-Z0-9\\s]', '')) under whole-stage codegen") {

@@ -8,11 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.v2.MemCatalog.deleteRecursively
 import graft.streaming.{BoundedDrain, EventStreams}
 import graft.streaming.BoundedDrain.Sink
 
-class BoundedDrainSpec extends AnyFunSuite {
+class BoundedDrainSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def drainViews(): Seq[String] =
@@ -85,18 +84,16 @@ class BoundedDrainSpec extends AnyFunSuite {
   }
 
   test("stream gates over a fixture without ts fail loudly and leave no source dir") {
-    val fixture = Files.createTempDirectory("graft-nots-fixture")
-    try {
-      spark.range(0, 20).selectExpr("id AS event_id", "id % 3 AS user_id",
-          "CASE WHEN id % 2 = 0 THEN 'click' ELSE 'purchase' END AS event_type",
-          "1.0D AS value", "'' AS props")
-        .write.parquet(s"$fixture/events.parquet")
-      val before = tmpDirs("graft-stream-")
-      Seq("streaming_tws_timers", "streaming_outer_join").foreach { q =>
-        intercept[IllegalArgumentException](EventStreams.queries(q)(spark, fixture.toString))
-      }
-      val left = tmpDirs("graft-stream-") diff before
-      assert(left.isEmpty, s"source dirs left behind: $left")
-    } finally deleteRecursively(fixture)
+    val fixture = tempDir("graft-nots-fixture")
+    spark.range(0, 20).selectExpr("id AS event_id", "id % 3 AS user_id",
+        "CASE WHEN id % 2 = 0 THEN 'click' ELSE 'purchase' END AS event_type",
+        "1.0D AS value", "'' AS props")
+      .write.parquet(s"$fixture/events.parquet")
+    val before = tmpDirs("graft-stream-")
+    Seq("streaming_tws_timers", "streaming_outer_join").foreach { q =>
+      intercept[IllegalArgumentException](EventStreams.queries(q)(spark, fixture.toString))
+    }
+    val left = tmpDirs("graft-stream-") diff before
+    assert(left.isEmpty, s"source dirs left behind: $left")
   }
 }

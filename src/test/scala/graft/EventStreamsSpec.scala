@@ -8,7 +8,7 @@ import graft.streaming.EventStreams.Event
 import graft.sources.Tables
 import java.sql.Timestamp
 
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def fixtureEvents(): Seq[Event] = {
@@ -19,11 +19,12 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("streamingSession clones isolate streaming knobs from the shared session") {
-    val ss = EventStreams.streamingSession(spark)
-    // fixture-scale state-store sizing: one RocksDB instance per shuffle
-    // partition, so the clone must NOT inherit the 32-wide batch default
-    assert(ss.conf.get("spark.sql.shuffle.partitions") == "8")
-    assert(ss.conf.get("spark.sql.files.minPartitionNum") == "8")
+    val ss = EventStreams.streamingSession(spark, EventStreams.tableBytes(TestSpark.sf, "events"))
+    // width from the input: the sf0.001 events fixture (27 KB) is far under
+    // the 1 MB per-partition target, so ONE state store, not the 4-wide
+    // batch default
+    assert(ss.conf.get("spark.sql.shuffle.partitions") == "1")
+    assert(ss.conf.get("spark.sql.files.minPartitionNum") == "1")
     // the production provider is pinned in Sessions builder options and
     // must survive the clone (a restart query's 2nd incarnation depends
     // on it), with per-batch changelog uploads instead of full snapshots
@@ -33,9 +34,33 @@ class EventStreamsSpec extends AnyFunSuite {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") == "true")
     // isolation both ways: the clone's knobs never leak to the shared
     // session, and scribbling on the clone can't touch the parent
-    assert(spark.conf.get("spark.sql.shuffle.partitions") != "8")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") != "1")
     ss.conf.set("spark.sql.shuffle.partitions", "5")
     assert(spark.conf.get("spark.sql.shuffle.partitions") != "5")
+  }
+
+  test("stream width grows with source bytes, stops at the core count, repeats for the same input") {
+    val mb = 1L << 20 // minPartitionSize default: the per-partition target
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores == 4)
+    assert(Seq(0L, 1L, mb, mb + 1, 3 * mb, 4 * mb, 4 * mb + 1, 1000 * mb, Long.MaxValue)
+      .map(EventStreams.streamWidth(spark, _)) == Seq(1, 1, 1, 2, 3, 4, 4, 4, 4))
+    // the target is the session's AQE floor, not a constant of its own
+    val small = spark.newSession()
+    small.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16KB")
+    assert(EventStreams.streamWidth(small, 40L << 10) == 3)
+    // staged links count their target once per link
+    val events = EventStreams.tableBytes(TestSpark.sf, "events")
+    val links = tempDir("graft-width")
+    (1 to 2).foreach(i => java.nio.file.Files.createSymbolicLink(
+      links.resolve(s"copy$i.parquet"), java.nio.file.Path.of(s"${TestSpark.sf}/events.parquet")))
+    assert(EventStreams.bytesUnder(links) == 2 * events)
+    // a file staged twice from the same frame has the same bytes, so a
+    // staged gate asks for the width its checkpoint froze on every run
+    val staged = Seq(tempDir("graft-width"), tempDir("graft-width"))
+    staged.foreach(graft.streaming.BoundedDrain.stageFile(
+      _, spark.read.parquet(s"${TestSpark.sf}/events.parquet"), "e.parquet", 0L))
+    assert(staged.map(EventStreams.bytesUnder).distinct.size == 1)
   }
 
   test("streaming tumbling counts match the batch plan on the same data") {
@@ -108,7 +133,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("file-source streaming: readStream over parquet matches the batch plan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src")
+    val dir = tempDir("graft-stream-src")
     java.nio.file.Files.copy(
       java.nio.file.Path.of(TestSpark.sf, "events.parquet"),
       dir.resolve("events.parquet"))
@@ -198,8 +223,8 @@ class EventStreamsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val events = fixtureEvents()
-    val out = java.nio.file.Files.createTempDirectory("graft-fb-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fb-ckpt").toString
+    val out = tempDir("graft-fb-out").toString
+    val ckpt = tempDir("graft-fb-ckpt").toString
     val stream = MemoryStream[Event]
     val q = EventStreams.toPartitionedParquet(stream.toDF(), out, ckpt)
     try {
@@ -217,8 +242,8 @@ class EventStreamsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val events = fixtureEvents()
-    val out = java.nio.file.Files.createTempDirectory("graft-eo-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-eo-ckpt").toString
+    val out = tempDir("graft-eo-out").toString
+    val ckpt = tempDir("graft-eo-ckpt").toString
     val stream = MemoryStream[Event]
     stream.addData(events.take(500))
     val q1 = EventStreams.toPartitionedParquet(stream.toDF(), out, ckpt)

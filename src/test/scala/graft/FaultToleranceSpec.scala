@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rescheduling under `spark.task.maxFailures` (the test session runs
   * `local[4,2]` to allow one retry; production default is 4).
   */
-class FaultToleranceSpec extends AnyFunSuite {
+class FaultToleranceSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("a transient task failure is retried and the shuffled result is exact") {
@@ -65,7 +65,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     // The proof is byte-level: the crashed-and-restarted sink must equal
     // a never-crashed twin — same row multiset, same audit totals.
     import java.nio.file.{Files, Path}
-    val in = Files.createTempDirectory("graft-eo-in")
+    val in = tempDir("graft-eo-in")
     (0 until 3).foreach { i =>
       val f = in.resolve(f"$i%02d.jsonl")
       Files.write(f, (0 until 4)
@@ -102,8 +102,8 @@ class FaultToleranceSpec extends AnyFunSuite {
         .groupBy(identity).view.mapValues(_.size).toMap
     }
     // crashed run: epoch 1 publishes, then the "driver" dies
-    val crashedOut = Files.createTempDirectory("graft-eo-out1")
-    val ckpt = Files.createTempDirectory("graft-eo-ckpt1")
+    val crashedOut = tempDir("graft-eo-out1")
+    val ckpt = tempDir("graft-eo-ckpt1")
     val err = runStream(crashedOut, ckpt, failEpoch = Some(1L))
     assert(err.exists(e => Option(e.getMessage).toSeq.mkString
       .contains("injected crash") || e.getCause != null &&
@@ -114,8 +114,8 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(runStream(crashedOut, ckpt, failEpoch = None).isEmpty,
       "the second incarnation must recover and drain cleanly")
     // never-crashed twin over the same inputs
-    val cleanOut = Files.createTempDirectory("graft-eo-out2")
-    assert(runStream(cleanOut, Files.createTempDirectory("graft-eo-ckpt2"), None).isEmpty)
+    val cleanOut = tempDir("graft-eo-out2")
+    assert(runStream(cleanOut, tempDir("graft-eo-ckpt2"), None).isEmpty)
     val expected = (0 until 3).flatMap(i => (0 until 4)
       .map(j => ((i * 10 + j).toLong, s"t$i") -> 1)).toMap
     assert(sinkRows(crashedOut) == expected,

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Assertions read the planned (pre-execution) physical plan — stable
   * under AQE because the asserted operators are inserted at planning.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def plan(name: String): String =
@@ -368,7 +368,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("csv_quarantine classifies records inside ONE csv scan — no second pass") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-quarantine-spec")
+    val tmp = tempDir("graft-quarantine-spec")
     try {
       val out = graft.sources.Formats.csvQuarantinePlan(spark, TestSpark.sf, tmp.toString)
       val p = out.queryExecution.executedPlan.toString

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Relational, Skew}
 import graft.sources.Tables
 
-class RelationalSpec extends AnyFunSuite {
+class RelationalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -186,7 +186,7 @@ class RelationalSpec extends AnyFunSuite {
       // query salts instead of relying on AQE (see Skew scaladoc).
       val dir = "/root/testdata/sf0.01"
       val li = Tables.lineitem(spark, dir)
-      val dimPath = java.nio.file.Files.createTempDirectory("graft-skew-dim").toString + "/dim"
+      val dimPath = tempDir("graft-skew-dim").toString + "/dim"
       li.groupBy("l_returnflag")
         .agg(round(avg("l_discount"), 4).as("flag_avg_disc"))
         .write.mode("overwrite").parquet(dimPath)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Sessions.build` is the one place a session is wired: every clone made
@@ -49,11 +51,21 @@ class SessionWiringSpec extends AnyFunSuite {
   test("stream, graftcat and graftmem gates leave the session conf unchanged") {
     val s = fresh()
     val before = s.conf.getAll
-    Seq("dsv2_tvf_stream", "dsv2_catalog_sql", "dsv2_catalog_ctas", "sql_scripting").foreach { name =>
+    def diff(m: Map[String, String]) = (m.toSet diff before.toSet) ++ (before.toSet diff m.toSet)
+    // read the conf while each plan on `s` optimizes too, not only after the
+    // gate returns: a set-then-restore in between is exactly what races
+    // Verify's concurrent pool
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
+    s.experimental.extraOptimizations = Seq(new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = { seen.add(s.conf.getAll); plan }
+    })
+    Seq("dsv2_tvf_stream", "dsv2_catalog_sql", "dsv2_catalog_ctas", "sql_scripting",
+      "join_bloom_pruned").foreach { name =>
       assert(SparkEntry.queries(name)(s, TestSpark.sf).collect().nonEmpty, name)
     }
     val after = s.conf.getAll
-    assert(after == before,
-      s"conf changed: ${(after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)}")
+    assert(after == before, s"conf changed: ${diff(after)}")
+    assert(!seen.isEmpty)
+    seen.forEach(m => assert(m == before, s"conf changed while planning: ${diff(m)}"))
   }
 }

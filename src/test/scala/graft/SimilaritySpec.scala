@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -59,7 +59,7 @@ class SimilaritySpec extends AnyFunSuite {
     // appended codes equal a frozen-codebook encode of the same vectors
     import scala.jdk.CollectionConverters._
     val canon = java.nio.file.Files.list(codesRoot).iterator().asScala.toSeq.head
-    val clone = java.nio.file.Files.createTempDirectory("graft-ivfpq-clone")
+    val clone = tempDir("graft-ivfpq-clone")
     val w = java.nio.file.Files.walk(canon)
     try w.iterator().asScala.foreach { p =>
       val t = clone.resolve(canon.relativize(p).toString)
@@ -101,7 +101,6 @@ class SimilaritySpec extends AnyFunSuite {
     val r = recoded.select("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(a == r, "appended codes must equal a frozen-codebook encode")
-    graft.sources.v2.MemCatalog.deleteRecursively(clone)
   }
 
   test("persisted inverted index: builds once, prunes to query-term shards, matches the rescan path") {

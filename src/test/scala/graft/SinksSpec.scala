@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextPipeline
 import graft.sources.{Sinks, Tables}
 
-class SinksSpec extends AnyFunSuite {
+class SinksSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").resolve("out").toString
+    tempDir(s"graft-$name").resolve("out").toString
 
   test("word-count text sink roundtrips (reference format: 'word count' lines)") {
     val wc = TextPipeline.wordCount(Tables.documents(spark, TestSpark.sf))

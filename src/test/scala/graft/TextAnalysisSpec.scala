@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextAnalysis
 
@@ -7,9 +8,32 @@ import graft.functions.TextAnalysis
   * oracle gate can't express directly (it proves equality, not the
   * properties below).
   */
-class TextAnalysisSpec extends AnyFunSuite {
+class TextAnalysisSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  test("an empty and a whitespace-only document give NULL ratios, not DIVIDE_BY_ZERO") {
+    // three fixture docs plus doc -1 (empty text) and doc -2 (whitespace
+    // only); DuckDB answers x / 0 with NULL, so the gates must too
+    val src = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+    val blanks = Seq(-1L -> "", -2L -> " \t\n ").map { case (id, text) =>
+      src.limit(1)
+        .withColumn("doc_id", lit(id).cast(src.schema("doc_id").dataType))
+        .withColumn("text", lit(text))
+        .withColumn("n_chars", lit(text.length).cast(src.schema("n_chars").dataType))
+    }
+    val dir = tempDir("graft-blank-docs")
+    blanks.foldLeft(src.orderBy("doc_id").limit(3))(_ unionByName _)
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    Seq("text_quality", "training_corpus_funnel", "pipeline_clean_corpus", "dedup_lsh_recall")
+      .foreach(q => SparkEntry.queries(q)(spark, dir.toString).collect())
+    val empty = TextAnalysis.qualityScore(spark, dir.toString).filter(col("doc_id") === -1L)
+      .select("digit_ratio", "symbol_ratio").head()
+    assert(empty.isNullAt(0) && empty.isNullAt(1))
+    // three distinct docs: no near-dup truth pair, so recall is 0 / 0
+    val lsh = graft.operators.Dedup.lshRecall(spark, dir.toString).head()
+    assert(lsh.getAs[Long]("n_truth") == 0L && lsh.isNullAt(lsh.fieldIndex("recall_frac")))
+  }
 
   test("quality_buckets: per-language terciles are balanced and score-ordered") {
     val rows = TextAnalysis.qualityBuckets(spark, TestSpark.sf)

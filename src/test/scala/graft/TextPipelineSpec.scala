@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextPipeline
 import graft.sources.Tables
 
-class TextPipelineSpec extends AnyFunSuite {
+class TextPipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -99,7 +99,7 @@ class TextPipelineSpec extends AnyFunSuite {
         if (groupStages.contains(te.stageId) && te.taskMetrics != null)
           recordsRead.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
     }
-    val out = java.nio.file.Files.createTempDirectory("graft-scan-once")
+    val out = tempDir("graft-scan-once")
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "wordcount_corpus op")
@@ -114,7 +114,6 @@ class TextPipelineSpec extends AnyFunSuite {
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
-      graft.sources.v2.MemCatalog.deleteRecursively(out)
     }
     assert(recordsRead.get == rowCount, s"documents rows read: ${recordsRead.get}, rows: $rowCount")
   }

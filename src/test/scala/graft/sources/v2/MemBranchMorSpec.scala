@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -9,12 +10,12 @@ import graft.TestSpark
   * fast-forward (no compaction needed), and the two refusal edges
   * (copy-on-write tables, streaming writes) fail loudly.
   */
-class MemBranchMorSpec extends AnyFunSuite {
+class MemBranchMorSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
     val name = s"graftmemspec_bm$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-memcat-spec-bm$tag")
+    val root = tempDir(s"graft-memcat-spec-bm$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)
@@ -65,7 +66,7 @@ class MemBranchMorSpec extends AnyFunSuite {
       "SELECT CAST(id AS BIGINT) AS id, CAST(id AS BIGINT) AS val, " +
       "CAST(id % 4 AS BIGINT) AS bucket FROM range(5)")
     MemCatalog.createBranch(root.resolve("t__s"), "stage")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bmor-ckpt")
+    val ckpt = tempDir("graft-bmor-ckpt")
     val e = intercept[Exception] {
       val q = spark.readStream.format("graft.sources.v2.SeqStreamSource")
         .option("n", "100").option("step", "100").option("parts", "1").load()

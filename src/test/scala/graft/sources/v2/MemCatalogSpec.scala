@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -8,12 +9,12 @@ import graft.TestSpark
   * oracle-gated round-trip (`dsv2_catalog_ctas`) can't show: what happens
   * when the write FAILS halfway.
   */
-class MemCatalogSpec extends AnyFunSuite {
+class MemCatalogSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def freshCatalog(tag: String): String = {
     val name = s"graftmemspec_$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-memcat-spec-$tag")
+    val root = tempDir(s"graft-memcat-spec-$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     name
@@ -271,7 +272,7 @@ class MemCatalogSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE $cat.t.tl AS SELECT id FROM range(5)") // v0
     spark.sql(s"INSERT INTO $cat.t.tl SELECT id FROM range(10, 13)") // v1
     spark.sql(s"INSERT INTO $cat.t.tl SELECT id FROM range(20, 22)") // v2
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tail-spec")
+    val ckpt = tempDir("graft-tail-spec")
     val q = spark.readStream.table(s"$cat.t.tl")
       .groupBy().agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"),
@@ -385,7 +386,7 @@ class MemCatalogSpec extends AnyFunSuite {
   test("writeStream.toTable appends one manifest commit per epoch; replayed epochs publish nothing") {
     val cat = freshCatalog("ssink")
     spark.sql(s"CREATE TABLE $cat.t.w (id BIGINT, val BIGINT, bucket BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssink-spec")
+    val ckpt = tempDir("graft-ssink-spec")
     val q = spark.readStream.format("graft.sources.v2.SeqStreamSource")
       .option("n", "1000").option("step", "250").option("parts", "2").load()
       .select("id", "val", "bucket")
@@ -448,7 +449,7 @@ class MemCatalogSpec extends AnyFunSuite {
     val cat = freshCatalog("tailrs")
     spark.sql(s"CREATE TABLE $cat.t.rs AS SELECT id FROM range(5)") // v0
     spark.sql(s"INSERT INTO $cat.t.rs SELECT id FROM range(10, 13)") // v1
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tailrs-spec")
+    val ckpt = tempDir("graft-tailrs-spec")
     // memory sink refuses checkpoint recovery — foreachBatch is the
     // recovery-capable collector for restart tests
     def drain(): Seq[Long] = {
@@ -622,7 +623,7 @@ class MemCatalogSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.t.cf VALUES (100, 100)") // v1: insert-only commit
     spark.sql(s"UPDATE $cat.t.cf SET v = v * 10 WHERE id >= 4") // v2: COW → delete+insert
     spark.sql(s"DELETE FROM $cat.t.cf WHERE id = 0") // v3: rewrite → delete (+ survivors re-insert)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdfspec-ckpt")
+    val ckpt = tempDir("graft-cdfspec-ckpt")
     val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Map[String, Long])]
     val q = spark.readStream.option("changefeed", "true").table(s"$cat.t.cf")
       .select("id", "v", "_change_type")
@@ -644,7 +645,7 @@ class MemCatalogSpec extends AnyFunSuite {
     assert(byId(3).getOrElse("delete", 0L) > byId(3).getOrElse("insert", 0L),
       s"the DELETE commit removes net rows: ${byId(3)}")
     // the fold property: Σ insert − Σ delete per key reconstructs the table
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft-cdfspec-ckpt2")
+    val ckpt2 = tempDir("graft-cdfspec-ckpt2")
     val qn = "graft_cdfspec_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q2 = spark.readStream.option("changefeed", "true").table(s"$cat.t.cf")
       .select("id", "v", "_change_type")
@@ -674,7 +675,7 @@ class MemCatalogSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.t.sv VALUES (10)") // v1
     spark.sql(s"INSERT INTO $cat.t.sv VALUES (20)") // v2
     spark.sql(s"INSERT INTO $cat.t.sv VALUES (30)") // v3
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdfsv-ckpt")
+    val ckpt = tempDir("graft-cdfsv-ckpt")
     val qn = "graft_cdfsv_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = spark.readStream
       .option("changefeed", "true").option("startingVersion", "2")
@@ -691,7 +692,7 @@ class MemCatalogSpec extends AnyFunSuite {
       spark.readStream.option("changefeed", "true").option("startingVersion", "-1")
         .table(s"$cat.t.sv").writeStream
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-cdfsv-bad").toString)
+          tempDir("graft-cdfsv-bad").toString)
         .format("memory").queryName(qn + "_bad").start().processAllAvailable())
   }
 
@@ -705,7 +706,7 @@ class MemCatalogSpec extends AnyFunSuite {
     val dir = java.nio.file.Paths.get(
       spark.conf.get(s"spark.sql.catalog.$cat.root"), "t__st")
     val t1 = MemCatalog.readManifestFull(dir, 1).ts
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdfst-ckpt")
+    val ckpt = tempDir("graft-cdfst-ckpt")
     val qn = "graft_cdfst_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = spark.readStream
       .option("changefeed", "true").option("startingTimestamp", t1.toString)
@@ -727,7 +728,7 @@ class MemCatalogSpec extends AnyFunSuite {
         .option("startingTimestamp", (t2 + 60000L).toString)
         .table(s"$cat.t.st").writeStream
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-cdfst-bad1").toString)
+          tempDir("graft-cdfst-bad1").toString)
         .format("memory").queryName(qn + "_bad1").start().processAllAvailable())
     // the two start options are mutually exclusive (the Delta rule)
     intercept[Exception](
@@ -735,7 +736,7 @@ class MemCatalogSpec extends AnyFunSuite {
         .option("startingVersion", "1").option("startingTimestamp", t1.toString)
         .table(s"$cat.t.st").writeStream
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-cdfst-bad2").toString)
+          tempDir("graft-cdfst-bad2").toString)
         .format("memory").queryName(qn + "_bad2").start().processAllAvailable())
   }
 
@@ -743,7 +744,7 @@ class MemCatalogSpec extends AnyFunSuite {
     * (col0, col1, _change_type) triples.
     */
   private def drainNet(table: String, fromVersion: Int): Set[(Long, Long, String)] = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-netcdf-ckpt")
+    val ckpt = tempDir("graft-netcdf-ckpt")
     val qn = "graft_netcdf_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = spark.readStream
       .option("changefeed", "true").option("netChanges", "true")
@@ -774,7 +775,7 @@ class MemCatalogSpec extends AnyFunSuite {
     intercept[Exception](
       spark.readStream.option("netChanges", "true").table(s"$cat.t.nu")
         .writeStream.option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-netcdf-bad").toString)
+          tempDir("graft-netcdf-bad").toString)
         .format("memory").queryName("graft_netcdf_bad").start().processAllAvailable())
   }
 
@@ -1012,14 +1013,14 @@ class MemCatalogSpec extends AnyFunSuite {
     val cat = freshCatalog("chkstream")
     spark.sql(s"CREATE TABLE $cat.t.cs (id BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('check.pos'='v > 0')")
-    val src = java.nio.file.Files.createTempDirectory("graft-chkstream-src")
+    val src = tempDir("graft-chkstream-src")
     def writeBatch(name: String, rows: Seq[(Long, Long)]): Unit = {
       import spark.implicits._
       rows.toDF("id", "v").coalesce(1).write.mode("append").parquet(src.toString)
       ()
     }
     writeBatch("good", (1L to 5L).map(i => (i, i)))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chkstream-ckpt")
+    val ckpt = tempDir("graft-chkstream-ckpt")
     def run(): Unit = {
       val q = spark.readStream
         .schema("id BIGINT, v BIGINT").parquet(src.toString)
@@ -1096,7 +1097,7 @@ class MemCatalogSpec extends AnyFunSuite {
       spark.conf.get(s"spark.sql.catalog.$cat.root"), "t__cv")
     MemCatalog.vacuum(dir, keepVersions = 1) // only v2 retained
     val ex = intercept[Exception] {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-cdfvac-ckpt")
+      val ckpt = tempDir("graft-cdfvac-ckpt")
       spark.readStream.option("changefeed", "true").option("startingVersion", "1")
         .table(s"$cat.t.cv")
         .writeStream.option("checkpointLocation", ckpt.toString)

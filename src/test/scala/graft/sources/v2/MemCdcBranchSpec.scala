@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -10,7 +11,7 @@ import graft.TestSpark
   * insert, not vice versa), and a stream configured against a missing
   * audit branch refuses at start instead of silently applying to main.
   */
-class MemCdcBranchSpec extends AnyFunSuite {
+class MemCdcBranchSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
@@ -66,8 +67,8 @@ class MemCdcBranchSpec extends AnyFunSuite {
         |(op STRING, k BIGINT, v BIGINT)
         |TBLPROPERTIES ('graft.applyCdcTo'='tmp.cdcbr_refuse', 'graft.cdcOp'='op',
         |               'graft.applyCdcBranch'='nope')""".stripMargin)
-    val src = java.nio.file.Files.createTempDirectory("graft-cdcbr-refuse-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcbr-refuse-ckpt")
+    val src = tempDir("graft-cdcbr-refuse-src")
+    val ckpt = tempDir("graft-cdcbr-refuse-ckpt")
     spark.sql("SELECT 'I' AS op, CAST(7 AS BIGINT) AS k, CAST(70 AS BIGINT) AS v")
       .write.mode("overwrite").parquet(src.resolve("d").toString)
     val q = spark.readStream.schema("op STRING, k BIGINT, v BIGINT")
@@ -83,7 +84,5 @@ class MemCdcBranchSpec extends AnyFunSuite {
       s"expected a loud missing-branch refusal, got: ${e.getMessage}")
     assert(MemCatalog.currentVersion(dir) == 0,
       "nothing may publish to main when the audit branch is missing")
-    MemCatalog.deleteRecursively(src)
-    MemCatalog.deleteRecursively(ckpt)
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +11,7 @@ import graft.TestSpark
   * degraded state (torn pair, vacuumed commit, pre-sidecar history)
   * falls back to the read-side snapshot diff with identical rows.
   */
-class MemCdcSidecarSpec extends AnyFunSuite {
+class MemCdcSidecarSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
@@ -26,7 +27,7 @@ class MemCdcSidecarSpec extends AnyFunSuite {
   }
 
   private def drain(table: String): Seq[(Long, Long, String)] = {
-    val ckpt = Files.createTempDirectory("graft-cdcside-ckpt")
+    val ckpt = tempDir("graft-cdcside-ckpt")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
     val q = spark.readStream
       .option("changefeed", "true").option("netChanges", "true")

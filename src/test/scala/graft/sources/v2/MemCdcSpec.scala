@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -8,12 +9,12 @@ import graft.TestSpark
   * last epoch, and each of the two per-table commits must no-op exactly
   * when it already published, whichever side a crash stranded.
   */
-class MemCdcSpec extends AnyFunSuite {
+class MemCdcSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def freshCatalog(tag: String): (String, java.nio.file.Path) = {
     val name = s"graftmemspec_cdc$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-memcat-spec-cdc$tag")
+    val root = tempDir(s"graft-memcat-spec-cdc$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)

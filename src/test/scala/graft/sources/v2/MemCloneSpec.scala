@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +12,7 @@ import graft.TestSpark
   * source file (the safety half of Delta's documented source-vacuum
   * caveat), and the clone's v0 time-travels to the exact clone-point rows.
   */
-class MemCloneSpec extends AnyFunSuite {
+class MemCloneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
@@ -24,7 +25,7 @@ class MemCloneSpec extends AnyFunSuite {
         |SELECT CAST(id AS BIGINT) AS k, CAST(id AS BIGINT) AS v
         |FROM range(0, 9)""".stripMargin)
     spark.sql("DELETE FROM graftmem.tmp.cls_eq WHERE k = 3") // eq sidecar
-    val dst = Files.createTempDirectory("graft-clone-refuse")
+    val dst = tempDir("graft-clone-refuse")
     val e = intercept[IllegalArgumentException] {
       MemCatalog.cloneTable(tdir("cls_eq"), dst)
     }

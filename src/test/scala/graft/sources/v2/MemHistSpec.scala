@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -10,7 +11,7 @@ import graft.TestSpark
   * mass-proportional bin counts; and the manifest token survives a real
   * write → OPTIMIZE rewrite cycle with its mass intact.
   */
-class MemHistSpec extends AnyFunSuite {
+class MemHistSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("bucketing: every value lands in exactly the bucket whose edges contain it") {
@@ -96,7 +97,7 @@ class MemHistSpec extends AnyFunSuite {
   test("hist tokens survive write, INSERT, and OPTIMIZE with mass intact") {
     val cat = {
       val name = "graftmemspec_hist"
-      val root = java.nio.file.Files.createTempDirectory("graft-memcat-spec-hist")
+      val root = tempDir("graft-memcat-spec-hist")
       spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
       (name, root)

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -13,10 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * commits stay silent until fast-forward publishes to main, and a
   * dropped hook never fires again.
   */
-class MemHookSpec extends AnyFunSuite {
+class MemHookSpec extends AnyFunSuite with TempDirs {
 
   private def mk(): Path = {
-    val dir = Files.createTempDirectory("graft-hook")
+    val dir = tempDir("graft-hook")
     MemCatalog.writeManifest(dir, 0, Seq.empty, op = "create")
     dir
   }

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -9,7 +10,7 @@ import graft.TestSpark
   * while maintenance reads raw — a policy hides data, it never destroys
   * it, and a masked value is never written back as data.
   */
-class MemPolicySpec extends AnyFunSuite {
+class MemPolicySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def tdir(name: String) = MemCatalog.tableDir(spark, s"graftmem.tmp.$name")
@@ -44,7 +45,7 @@ class MemPolicySpec extends AnyFunSuite {
         |FROM range(0, 30)""".stripMargin)
     spark.sql("INSERT INTO graftmem.tmp.polf " +
       "SELECT CAST(id % 3 AS BIGINT), CAST(id AS BIGINT) FROM range(30, 60)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-polf-ckpt")
+    val ckpt = tempDir("graft-polf-ckpt")
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = spark.readStream.option("changefeed", "true")
       .table("graftmem.tmp.polf")

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -9,12 +10,12 @@ import graft.TestSpark
   * mutual-exclusion refusal, constraint enforcement through the fanout
   * path, and null transform sources.
   */
-class MemRouteSpec extends AnyFunSuite {
+class MemRouteSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def fresh(tag: String): (String, java.nio.file.Path) = {
     val name = s"graftroutespec_$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-route-spec-$tag")
+    val root = tempDir(s"graft-route-spec-$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)
@@ -73,10 +74,10 @@ class MemRouteSpec extends AnyFunSuite {
       s"""CREATE TABLE $cat.t.s (k BIGINT, v BIGINT)
          |TBLPROPERTIES ('graft.partition'='bucket(3,k)',
          |               'graft.partitionRoute'='true')""".stripMargin)
-    val src = java.nio.file.Files.createTempDirectory("graft-route-stream-src")
+    val src = tempDir("graft-route-stream-src")
     ss.range(0, 30).selectExpr("id AS k", "id * 2 AS v")
       .coalesce(1).write.mode("overwrite").parquet(src.toString)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-route-stream-ckpt")
+    val ckpt = tempDir("graft-route-stream-ckpt")
     val q = ss.readStream.schema("k BIGINT, v BIGINT").parquet(src.toString)
       .writeStream.option("checkpointLocation", ckpt.toString)
       .toTable(s"$cat.t.s")
@@ -87,8 +88,6 @@ class MemRouteSpec extends AnyFunSuite {
     assert(ranges.nonEmpty && ranges.forall { case (lo, hi) => lo == hi },
       s"streamed files must be partition-pure, got $ranges")
     assert(ranges.map(_._1).toSet == Set(0L, 1L, 2L))
-    MemCatalog.deleteRecursively(ckpt)
-    MemCatalog.deleteRecursively(src)
   }
 
   test("NULL transform sources route to their own file, rows intact") {

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -9,12 +10,12 @@ import graft.TestSpark
   * one, time travel reads old snapshots under the CURRENT schema
   * (Iceberg semantics), and referenced columns refuse to evolve.
   */
-class MemSchemaEvolutionSpec extends AnyFunSuite {
+class MemSchemaEvolutionSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def fresh(tag: String): (String, java.nio.file.Path) = {
     val name = s"graftevospec_$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-evo-spec-$tag")
+    val root = tempDir(s"graft-evo-spec-$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -10,12 +11,12 @@ import graft.TestSpark
   * correctness, because a wrong SPJ silently drops rows (the one
   * failure mode worse than a shuffle).
   */
-class MemSpjSpec extends AnyFunSuite {
+class MemSpjSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def fresh(tag: String): (String, java.nio.file.Path) = {
     val name = s"graftspjspec_$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-spj-spec-$tag")
+    val root = tempDir(s"graft-spj-spec-$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)

@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Offset-contract unit spec for [[SeqMicroBatchStream]]: a checkpoint
@@ -8,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an end below a start the engine already owns violates the monotone-
   * offset contract and stalls the query until `available` catches up.
   */
-class SeqStreamOffsetSpec extends AnyFunSuite {
+class SeqStreamOffsetSpec extends AnyFunSuite with TempDirs {
 
   test("restart: latestOffset never falls below a deserialized committed offset") {
     val s = new SeqMicroBatchStream(n = 1000L, step = 100L, parts = 4)
@@ -64,8 +65,8 @@ class SeqStreamOffsetSpec extends AnyFunSuite {
     // its _spark_metadata commit log is the exactly-once contract, and
     // the final read must see id 0..4999 exactly once across both runs.
     val spark = graft.TestSpark.spark
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-restart-out")
+    val ckpt = tempDir("graft-restart-ckpt")
+    val outDir = tempDir("graft-restart-out")
     def drain(n: Long): Unit = {
       val q = spark.readStream.format("graft.sources.v2.SeqStreamSource")
         .option("n", n.toString).option("step", "1000").option("parts", "4").load()

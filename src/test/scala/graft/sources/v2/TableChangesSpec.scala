@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -8,12 +9,12 @@ import graft.TestSpark
   * bounded windows, the default end = current head, and the loud
   * vacuumed-version failure inherited from the streaming feed.
   */
-class TableChangesSpec extends AnyFunSuite {
+class TableChangesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private def fresh(tag: String): (String, java.nio.file.Path) = {
     val name = s"grafttvfspec_$tag"
-    val root = java.nio.file.Files.createTempDirectory(s"graft-tvf-spec-$tag")
+    val root = tempDir(s"graft-tvf-spec-$tag")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)
@@ -194,7 +195,7 @@ class TableChangesSpec extends AnyFunSuite {
     val (cat, _) = fresh("resume")
     spark.sql(s"CREATE TABLE $cat.t.r AS SELECT id AS k FROM range(3)") // v0
     (1 to 4).foreach(i => spark.sql(s"INSERT INTO $cat.t.r VALUES (${i * 100})")) // v1..v4
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tvs-resume")
+    val ckpt = tempDir("graft-tvs-resume")
     // sink = a catalog table (the memory sink refuses checkpoint
     // recovery); its epoch-idempotent commits also make duplicates loud
     spark.sql(s"CREATE TABLE $cat.t.rout (k BIGINT, v BIGINT)")
@@ -219,7 +220,6 @@ class TableChangesSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(second == first,
       s"a restarted bounded drain must not duplicate rows: $second vs $first")
-    MemCatalog.deleteRecursively(ckpt)
   }
 
   test("timestamp narrowing still fires over a vacuumed prefix (neighbor bounds)") {

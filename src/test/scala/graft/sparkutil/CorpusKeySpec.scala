@@ -1,5 +1,6 @@
 package graft.sparkutil
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -8,10 +9,10 @@ import java.nio.file.Files
   * across copies / re-syntheses with new mtimes — the r13 probe bug),
   * any content or layout change RETRAINS (different token).
   */
-class CorpusKeySpec extends AnyFunSuite {
+class CorpusKeySpec extends AnyFunSuite with TempDirs {
 
   private def corpus(rows: Seq[String]): java.nio.file.Path = {
-    val d = Files.createTempDirectory("graft-ck")
+    val d = tempDir("graft-ck")
     Files.createDirectories(d.resolve("part=a"))
     Files.write(d.resolve("part=a/f0.bin"), rows.mkString("\n").getBytes("UTF-8"))
     Files.write(d.resolve("f1.bin"),
