@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   *  - the `graftmem` ([[graft.sources.v2.MemCatalog]]) and `graftcat`
   *    ([[graft.sources.v2.SeqCatalog]]) catalogs, as builder configs;
   *  - [[GraftExtensions]]: the engine's SQL functions, the `table_changes`
-  *    TVF and the top-k planner strategy.
+  *    TVF and the top-k planner strategy;
+  *  - a fork-free local commit path (below).
   * Builder options and extensions carry over to `spark.newSession()`
   * clones, so a clone is wired exactly like its parent and no query ever
   * sets a catalog or registers a function on a live session (`Verify`
@@ -21,6 +22,32 @@ import org.apache.spark.sql.SparkSession
   * `spark.network.timeout` (120s), `spark.task.maxFailures` (4), stage
   * barriers from the DAGScheduler. We only tune what differs from a good
   * cluster default.
+  *
+  * THE LOCAL COMMIT PATH. Without the native Hadoop library (the usual
+  * case off a Hadoop cluster), `RawLocalFileSystem.setPermission` forks a
+  * `chmod` process, and `create` and `mkdirs` call it for every file and
+  * directory they make, `.crc` siblings included. Every offset-log,
+  * commit-log, source-log, sink-log, state-changelog and catalog data
+  * file paid that fork — the same per-write process cost the reference
+  * pays with `popen("hdfs dfs -put ...")`. Two confs remove it:
+  *  - `fs.file.impl` is [[graft.sparkutil.NioLocalFileSystem]], still the
+  *    checksummed `LocalFileSystem`, which sets the same permission bits
+  *    through `java.nio`. In a 200-call loop on a 4-core VM, one `create`
+  *    (file and `.crc`) took 5.0 → 0.1–0.3 ms and one `mkdirs`
+  *    2.4 → 0.05 ms.
+  *  - the streaming checkpoint manager (offset/commit logs, RocksDB state
+  *    uploads) is Spark's FileSystem-based one. The default goes through
+  *    Hadoop's FileContext, whose local binding hard-wires the stock
+  *    `RawLocalFileSystem`, so it never reaches the class above: each
+  *    atomic write (temp file, `.crc`, rename) forks again. The
+  *    FileSystem manager writes a temp file and renames it into place.
+  *    That is safe here because a rename on a local POSIX filesystem is
+  *    atomic, and each checkpoint dir has one writer (one running
+  *    incarnation of one query).
+  * Together they cut the summed `walCommit` time of a `stream_commit`
+  * perfbench op (about 3 micro-batches) from 0.185 to 0.005 s; either
+  * one alone leaves most of it (0.042 s with only the manager, 0.167 s
+  * with only the filesystem).
   */
 object Sessions {
   def local(appName: String = "graft"): SparkSession = {
@@ -63,6 +90,11 @@ object Sessions {
       // events.ts is TIMESTAMP(NANOS); surface as long, converted in Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the fork-free local commit path (see the scaladoc)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sparkutil.NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass", classOf[
+        org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager]
+        .getName)
       .config("spark.sql.catalog.graftmem", classOf[graft.sources.v2.MemCatalog].getName)
       .config("spark.sql.catalog.graftcat", classOf[graft.sources.v2.SeqCatalog].getName)
       .withExtensions(new GraftExtensions)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.TextPipeline.Oracle
+import graft.sparkutil.Multiset
 import graft.sources.v2.MemCatalog
 import graft.streaming.BoundedDrain
 import graft.streaming.BoundedDrain.Sink
@@ -645,8 +646,7 @@ object Formats {
     val tvfRows = ss.sql(
       """SELECT k, n, cents, _change_type
         |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)""".stripMargin)
-    val equalsStream =
-      tvfRows.exceptAll(drained).isEmpty && drained.exceptAll(tvfRows).isEmpty
+    val equalsStream = Multiset.equal(tvfRows, drained)
     // rider 5: `WHERE _commit_version = 2` PUSHES DOWN — the physical
     // scan narrows its planned window to versions=[2, 2] (O(one
     // commit's delta), not a full replay filtered after the fact), and
@@ -660,8 +660,7 @@ object Formats {
         |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
     val versionPushdown =
       narrowed.queryExecution.executedPlan.toString.contains("versions=[2, 2]") &&
-        narrowed.exceptAll(explicitW2).isEmpty &&
-        explicitW2.exceptAll(narrowed).isEmpty
+        Multiset.equal(narrowed, explicitW2)
     // the gate: net reconstruction from the TVF == the final state
     ss.sql(
       """SELECT k,
@@ -718,8 +717,7 @@ object Formats {
     val batch = ss.sql(
       """SELECT k, n, cents, _change_type, _commit_version
         |FROM table_changes('graftmem.tmp.tvs', 0, 3)""".stripMargin)
-    val equalsTvf =
-      drained.exceptAll(batch).isEmpty && batch.exceptAll(drained).isEmpty
+    val equalsTvf = Multiset.equal(drained, batch)
     // fold the drained feed: net reconstruction == the final table
     val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
     drained.groupBy("k")

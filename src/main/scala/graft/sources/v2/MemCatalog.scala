@@ -67,8 +67,7 @@ class MemCatalog extends TableCatalog with StagingTableCatalog
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    root = Paths.get(Option(options.get("root")).getOrElse(
-      sys.props("java.io.tmpdir") + s"/graft-memcat-$name"))
+    root = Option(options.get("root")).map(Paths.get(_)).getOrElse(MemCatalog.jvmRoot(name))
     Files.createDirectories(root)
   }
 
@@ -493,6 +492,19 @@ class MemCatalog extends TableCatalog with StagingTableCatalog
 }
 
 object MemCatalog {
+  private val jvmRoots = new java.util.concurrent.ConcurrentHashMap[String, Path]()
+
+  /** The default root of the catalog `name`: one fresh
+    * `java.io.tmpdir/graft-memcat-<name>-<random>` dir per JVM, shared by
+    * every session (and clone) in it and deleted when the JVM exits, so
+    * two JVMs on one host (a bench and a test run) never share tables.
+    */
+  private def jvmRoot(name: String): Path = jvmRoots.computeIfAbsent(name, n => {
+    val d = Files.createTempDirectory(Paths.get(sys.props("java.io.tmpdir")), s"graft-memcat-$n-")
+    org.apache.spark.sql.graftshim.GraftShim.deleteOnShutdown(d)
+    d
+  })
+
   /** A row-level COW statement lost an optimistic-concurrency race: a file
     * its scan planned was already rewritten by a concurrent committed
     * statement. Iceberg's model REJECTS such commits (composing two COW

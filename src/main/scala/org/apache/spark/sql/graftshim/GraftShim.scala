@@ -6,9 +6,10 @@ import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => C
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Bridge to `Dataset.ofRows`, `ExpressionUtils.column` and `LogicalRDD`
-  * (all `private[sql]` or internal). Lives inside the `org.apache.spark.sql`
-  * namespace purely as an access shim — the conventional pattern for Spark
+/** Bridge to `Dataset.ofRows`, `ExpressionUtils.column`, `LogicalRDD` and
+  * the shutdown-delete hook (all `private[sql]`, `private[spark]` or
+  * internal). Lives inside the `org.apache.spark.sql` namespace purely as
+  * an access shim — the conventional pattern for Spark
   * extension libraries; no Spark internals are modified.
   */
 object GraftShim {
@@ -20,6 +21,11 @@ object GraftShim {
 
   /** The Catalyst expression behind a Column. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Deletes `dir` when the JVM exits, after the SparkContext has stopped
+    * (Spark's own temp-dir hook), so no task is still writing into it. */
+  def deleteOnShutdown(dir: java.nio.file.Path): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir.toFile)
 
   /** Executes `df` now, as one SQL execution, and returns a frame over the
     * resulting RDD. Under AQE that runs every shuffle map stage (without

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.v2.MemCatalog
+
 /** `Sessions.build` is the one place a session is wired: every clone made
   * with `newSession()` already has the graft catalogs, SQL functions and
   * the `table_changes` TVF before any query runs, and running gates on a
@@ -67,5 +69,12 @@ class SessionWiringSpec extends AnyFunSuite {
     assert(after == before, s"conf changed: ${diff(after)}")
     assert(!seen.isEmpty)
     seen.forEach(m => assert(m == before, s"conf changed while planning: ${diff(m)}"))
+  }
+
+  test("the graftmem root is one per-JVM dir under java.io.tmpdir, shared by clones") {
+    val mine = MemCatalog.tableDir(fresh(), "graftmem.tmp.wiring_root").getParent
+    assert(mine == MemCatalog.tableDir(TestSpark.spark, "graftmem.tmp.wiring_root").getParent)
+    assert(mine.getParent == java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+    assert(mine.getFileName.toString.startsWith("graft-memcat-graftmem-"), mine)
   }
 }

@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps per-query session wiring out of the main tree: catalogs are
   * configured only by `Sessions.build`, only `MemCatalog` knows where a
   * table's files live, and only `BoundedDrain` starts a bounded stream.
-  * Also keeps one copy of each shared decision: the text rule on both
+  * The local commit path (`fs.file.impl`, the checkpoint manager) is set
+  * only there too, and nothing reaches the FileContext API, whose local
+  * binding forks a process per permission change. Also keeps one copy of
+  * each shared decision: the text rule on both
   * sides of the oracle (`TextPipeline`), the structural pruning proof
   * (`MemCatalog.proveFilesPruned`) and the build-once artifact publish
   * (`CorpusKey.buildOnce`).
@@ -90,5 +93,13 @@ class WiringGuardSpec extends AnyFunSuite {
   test("no .staging- publish outside CorpusKey.scala and MemCatalog.scala") {
     val hits = offenders(".staging-", "CorpusKey.scala").filterNot(_.contains("/MemCatalog.scala:"))
     assert(hits.isEmpty, s"publish build-once artifacts with CorpusKey.buildOnce: ${hits.mkString(", ")}")
+  }
+
+  test("no fs.file.impl or checkpointFileManagerClass outside Sessions.scala, no FileContext") {
+    val wiring = Seq("fs.file.impl", "checkpointFileManagerClass").flatMap(
+      offenders(_, "Sessions.scala"))
+    assert(wiring.isEmpty, s"the local commit path is set in Sessions.build: ${wiring.mkString(", ")}")
+    val fc = offenders("FileContext", allowed = "")
+    assert(fc.isEmpty, s"use FileSystem, not FileContext: ${fc.mkString(", ")}")
   }
 }
