@@ -36,8 +36,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Storage is the connector's own format (a length-prefixed binary row
   * codec + a JSON schema manifest): a catalog owns its layout — Spark only
   * sees the Table/Scan/Write SPI. Appends (`INSERT INTO`) stage per-task
-  * part files under `_inflight` and move them in at driver commit, the
-  * [[AuditSink]] contract. Reads plan one partition per part file.
+  * part files under a staging dir of their own write (`_inflight-<queryId>`;
+  * streaming epochs, COW and MoR DML likewise) and move them in at driver
+  * commit, the [[AuditSink]] contract; an abort deletes the staged files
+  * and the dir. Reads plan one partition per part file.
   *
   * TIME TRAVEL (`VERSION AS OF` / `TIMESTAMP AS OF`): tables are
   * SNAPSHOT-VERSIONED the way Iceberg/Delta are — data files are
@@ -1333,40 +1335,6 @@ object MemCatalog {
     readManifestPath(branchManifestPath(dir, name, k))
   }
 
-  /** Branch commit loop — the [[commitManifestEq]] shape over the branch
-    * chain. New entries stamp `#seq` = base + K: strictly newer than
-    * every sequence the forked eq-delete set can carry (all ≤ base), and
-    * re-stamped to the published main version at fast-forward. The
-    * update callback receives that sequence (like [[commitManifestEq]]
-    * passes the version) so a branch equality delete can stamp itself at
-    * its own commit's place in the branch-relative order.
-    */
-  def commitBranch(dir: Path, name: String, op: String = "")(
-      update: (Seq[FileEntry], Seq[EqDelete], Long) => (Seq[FileEntry], Seq[EqDelete])): Int = {
-    val base = branchBase(dir, name)
-    while (true) {
-      val k = branchHead(dir, name)
-      require(k >= 0, s"graft mem catalog: no branch '$name' on $dir")
-      val m = readManifestPath(branchManifestPath(dir, name, k))
-      val (files, eq) = update(m.files, m.eqDels, (base + k + 1).toLong)
-      val prior = m.files.map(_.name).toSet
-      val seq = (base + k + 1).toLong
-      val next = files.distinctBy(_.name).map { e =>
-        if (!prior(e.name) && !e.stats.contains("#seq"))
-          e.copy(stats = e.stats + ("#seq" -> (seq, seq)))
-        else e
-      }
-      try {
-        publishManifestAt(dir, branchManifestPath(dir, name, k + 1), next,
-          m.txns, op, eq)
-        return k + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => // lost the race; retry
-      }
-    }
-    -1 // unreachable
-  }
-
   /** PUBLISH the audited branch: fast-forward main to the branch head in
     * ONE create-new commit at base+1. Fails with
     * [[CommitConflictException]] when main advanced past the base during
@@ -2593,37 +2561,63 @@ object MemCatalog {
       update: Seq[FileEntry] => Seq[FileEntry]): Int =
     commitManifestEq(dir, op) { (files, eq, _) => (update(files), eq) }
 
-  /** The equality-delete-aware commit loop every commit runs through:
-    * `update` receives (live files, current equality deletes, the
-    * version this attempt would publish) and returns the next pair —
-    * equality deletes carry forward by default ([[commitManifest]]) and
-    * are edited only by the eq-delete writer (append) and OPTIMIZE
-    * (materialize + GC). Every NEW entry (name absent from the prior
-    * snapshot, no `#seq` stat yet) is stamped `#seq` = the published
-    * version — the Iceberg data-sequence-number that scopes equality
-    * deletes to strictly-older data. Stamping re-runs per retry attempt
-    * so the recorded sequence always equals the version actually won.
+  /** The optimistic commit loop every commit runs through. Each attempt
+    * reads the head — main's `_v<N>`, or with `branch` that branch's
+    * `_bv<K>-<name>` chain — hands `update` (live files, current equality
+    * deletes, the sequence this attempt would publish at) and publishes
+    * the result create-new in the next slot; a lost race re-reads and
+    * retries. Equality deletes carry forward by default
+    * ([[commitManifest]]) and are edited only by the eq-delete writers
+    * and OPTIMIZE. Every NEW entry (name absent from the head, no `#seq`
+    * stat yet) is stamped `#seq` = the sequence — the Iceberg
+    * data-sequence-number that scopes equality deletes to strictly-older
+    * data. On main the sequence is the published version; on a branch it
+    * is base + K: strictly newer than every sequence the forked eq-delete
+    * set can carry (all ≤ base), and re-stamped to the published main
+    * version at [[fastForward]]. Stamping re-runs per retry attempt so
+    * the recorded sequence always matches the slot actually won.
+    *
+    * `epoch` = (queryId, epochId) makes this a streaming epoch's commit:
+    * when the head's `queryId` txn watermark already covers the epoch, the
+    * engine is replaying a committed batch after a driver failure and the
+    * call publishes nothing (exactly-once); otherwise the watermark
+    * advances in the same commit. Main commits publish through
+    * [[writeManifest]], so commit hooks fire; branch commits do not.
+    * Returns the published version (branch: ordinal K), or -1 for a
+    * replayed epoch.
     */
-  def commitManifestEq(dir: Path, op: String = "")(
-      update: (Seq[FileEntry], Seq[EqDelete], Int) => (Seq[FileEntry], Seq[EqDelete])): Int = {
+  def commitManifestEq(dir: Path, op: String = "", branch: Option[String] = None,
+      epoch: Option[(String, Long)] = None)(
+      update: (Seq[FileEntry], Seq[EqDelete], Long) => (Seq[FileEntry], Seq[EqDelete])): Int = {
+    val base = branch.fold(0)(branchBase(dir, _))
     while (true) {
-      val cur = currentVersion(dir)
-      val m =
-        if (cur < 0) Manifest(0L,
-          partFiles(dir).map(p => FileEntry(p.getFileName.toString, Map.empty)),
-          Map.empty[String, Long])
-        else readManifestFull(dir, cur)
-      val v = cur + 1
-      val (files, eq) = update(m.files, m.eqDels, v)
+      val (head, m) = branch match {
+        case Some(b) =>
+          val k = branchHead(dir, b)
+          require(k >= 0, s"graft mem catalog: no branch '$b' on $dir")
+          (k, readManifestPath(branchManifestPath(dir, b, k)))
+        case None =>
+          val cur = currentVersion(dir)
+          (cur, if (cur >= 0) readManifestFull(dir, cur) else Manifest(0L,
+            partFiles(dir).map(p => FileEntry(p.getFileName.toString, Map.empty)), Map.empty))
+      }
+      if (epoch.exists { case (q, e) => m.txns.getOrElse(q, -1L) >= e }) return -1
+      val seq = (base + head + 1).toLong
+      val (files, eq) = update(m.files, m.eqDels, seq)
       val prior = m.files.map(_.name).toSet
       val next = files.distinctBy(_.name).map { e =>
         if (!prior(e.name) && !e.stats.contains("#seq"))
-          e.copy(stats = e.stats + ("#seq" -> (v.toLong, v.toLong)))
+          e.copy(stats = e.stats + ("#seq" -> (seq, seq)))
         else e
       }
+      val txns = m.txns ++ epoch // watermarks carry forward
       try {
-        writeManifest(dir, v, next, m.txns, op, eq) // txn watermarks carry forward
-        return v
+        branch match {
+          case Some(b) =>
+            publishManifestAt(dir, branchManifestPath(dir, b, head + 1), next, txns, op, eq)
+          case None => writeManifest(dir, head + 1, next, txns, op, eq)
+        }
+        return head + 1
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => // lost the race; retry
       }
@@ -2632,118 +2626,39 @@ object MemCatalog {
   }
 
   /** One streaming epoch's commit: append `fresh` and record the epoch
-    * watermark for `queryId` — UNLESS the watermark already covers this
-    * epoch, in which case the engine is replaying a committed batch after
-    * a driver failure and the commit must be a no-op (exactly-once).
+    * watermark for `queryId`; a replayed epoch commits nothing.
     * Returns true iff this call published.
     */
   def commitStreamingEpoch(dir: Path, queryId: String, epochId: Long,
-      fresh: Seq[FileEntry]): Boolean = {
-    while (true) {
-      val cur = currentVersion(dir)
-      val m = if (cur < 0) Manifest(0L, partFiles(dir).map(p =>
-        FileEntry(p.getFileName.toString, Map.empty)), Map.empty)
-      else readManifestFull(dir, cur)
-      if (m.txns.getOrElse(queryId, -1L) >= epochId) return false // replayed epoch
-      val prior = m.files.map(_.name).toSet
-      val next = (m.files ++ fresh).distinctBy(_.name).map { e =>
-        if (!prior(e.name) && !e.stats.contains("#seq"))
-          e.copy(stats = e.stats + ("#seq" -> ((cur + 1).toLong, (cur + 1).toLong)))
-        else e
-      }
-      try {
-        writeManifest(dir, cur + 1, next, m.txns + (queryId -> epochId),
-          "streaming-append", m.eqDels)
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => // lost the race; retry
-      }
-    }
-    false // unreachable
-  }
+      fresh: Seq[FileEntry]): Boolean =
+    commitManifestEq(dir, "streaming-append", epoch = Some(queryId -> epochId)) {
+      (files, eq, _) => (files ++ fresh, eq)
+    } >= 0
 
-  /** One CDC-APPLY epoch's commit on the TARGET table: append the
-    * epoch's insert part files AND the epoch's equality delete in ONE
-    * manifest commit (the delete's sequence = the published version, so
-    * it masks strictly-older data while the same epoch's inserts — whose
-    * `#seq` stamps to the same version — survive it: within-epoch
-    * upserts work, reinserts after an earlier epoch's delete work).
-    * Replay-idempotent exactly like [[commitStreamingEpoch]]: the
+  /** One CDC-APPLY epoch's commit on the TARGET table, on main or on the
+    * `branch` given: append the epoch's insert part files AND the epoch's
+    * equality delete in ONE manifest commit (the delete's sequence = the
+    * commit's, so it masks strictly-older data while the same epoch's
+    * inserts — whose `#seq` stamps to the same sequence — survive it:
+    * within-epoch upserts work, reinserts after an earlier epoch's delete
+    * work). Replay-idempotent exactly like [[commitStreamingEpoch]]: the
     * `queryId -> epochId` txn watermark makes a recovering driver's
-    * re-commit a no-op. Returns true iff this call published.
+    * re-commit a no-op. On a branch — the write-audit-publish shape for
+    * CDC ingestion (Iceberg's `spark.wap.branch` applied to a changelog
+    * pipeline) — epochs land on an UNPUBLISHED audit chain that main
+    * readers never see, [[fastForward]] publishes the audited result in
+    * one commit (converting the branch-born eq-deletes to positional
+    * vectors, so main's sequencing invariant survives), and idempotence
+    * is BRANCH-LOCAL: the watermark rides the branch chain, while the
+    * fork-point watermarks inherited from main keep a pre-existing main
+    * pipeline's replays correct too. Returns true iff this call published.
     */
-  def commitStreamingEpochCdc(dir: Path, queryId: String, epochId: Long,
-      fresh: Seq[FileEntry], eqCols: Seq[String], delFile: Option[String]): Boolean = {
-    while (true) {
-      val cur = currentVersion(dir)
-      val m = if (cur < 0) Manifest(0L, partFiles(dir).map(p =>
-        FileEntry(p.getFileName.toString, Map.empty)), Map.empty)
-      else readManifestFull(dir, cur)
-      if (m.txns.getOrElse(queryId, -1L) >= epochId) return false // replayed epoch
-      val v = cur + 1
-      val prior = m.files.map(_.name).toSet
-      val next = (m.files ++ fresh).distinctBy(_.name).map { e =>
-        if (!prior(e.name) && !e.stats.contains("#seq"))
-          e.copy(stats = e.stats + ("#seq" -> (v.toLong, v.toLong)))
-        else e
-      }
-      val eq = m.eqDels ++ delFile.map(f => EqDelete(v.toLong, eqCols, f))
-      try {
-        writeManifest(dir, v, next, m.txns + (queryId -> epochId),
-          "streaming-cdc-apply", eq)
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => // lost the race; retry
-      }
-    }
-    false // unreachable
-  }
-
-  /** One CDC-APPLY epoch's commit on a BRANCH of the target table — the
-    * write-audit-publish shape for CDC ingestion (Iceberg's
-    * `spark.wap.branch` applied to a changelog pipeline): epochs land
-    * their insert files and equality-delete sidecars on an UNPUBLISHED
-    * audit branch (same data dir, branch manifest chain), queries on
-    * main never see mid-audit state, and [[fastForward]] publishes the
-    * audited result in one commit — converting the branch-born
-    * eq-deletes to positional vectors exactly as it does for batch
-    * branch DML, so main's sequencing invariant survives. Idempotence
-    * is BRANCH-LOCAL: the `queryId -> epochId` watermark rides the
-    * branch manifest chain, so a recovering driver's replayed epoch
-    * no-ops on the branch just as [[commitStreamingEpochCdc]] no-ops on
-    * main; the fork-point watermarks inherited from main keep a
-    * pre-existing main pipeline's replays correct too. Sequence scoping
-    * is branch-relative (`base + k + 1`), giving the same within-epoch
-    * upsert / cross-epoch reinsert semantics as the main path. Returns
-    * true iff this call published.
-    */
-  def commitStreamingEpochCdcBranch(dir: Path, name: String, queryId: String,
+  def commitStreamingEpochCdc(dir: Path, branch: Option[String], queryId: String,
       epochId: Long, fresh: Seq[FileEntry], eqCols: Seq[String],
-      delFile: Option[String]): Boolean = {
-    val base = branchBase(dir, name)
-    while (true) {
-      val k = branchHead(dir, name)
-      require(k >= 0, s"graft mem catalog: no branch '$name' on $dir")
-      val m = readManifestPath(branchManifestPath(dir, name, k))
-      if (m.txns.getOrElse(queryId, -1L) >= epochId) return false // replayed epoch
-      val seq = (base + k + 1).toLong
-      val prior = m.files.map(_.name).toSet
-      val next = (m.files ++ fresh).distinctBy(_.name).map { e =>
-        if (!prior(e.name) && !e.stats.contains("#seq"))
-          e.copy(stats = e.stats + ("#seq" -> (seq, seq)))
-        else e
-      }
-      val eq = m.eqDels ++ delFile.map(f => EqDelete(seq, eqCols, f))
-      try {
-        publishManifestAt(dir, branchManifestPath(dir, name, k + 1), next,
-          m.txns + (queryId -> epochId), "streaming-cdc-apply", eq)
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => // lost the race; retry
-      }
-    }
-    false // unreachable
-  }
+      delFile: Option[String]): Boolean =
+    commitManifestEq(dir, "streaming-cdc-apply", branch, Some(queryId -> epochId)) {
+      (files, eq, seq) => (files ++ fresh, eq ++ delFile.map(EqDelete(seq, eqCols, _)))
+    } >= 0
 
   /** SHALLOW CLONE — Delta's `CREATE TABLE ... SHALLOW CLONE`: a new
     * table whose v0 manifest REFERENCES the source's live files by
@@ -2966,16 +2881,11 @@ private[v2] class StagedMemTable(ident: String, staging: Path, target: Path,
           else stagedProps.get("clusterParts").map(_.toInt).getOrElse(0)
         // staged writers write straight into the (invisible) staging dir;
         // the whole-directory publish IS the commit. CTAS constraints
-        // (props already staged) gate the very first rows too.
+        // (props already staged) gate the very first rows too. Staged
+        // CTAS writes don't request an ordering, so no sort stamp (the
+        // first OPTIMIZE re-clusters); partition stamps apply.
         override def toBatch: BatchWrite = new MemBatchWrite(staging, tblSchema,
-          direct = true,
-          checks = MemCheck.compile(stagedProps, tblSchema),
-          bloomFor = MemBloom.colsOf(stagedProps),
-          // staged CTAS writes don't request an ordering, so no sort stamp
-          // (the first OPTIMIZE re-clusters); partition stamps apply
-          partSpec = stagedProps.get("graft.partition"),
-          ndvFor = MemNdv.colsOf(stagedProps),
-          histFor = MemHist.colsOf(stagedProps),
+          inflight = None, MemWritePolicy.of(stagedProps, tblSchema),
           route = routeSpecs.nonEmpty)
       }
     }
@@ -3023,8 +2933,8 @@ private[v2] class StagedMemTable(ident: String, staging: Path, target: Path,
 }
 
 /** A committed table: readable (one partition per part file, columns
-  * pruned at decode), appendable (INSERT INTO stages under `_inflight`
-  * and moves in at driver commit), and filter-DELETABLE
+  * pruned at decode), appendable (INSERT INTO stages under its own
+  * `_inflight-<queryId>` and moves in at driver commit), and filter-DELETABLE
   * (`SupportsDeleteV2`): `DELETE FROM t WHERE ...` rewrites each part
   * file copy-on-write, keeping only non-matching rows, and swaps files
   * atomically — the file-granularity COW the lakehouse formats use for
@@ -3174,36 +3084,21 @@ private[v2] class MemTable(ident: String, dir: Path, tblSchema: StructType,
     else predicates.forall(p => MemDelete.compile(p, tblSchema).isDefined)
 
   override def deleteWhere(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    if (branch.isDefined) {
-      // BRANCH EQUALITY DELETE — the only shape canDeleteWhere admits on
-      // a branch-pinned handle: the key-tuple sidecar plus one BRANCH
-      // commit appending the #eqdel line at the commit's branch-relative
-      // sequence. Zero data files opened; branch audit reads mask it at
-      // scan time (strictly-older files only, so a key REINSERTED on the
-      // branch after the delete survives), main sees nothing until
-      // fastForward converts it to positional vectors at publish.
+    if (branch.isDefined || morMode) {
+      // EQUALITY DELETE: the only shape canDeleteWhere admits on MoR and
+      // on a branch-pinned handle. Write the key-tuple sidecar, then one
+      // commit appending the #eqdel line at that commit's sequence (on a
+      // branch, the branch-relative one) — no data file opened,
+      // O(deleted keys) total. Readers mask strictly-older files only, so
+      // a key REINSERTED after the delete survives; main sees a branch's
+      // delete only once fastForward converts it to positional vectors.
       val rows = MemEqDelete.compile(predicates, eqDeleteKeys, tblSchema)
         .getOrElse(throw new UnsupportedOperationException(
-          "graft mem catalog: branch delete shape not equality on the " +
-            s"declared eqDeleteKeys (${eqDeleteKeys.mkString(",")})"))
+          s"graft mem catalog: ${branch.fold("")(_ => "branch ")}delete shape not " +
+            s"equality on the declared eqDeleteKeys (${eqDeleteKeys.mkString(",")})"))
       val f = MemCatalog.writeEqDelete(dir, rows)
-      MemCatalog.commitBranch(dir, branch.get, "eqdelete") { (files, eq, seq) =>
+      MemCatalog.commitManifestEq(dir, "eqdelete", branch) { (files, eq, seq) =>
         (files, eq :+ MemCatalog.EqDelete(seq, eqDeleteKeys, f))
-      }
-      return
-    }
-    if (morMode) {
-      // EQUALITY DELETE: the only shape canDeleteWhere admits on MoR.
-      // Write the key-tuple sidecar, then one manifest commit appending
-      // the #eqdel line at the published version's sequence — no data
-      // file opened, O(deleted keys) total
-      val rows = MemEqDelete.compile(predicates, eqDeleteKeys, tblSchema)
-        .getOrElse(throw new UnsupportedOperationException(
-          "graft mem catalog: delete shape not equality on the declared " +
-            s"eqDeleteKeys (${eqDeleteKeys.mkString(",")})"))
-      val f = MemCatalog.writeEqDelete(dir, rows)
-      MemCatalog.commitManifestEq(dir, "eqdelete") { (files, eq, v) =>
-        (files, eq :+ MemCatalog.EqDelete(v.toLong, eqDeleteKeys, f))
       }
       return
     }
@@ -3607,17 +3502,14 @@ private[v2] class MemTable(ident: String, dir: Path, tblSchema: StructType,
           "graft mem catalog: batch writes into a CDC landing table are " +
             "not supported — stream the changelog (writeStream.toTable) so " +
             "every epoch lands AND applies")
-        new MemBatchWrite(dir, tblSchema, direct = false, inflight, overwriteAll,
-          MemCheck.compile(props, tblSchema), MemBloom.colsOf(props),
+        new MemBatchWrite(dir, tblSchema, Some(inflight), MemWritePolicy.of(props, tblSchema),
+          overwriteAll,
           sortedBy = if (clusterCols.isEmpty) None else Some(clusterCols.mkString(",")),
-          partSpec = props.get("graft.partition"),
           route = routeSpecs.nonEmpty,
           // `.option("branch", name)` on a DataFrameWriterV2 append —
           // the WAP write leg (Iceberg's spark.wap.branch / toBranch);
           // a branch-pinned handle appends to its own branch by default
-          branch = Option(info.options.get("branch")).orElse(branch),
-          ndvFor = MemNdv.colsOf(props),
-          histFor = MemHist.colsOf(props))
+          branch = Option(info.options.get("branch")).orElse(branch))
       }
       /** `writeStream.toTable` — each epoch appends its part files in ONE
         * manifest commit carrying the epoch watermark, so a replayed
@@ -3647,9 +3539,7 @@ private[v2] class MemTable(ident: String, dir: Path, tblSchema: StructType,
               props.getOrElse("graft.cdcOp", "op"), applyBranch)
           case None =>
             new MemStreamingWrite(dir, tblSchema, info.queryId(),
-              MemCheck.compile(props, tblSchema), MemBloom.colsOf(props),
-              props.get("graft.partition"), MemNdv.colsOf(props),
-              MemHist.colsOf(props), route = routeSpecs.nonEmpty)
+              MemWritePolicy.of(props, tblSchema), route = routeSpecs.nonEmpty)
         }
       }
     }
@@ -4038,22 +3928,13 @@ private[v2] class MemCowWrite(dir: Path, schema: StructType,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     // COW post-images re-validate too: an UPDATE can't write a value the
     // table's CHECK constraints forbid
-    new MemWriterFactory(dir.toString, schema, direct = false, staging,
-      MemCheck.compile(MemCatalog.readProps(dir), schema),
-      MemBloom.colsOf(MemCatalog.readProps(dir)),
-      MemCatalog.readProps(dir).get("graft.partition"),
-      MemNdv.colsOf(MemCatalog.readProps(dir)),
-      MemHist.colsOf(MemCatalog.readProps(dir)))
+    new MemWriterFactory(dir.toString, schema, Some(staging),
+      MemWritePolicy.of(MemCatalog.readProps(dir), schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val replaced: Map[String, Option[String]] =
       Option(op.scannedEntries.get).getOrElse(Seq.empty).toMap
-    val fresh = messages.collect { case MemCommit(rows, staged, stats, blooms, ndvs, hists, ptvs) if rows > 0 =>
-      val src = Paths.get(staged)
-      Files.move(src, dir.resolve(src.getFileName), StandardCopyOption.REPLACE_EXISTING)
-      MemCatalog.FileEntry(src.getFileName.toString, stats, blooms = blooms, ndvs = ndvs,
-        hists = hists, ptvs = ptvs)
-    }
+    val fresh = MemCommit.publish(messages, dir)
     // the group replacement is a MANIFEST edit: scanned files retire
     // (staying on disk for older snapshots), new post-image files go live.
     // CONFLICT VALIDATION (Iceberg's optimistic COW rule): the retry loop
@@ -4116,12 +3997,8 @@ private[v2] class MemCowWrite(dir: Path, schema: StructType,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case MemCommit(_, staged, _, _, _, _, _) if staged.nonEmpty =>
-      Files.deleteIfExists(Paths.get(staged))
-    }
-    MemCatalog.deleteRecursively(dir.resolve(staging))
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    MemCommit.discard(messages, Some(dir.resolve(staging)))
 }
 
 /** MERGE-ON-READ row-level DML (`SupportsDelta`) — the OTHER half of the
@@ -4216,20 +4093,11 @@ private[v2] class MemMorWrite(dir: Path, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.DeltaWriterFactory =
     new MemMorWriterFactory(dir.toString, schema, staging,
-      MemCheck.compile(MemCatalog.readProps(dir), schema),
-      MemBloom.colsOf(MemCatalog.readProps(dir)),
-      MemCatalog.readProps(dir).get("graft.partition"),
-      MemNdv.colsOf(MemCatalog.readProps(dir)),
-      MemHist.colsOf(MemCatalog.readProps(dir)))
+      MemWritePolicy.of(MemCatalog.readProps(dir), schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val parts = messages.collect { case m: MemMorCommit => m }
-    val fresh = parts.map(_.insert).collect { case MemCommit(rows, staged, stats, blooms, ndvs, hists, ptvs) if rows > 0 =>
-      val src = Paths.get(staged)
-      Files.move(src, dir.resolve(src.getFileName), StandardCopyOption.REPLACE_EXISTING)
-      MemCatalog.FileEntry(src.getFileName.toString, stats, blooms = blooms, ndvs = ndvs,
-        hists = hists, ptvs = ptvs)
-    }
+    val fresh = MemCommit.publish(parts.map(_.insert), dir)
     val dels: Map[String, Set[Long]] = parts.flatMap(_.deletes.toSeq)
       .groupBy(_._1).map { case (f, ps) => f -> ps.flatMap(_._2).toSet }
     def fold(live: Seq[MemCatalog.FileEntry]): Seq[MemCatalog.FileEntry] = {
@@ -4251,38 +4119,31 @@ private[v2] class MemMorWrite(dir: Path, schema: StructType,
         }
       } ++ fresh
     }
+    // branch-staged DML: the SAME dv-compose fold, committed onto the
+    // branch's manifest chain — main readers see nothing until
+    // fastForward publishes the audited head
+    val verb = op.command().name.toLowerCase
     try {
-      branch match {
-        // branch-staged DML: the SAME dv-compose fold, committed onto
-        // the branch's manifest chain — main readers see nothing until
-        // fastForward publishes the audited head
-        case Some(b) => MemCatalog.commitBranch(dir, b,
-          s"branch-${op.command().name.toLowerCase}")((live, eq, _) => (fold(live), eq))
-        case None =>
-          MemCatalog.commitManifest(dir, op.command().name.toLowerCase)(fold)
+      MemCatalog.commitManifestEq(dir, branch.fold(verb)(_ => s"branch-$verb"), branch) {
+        (live, eq, _) => (fold(live), eq)
       }
     } finally {
       MemCatalog.deleteRecursively(dir.resolve(staging))
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case MemMorCommit(MemCommit(_, staged, _, _, _, _, _), _) if staged.nonEmpty =>
-      Files.deleteIfExists(Paths.get(staged))
-    }
-    MemCatalog.deleteRecursively(dir.resolve(staging))
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    MemCommit.discard(messages.collect { case m: MemMorCommit => m.insert },
+      Some(dir.resolve(staging)))
 }
 
 private[v2] class MemMorWriterFactory(dest: String, schema: StructType, staging: String,
-    checks: Seq[MemCheck.Rule] = Seq.empty, bloomFor: Seq[String] = Seq.empty,
-    partSpec: Option[String] = None, ndvFor: Seq[String] = Seq.empty,
-    histFor: Seq[String] = Seq.empty)
+    policy: MemWritePolicy)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-      private val inserts = new MemWriterFactory(dest, schema, direct = false, staging,
-        checks, bloomFor, partSpec, ndvFor, histFor).createWriter(partitionId, taskId)
+      private val inserts = new MemWriterFactory(dest, schema, Some(staging), policy)
+        .createWriter(partitionId, taskId)
       private val deletes =
         scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
 
@@ -6004,14 +5865,38 @@ private[v2] class MemReaderFactory(full: StructType, wanted: Array[String],
   }
 }
 
-private[v2] case class MemCommit(rows: Long, staged: String,
-    stats: Map[String, (Long, Long)] = Map.empty,
-    blooms: Map[String, String] = Map.empty,
-    ndvs: Map[String, String] = Map.empty,
-    hists: Map[String, String] = Map.empty,
-    // raw string partition values for pure string-identity files
-    // (FileEntry.ptvs' writer-side leg)
-    ptvs: Map[String, String] = Map.empty) extends WriterCommitMessage
+/** One writer task's output: the part file it staged (`staged` is empty
+  * when the task wrote no rows) and the manifest entry its writer built
+  * for that file — stats, sketches and partition values.
+  */
+private[v2] case class MemCommit(staged: String, entry: MemCatalog.FileEntry)
+    extends WriterCommitMessage
+
+private[v2] object MemCommit {
+  /** The driver side of every staged write: move each staged part into
+    * `dir` (a direct write's parts already sit there: `move = false`)
+    * and return the entries the commit publishes.
+    */
+  def publish(messages: Iterable[WriterCommitMessage], dir: Path,
+      move: Boolean = true): Seq[MemCatalog.FileEntry] =
+    MemMultiCommit.flatten(messages).collect { case MemCommit(staged, entry) if staged.nonEmpty =>
+      if (move) Files.move(Paths.get(staged), dir.resolve(entry.name),
+        StandardCopyOption.REPLACE_EXISTING)
+      entry
+    }.toSeq
+
+  /** Abort a staged write: delete every staged part, then the write's own
+    * staging dir (None for a direct write, whose dir the abort of the
+    * staged table removes).
+    */
+  def discard(messages: Iterable[WriterCommitMessage], staging: Option[Path]): Unit = {
+    MemMultiCommit.flatten(messages).foreach {
+      case MemCommit(staged, _) if staged.nonEmpty => Files.deleteIfExists(Paths.get(staged))
+      case _ => ()
+    }
+    staging.foreach(MemCatalog.deleteRecursively)
+  }
+}
 
 /** A fanout writer's task message: one [[MemCommit]] per partition-pure
   * file the task emitted (transform-aware routing).
@@ -6021,56 +5906,53 @@ private[v2] case class MemMultiCommit(children: Seq[MemCommit])
 
 private[v2] object MemMultiCommit {
   /** One flat MemCommit stream regardless of writer shape. */
-  def flatten(messages: Array[WriterCommitMessage]): Array[WriterCommitMessage] =
+  def flatten(messages: Iterable[WriterCommitMessage]): Iterable[WriterCommitMessage] =
     messages.flatMap {
       case MemMultiCommit(cs) => cs
       case m => Seq(m)
     }
 }
 
-/** `direct = true`: writers write into the destination dir itself (a
-  * staged table's whole dir is invisible pre-publish). `direct = false`
-  * (append to a live table): writers stage under `_inflight` and only the
-  * driver commit moves parts into the visible dir.
+/** What a table's properties ask of every part file a write emits: the
+  * CHECK constraints each row must pass, the columns that get bloom,
+  * NDV and histogram sketches, and the partition spec whose transform
+  * ranges are stamped. Derived once per statement by [[MemWritePolicy.of]].
   */
-private[v2] class MemBatchWrite(dest: Path, schema: StructType, direct: Boolean,
-    inflight: String = "_inflight", overwriteAll: Boolean = false,
-    checks: Seq[MemCheck.Rule] = Seq.empty,
-    bloomFor: Seq[String] = Seq.empty,
+private[v2] case class MemWritePolicy(checks: Seq[MemCheck.Rule], bloomFor: Seq[String],
+    partSpec: Option[String], ndvFor: Seq[String], histFor: Seq[String])
+
+private[v2] object MemWritePolicy {
+  val Empty = MemWritePolicy(Seq.empty, Seq.empty, None, Seq.empty, Seq.empty)
+
+  def of(props: Map[String, String], schema: StructType): MemWritePolicy =
+    MemWritePolicy(MemCheck.compile(props, schema), MemBloom.colsOf(props),
+      props.get("graft.partition"), MemNdv.colsOf(props), MemHist.colsOf(props))
+}
+
+/** `inflight = None`: writers write into the destination dir itself (a
+  * staged table's whole dir is invisible pre-publish). `Some(d)` (append
+  * to a live table): writers stage under `dest/d`, a dir of this write's
+  * own, and only the driver commit moves parts into the visible dir.
+  */
+private[v2] class MemBatchWrite(dest: Path, schema: StructType, inflight: Option[String],
+    policy: MemWritePolicy, overwriteAll: Boolean = false,
     // the cluster key Spark sorted this write by (RequiresDistribution-
     // AndOrdering) — stamped on each file as its sort-order metadata
     sortedBy: Option[String] = None,
-    partSpec: Option[String] = None,
     // write option `branch`: the commit lands on the named branch's
     // manifest chain instead of main — the WAP write leg (part files
     // stage and move in identically; only the publish target differs)
     branch: Option[String] = None,
-    ndvFor: Seq[String] = Seq.empty,
-    histFor: Seq[String] = Seq.empty,
     route: Boolean = false) extends BatchWrite {
+  private val staging = inflight.map(dest.resolve)
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new MemWriterFactory(dest.toString, schema, direct, inflight, checks, bloomFor,
-      partSpec, ndvFor, histFor, route)
+    new MemWriterFactory(dest.toString, schema, inflight, policy, route)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = MemMultiCommit.flatten(messages)
-      .collect { case MemCommit(rows, staged, stats, blooms, ndvs, hists, ptvs) if rows > 0 =>
-      val src = Paths.get(staged)
-      if (!direct)
-        Files.move(src, dest.resolve(src.getFileName), StandardCopyOption.REPLACE_EXISTING)
-      MemCatalog.FileEntry(src.getFileName.toString, stats, blooms = blooms,
-        sortedBy = sortedBy, ndvs = ndvs, hists = hists, ptvs = ptvs)
-    }
-    if (branch.isDefined) {
-      require(!overwriteAll,
-        "graft mem catalog: INSERT OVERWRITE cannot target a branch")
-      MemCatalog.commitBranch(dest, branch.get, "branch-append") {
-        (live, eq, _) => (live ++ fresh, eq)
-      }
-      MemCatalog.deleteRecursively(dest.resolve(inflight))
-      return
-    }
-    if (direct) {
+    val fresh = MemCommit.publish(messages, dest, move = staging.isDefined)
+      .map(_.copy(sortedBy = sortedBy))
+    if (staging.isEmpty) {
       // staged CTAS/RTAS: the publishing commitStagedChanges builds _v0 —
       // park the per-file stats in a sidecar it reads and removes
       val tmp = Files.createTempFile(dest, "_stats", ".tmp")
@@ -6082,17 +5964,18 @@ private[v2] class MemBatchWrite(dest: Path, schema: StructType, direct: Boolean,
       // on retry because each committer only adds its own files);
       // overwrite = the live set REPLACED wholesale — retired files stay
       // on disk, so the pre-overwrite snapshot remains time-travelable
-      MemCatalog.commitManifest(dest, if (overwriteAll) "overwrite" else "append")(
-        live => if (overwriteAll) fresh.toSeq else live ++ fresh)
-      MemCatalog.deleteRecursively(dest.resolve(inflight))
+      require(branch.isEmpty || !overwriteAll,
+        "graft mem catalog: INSERT OVERWRITE cannot target a branch")
+      val op = if (branch.isDefined) "branch-append" else if (overwriteAll) "overwrite" else "append"
+      MemCatalog.commitManifestEq(dest, op, branch) {
+        (live, eq, _) => (if (overwriteAll) fresh else live ++ fresh, eq)
+      }
+      staging.foreach(MemCatalog.deleteRecursively)
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    MemMultiCommit.flatten(messages)
-      .collect { case MemCommit(_, staged, _, _, _, _, _) if staged.nonEmpty =>
-        Files.deleteIfExists(Paths.get(staged))
-      }
+    MemCommit.discard(messages, staging)
 }
 
 /** Streaming epochs append through the same staged-part machinery as
@@ -6102,53 +5985,36 @@ private[v2] class MemBatchWrite(dest: Path, schema: StructType, direct: Boolean,
   * micro-batch, replay-idempotent via the recorded epoch watermark.
   */
 private[v2] class MemStreamingWrite(dir: Path, schema: StructType, queryId: String,
-    checks: Seq[MemCheck.Rule] = Seq.empty, bloomFor: Seq[String] = Seq.empty,
-    partSpec: Option[String] = None, ndvFor: Seq[String] = Seq.empty,
-    histFor: Seq[String] = Seq.empty, route: Boolean = false)
+    policy: MemWritePolicy, route: Boolean = false)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
   private def inflight(epochId: Long) = s"_inflight-$queryId-$epochId"
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    MemStreamingWriterFactory(dir.toString, schema, queryId, checks, bloomFor,
-      partSpec, ndvFor, histFor, route)
+    MemStreamingWriterFactory(dir.toString, schema, queryId, policy, route)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = MemMultiCommit.flatten(messages)
-      .collect { case MemCommit(rows, staged, stats, blooms, ndvs, hists, ptvs) if rows > 0 =>
-      val src = Paths.get(staged)
-      Files.move(src, dir.resolve(src.getFileName), StandardCopyOption.REPLACE_EXISTING)
-      MemCatalog.FileEntry(src.getFileName.toString, stats, blooms = blooms, ndvs = ndvs,
-        hists = hists, ptvs = ptvs)
-    }
-    val published = MemCatalog.commitStreamingEpoch(dir, queryId, epochId, fresh.toSeq)
+    val fresh = MemCommit.publish(messages, dir)
+    val published = MemCatalog.commitStreamingEpoch(dir, queryId, epochId, fresh)
     if (!published) fresh.foreach(e => Files.deleteIfExists(dir.resolve(e.name)))
     MemCatalog.deleteRecursively(dir.resolve(inflight(epochId)))
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    MemMultiCommit.flatten(messages)
-      .collect { case MemCommit(_, staged, _, _, _, _, _) if staged.nonEmpty =>
-        Files.deleteIfExists(Paths.get(staged))
-      }
-    MemCatalog.deleteRecursively(dir.resolve(inflight(epochId)))
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    MemCommit.discard(messages, Some(dir.resolve(inflight(epochId))))
 }
 
 /** Ships to executors (the StreamingWrite itself stays on the driver):
   * routes each task's rows through the per-epoch staging dir.
   */
 private[v2] case class MemStreamingWriterFactory(dest: String, schema: StructType,
-    queryId: String, checks: Seq[MemCheck.Rule] = Seq.empty,
-    bloomFor: Seq[String] = Seq.empty, partSpec: Option[String] = None,
-    ndvFor: Seq[String] = Seq.empty, histFor: Seq[String] = Seq.empty,
-    route: Boolean = false)
+    queryId: String, policy: MemWritePolicy, route: Boolean)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new MemWriterFactory(dest, schema, direct = false, s"_inflight-$queryId-$epochId",
-      checks, bloomFor, partSpec, ndvFor, histFor, route).createWriter(partitionId, taskId)
+    new MemWriterFactory(dest, schema, Some(s"_inflight-$queryId-$epochId"), policy, route)
+      .createWriter(partitionId, taskId)
 }
 
 /** STREAMING CDC APPLY — the Flink→Iceberg upsert-sink model: a
@@ -6209,54 +6075,37 @@ private[v2] class MemCdcStreamingWrite(landing: Path, landingSchema: StructType,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     MemCdcWriterFactory(landing.toString, landingSchema, target.toString, targetSchema,
       queryId, opIdx, keyIdxs.toArray, valueFields.map(_._2).toArray,
-      MemCheck.compile(MemCatalog.readProps(landing), landingSchema),
-      MemCheck.compile(targetProps, targetSchema),
-      MemBloom.colsOf(targetProps), targetProps.get("graft.partition"),
-      MemNdv.colsOf(targetProps), MemHist.colsOf(targetProps))
+      // the changelog landing enforces its CHECKs only; the applied
+      // target files take the target's full policy
+      MemWritePolicy.Empty.copy(
+        checks = MemCheck.compile(MemCatalog.readProps(landing), landingSchema)),
+      MemWritePolicy.of(targetProps, targetSchema))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val parts = messages.collect { case m: MemCdcCommit => m }
     // TARGET first: the applied mirror is the product; whichever side a
     // crash strands, the replayed epoch no-ops the published one
-    val applied = parts.map(_.apply).collect {
-      case MemCommit(rows, staged, stats, blooms, ndvs, hists, ptvs) if rows > 0 =>
-        val src = Paths.get(staged)
-        Files.move(src, target.resolve(src.getFileName), StandardCopyOption.REPLACE_EXISTING)
-        MemCatalog.FileEntry(src.getFileName.toString, stats, blooms = blooms,
-          ndvs = ndvs, hists = hists, ptvs = ptvs)
-    }
+    val applied = MemCommit.publish(parts.map(_.apply), target)
     val delKeys = parts.flatMap(_.delKeys).distinct
     val delFile = if (delKeys.isEmpty) None
       else Some(MemCatalog.writeEqDelete(target, delKeys))
-    val appliedPub = applyBranch match {
-      case Some(b) => MemCatalog.commitStreamingEpochCdcBranch(
-        target, b, queryId, epochId, applied.toSeq, eqCols, delFile)
-      case None => MemCatalog.commitStreamingEpochCdc(
-        target, queryId, epochId, applied.toSeq, eqCols, delFile)
-    }
+    val appliedPub = MemCatalog.commitStreamingEpochCdc(
+      target, applyBranch, queryId, epochId, applied, eqCols, delFile)
     if (!appliedPub) { // replayed epoch: unpublished files/sidecar are orphans
       applied.foreach(e => Files.deleteIfExists(target.resolve(e.name)))
       delFile.foreach(f => Files.deleteIfExists(target.resolve(f)))
     }
-    val landed = parts.map(_.land).collect {
-      case MemCommit(rows, staged, stats, blooms, ndvs, hists, ptvs) if rows > 0 =>
-        val src = Paths.get(staged)
-        Files.move(src, landing.resolve(src.getFileName), StandardCopyOption.REPLACE_EXISTING)
-        MemCatalog.FileEntry(src.getFileName.toString, stats, blooms = blooms,
-          ndvs = ndvs, hists = hists, ptvs = ptvs)
-    }
-    val landPub = MemCatalog.commitStreamingEpoch(landing, queryId, epochId, landed.toSeq)
+    val landed = MemCommit.publish(parts.map(_.land), landing)
+    val landPub = MemCatalog.commitStreamingEpoch(landing, queryId, epochId, landed)
     if (!landPub) landed.foreach(e => Files.deleteIfExists(landing.resolve(e.name)))
     MemCatalog.deleteRecursively(landing.resolve(landInflight(epochId)))
     MemCatalog.deleteRecursively(target.resolve(applyInflight(epochId)))
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case MemCdcCommit(l, a, _) =>
-      Seq(l, a).foreach(c => if (c.staged.nonEmpty) Files.deleteIfExists(Paths.get(c.staged)))
-    }
-    MemCatalog.deleteRecursively(landing.resolve(landInflight(epochId)))
-    MemCatalog.deleteRecursively(target.resolve(applyInflight(epochId)))
+    val parts = messages.collect { case m: MemCdcCommit => m }
+    MemCommit.discard(parts.map(_.land), Some(landing.resolve(landInflight(epochId))))
+    MemCommit.discard(parts.map(_.apply), Some(target.resolve(applyInflight(epochId))))
   }
 }
 
@@ -6270,19 +6119,16 @@ private[v2] case class MemCdcCommit(land: MemCommit, apply: MemCommit,
 private[v2] case class MemCdcWriterFactory(landing: String, landingSchema: StructType,
     target: String, targetSchema: StructType, queryId: String,
     opIdx: Int, keyIdxs: Array[Int], valueIdxs: Array[Int],
-    landChecks: Seq[MemCheck.Rule], targetChecks: Seq[MemCheck.Rule],
-    bloomFor: Seq[String], partSpec: Option[String],
-    ndvFor: Seq[String], histFor: Seq[String])
+    landPolicy: MemWritePolicy, targetPolicy: MemWritePolicy)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = new DataWriter[InternalRow] {
-    private val land = new MemWriterFactory(landing, landingSchema, direct = false,
-      s"_inflight-$queryId-$epochId", landChecks).createWriter(partitionId, taskId)
+    private val land = new MemWriterFactory(landing, landingSchema,
+      Some(s"_inflight-$queryId-$epochId"), landPolicy).createWriter(partitionId, taskId)
     // the apply part is a first-class target file: target CHECK
     // constraints, blooms, NDV and histogram sketches all apply
-    private val apply = new MemWriterFactory(target, targetSchema, direct = false,
-      s"_inflight-cdc-$queryId-$epochId", targetChecks, bloomFor, partSpec,
-      ndvFor, histFor).createWriter(partitionId, taskId)
+    private val apply = new MemWriterFactory(target, targetSchema,
+      Some(s"_inflight-cdc-$queryId-$epochId"), targetPolicy).createWriter(partitionId, taskId)
     private val dels = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
 
     private def keyTuple(record: InternalRow): Seq[String] =
@@ -6315,11 +6161,8 @@ private[v2] case class MemCdcWriterFactory(landing: String, landingSchema: Struc
   }
 }
 
-private[v2] class MemWriterFactory(dest: String, schema0: StructType, direct: Boolean,
-    inflight: String = "_inflight", checks: Seq[MemCheck.Rule] = Seq.empty,
-    bloomFor: Seq[String] = Seq.empty, partSpec: Option[String] = None,
-    ndvFor: Seq[String] = Seq.empty, histFor: Seq[String] = Seq.empty,
-    route: Boolean = false)
+private[v2] class MemWriterFactory(dest: String, schema0: StructType, inflight: Option[String],
+    policy: MemWritePolicy, route: Boolean = false)
     extends DataWriterFactory {
   /** The write schema with the table's PERSISTED field ids re-attached
     * by name (driver-side, once per factory): Spark rebuilds the write
@@ -6342,7 +6185,7 @@ private[v2] class MemWriterFactory(dest: String, schema0: StructType, direct: Bo
     */
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val specs: Seq[(MemPart.Spec, Int)] =
-      if (route) MemPart.specsWithIdx(partSpec, schema) else Seq.empty
+      if (route) MemPart.specsWithIdx(policy.partSpec, schema) else Seq.empty
     if (specs.isEmpty) single(partitionId, taskId)
     else new DataWriter[InternalRow] {
       private val writers =
@@ -6381,7 +6224,7 @@ private[v2] class MemWriterFactory(dest: String, schema0: StructType, direct: Bo
       // map as a virtual column whose KEY carries the spec
       // ("pt:bucket(4,okey)"), so a file written under an evolved-away
       // spec keeps pruning under the spec it was actually written with
-      private val pts: Seq[(MemPart.Spec, Int)] = MemPart.specsWithIdx(partSpec, schema)
+      private val pts: Seq[(MemPart.Spec, Int)] = MemPart.specsWithIdx(policy.partSpec, schema)
       private val ptLo = Array.fill(pts.length)(Long.MaxValue)
       private val ptHi = Array.fill(pts.length)(Long.MinValue)
       // per-transform NULL row count ("ptn:" stamp): a `pt:` range only
@@ -6399,25 +6242,25 @@ private[v2] class MemWriterFactory(dest: String, schema0: StructType, direct: Bo
       private val ptRawPure = Array.fill(pts.length)(true)
       // per-file bloom sketches for the configured equality-probe columns
       private val bloomCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if bloomFor.contains(f.name) => (f.name, i, f.dataType)
+        case (f, i) if policy.bloomFor.contains(f.name) => (f.name, i, f.dataType)
       }
       private val bloomBits = bloomCols.map(_ => Array.fill(MemBloom.Words)(0L))
       // per-file K-minimum-values distinct sketches for the CBO
       private val ndvCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if ndvFor.contains(f.name) => (f.name, i, f.dataType)
+        case (f, i) if policy.ndvFor.contains(f.name) => (f.name, i, f.dataType)
       }
       private val ndvTrackers = ndvCols.map(_ => new MemNdv.Tracker)
       // per-file value-distribution histograms for the CBO's range
       // selectivity — integral columns only, like the zone maps
       private val histCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if histFor.contains(f.name) &&
+        case (f, i) if policy.histFor.contains(f.name) &&
           (f.dataType == LongType || f.dataType == IntegerType) => (f.name, i, f.dataType)
       }
       private val histTrackers = histCols.map(_ => new MemHist.Tracker)
       private val lo = Array.fill(statCols.length)(Long.MaxValue)
       private val hi = Array.fill(statCols.length)(Long.MinValue)
       private lazy val staged: Path = {
-        val d = if (direct) Paths.get(dest) else Paths.get(dest, inflight)
+        val d = inflight.fold(Paths.get(dest))(Paths.get(dest, _))
         Files.createDirectories(d)
         Files.createTempFile(d, s"part-$partitionId-$taskId-", ".bin")
       }
@@ -6432,7 +6275,7 @@ private[v2] class MemWriterFactory(dest: String, schema0: StructType, direct: Bo
         // CHECK constraints gate every row BEFORE it reaches a part file:
         // a violation aborts the task, the driver aborts the statement,
         // and only staged (invisible) files ever held the bad row
-        MemCheck.enforce(checks, record)
+        MemCheck.enforce(policy.checks, record)
         var b = 0
         while (b < bloomCols.length) {
           val (_, i, dt) = bloomCols(b)
@@ -6501,37 +6344,32 @@ private[v2] class MemWriterFactory(dest: String, schema0: StructType, direct: Bo
         rows += 1
       }
 
-      override def commit(): WriterCommitMessage = {
-        if (rows > 0) out.close()
-        // "#rows" rides the stats map (the '#' can never be a schema
-        // column): exact per-file row counts give the planner a REAL
-        // numRows, not just byte sizes — the cardinality side of CBO
-        val stats = statCols.indices.collect {
-          case s if lo(s) <= hi(s) => statCols(s)._1 -> (lo(s), hi(s))
-        }.toMap + ("#rows" -> (rows, rows)) ++
-          pts.indices.collect { case p if ptLo(p) <= ptHi(p) =>
-            pts(p)._1.statKey -> (ptLo(p), ptHi(p)) } ++
-          pts.indices.map(p => ("ptn:" + pts(p)._1.render) -> (ptNulls(p), ptNulls(p)))
-        val ptvStamps = pts.indices.collect {
-          case p if ptStrId(p) && ptRawPure(p) && ptRaw(p) != null && ptNulls(p) == 0L =>
-            pts(p)._1.statKey -> ptRaw(p)
-        }.toMap
-        MemCommit(rows, if (rows > 0) staged.toString else "",
-          if (rows > 0) stats else Map.empty,
-          if (rows > 0)
-            bloomCols.indices.map(b =>
-              bloomCols(b)._1 -> MemBloom.encode(bloomBits(b))).toMap
-          else Map.empty,
-          if (rows > 0)
-            ndvCols.indices.map(n =>
-              ndvCols(n)._1 -> MemNdv.encode(ndvTrackers(n).minima)).toMap
-          else Map.empty,
-          if (rows > 0)
-            histCols.indices.map(h =>
-              histCols(h)._1 -> MemHist.encode(histTrackers(h).snapshot)).toMap
-          else Map.empty,
-          if (rows > 0) ptvStamps else Map.empty)
-      }
+      override def commit(): WriterCommitMessage =
+        if (rows == 0) MemCommit("", MemCatalog.FileEntry("", Map.empty))
+        else {
+          out.close()
+          // "#rows" rides the stats map (the '#' can never be a schema
+          // column): exact per-file row counts give the planner a REAL
+          // numRows, not just byte sizes — the cardinality side of CBO
+          val stats = statCols.indices.collect {
+            case s if lo(s) <= hi(s) => statCols(s)._1 -> (lo(s), hi(s))
+          }.toMap + ("#rows" -> (rows, rows)) ++
+            pts.indices.collect { case p if ptLo(p) <= ptHi(p) =>
+              pts(p)._1.statKey -> (ptLo(p), ptHi(p)) } ++
+            pts.indices.map(p => ("ptn:" + pts(p)._1.render) -> (ptNulls(p), ptNulls(p)))
+          val ptvStamps = pts.indices.collect {
+            case p if ptStrId(p) && ptRawPure(p) && ptRaw(p) != null && ptNulls(p) == 0L =>
+              pts(p)._1.statKey -> ptRaw(p)
+          }.toMap
+          MemCommit(staged.toString, MemCatalog.FileEntry(staged.getFileName.toString, stats,
+            blooms = bloomCols.indices.map(b =>
+              bloomCols(b)._1 -> MemBloom.encode(bloomBits(b))).toMap,
+            ndvs = ndvCols.indices.map(n =>
+              ndvCols(n)._1 -> MemNdv.encode(ndvTrackers(n).minima)).toMap,
+            hists = histCols.indices.map(h =>
+              histCols(h)._1 -> MemHist.encode(histTrackers(h).snapshot)).toMap,
+            ptvs = ptvStamps))
+        }
 
       override def abort(): Unit = {
         if (rows > 0) { out.close(); Files.deleteIfExists(staged) }

@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * binding forks a process per permission change. Also keeps one copy of
   * each shared decision: the text rule on both
   * sides of the oracle (`TextPipeline`), the structural pruning proof
-  * (`MemCatalog.proveFilesPruned`) and the build-once artifact publish
-  * (`CorpusKey.buildOnce`).
+  * (`MemCatalog.proveFilesPruned`), the build-once artifact publish
+  * (`CorpusKey.buildOnce`) and the catalog's commit path (one retrying
+  * manifest commit loop, one `#seq` stamp, one staged-part publish and
+  * discard).
   */
 class WiringGuardSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
@@ -48,6 +50,15 @@ class WiringGuardSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** `file:line` of every match of `re` over whole source files, so a
+    * pattern may span lines.
+    */
+  private def matches(re: scala.util.matching.Regex): Seq[String] =
+    sources().flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      re.findAllMatchIn(text).map(m => s"$f:${text.take(m.start).count(_ == '\n') + 1}")
+    }
 
   private val memberDef = """^  (?:[a-z]+(?:\[\w+\])? )*def (\w+)""".r
 
@@ -101,5 +112,22 @@ class WiringGuardSpec extends AnyFunSuite {
     assert(wiring.isEmpty, s"the local commit path is set in Sessions.build: ${wiring.mkString(", ")}")
     val fc = offenders("FileContext", allowed = "")
     assert(fc.isEmpty, s"use FileSystem, not FileContext: ${fc.mkString(", ")}")
+  }
+
+  test("one commit path in the catalog: one create-new retry, one #seq stamp, one publish") {
+    // a FileAlreadyExistsException handler with an empty body falls
+    // through to the next attempt of its loop: a create-new retry
+    val retries = matches("""FileAlreadyExistsException\s*=>\s*(?://[^\n]*)?\n\s*\}""".r)
+    assert(retries.size == 1,
+      s"retry a lost manifest race only in MemCatalog.commitManifestEq: ${retries.mkString(", ")}")
+    // fastForward and cloneTable re-stamp once, without a retry
+    val stamps = offenders("\"#seq\" ->", allowed = "",
+      Set("MemCatalog.scala" -> "fastForward", "MemCatalog.scala" -> "cloneTable"))
+    assert(stamps.size == 1,
+      s"stamp new entries' #seq only in MemCatalog.commitManifestEq: ${stamps.mkString(", ")}")
+    val destructures = offenders("case MemCommit(", allowed = "",
+      Set("MemCatalog.scala" -> "publish", "MemCatalog.scala" -> "discard"))
+    assert(destructures.isEmpty,
+      s"publish or discard staged parts with MemCommit.publish/discard: ${destructures.mkString(", ")}")
   }
 }

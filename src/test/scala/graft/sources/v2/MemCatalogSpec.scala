@@ -173,28 +173,55 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     assert(got == want, s"merge result mismatch: $got")
   }
 
+  /** Drives the append SPI of table dir `dir` (one `id BIGINT` column)
+    * directly: one task of write `queryId` stages `ids` under its own
+    * `_inflight-<queryId>`; the driver commit or abort is left to the caller.
+    */
+  private def stagedAppend(dir: java.nio.file.Path, queryId: String, ids: Seq[Long])
+      : (MemBatchWrite, Array[org.apache.spark.sql.connector.write.WriterCommitMessage]) = {
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("id", org.apache.spark.sql.types.LongType)
+    val inflight = Some(s"_inflight-$queryId")
+    val bw = new MemBatchWrite(dir, schema, inflight, MemWritePolicy.Empty)
+    val w = new MemWriterFactory(dir.toString, schema, inflight, MemWritePolicy.Empty)
+      .createWriter(0, 0L)
+    ids.foreach(i => w.write(org.apache.spark.sql.catalyst.InternalRow(i)))
+    (bw, Array(w.commit()))
+  }
+
   test("concurrent appends stage per-write: one commit never deletes the other's staged parts") {
     val cat = freshCatalog("conc")
     spark.sql(s"CREATE TABLE $cat.t.c (id BIGINT)")
     // drive the write SPI directly with two interleaved writes — the
     // in-process stand-in for two jobs appending to the same table
     val dir = java.nio.file.Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"), "t__c")
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", org.apache.spark.sql.types.LongType)
-    def write(queryId: String, ids: Seq[Long]): (MemBatchWrite, Array[org.apache.spark.sql.connector.write.WriterCommitMessage]) = {
-      val bw = new MemBatchWrite(dir, schema, direct = false, s"_inflight-$queryId")
-      val w = new MemWriterFactory(dir.toString, schema, direct = false,
-        s"_inflight-$queryId").createWriter(0, 0L)
-      ids.foreach(i => w.write(org.apache.spark.sql.catalyst.InternalRow(i)))
-      (bw, Array(w.commit()))
-    }
-    val (bw1, m1) = write("q1", Seq(1L, 2L))
-    val (bw2, m2) = write("q2", Seq(3L, 4L)) // staged but not yet committed
+    val (bw1, m1) = stagedAppend(dir, "q1", Seq(1L, 2L))
+    val (bw2, m2) = stagedAppend(dir, "q2", Seq(3L, 4L)) // staged but not yet committed
     bw1.commit(m1) // must NOT sweep q2's staged parts
     bw2.commit(m2)
     val ids = spark.sql(s"SELECT id FROM $cat.t.c ORDER BY id").collect().map(_.getLong(0)).toSeq
     assert(ids == Seq(1L, 2L, 3L, 4L),
       s"both appends must survive interleaved commits, got $ids")
+  }
+
+  test("an aborted append deletes its staged part and its own staging dir") {
+    val cat = freshCatalog("abortdir")
+    spark.sql(s"CREATE TABLE $cat.t.a (id BIGINT)")
+    val dir = java.nio.file.Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"), "t__a")
+    def inflightDirs(): Seq[String] = {
+      val ls = java.nio.file.Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("_inflight")).toSeq
+      } finally ls.close()
+    }
+    val (bw, msgs) = stagedAppend(dir, "q1", Seq(1L))
+    assert(inflightDirs() == Seq("_inflight-q1"), "the write stages under its own dir")
+    bw.abort(msgs)
+    assert(inflightDirs().isEmpty, s"abort must remove the write's staging dir: ${inflightDirs()}")
+    assert(spark.sql(s"SELECT count(*) FROM $cat.t.a").collect()(0).getLong(0) == 0L,
+      "an aborted append publishes nothing")
   }
 
   test("a stranded .old- directory is neither listed nor lost: loadTable restores it") {
@@ -519,6 +546,29 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     // by — so compare the user stats net of it
     assert(MemCatalog.liveEntries(dir).find(_.name == "part-race-3.bin")
       .exists(_.stats - "#seq" == Map("id" -> (3L, 3L))))
+    // the same race on a branch chain: main and branch commits share one
+    // loop, so 8 branch committers must serialize onto distinct ordinals
+    MemCatalog.createBranch(dir, "race")
+    val branchPool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val heads = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val branchFutures = (0 until 8).map { i =>
+      branchPool.submit(new Runnable {
+        override def run(): Unit = {
+          val k = MemCatalog.commitManifestEq(dir, "append", Some("race")) { (live, eq, _) =>
+            (live :+ MemCatalog.FileEntry(s"part-branch-$i.bin", Map("id" -> (i.toLong, i.toLong))), eq)
+          }
+          heads.add(k)
+        }
+      })
+    }
+    branchFutures.foreach(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+    branchPool.shutdown()
+    assert(heads.size == 8, s"each branch commit must claim a distinct head, got $heads")
+    val branchLive = MemCatalog.branchManifest(dir, "race").files.map(_.name).toSet
+    (0 until 8).foreach(i => assert(branchLive.contains(s"part-branch-$i.bin"),
+      s"branch commit $i's edit was lost in the race: $branchLive"))
+    assert(MemCatalog.liveEntries(dir).map(_.name).toSet == live,
+      "branch commits must leave main untouched")
   }
 
   test("manifest row counts surface as exact planner cardinality, deletion vectors subtracted") {

@@ -30,14 +30,14 @@ class MemCdcBranchSpec extends AnyFunSuite with TempDirs {
     val dir = mk("cdcbr_replay")
     MemCatalog.createBranch(dir, "a")
     val del = MemCatalog.writeEqDelete(dir, Seq(Seq(MemCatalog.canonEq(1L))))
-    assert(MemCatalog.commitStreamingEpochCdcBranch(dir, "a", "q1", 0L,
+    assert(MemCatalog.commitStreamingEpochCdc(dir, Some("a"), "q1", 0L,
       Seq.empty, Seq("k"), Some(del)), "first commit of epoch 0 publishes")
     val headAfter = MemCatalog.branchHead(dir, "a")
-    assert(!MemCatalog.commitStreamingEpochCdcBranch(dir, "a", "q1", 0L,
+    assert(!MemCatalog.commitStreamingEpochCdc(dir, Some("a"), "q1", 0L,
       Seq.empty, Seq("k"), Some(del)), "replay of epoch 0 must no-op")
     assert(MemCatalog.branchHead(dir, "a") == headAfter,
       "a replayed epoch advances nothing on the branch chain")
-    assert(MemCatalog.commitStreamingEpochCdcBranch(dir, "a", "q1", 1L,
+    assert(MemCatalog.commitStreamingEpochCdc(dir, Some("a"), "q1", 1L,
       Seq.empty, Seq("k"), None), "the next epoch still publishes")
     MemCatalog.dropBranch(dir, "a")
   }
@@ -50,7 +50,7 @@ class MemCdcBranchSpec extends AnyFunSuite with TempDirs {
       "(CAST(9 AS BIGINT), CAST(90 AS BIGINT))")
     // epoch 1: CDC delete of k=9 at a LATER branch sequence
     val del = MemCatalog.writeEqDelete(dir, Seq(Seq(MemCatalog.canonEq(9L))))
-    assert(MemCatalog.commitStreamingEpochCdcBranch(dir, "a", "q1", 0L,
+    assert(MemCatalog.commitStreamingEpochCdc(dir, Some("a"), "q1", 0L,
       Seq.empty, Seq("k"), Some(del)))
     val ks = spark.sql("SELECT k FROM graftmem.tmp.cdcbr_seq.branch_a")
       .collect().map(_.getLong(0)).toSet

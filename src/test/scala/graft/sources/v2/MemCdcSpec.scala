@@ -32,17 +32,17 @@ class MemCdcSpec extends AnyFunSuite with TempDirs {
     val part = java.nio.file.Files.createTempFile(dir, "part-cdc-", ".bin")
     val entry = MemCatalog.FileEntry(part.getFileName.toString, Map("#rows" -> (0L, 0L)))
     val del = MemCatalog.writeEqDelete(dir, Seq(Seq("3"), Seq("7")))
-    assert(MemCatalog.commitStreamingEpochCdc(dir, "q1", 0L, Seq(entry), Seq("k"), Some(del)))
+    assert(MemCatalog.commitStreamingEpochCdc(dir, None, "q1", 0L, Seq(entry), Seq("k"), Some(del)))
     val v1 = MemCatalog.currentVersion(dir)
     assert(v1 == v0 + 1)
     assert(MemCatalog.eqDeletes(dir).size == 1)
     // the replay: same (query, epoch) — must refuse without a commit
     val del2 = MemCatalog.writeEqDelete(dir, Seq(Seq("3"), Seq("7")))
-    assert(!MemCatalog.commitStreamingEpochCdc(dir, "q1", 0L, Seq(entry), Seq("k"), Some(del2)))
+    assert(!MemCatalog.commitStreamingEpochCdc(dir, None, "q1", 0L, Seq(entry), Seq("k"), Some(del2)))
     assert(MemCatalog.currentVersion(dir) == v1, "replay must not advance the version")
     assert(MemCatalog.eqDeletes(dir).size == 1, "replay must not duplicate the delete")
     // a LATER epoch from the same query commits normally
-    assert(MemCatalog.commitStreamingEpochCdc(dir, "q1", 1L, Seq.empty, Seq("k"), None))
+    assert(MemCatalog.commitStreamingEpochCdc(dir, None, "q1", 1L, Seq.empty, Seq("k"), None))
   }
 
   test("the CDC commit's delete masks every strictly-older row, and a " +
@@ -55,7 +55,7 @@ class MemCdcSpec extends AnyFunSuite with TempDirs {
     // two generations of k=4 exist (CTAS + INSERT) before the delete
     spark.sql(s"INSERT INTO $cat.t.s VALUES (CAST(4 AS BIGINT), CAST(444 AS BIGINT))")
     val del = MemCatalog.writeEqDelete(dir, Seq(Seq("4")))
-    assert(MemCatalog.commitStreamingEpochCdc(dir, "q", 0L, Seq.empty, Seq("k"), Some(del)))
+    assert(MemCatalog.commitStreamingEpochCdc(dir, None, "q", 0L, Seq.empty, Seq("k"), Some(del)))
     // the delete (seq = head version) masks BOTH older generations
     val after = spark.sql(s"SELECT v FROM $cat.t.s WHERE k = 4").collect().map(_.getLong(0))
     assert(after.isEmpty, s"older k=4 rows must be masked, got ${after.mkString(",")}")
@@ -80,12 +80,12 @@ class MemCdcSpec extends AnyFunSuite with TempDirs {
     // simulate the crash window: the TARGET apply committed, the landing
     // commit never ran (driver died between them)
     val del = MemCatalog.writeEqDelete(tgt, Seq(Seq("1")))
-    assert(MemCatalog.commitStreamingEpochCdc(tgt, "q", 0L, Seq.empty, Seq("k"), Some(del)))
+    assert(MemCatalog.commitStreamingEpochCdc(tgt, None, "q", 0L, Seq.empty, Seq("k"), Some(del)))
     val tgtV = MemCatalog.currentVersion(tgt)
     // the recovering driver replays epoch 0 in full: target no-ops,
     // landing applies — both tables end exactly-once
     val del2 = MemCatalog.writeEqDelete(tgt, Seq(Seq("1")))
-    assert(!MemCatalog.commitStreamingEpochCdc(tgt, "q", 0L, Seq.empty, Seq("k"), Some(del2)))
+    assert(!MemCatalog.commitStreamingEpochCdc(tgt, None, "q", 0L, Seq.empty, Seq("k"), Some(del2)))
     assert(MemCatalog.currentVersion(tgt) == tgtV)
     assert(MemCatalog.eqDeletes(tgt).size == 1)
     assert(MemCatalog.commitStreamingEpoch(log, "q", 0L, Seq.empty),

@@ -82,7 +82,7 @@ class MemHookSpec extends AnyFunSuite with TempDirs {
     MemCatalog.onCommit(dir)(() => { runs.incrementAndGet(); () })
     try {
       MemCatalog.createBranch(dir, "b")
-      MemCatalog.commitBranch(dir, "b", "append")((fs, eq, _) =>
+      MemCatalog.commitManifestEq(dir, "append", Some("b"))((fs, eq, _) =>
         (fs :+ entry("branch.bin"), eq))
       MemCatalog.awaitCommitHooks()
       assert(runs.get() == 0,
