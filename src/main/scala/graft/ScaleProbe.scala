@@ -468,18 +468,19 @@ object ScaleProbe {
     }
     val (nfR, awR, mwR, fpkR) = layout(dRoute)
     val (nfC, awC, mwC, fpkC) = layout(dClust)
-    def probe(tbl: String, d: java.nio.file.Path): (Double, Int, Int) = {
+    def probe(tbl: String): (Double, Long, Long) = {
       val sql = s"SELECT count(*), sum(cents) FROM graftmem.rab.$tbl WHERE band = 17"
       spark.sql(sql).collect() // warm (file listing + codegen)
       val t0 = System.nanoTime()
-      spark.sql(sql).collect()
+      val df = spark.sql(sql)
+      df.collect()
       val dt = (System.nanoTime() - t0) / 1e9
-      val skip = MemCatalog.lastSkipByDir.get(d)
-      val (kept, total) = if (skip == null) (-1, -1) else skip
+      val (kept, total) = graft.sparkutil.ScanMetrics.pruned(df).headOption
+        .fold((-1L, -1L))(_._2)
       (dt, kept, total)
     }
-    val (pR, kR, tR) = probe("route", dRoute)
-    val (pC, kC, tC) = probe("clust", dClust)
+    val (pR, kR, tR) = probe("route")
+    val (pC, kC, tC) = probe("clust")
     f"""{"route":{"write_sec":$wRoute%.3f,"n_files":$nfR,"avg_band_width":$awR%.2f,"max_band_width":$mwR%.2f,"files_per_key":$fpkR%.2f,"probe_sec":$pR%.4f,"probe_files_kept":$kR,"probe_files_total":$tR},"clusterBy":{"write_sec":$wClust%.3f,"n_files":$nfC,"avg_band_width":$awC%.2f,"max_band_width":$mwC%.2f,"files_per_key":$fpkC%.2f,"probe_sec":$pC%.4f,"probe_files_kept":$kC,"probe_files_total":$tC}}"""
   }
 

@@ -57,24 +57,6 @@ object Skew {
       .select("l_orderkey", "l_linenumber", "l_returnflag", "flag_avg_disc")
   }
 
-  /** The UNSALTED twin of [[saltedFlagJoin]] — exactly the plain equi-join
-    * the `join_salted` oracle runs. RelationalSpec ("AQE skew-splits the
-    * registry query's unsalted twin") executes this under lowered skew
-    * thresholds and asserts `skew=true` in the final adaptive plan, so the
-    * registry query's inputs demonstrate BOTH skew defenses: AQE's runtime
-    * split on the plain join, and salting as the explicit fallback.
-    */
-  def plainFlagJoin(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val large = li
-      .filter(col("l_quantity") >= 45)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
-    val dim = li.groupBy("l_returnflag")
-      .agg(round(avg("l_discount"), 4).as("flag_avg_disc"))
-    large.join(dim, "l_returnflag")
-      .select("l_orderkey", "l_linenumber", "l_returnflag", "flag_avg_disc")
-  }
-
   /** Two-phase DISTINCT aggregation on a skewed group key — the skew
     * defense for `count(DISTINCT x)` where salting a join can't help:
     * `l_returnflag` has 3 groups, so a naive distinct-per-group puts ~half

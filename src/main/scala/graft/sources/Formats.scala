@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.TextPipeline.Oracle
-import graft.sparkutil.Multiset
+import graft.sparkutil.{Multiset, ScanMetrics}
 import graft.sources.v2.MemCatalog
 import graft.streaming.BoundedDrain
 import graft.streaming.BoundedDrain.Sink
@@ -973,10 +973,11 @@ object Formats {
     * The table is VALUE-CLUSTERED by construction (one INSERT per band ⇒
     * every file is single-band), so `band >= 2` plans only half the
     * files; MemCatalogSpec proves the plan-time file counts via the
-    * `lastSkip` seam and that skipping filters stay RESIDUAL (pruning
-    * can drop files, never rows). At 100 TB this is the difference
-    * between touching a day's files and touching the table — and it
-    * falls out of stats the writers were already positioned to record.
+    * scan's `partsKept`/`partsTotal` metrics and that skipping filters
+    * stay RESIDUAL (pruning can drop files, never rows). At 100 TB this
+    * is the difference between touching a day's files and touching the
+    * table — and it falls out of stats the writers were already
+    * positioned to record.
     */
   def dsv2DataSkipping(spark: SparkSession, dir: String): DataFrame = {
     Tables.orders(spark, dir).createOrReplaceTempView("graft_skip_orders")
@@ -3658,18 +3659,18 @@ object Formats {
     // plan-time proof, ridden as a gate column: the hit probe plans a
     // strict subset of files, the miss probe plans ZERO (and still
     // answers correctly — pruning is a plan property, never a data one)
-    // per-table seam (lastSkipByDir), not the global lastSkip: the verify
-    // sweep plans other catalog scans concurrently, and the global is
-    // whoever planned last
-    val bloomDir = MemCatalog.tableDir(spark, "graftmem.tmp.bloom_t")
-    val hit = spark.sql(
-      "SELECT count(*) FROM graftmem.tmp.bloom_t WHERE prio = '3-MEDIUM'")
-      .head().getLong(0)
-    val (kHit, tHit) = MemCatalog.lastSkipByDir.get(bloomDir)
-    val miss = spark.sql(
-      "SELECT count(*) FROM graftmem.tmp.bloom_t WHERE prio = '9-NEVER'")
-      .head().getLong(0)
-    val (kMiss, tMiss) = MemCatalog.lastSkipByDir.get(bloomDir)
+    // each probe reads its OWN scan's metrics: the verify sweep plans
+    // other catalog scans concurrently, and only the query that ran
+    // knows what its scan kept
+    def probe(prio: String): (Long, Long, Long) = {
+      val df = spark.sql(
+        s"SELECT count(*) FROM graftmem.tmp.bloom_t WHERE prio = '$prio'")
+      val n = df.collect().head.getLong(0)
+      val Seq((_, (kept, total))) = ScanMetrics.pruned(df)
+      (n, kept, total)
+    }
+    val (hit, kHit, tHit) = probe("3-MEDIUM")
+    val (miss, kMiss, tMiss) = probe("9-NEVER")
     val pruned = hit > 0 && miss == 0L &&
       kHit < tHit && tMiss == tHit && kMiss == 0
     spark.sql(
@@ -4429,7 +4430,8 @@ object Formats {
         |FROM (SELECT unnest(generate_series(0, 39999))::BIGINT AS id)
         |GROUP BY 1""".stripMargin,
     // the band-filtered aggregate replayed; the file pruning itself is
-    // spec-proven (lastSkip seam), the gate proves skipping loses no rows
+    // spec-proven (the scan's parts metrics), the gate proves skipping
+    // loses no rows
     "dsv2_data_skipping" ->
       """SELECT (o_custkey % 4)::BIGINT AS band, count(*)::BIGINT AS n_orders,
         | sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS cents

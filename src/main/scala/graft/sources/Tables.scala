@@ -27,14 +27,6 @@ object Tables {
     */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** Drop all cached schemas. The cache assumes fixture files are IMMUTABLE
-    * for the life of the JVM (true for /root/testdata and for every fixture
-    * this repo writes — paths are either never rewritten or rewritten with
-    * an identical schema). Any test that rewrites a parquet path with a
-    * DIFFERENT schema must call this first or the stale entry wins.
-    */
-  private[graft] def clearSchemaCache(): Unit = schemaCache.clear()
-
   /** TEST-ONLY seam: when set, every table read is repartitioned n ways at
     * the source, so specs can prove operator results are partition-layout
     * invariant UPSTREAM of the whole plan (PropertySpec) — a post-hoc
@@ -83,11 +75,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = normalizeTs(table(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
-
-  /** Text-file source, the literal analog of the reference's corpus read
-    * (`greeter_client.cc:298-314`): distributed line-per-row scan instead of
-    * a single driver-side buffered read.
-    */
-  def textLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
 }

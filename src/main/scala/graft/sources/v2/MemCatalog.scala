@@ -7,12 +7,15 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, StagingTableCatalog, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DateType, DoubleType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sparkutil.ScanMetrics
 
 /** WRITABLE V2 catalog with ATOMIC CTAS/RTAS — the last direction of the
   * connector matrix ([[SeqCatalog]] reads by identifier, [[AuditSink]]
@@ -369,9 +372,9 @@ class MemCatalog extends TableCatalog with StagingTableCatalog
           require(schema.length > 1,
             "graft mem catalog: cannot drop the only column")
           guardUnreferenced(d, props, "DROP", col)
-          // the field id retires with the column (never reused): v2
-          // files decode the dropped bytes by their recorded type and
-          // discard; v1 files refuse at read time (see MemCodec)
+          // the field id retires with the column (never reused): files
+          // decode the dropped bytes by their recorded type and discard
+          // them (see MemCodec)
           schema = StructType(schema.fields.filterNot(_.name == col))
         }
       case other => throw new UnsupportedOperationException(
@@ -997,50 +1000,32 @@ object MemCatalog {
   }
 
   object FileEntry {
+    /** Prefixes of the `<prefix><key>@<payload>` token kinds. */
+    private val Keyed = Seq("bloom:", "ndv:", "hist:", "ptv:")
+
     def parse(line: String): FileEntry = {
       val parts = line.split("\t")
-      val (dvTok, rest0) = parts.tail.partition(_.startsWith("dv@"))
-      val (sortTok, rest1) = rest0.partition(_.startsWith("sort@"))
-      val (ndvToks, restN) = rest1.partition(_.startsWith("ndv:"))
-      val (histToks, restH) = restN.partition(_.startsWith("hist:"))
-      val (ptvToks, rest) = restH.partition(_.startsWith("ptv:"))
-      val (bloomToks, statToks) = rest.partition(_.startsWith("bloom:"))
-      val stats = statToks.flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(c, range) => range.split("\\.\\.", 2) match {
-            case Array(lo, hi) => Some(c -> (lo.toLong, hi.toLong))
+      val toks = parts.tail
+      def single(prefix: String): Option[String] =
+        toks.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+      def keyed(prefix: String): Map[String, String] =
+        toks.filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).split("@", 2))
+          .collect { case Array(k, v) => k -> v }.toMap
+      val stats = toks
+        .filterNot(t => t.startsWith("dv@") || t.startsWith("sort@") || Keyed.exists(t.startsWith))
+        .flatMap { kv =>
+          kv.split("=", 2) match {
+            case Array(c, range) => range.split("\\.\\.", 2) match {
+              case Array(lo, hi) => Some(c -> (lo.toLong, hi.toLong))
+              case _ => None
+            }
             case _ => None
           }
-          case _ => None
-        }
-      }.toMap
-      val blooms = bloomToks.flatMap { t =>
-        t.stripPrefix("bloom:").split("@", 2) match {
-          case Array(c, b) => Some(c -> b)
-          case _ => None
-        }
-      }.toMap
-      val ndvs = ndvToks.flatMap { t =>
-        t.stripPrefix("ndv:").split("@", 2) match {
-          case Array(c, b) => Some(c -> b)
-          case _ => None
-        }
-      }.toMap
-      val hists = histToks.flatMap { t =>
-        t.stripPrefix("hist:").split("@", 2) match {
-          case Array(c, b) => Some(c -> b)
-          case _ => None
-        }
-      }.toMap
-      val ptvs = ptvToks.flatMap { t =>
-        t.stripPrefix("ptv:").split("@", 2) match {
-          case Array(k, b) => Some(k ->
-            new String(java.util.Base64.getDecoder.decode(b), "UTF-8"))
-          case _ => None
-        }
-      }.toMap
-      FileEntry(parts.head, stats, dvTok.headOption.map(_.stripPrefix("dv@")), blooms,
-        sortTok.headOption.map(_.stripPrefix("sort@")), ndvs, hists, ptvs)
+        }.toMap
+      FileEntry(parts.head, stats, single("dv@"), keyed("bloom:"), single("sort@"),
+        keyed("ndv:"), keyed("hist:"),
+        keyed("ptv:").map { case (k, b) =>
+          k -> new String(java.util.Base64.getDecoder.decode(b), "UTF-8") })
     }
   }
 
@@ -2796,20 +2781,6 @@ object MemCatalog {
         Some((v, m.op, m.files.size))
       }
     }
-
-  /** Spec seam: (files kept, files total) of the most recent MemScan
-    * planning — a plan string can't prove file skipping happened.
-    */
-  val lastSkip = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
-
-  /** The same seam KEYED BY TABLE DIR — the race-free form for gates
-    * read inside the CONCURRENT verify sweep: the global [[lastSkip]] is
-    * overwritten by whichever catalog scan planned last on any table,
-    * so a gate reading it between its probe and its read can observe an
-    * unrelated query's planning (caught live when `dsv2_mv_rewrite`'s
-    * filtered scans landed between `dsv2_bloom_skipping`'s probes).
-    */
-  val lastSkipByDir = new java.util.concurrent.ConcurrentHashMap[Path, (Int, Int)]()
 
   private[v2] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { f =>
@@ -5239,7 +5210,8 @@ private[v2] class MemScan(dir: Path, full: StructType, required: StructType,
     s"graft_mem $dir cols=${required.fieldNames.mkString(",")}" +
       version.fold("")(v => s" version=$v") +
       branch.fold("")(b => s" branch=$b") +
-      (if (skipFilters.isEmpty) "" else s" skipBy=[${skipFilters.mkString(", ")}]")
+      (if (skipFilters.isEmpty) "" else s" skipBy=[${skipFilters.mkString(", ")}]") +
+      partsPlanned.fold("") { case (k, t) => s" ${ScanMetrics.Kept}=$k ${ScanMetrics.Total}=$t" }
 
   /** STORAGE-PARTITIONED JOIN eligibility: the CURRENT spec list, but
     * only when every transform's partition VALUE is the value the
@@ -5343,23 +5315,27 @@ private[v2] class MemScan(dir: Path, full: StructType, required: StructType,
       case None =>
         // partition COUNT only — computed from a fresh snapshot WITHOUT
         // forcing the execution-path plan (planInputPartitions at plan
-        // time would freeze the file list before execution) and without
-        // double-firing the lastSkip bookkeeping
+        // time would freeze the file list before execution)
         val (entries, _) = snapshot
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
           entries.count(e => !skipFilters.exists(MemSkip.skipsEntry(_, e))))
     }
 
+  /** (files kept, files in the snapshot) of this scan's batch planning;
+    * None until [[plannedPartitions]] ran — a streaming read of the
+    * table never plans here, so it reports nothing.
+    */
+  private var partsPlanned: Option[(Int, Int)] = None
+
   /** Planned once per scan instance (lazy): `outputPartitioning` needs
     * the partition COUNT and Spark may ask both — re-planning would
-    * read the manifest and evaluate every skip filter twice per query
-    * (and double-fire the lastSkip bookkeeping).
+    * read the manifest and evaluate every skip filter twice per query.
+    * What it kept is reported as the scan's [[ScanMetrics]].
     */
   private lazy val plannedPartitions: Array[InputPartition] = {
     val (entries, eqDels) = scanSnapshot
     val kept = entries.filterNot(e => skipFilters.exists(MemSkip.skipsEntry(_, e)))
-    MemCatalog.lastSkip.set((kept.size, entries.size))
-    MemCatalog.lastSkipByDir.put(dir, (kept.size, entries.size))
+    partsPlanned = Some((kept.size, entries.size))
     def filePart(e: MemCatalog.FileEntry): MemFilePartition =
       MemFilePartition(dir.resolve(e.name).toString,
         dv = e.dv.map(d => dir.resolve(d).toString),
@@ -5383,6 +5359,10 @@ private[v2] class MemScan(dir: Path, full: StructType, required: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = plannedPartitions
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = ScanMetrics.supported
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    partsPlanned.fold(Array.empty[CustomTaskMetric]) { case (k, t) => ScanMetrics.report(k, t) }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val props = MemCatalog.readProps(dir)
@@ -6506,15 +6486,13 @@ private[v2] object MemEqDelete {
 }
 
 /** Length-prefixed binary row codec over the supported primitive types;
-  * one tag byte per field carries nullability. Files open with a header
-  * (`FileMagic` + the writer's column count) so schema evolution can
-  * prefix-decode old files under a WIDENED current schema; headerless
-  * files (written before the header existed) decode at the full current
-  * width — sound because ALTER only exists since the header does.
+  * one tag byte per field carries nullability. Every file opens with a
+  * header (`FileMagic2`, the writer's column count, and each column's
+  * field id and type tag) so schema evolution resolves old files under
+  * the current schema; a file without one is refused, by path.
   */
 private[v2] object MemCodec {
-  val FileMagic = 0x47524654 // v1 "GRFT": (magic, ncols) — prefix decode
-  // v2 "GRFU": (magic, ncols, then ncols × (int field-id, byte type-tag))
+  // "GRFU": (magic, ncols, then ncols × (int field-id, byte type-tag))
   // — the reader resolves columns by FIELD ID under the current schema,
   // decoding (then discarding) since-dropped columns by their recorded
   // write-time type; renames are invisible (the id never changes)
@@ -6533,62 +6511,38 @@ private[v2] object MemCodec {
   }
 
   /** Per-file reader: resolves the file's write-time columns against the
-    * current schema — by FIELD ID for v2 headers (drop/rename-proof), by
-    * positional prefix for v1/legacy files (valid only while the current
-    * ids are still the positional 1..n a never-dropped table has), with
-    * null backfill for columns the file predates either way.
+    * current schema BY FIELD ID (drop/rename-proof), with null backfill
+    * for columns the file predates.
     */
   final class FileReader(in: java.io.DataInputStream, full: StructType,
       src: String = "?") {
-    private val header: (Int, Option[Seq[(Int, Byte)]]) = {
-      in.mark(8)
-      try {
-        val first = in.readInt()
-        if (first == FileMagic2) {
-          val n = in.readInt()
-          (n, Some(Seq.fill(n)((in.readInt(), in.readByte()))))
-        }
-        else if (first == FileMagic) (in.readInt(), None)
-        else { in.reset(); (full.length, None) } // legacy headerless file
-      } catch {
-        case _: java.io.EOFException => in.reset(); (full.length, None) // empty legacy
-      }
+    private val cols: Seq[(Int, Byte)] = {
+      val first = try in.readInt() catch { case _: java.io.EOFException => -1 }
+      require(first == FileMagic2,
+        s"file $src: no GRFU row-codec header — not written by this catalog")
+      Seq.fill(in.readInt())((in.readInt(), in.readByte()))
     }
-    private val ncols = header._1
     /** (decode schema, file-position → current-position map; -1 = column
       * since dropped — decoded for framing, then discarded).
       */
-    private val (fileSchema: StructType, perm: Array[Int]) = header._2 match {
-      case Some(cols) =>
-        val curIds = MemSchema.ids(full)
-        val posOf = curIds.zipWithIndex.toMap
-        val fs = StructType(cols.zipWithIndex.map { case ((_, tag), j) =>
-          StructField(s"_c$j", MemSchema.tagType(tag))
-        })
-        val pm = cols.map { case (id, tag) =>
-          posOf.get(id) match {
-            case Some(k) =>
-              require(MemSchema.typeTag(full.fields(k).dataType) == tag,
-                s"file $src: field id $id recorded as type tag $tag but the " +
-                  s"current schema holds ${full.fields(k).dataType.simpleString} " +
-                  s"(schema ids ${MemSchema.ids(full).mkString(",")}) — " +
-                  "field ids are never retyped or reused")
-              k
-            case None => -1 // dropped column: decode bytes, discard value
-          }
-        }.toArray
-        (fs, pm)
-      case None =>
-        // v1 prefix decode is only sound while position == id-1 for the
-        // decoded prefix (never-dropped tables; renames keep position)
-        require(ncols <= full.length,
-          s"file written with $ncols columns but table now has ${full.length} — " +
-            "columns can only be ADDED")
-        val curIds = MemSchema.ids(full)
-        require(curIds.take(ncols).zipWithIndex.forall { case (id, i) => id == i + 1 },
-          "a pre-field-id (v1) data file cannot be resolved after DROP " +
-            "COLUMN rewrote the id space — rewrite the table (OPTIMIZE) first")
-        (StructType(full.fields.take(ncols)), Array.tabulate(ncols)(identity))
+    private val (fileSchema: StructType, perm: Array[Int]) = {
+      val posOf = MemSchema.ids(full).zipWithIndex.toMap
+      val fs = StructType(cols.zipWithIndex.map { case ((_, tag), j) =>
+        StructField(s"_c$j", MemSchema.tagType(tag))
+      })
+      val pm = cols.map { case (id, tag) =>
+        posOf.get(id) match {
+          case Some(k) =>
+            require(MemSchema.typeTag(full.fields(k).dataType) == tag,
+              s"file $src: field id $id recorded as type tag $tag but the " +
+                s"current schema holds ${full.fields(k).dataType.simpleString} " +
+                s"(schema ids ${MemSchema.ids(full).mkString(",")}) — " +
+                "field ids are never retyped or reused")
+            k
+          case None => -1 // dropped column: decode bytes, discard value
+        }
+      }.toArray
+      (fs, pm)
     }
 
     private val identityPerm =

@@ -8,11 +8,14 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Literal => V2Lit
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownOffset, SupportsPushDownRequiredColumns, SupportsPushDownTableSample, SupportsPushDownTopN, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sparkutil.ScanMetrics
 
 /** CUSTOM DataSource V2 CONNECTOR — the extension-API axis the rest of the
   * repo doesn't otherwise exercise (scalar kernels, a Generator, a typed
@@ -70,13 +73,6 @@ object SeqSource {
     * hash (Fibonacci constant), so sampling never correlates with `val`.
     */
   def sampleU(id: Long): Double = ((id * 2246822519L) % HashMod).toDouble / HashMod
-
-  /** Diagnostic seam for specs: (kept, planned) partition counts of the
-    * most recent runtime-filtered aligned scan. Runtime pruning happens
-    * at execution start (inside `BatchScanExec.filteredPartitions`), so a
-    * plan string can't prove it fired — this counter can.
-    */
-  @volatile var lastRuntimePrune: Option[(Int, Int)] = None
 }
 
 private[v2] class SeqTable(n: Long, parts: Int, alignBucket: Boolean = false)
@@ -341,11 +337,8 @@ private[v2] class SeqScan(lo: Long, hi: Long, parts: Int,
       .toArray
 
   override def planInputPartitions(): Array[InputPartition] = {
-    if (alignBucket) {
-      val all = bucketPartitions
-      SeqSource.lastRuntimePrune = Some((all.length, 32))
-      all
-    } else {
+    if (alignBucket) bucketPartitions
+    else {
       val total = hi - lo
       val per = math.max(1L, (total + parts - 1) / parts)
       (0 until parts).iterator
@@ -358,6 +351,18 @@ private[v2] class SeqScan(lo: Long, hi: Long, parts: Int,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SeqReaderFactory(required.fieldNames, sample)
+
+  /** Runtime pruning happens at execution start (inside
+    * `BatchScanExec.filteredPartitions`), so a plan string can't prove it
+    * fired: the scan reports (kept, 32) bucket partitions as its
+    * [[ScanMetrics]], read after that filtering. The contiguous layout
+    * prunes nothing.
+    */
+  override def supportedCustomMetrics(): Array[CustomMetric] = ScanMetrics.supported
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val kept = planInputPartitions().length
+    ScanMetrics.report(kept, if (alignBucket) 32 else kept)
+  }
 }
 
 /** One accepted pushed aggregate: op ∈ {count, sum, min, max} over a source column. */

@@ -30,7 +30,6 @@ object EventStreams {
     * probe value is a pure function of the directory.
     */
   private val probeCache = new java.util.concurrent.ConcurrentHashMap[String, Any]()
-  private[graft] def clearProbeCache(): Unit = probeCache.clear()
 
   /** Max (normalized) event timestamp of `$dir/events.parquet`. */
   private def probeMaxTs(spark: SparkSession, dir: String): Timestamp =

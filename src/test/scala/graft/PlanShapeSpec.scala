@@ -99,11 +99,13 @@ class PlanShapeSpec extends AnyFunSuite with TempDirs {
     val planned = df.queryExecution.executedPlan.toString
     assert(planned.toLowerCase.contains("dynamicpruning"),
       s"the broadcast bucket set must be planned as a runtime filter on the scan:\n$planned")
-    graft.sources.v2.SeqSource.lastRuntimePrune = None
     df.collect()
-    assert(graft.sources.v2.SeqSource.lastRuntimePrune.contains((4, 32)),
+    val seqScans = graft.sparkutil.ScanMetrics.pruned(df).collect {
+      case (t, kt) if t.startsWith("graft_seq") => kt
+    }
+    assert(seqScans == Seq((4L, 32L)),
       "filter() must drop the 28 residue classes the dimension filter excludes " +
-        s"(got ${graft.sources.v2.SeqSource.lastRuntimePrune})")
+        s"(got $seqScans)")
   }
 
   test("dsv2_spj_join: storage-partitioned join — the whole plan carries zero exchanges") {

@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`MemCatalog.proveFilesPruned`), the build-once artifact publish
   * (`CorpusKey.buildOnce`) and the catalog's commit path (one retrying
   * manifest commit loop, one `#seq` stamp, one staged-part publish and
-  * discard).
+  * discard). Scans report what they pruned as their own SQL metrics,
+  * never through JVM-global state.
   */
 class WiringGuardSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
@@ -129,5 +130,23 @@ class WiringGuardSpec extends AnyFunSuite {
       Set("MemCatalog.scala" -> "publish", "MemCatalog.scala" -> "discard"))
     assert(destructures.isEmpty,
       s"publish or discard staged parts with MemCommit.publish/discard: ${destructures.mkString(", ")}")
+  }
+
+  test("scans report pruning only as their own metrics: no JVM-global seam, no @volatile var") {
+    // the retired seam names, spelled so this file does not match itself
+    val seams = Seq("Skip", "RuntimePrune").map("last" + _)
+    val walk = Files.walk(Paths.get("src"))
+    val seamHits = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .filter(f => seams.exists(new String(Files.readAllBytes(f), "UTF-8").contains))
+    finally walk.close()
+    assert(seamHits.isEmpty,
+      s"read what a scan pruned with graft.sparkutil.ScanMetrics: ${seamHits.mkString(", ")}")
+    val volatiles = """@volatile\s+(?:private(?:\[\w+\])?\s+)?var\s+(\w+)""".r
+    val shared = sources().flatMap { f =>
+      volatiles.findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
+        .map(m => s"${f.getFileName}:${m.group(1)}")
+    }
+    assert(shared == Seq("Tables.scala:testInputPartitions"),
+      s"concurrent queries share no mutable object state: ${shared.mkString(", ")}")
   }
 }

@@ -1,7 +1,8 @@
 package graft.sources.v2
 
 import graft.TempDirs
-import org.apache.spark.sql.AnalysisException
+import graft.sparkutil.ScanMetrics
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -19,6 +20,18 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     name
   }
+
+  /** (files kept, files total) of the one catalog scan `df` ran — read
+    * after an action on `df` itself.
+    */
+  private def pruned(df: DataFrame): (Int, Int) = {
+    val scans = ScanMetrics.pruned(df)
+    assert(scans.size == 1, s"expected one catalog scan: $scans")
+    val (_, (kept, total)) = scans.head
+    (kept.toInt, total.toInt)
+  }
+
+  private def prunedBy(df: DataFrame): (Int, Int) = { df.collect(); pruned(df) }
 
   test("CTAS round-trip: create, read back, drop") {
     val cat = freshCatalog("rt")
@@ -388,19 +401,17 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     // each INSERT fans out over range()'s tasks, so a band's rows span
     // several files — but every file is single-band, so exactly 1/4 of
     // the files survive the band=2 prune regardless of parallelism
-    val (kEq, tEq) = MemCatalog.lastSkip.get()
+    val (kEq, tEq) = pruned(r)
     assert(tEq == 4 * kEq && kEq >= 1,
       s"band=2 must plan exactly one band's files, got ($kEq, $tEq)")
     // the pushed filter is visible in the plan
     val p = r.queryExecution.executedPlan.toString
     assert(p.contains("skipBy="), s"the scan must echo its skipping filters:\n$p")
     // range predicate skips too
-    spark.sql(s"SELECT count(*) FROM $cat.t.z WHERE band >= 3").collect()
-    val (kGe, tGe) = MemCatalog.lastSkip.get()
+    val (kGe, tGe) = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.z WHERE band >= 3"))
     assert(tGe == 4 * kGe && kGe >= 1, s"band>=3 keeps one band's files, got ($kGe, $tGe)")
     // a predicate satisfiable in every file's range must keep all files
-    spark.sql(s"SELECT count(*) FROM $cat.t.z WHERE v >= 0").collect()
-    val (kAll, tAll) = MemCatalog.lastSkip.get()
+    val (kAll, tAll) = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.z WHERE v >= 0"))
     assert(kAll == tAll,
       s"a predicate satisfiable everywhere must keep all files, got ($kAll, $tAll)")
     // correctness safety: skipping filters stay residual, so a predicate
@@ -408,6 +419,52 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     val part = spark.sql(s"SELECT count(*) AS n FROM $cat.t.z WHERE v >= 25 AND band = 2")
       .collect()(0).getLong(0)
     assert(part == 5, "residual evaluation must filter rows within the kept file")
+  }
+
+  test("a join of two catalog tables reports each scan's own kept/total, in the formatted plan too") {
+    val cat = freshCatalog("joinskip")
+    spark.sql(s"CREATE TABLE $cat.t.a (band BIGINT, v BIGINT)")
+    spark.sql(s"CREATE TABLE $cat.t.b (band BIGINT, w BIGINT)")
+    (0 until 4).foreach(b => spark.sql(s"INSERT INTO $cat.t.a " +
+      s"SELECT CAST($b AS BIGINT), id FROM range(${10 * b}, ${10 * b + 10}, 1, 1)"))
+    (0 until 2).foreach(b => spark.sql(s"INSERT INTO $cat.t.b " +
+      s"SELECT CAST($b AS BIGINT), id FROM range(${10 * b}, ${10 * b + 10}, 1, 1)"))
+    // a's band filter keeps one of its four files; b is read whole
+    val j = spark.sql(s"SELECT count(*) FROM $cat.t.a JOIN $cat.t.b ON a.v = b.w WHERE a.band = 1")
+    assert(j.collect().head.getLong(0) == 10L)
+    assert(ScanMetrics.pruned(j).sortBy(_._1) ==
+      Seq("graft_mem(t.a)" -> ((1L, 4L)), "graft_mem(t.b)" -> ((2L, 2L))),
+      s"each scan reports its own parts: ${ScanMetrics.pruned(j)}")
+    val formatted = j.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    Seq("partsKept=1 partsTotal=4", "partsKept=2 partsTotal=2").foreach(m =>
+      assert(formatted.contains(m), s"explain(formatted) must show $m:\n$formatted"))
+  }
+
+  test("dsv2_bloom_skipping keeps bloom_pruned when 8 runs overlap dsv2_data_skipping runs") {
+    // every run drops and recreates its query's fixed table, so each run
+    // gets its own session (sharing this JVM and SparkContext) over its
+    // own catalog root; the scan metrics each probe reads are its own
+    val names = (0 until 16).map(i => if (i % 2 == 0) "dsv2_bloom_skipping" else "dsv2_data_skipping")
+    val roots = names.indices.map(i => tempDir(s"graft-memcat-conc-$i"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+    val results = try {
+      names.zip(roots).map { case (q, root) =>
+        pool.submit(new java.util.concurrent.Callable[(String, Set[Seq[Any]])] {
+          override def call(): (String, Set[Seq[Any]]) = {
+            val s = spark.newSession()
+            s.conf.set("spark.sql.catalog.graftmem.root", root.toString)
+            q -> graft.SparkEntry.queries(q)(s, TestSpark.sf).collect().map(_.toSeq).toSet
+          }
+        })
+      }.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    val bloom = results.collect { case ("dsv2_bloom_skipping", rows) => rows }
+    assert(bloom.size == 8 && bloom.forall(_.nonEmpty))
+    assert(bloom.forall(_.forall(_.last == true)),
+      s"every overlapping run must prove its pruning: ${bloom.map(_.map(_.last))}")
+    results.groupBy(_._1).foreach { case (q, rs) =>
+      assert(rs.map(_._2).distinct.size == 1, s"$q must answer the same in every run")
+    }
   }
 
   test("writeStream.toTable appends one manifest commit per epoch; replayed epochs publish nothing") {
@@ -444,9 +501,9 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     // one INSERT from UNCLUSTERED input: Spark must plan the exchange+sort
     // the Write requests — the writer itself never routes rows
     spark.sql(s"INSERT INTO $cat.t.c SELECT id % 4 AS band, id AS v FROM range(1000)")
-    val r = spark.sql(s"SELECT count(*) AS n FROM $cat.t.c WHERE band = 2").collect()(0)
-    assert(r.getLong(0) == 250)
-    val (kept, total) = MemCatalog.lastSkip.get()
+    val r = spark.sql(s"SELECT count(*) AS n FROM $cat.t.c WHERE band = 2")
+    assert(r.collect()(0).getLong(0) == 250)
+    val (kept, total) = pruned(r)
     assert(kept < total,
       s"clustered files must let band=2 skip some files, got ($kept, $total)")
     // an identical table WITHOUT clusterBy gets interleaved files: every
@@ -454,8 +511,7 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     // distribution request (not luck) produced the clustering
     spark.sql(s"CREATE TABLE $cat.t.u (band BIGINT, v BIGINT)")
     spark.sql(s"INSERT INTO $cat.t.u SELECT id % 4 AS band, id AS v FROM range(1000)")
-    spark.sql(s"SELECT count(*) FROM $cat.t.u WHERE band = 2").collect()
-    val (kU, tU) = MemCatalog.lastSkip.get()
+    val (kU, tU) = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.u WHERE band = 2"))
     assert(kU == tU, s"unclustered files span every band: nothing skips, got ($kU, $tU)")
     // properties round-trip through the catalog
     val tbl = spark.sql(s"SHOW TBLPROPERTIES $cat.t.c").collect()
@@ -947,22 +1003,28 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     // four part files with disjoint id ranges
     (0 until 4).foreach(b => spark.sql(
       s"INSERT INTO $cat.t.ms SELECT id, id FROM range(${b * 10}, ${b * 10 + 10}, 1, 1)"))
-    spark.sql(s"DELETE FROM $cat.t.ms WHERE id >= 35") // only file 4's range matches
+    val del = spark.sql(s"DELETE FROM $cat.t.ms WHERE id >= 35") // only file 4's range matches
     // a DELTA scan may skip: pruned files yield no deltas and stay as-is
     // (group-based COW must refuse exactly this — the asymmetry under test)
-    val (kept, total) = MemCatalog.lastSkip.get
+    val (kept, total) = pruned(del)
     assert(total == 4 && kept == 1,
       s"zone maps must prune the MoR delete scan to the one matching file: $kept/$total")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t.ms").head().getLong(0) == 35L)
   }
 
   test("manifest entry format: render/parse round-trips every token kind; old readers skip new tokens") {
+    def b64(n: Int, b: Byte) = java.util.Base64.getEncoder.encodeToString(Array.fill(n)(b))
     val full = MemCatalog.FileEntry("part-0-1.bin",
-      Map("k" -> (3L, 99L), "v" -> (-7L, 0L)),
+      Map("k" -> (3L, 99L), "v" -> (-7L, 0L), "pt:identity(tag)" -> (5L, 5L)),
       dv = Some("_dv-123.txt"),
-      blooms = Map("tag" -> java.util.Base64.getEncoder.encodeToString(Array.fill(128)(1: Byte))))
+      blooms = Map("tag" -> b64(128, 1)),
+      sortedBy = Some("k,v"),
+      ndvs = Map("k" -> b64(40, 2), "v" -> b64(8, 3)),
+      hists = Map("v" -> b64(24, 4)),
+      // a raw partition value holding every separator the line format uses
+      ptvs = Map("identity(tag)" -> "a\tb=c@d..e"))
     assert(MemCatalog.FileEntry.parse(full.render) == full,
-      "every token kind (stats, dv@, bloom:) must survive the round trip")
+      "every token kind (stats, dv@, sort@, bloom:, ndv:, hist:, ptv:) must survive the round trip")
     val bare = MemCatalog.FileEntry("part-9.bin", Map.empty)
     assert(MemCatalog.FileEntry.parse(bare.render) == bare)
     // forward compat: a pre-dv/pre-bloom reader treats unknown tokens as
@@ -970,6 +1032,29 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     // the other way too (an unknown future token must not throw)
     val future = full.render + "\tfuture:opaque-token"
     assert(MemCatalog.FileEntry.parse(future).name == "part-0-1.bin")
+  }
+
+  test("a part file without the GRFU header fails its read, naming the file") {
+    val cat = freshCatalog("nohdr")
+    spark.sql(s"CREATE TABLE $cat.t.h (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.t.h SELECT id, id FROM range(0, 4, 1, 1)")
+    val dir = java.nio.file.Paths.get(spark.conf.get(s"spark.sql.catalog.$cat.root"), "t__h")
+    val Seq(part) = MemCatalog.liveFiles(dir)
+    val schema = MemCatalog.readSchema(dir)
+    // the same rows behind the old positional "GRFT" (magic, ncols) header
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      java.nio.file.Files.newOutputStream(part)))
+    try {
+      out.writeInt(0x47524654)
+      out.writeInt(schema.length)
+      (0L until 4L).foreach(i => MemCodec.writeRow(out,
+        org.apache.spark.sql.catalyst.InternalRow(i, i), schema))
+    } finally out.close()
+    val err = intercept[Exception](spark.sql(s"SELECT sum(v) FROM $cat.t.h").collect())
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    assert(chain(err).exists(m => m.contains(part.toString) && m.contains("GRFU")),
+      s"the read must fail loudly and name $part: ${chain(err).mkString(" | ")}")
   }
 
   test("bloom-filter skipping: equality probes prune files zone maps cannot; sketches survive OPTIMIZE") {
@@ -982,16 +1067,16 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     }
     // a STRING equality probe: zone maps have nothing (no integral
     // stats), the per-file bloom prunes to exactly the matching file
-    assert(spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'gamma'")
-      .head().getLong(0) == 10L)
-    val (kept, total) = MemCatalog.lastSkip.get
+    val gamma = spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'gamma'")
+    assert(gamma.collect().head.getLong(0) == 10L)
+    val (kept, total) = pruned(gamma)
     assert(total == 4 && kept == 1,
       s"bloom must prune the string probe to one file: $kept/$total")
     // a value present nowhere: every file PROVES absence — zero files
     // planned and the (correct) empty result never launched a read task
-    assert(spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'omega'")
-      .head().getLong(0) == 0L)
-    val (k2, t2) = MemCatalog.lastSkip.get
+    val omega = spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'omega'")
+    assert(omega.collect().head.getLong(0) == 0L)
+    val (k2, t2) = pruned(omega)
     assert(t2 == 4 && k2 == 0, s"absent value must plan zero files: $k2/$t2")
     // OPTIMIZE rebuilds the sketches during the rewrite: the merged file
     // still proves 'omega' absent and still serves 'gamma'
@@ -1000,9 +1085,9 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     MemCatalog.compact(dirBl, 1L << 20)
     assert(spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'gamma'")
       .head().getLong(0) == 10L)
-    assert(spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'omega'")
-      .head().getLong(0) == 0L)
-    val (k3, t3) = MemCatalog.lastSkip.get
+    val omegaOpt = spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag = 'omega'")
+    assert(omegaOpt.collect().head.getLong(0) == 0L)
+    val (k3, t3) = pruned(omegaOpt)
     assert(k3 == 0 && t3 < 4, s"post-OPTIMIZE bloom must still prove absence: $k3/$t3")
     // the same probe on an un-bloomed twin table prunes NOTHING — the
     // sketch, not luck, did the work
@@ -1011,14 +1096,13 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
       spark.sql(s"INSERT INTO $cat.t.nb " +
         s"SELECT '$t', id FROM range(${i * 10}, ${i * 10 + 10}, 1, 1)")
     }
-    spark.sql(s"SELECT count(*) FROM $cat.t.nb WHERE tag = 'omega'").head()
-    val (k4, t4) = MemCatalog.lastSkip.get
+    val (k4, t4) = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.nb WHERE tag = 'omega'"))
     assert(t4 == 2 && k4 == 2, s"no bloom -> no skip, conservative: $k4/$t4")
     // IN-list probes prune per member: a file survives iff the sketch
     // may contain ANY listed value — all-absent lists plan zero files
-    assert(spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag IN ('omega', 'psi')")
-      .head().getLong(0) == 0L)
-    val (k5, t5) = MemCatalog.lastSkip.get
+    val absent = spark.sql(s"SELECT count(*) FROM $cat.t.bl WHERE tag IN ('omega', 'psi')")
+    assert(absent.collect().head.getLong(0) == 0L)
+    val (k5, t5) = pruned(absent)
     assert(k5 == 0, s"all-absent IN list must plan zero files: $k5/$t5")
   }
 
@@ -1206,9 +1290,9 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     val r = spark.sql(s"SELECT count(*) AS n, sum(v) AS sv FROM $cat.t.ob").collect()(0)
     assert(r.getLong(0) == 400 && r.getLong(1) == (0L until 400L).sum)
     // ...skipping still prunes (band >= 2 plans ONE of the two files)...
-    spark.sql(s"SELECT count(*) FROM $cat.t.ob WHERE band >= 2").collect()
-    assert(MemCatalog.lastSkip.get() == ((1, 2)),
-      s"post-compaction skipping must prune the low-band file, got ${MemCatalog.lastSkip.get()}")
+    val obSkip = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.ob WHERE band >= 2"))
+    assert(obSkip == ((1, 2)),
+      s"post-compaction skipping must prune the low-band file, got $obSkip")
     // ...and the pre-compaction snapshot still reads from the RETIRED
     // files (compaction never deletes history)
     val pre = spark.sql(
@@ -1387,8 +1471,7 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
       case _ => ()
     }
     // a b-filter prunes files now
-    spark.sql(s"SELECT count(*) FROM $cat.t.ce WHERE b >= 150").head()
-    val (kept, totalFiles) = MemCatalog.lastSkip.get()
+    val (kept, totalFiles) = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.ce WHERE b >= 150"))
     assert(kept < totalFiles, s"re-clustering must restore b-skipping: $kept of $totalFiles")
     // content is unchanged, and the pre-evolution snapshot reads the OLD
     // layout byte-identically
@@ -1552,9 +1635,9 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
       s"writers must stamp the transform range: ${entries.map(_.stats.keys)}")
     // median probe: inside every file's raw range (zone maps keep all 4),
     // so the observed prune is the transform tier's alone
-    spark.sql(s"SELECT count(*) FROM $cat.t.pe WHERE k = 200").head()
-    assert(MemCatalog.lastSkip.get() == ((1, 4)),
-      s"bucket(4,k) must keep exactly bucket(200)'s file: ${MemCatalog.lastSkip.get()}")
+    val pe4 = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.pe WHERE k = 200"))
+    assert(pe4 == ((1, 4)),
+      s"bucket(4,k) must keep exactly bucket(200)'s file: $pe4")
     // EVOLUTION: metadata-only — no file rewritten, old files keep
     // pruning under the spec they were written with (per-file spec_id)
     val namesPre = entries.map(_.name).toSet
@@ -1564,10 +1647,10 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
         s"WHERE pmod(id * 2654435761, 2) = $b"))
     assert(namesPre.subsetOf(MemCatalog.liveEntries(dir).map(_.name).toSet),
       "partition evolution must not rewrite existing files")
-    spark.sql(s"SELECT count(*) FROM $cat.t.pe WHERE k = 200").head()
-    assert(MemCatalog.lastSkip.get() == ((2, 6)),
+    val pe6 = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.pe WHERE k = 200"))
+    assert(pe6 == ((2, 6)),
       "old files prune under bucket(4,k), new files under bucket(2,k) — " +
-        s"simultaneously: ${MemCatalog.lastSkip.get()}")
+        s"simultaneously: $pe6")
     // monotone transforms admit RANGE pruning through the transform —
     // proven at the unit level on entries carrying ONLY pt stats (in a
     // live table the source column's own zone map subsumes them; the pt
@@ -1594,8 +1677,7 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     spark.sql(s"INSERT INTO $cat.t.pe SELECT id, id * 86400 FROM range(1000, 1010, 1, 1)")
     assert(MemCatalog.liveEntries(dir).exists(_.stats.contains("pt:days(v)")),
       "the post-evolution insert must stamp the days spec")
-    spark.sql(s"SELECT count(*) FROM $cat.t.pe WHERE v >= ${900L * 86400}").head()
-    val (kept, totalF) = MemCatalog.lastSkip.get()
+    val (kept, totalF) = prunedBy(spark.sql(s"SELECT count(*) FROM $cat.t.pe WHERE v >= ${900L * 86400}"))
     assert(kept == 1 && totalF == 7,
       s"the v range probe must keep only the new file: ($kept, $totalF)")
     // a bad spec is refused at DDL time, loudly
