@@ -12,9 +12,9 @@ import graft.plans.{CosineSimilarity, CountMinSketchAgg, DotProductLong, LogHist
   *  - the `table_changes(...)` table-valued function;
   *  - the [[graft.plans.TopKPerGroupPlan]] planner strategy.
   *
-  * No optimizer rule is injected. [[graft.plans.MvRewrite]] is armed per
-  * session clone with `MvRewrite.install`, because the MV gates use the
-  * un-armed base session as the control their answers are compared
+  * No optimizer rule is injected. [[graft.plans.MvRewrite]] is armed on
+  * one session clone by registering an MV on it, because the MV gates use
+  * the un-armed base session as the control their answers are compared
   * against. [[graft.plans.RewriteRankFilterToTopK]] stays opt-in, so the
   * plans of hand-written `row_number` windows do not change under it.
   */

@@ -340,25 +340,19 @@ object ScaleProbe {
     // aggregate above): served latency must stay flat as the base grows
     // 10×, because the rewritten plan's input is the MV's 97 rows.
     val s2 = ss.newSession()
-    graft.plans.MvRewrite.install(s2)
     val mvDir = MemCatalog.tableDir(spark, s"graftmem.ivm.mv_$label")
     s2.sql(s"ALTER TABLE graftmem.ivm.mv_$label SET TBLPROPERTIES(" +
       s"'graft.mv.basedOn' = '${MemCatalog.currentVersion(baseDir)}')")
     val d = graft.plans.MvRewrite.registerMaintained(s2,
       s"graftmem.ivm.base_$label", s"graftmem.ivm.mv_$label", baseDir, mvDir,
       Seq("cat"), Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    val serve = try {
-      val aggSql = s"SELECT cat, count(*) AS n, sum(cents) AS sc " +
-        s"FROM graftmem.ivm.base_$label GROUP BY cat"
-      val armed = s2.sql(aggSql).queryExecution.optimizedPlan.collect {
-        case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-          s.relation.table.name()
-      }.toSet == Set(d.mvName)
-      require(armed, s"IVM probe: the serving rewrite did not arm at $label")
-      val ts0 = System.nanoTime()
-      s2.sql(aggSql).count()
-      (System.nanoTime() - ts0) / 1e9
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
+    val aggSql = s"SELECT cat, count(*) AS n, sum(cents) AS sc " +
+      s"FROM graftmem.ivm.base_$label GROUP BY cat"
+    require(new graft.plans.MvRewrite.Probe(s2, ss, aggSql).scans == Set(d.mvName),
+      s"IVM probe: the serving rewrite did not arm at $label")
+    val ts0 = System.nanoTime()
+    s2.sql(aggSql).count()
+    val serve = (System.nanoTime() - ts0) / 1e9
     (baseRows, maintain, recompute, serve)
   }
 

@@ -1,8 +1,6 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, EvalMode, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -48,10 +46,11 @@ import org.apache.spark.sql.types.DoubleType
   * table that advanced past the registered version makes the MV STALE and
   * the rewrite refuses (the query silently reads the base table and stays
   * correct). Re-register after refreshing the MV to re-arm the rewrite.
-  * Do not leave a registration armed while rebuilding the MV *from the
-  * base table at an unchanged version*: the refresh query itself would
-  * then rewrite onto the MV it is overwriting. The refresh protocol is
-  * unregister → rebuild → register.
+  * The refresh protocol is: rebuild the MV on a DISARMED session, then
+  * register again on the armed one. Built on the armed session, the
+  * refresh query could rewrite onto the MV it is overwriting; built on a
+  * session that holds no registration, it cannot, whatever the order of
+  * the calls.
   *
   * EXPR-ID DISCIPLINE: the rule runs post-analysis, so the rewritten
   * subtree must expose the exact attributes the parent plan references.
@@ -61,16 +60,20 @@ import org.apache.spark.sql.types.DoubleType
   * one MV serving two aggregates in a single query never duplicates
   * attribute ids.
   *
-  * INSTALLATION: per session clone through [[MvRewrite.install]]
-  * (`experimental.extraOptimizations`, the "User Provided Optimizers"
+  * INSTALLATION: a registration arms the rule on the ONE session it is
+  * given, and on no other. That session's
+  * `experimental.extraOptimizations` (the "User Provided Optimizers"
   * batch, post-pushdown — the base appears as
-  * [[DataSourceV2ScanRelation]]). It is deliberately NOT a session-wide
-  * extension: the MV gates compare the armed clone's answer against the
-  * un-armed base session, and arming every session would compare the MV
-  * with itself. The matcher also accepts the pre-pushdown
-  * [[DataSourceV2Relation]] shape; the grafted MV subtree is the
-  * already-pushed-down scan relation captured at registration, valid in
-  * either position.
+  * [[DataSourceV2ScanRelation]]) holds one immutable [[MvRewrite]]
+  * carrying that session's registrations; registering swaps in a copy
+  * with the new entry, which replaces any earlier entry for the same
+  * base, and a session clone and its registrations go away together.
+  * It is deliberately NOT a session-wide extension: the MV gates compare
+  * the armed clone's answer against the un-armed base session, and
+  * arming every session would compare the MV with itself. The matcher
+  * also accepts the pre-pushdown [[DataSourceV2Relation]] shape; the
+  * grafted MV subtree is the already-pushed-down scan relation captured
+  * at registration, valid in either position.
   *
   * At 100 TB this is the difference between a dashboard aggregate
   * costing O(MV) — thousands of rows — and O(base) — the full fact scan:
@@ -82,7 +85,7 @@ import org.apache.spark.sql.types.DoubleType
   * extension-surface "custom Catalyst rule" leg of SURVEY §2.2 applied
   * to the classic warehouse acceleration path.
   */
-object MvRewrite extends Rule[LogicalPlan] {
+object MvRewrite {
 
   /** A STAR-SCHEMA MV's defining join: `left ⋈_{leftKey = rightKey}
     * right`, INNER, single equi-key. The matcher accepts the query's
@@ -120,8 +123,6 @@ object MvRewrite extends Rule[LogicalPlan] {
       isFresh: () => Boolean,
       join: Option[JoinSpec] = None)
 
-  private val registry = new ConcurrentHashMap[String, MvDef]()
-
   private def scanOf(session: SparkSession, ident: String): DataSourceV2ScanRelation =
     session.table(ident).queryExecution.optimizedPlan.collectFirst {
       case s: DataSourceV2ScanRelation => s
@@ -155,8 +156,7 @@ object MvRewrite extends Rule[LogicalPlan] {
       groupCols.toSet, derive,
       () => graft.sources.v2.MemCatalog.currentVersion(baseDir) == v &&
         governance(baseDir) == gov)
-    registry.put(d.baseName, d)
-    d
+    arm(session, d)
   }
 
   /** Registration whose freshness follows a PERSISTED maintenance
@@ -183,8 +183,7 @@ object MvRewrite extends Rule[LogicalPlan] {
       () => governance(baseDir) == gov &&
         graft.sources.v2.MemCatalog.readProps(mvDir).get("graft.mv.basedOn")
           .exists(_.toInt == graft.sources.v2.MemCatalog.currentVersion(baseDir)))
-    registry.put(d.baseName, d)
-    d
+    arm(session, d)
   }
 
   /** The signed-delta maintenance statement for a `(cat, n_rows,
@@ -240,23 +239,54 @@ object MvRewrite extends Rule[LogicalPlan] {
         graft.sources.v2.MemCatalog.currentVersion(dir) == v
       } && baseDirs.zip(govs).forall { case (dir, g) => governance(dir) == g },
       join = Some(JoinSpec(ln, rn, leftKey, rightKey)))
-    registry.put(d.baseName, d)
+    arm(session, d)
+  }
+
+  /** Put `d` into `session`'s rule, replacing an entry for the same base,
+    * or arm the session with a new rule. Only `session` sees it.
+    */
+  private def arm(session: SparkSession, d: MvDef): MvDef = {
+    val x = session.experimental
+    x.synchronized {
+      val (mine, others) = x.extraOptimizations.partition(_.isInstanceOf[MvRewrite])
+      val defs = mine.collectFirst { case r: MvRewrite => r.defs }.getOrElse(Map.empty)
+      x.extraOptimizations = others :+ new MvRewrite(defs + (d.baseName -> d))
+    }
     d
   }
 
-  def unregister(baseName: String): Unit = registry.remove(baseName)
-
-  /** Arm the rule on `spark` via `experimental.extraOptimizations`
-    * (idempotent; session-local — clones and other sessions unaffected).
+  /** One probe of `sql` on an armed session. `scans` names the DSv2
+    * tables its optimized plan reads; `sameRows` compares its rows with
+    * the `control` session's answer as sorted row strings. Both read the
+    * ONE QueryExecution of the armed query, so a probe compiles it once.
+    * Doubles compare exactly: the gates' sums stay below 2^53, so both
+    * accumulations are exact and the one division agrees.
     */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
+  final class Probe(armed: SparkSession, control: SparkSession, sql: String) {
+    private val q = armed.sql(sql)
+    val scans: Set[String] = q.queryExecution.optimizedPlan.collect {
+      case s: DataSourceV2ScanRelation => s.relation.table.name()
+    }.toSet
+    lazy val sameRows: Boolean = {
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted
+      rows(q).sameElements(rows(control.sql(sql)))
+    }
+    /** The plan reads `mvName` alone iff `fromMv`, and the rows match. */
+    def serves(mvName: String, fromMv: Boolean): Boolean =
+      (scans == Set(mvName)) == fromMv && sameRows
   }
+}
+
+/** The rule as armed on one session: `defs` maps each registered base
+  * (or star-join key) to its MV. Immutable; [[MvRewrite.register]] and
+  * its twins swap in a new instance.
+  */
+final class MvRewrite private (private val defs: Map[String, MvRewrite.MvDef])
+    extends Rule[LogicalPlan] {
+  import MvRewrite.MvDef
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (registry.isEmpty) return plan
+    if (defs.isEmpty) return plan
     plan.transformUp {
       case agg: Aggregate => tryRewrite(agg).getOrElse(agg)
     }
@@ -269,9 +299,9 @@ object MvRewrite extends Rule[LogicalPlan] {
     */
   private def strip(plan: LogicalPlan): Option[(MvDef, Seq[Expression])] = plan match {
     case s: DataSourceV2ScanRelation =>
-      Option(registry.get(s.relation.table.name())).map((_, Nil))
+      defs.get(s.relation.table.name()).map((_, Nil))
     case r: DataSourceV2Relation =>
-      Option(registry.get(r.table.name())).map((_, Nil))
+      defs.get(r.table.name()).map((_, Nil))
     case Filter(cond, child) =>
       strip(child).map { case (d, cs) => (d, conjuncts(cond) ++ cs) }
     case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) =>
@@ -303,11 +333,10 @@ object MvRewrite extends Rule[LogicalPlan] {
   }
 
   private def stripJoin(j: Join): Option[(MvDef, Seq[Expression])] = {
-    import scala.jdk.CollectionConverters._
     for {
       (ln, lcs) <- scanSide(j.left)
       (rn, rcs) <- scanSide(j.right)
-      d <- registry.values.asScala.find(_.join.exists(js =>
+      d <- defs.values.find(_.join.exists(js =>
         (js.leftName == ln && js.rightName == rn) ||
           (js.leftName == rn && js.rightName == ln)))
       js = d.join.get

@@ -1505,8 +1505,9 @@ object Formats {
     * row-identical to the direct base aggregate computed with the rule
     * disarmed), `mv_stale_scans_base` (one base commit the MV has not
     * absorbed disarms the rewrite — the plan scans the base again, no
-    * wrong answers ever), `mv_refreshed_used` (the unregister → rebuild
-    * → re-register refresh protocol re-arms it). At 100 TB this turns
+    * wrong answers ever), `mv_refreshed_used` (the refresh protocol,
+    * rebuild on the disarmed session then register again, re-arms it).
+    * At 100 TB this turns
     * every matching dashboard aggregate from O(base fact scan) into
     * O(MV rows) with zero user query changes, while the freshness gate
     * keeps the substitution exact — the classic warehouse MV-rewriting
@@ -1520,12 +1521,11 @@ object Formats {
         |       CAST(o_orderkey % 5 AS BIGINT) AS cat,
         |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         |FROM graft_mvr_orders""".stripMargin)
-    // the rule is armed on a session CLONE (extraOptimizations are
+    // the rule is armed on a session CLONE (registrations are
     // session-local), so the concurrent verify sweep never sees it; the
-    // main session doubles as the disarmed control
+    // main session is the disarmed control, and the MV is built on it
     val s2 = spark.newSession()
-    graft.plans.MvRewrite.install(s2)
-    def refreshMv(): Unit = s2.sql(
+    def refreshMv(): Unit = spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvr_mv AS
         |SELECT k, cat, count(*) AS n_rows, sum(cents) AS sum_cents,
         |       min(cents) AS min_cents, max(cents) AS max_cents
@@ -1537,40 +1537,30 @@ object Formats {
       Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents",
         ("min", "cents") -> "min_cents", ("max", "cents") -> "max_cents",
         ("notnull", "cents") -> "n_rows"))
-    var d = reg()
-    try {
-      val sql =
-        """SELECT cat, count(*) AS n, sum(cents) AS cents, min(cents) AS lo,
-          |       max(cents) AS hi, avg(cents) AS mean
-          |FROM graftmem.tmp.mvr_base WHERE k < 20 GROUP BY cat""".stripMargin
-      def scans(q: org.apache.spark.sql.DataFrame): Set[String] =
-        q.queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.relation.table.name()
-        }.toSet
-      val q1 = s2.sql(sql)
-      val usedMv = scans(q1) == Set(d.mvName)
-      // row-identical to the direct base aggregate (main session = the
-      // disarmed control); doubles compare exactly — the sums stay below
-      // 2^53, so both accumulations are exact and the one division agrees
-      val resultMatch = q1.collect().map(_.toString).sorted
-        .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      // STALENESS: a base commit the MV has not absorbed disarms the rule
-      s2.sql("INSERT INTO graftmem.tmp.mvr_base " +
-        "SELECT CAST(7 AS BIGINT), CAST(2 AS BIGINT), CAST(990001 AS BIGINT) " +
-        "UNION ALL SELECT CAST(55 AS BIGINT), CAST(4 AS BIGINT), CAST(990002 AS BIGINT)")
-      val staleScansBase = scans(s2.sql(sql)) == Set(d.baseName)
-      // the refresh protocol: unregister -> rebuild -> re-register
-      graft.plans.MvRewrite.unregister(d.baseName)
-      refreshMv()
-      d = reg()
-      val refreshedUsesMv = scans(s2.sql(sql)) == Set(d.mvName)
-      spark.sql(sql)
-        .withColumn("mv_rewrite_used", lit(usedMv))
-        .withColumn("mv_result_match", lit(resultMatch))
-        .withColumn("mv_stale_scans_base", lit(staleScansBase))
-        .withColumn("mv_refreshed_used", lit(refreshedUsesMv))
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
+    val d = reg()
+    val sql =
+      """SELECT cat, count(*) AS n, sum(cents) AS cents, min(cents) AS lo,
+        |       max(cents) AS hi, avg(cents) AS mean
+        |FROM graftmem.tmp.mvr_base WHERE k < 20 GROUP BY cat""".stripMargin
+    def probe() = new graft.plans.MvRewrite.Probe(s2, spark, sql)
+    val p1 = probe()
+    val usedMv = p1.scans == Set(d.mvName)
+    // row-identical to the direct base aggregate
+    val resultMatch = p1.sameRows
+    // STALENESS: a base commit the MV has not absorbed disarms the rule
+    s2.sql("INSERT INTO graftmem.tmp.mvr_base " +
+      "SELECT CAST(7 AS BIGINT), CAST(2 AS BIGINT), CAST(990001 AS BIGINT) " +
+      "UNION ALL SELECT CAST(55 AS BIGINT), CAST(4 AS BIGINT), CAST(990002 AS BIGINT)")
+    val staleScansBase = probe().scans == Set(d.baseName)
+    // the refresh protocol: rebuild on the disarmed session, register again
+    refreshMv()
+    reg()
+    val refreshedUsesMv = probe().scans == Set(d.mvName)
+    spark.sql(sql)
+      .withColumn("mv_rewrite_used", lit(usedMv))
+      .withColumn("mv_result_match", lit(resultMatch))
+      .withColumn("mv_stale_scans_base", lit(staleScansBase))
+      .withColumn("mv_refreshed_used", lit(refreshedUsesMv))
   }
 
   /** WRITE-TIME CDC SIDECARS — the net change feed's 100 TB path
@@ -1780,8 +1770,7 @@ object Formats {
         |       CAST(c_nationkey % 5 AS BIGINT) AS nat
         |FROM graft_mvt_customer""".stripMargin)
     val s2 = spark.newSession()
-    graft.plans.MvRewrite.install(s2)
-    def refreshMv(): Unit = s2.sql(
+    def refreshMv(): Unit = spark.sql(
       """CREATE OR REPLACE TABLE graftmem.tmp.mvt_mv AS
         |SELECT seg, nat, count(*) AS n_rows, sum(cents) AS sum_cents
         |FROM graftmem.tmp.mvt_f f JOIN graftmem.tmp.mvt_d d ON f.ck = d.dk
@@ -1792,37 +1781,29 @@ object Formats {
       "graftmem.tmp.mvt_f", "graftmem.tmp.mvt_d", "ck", "dk", dirs,
       Seq("seg", "nat"),
       Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    var d = reg()
-    try {
-      val sql =
-        """SELECT seg, count(*) AS n, sum(cents) AS cents
-          |FROM graftmem.tmp.mvt_f f JOIN graftmem.tmp.mvt_d d ON f.ck = d.dk
-          |WHERE d.nat = 2 GROUP BY seg""".stripMargin
-      def scans(q: org.apache.spark.sql.DataFrame): Set[String] =
-        q.queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.relation.table.name()
-        }.toSet
-      val q1 = s2.sql(sql)
-      val usedMv = scans(q1) == Set(d.mvName)
-      val resultMatch = q1.collect().map(_.toString).sorted
-        .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      // staleness: a DANGLING dim insert (matches no fact key) — the
-      // results are invariant, the version is not, and correctness-first
-      // freshness must disarm anyway
-      s2.sql("INSERT INTO graftmem.tmp.mvt_d " +
-        "SELECT CAST(990001 AS BIGINT), 'MACHINERY', CAST(2 AS BIGINT)")
-      val staleScansBase = !scans(s2.sql(sql)).contains(d.mvName)
-      graft.plans.MvRewrite.unregister(d.baseName)
-      refreshMv()
-      d = reg()
-      val refreshedUsesMv = scans(s2.sql(sql)) == Set(d.mvName)
-      spark.sql(sql)
-        .withColumn("star_rewrite_used", lit(usedMv))
-        .withColumn("star_result_match", lit(resultMatch))
-        .withColumn("star_stale_scans_base", lit(staleScansBase))
-        .withColumn("star_refreshed_used", lit(refreshedUsesMv))
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
+    val d = reg()
+    val sql =
+      """SELECT seg, count(*) AS n, sum(cents) AS cents
+        |FROM graftmem.tmp.mvt_f f JOIN graftmem.tmp.mvt_d d ON f.ck = d.dk
+        |WHERE d.nat = 2 GROUP BY seg""".stripMargin
+    def probe() = new graft.plans.MvRewrite.Probe(s2, spark, sql)
+    val p1 = probe()
+    val usedMv = p1.scans == Set(d.mvName)
+    val resultMatch = p1.sameRows
+    // staleness: a DANGLING dim insert (matches no fact key) — the
+    // results are invariant, the version is not, and correctness-first
+    // freshness must disarm anyway
+    s2.sql("INSERT INTO graftmem.tmp.mvt_d " +
+      "SELECT CAST(990001 AS BIGINT), 'MACHINERY', CAST(2 AS BIGINT)")
+    val staleScansBase = !probe().scans.contains(d.mvName)
+    refreshMv()
+    reg()
+    val refreshedUsesMv = probe().scans == Set(d.mvName)
+    spark.sql(sql)
+      .withColumn("star_rewrite_used", lit(usedMv))
+      .withColumn("star_result_match", lit(resultMatch))
+      .withColumn("star_stale_scans_base", lit(staleScansBase))
+      .withColumn("star_refreshed_used", lit(refreshedUsesMv))
   }
 
   /** CONTINUOUSLY-SERVING MATERIALIZED VIEW — [[dsv2MvRewrite]]'s
@@ -1859,12 +1840,11 @@ object Formats {
     val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvs_base")
     val mvDir = MemCatalog.tableDir(spark, "graftmem.tmp.mvs_mv")
     val s2 = spark.newSession()
-    graft.plans.MvRewrite.install(s2)
     val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvs_base",
       "graftmem.tmp.mvs_mv", baseDir, mvDir, Seq("cat"),
       Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
     // the maintenance cycles share ONE checkpoint: the second is a restart
-    try BoundedDrain.scope { maint =>
+    BoundedDrain.scope { maint =>
       // one maintenance CYCLE: drain every unabsorbed base commit (one per
       // epoch), folding each into the MV and stamping the watermark in the
       // SAME foreachBatch (the scheduled-maintenance shape; restarts
@@ -1887,31 +1867,20 @@ object Formats {
         })
       val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
         "FROM graftmem.tmp.mvs_base GROUP BY cat"
-      def scansMvOnly(): Boolean = {
-        val names = s2.sql(sql).queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.relation.table.name()
-        }.toSet
-        names == Set(d.mvName)
-      }
+      def serves(fromMv: Boolean): Boolean =
+        new graft.plans.MvRewrite.Probe(s2, spark, sql).serves(d.mvName, fromMv)
       cycle() // absorbs v0
-      val freshServes = scansMvOnly() &&
-        s2.sql(sql).collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+      val freshServes = serves(fromMv = true)
       ss.sql("UPDATE graftmem.tmp.mvs_base SET cents = cents + 3 WHERE cat = 2") // v1
-      val staleDisarms = !scansMvOnly() &&
-        s2.sql(sql).collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+      val staleDisarms = serves(fromMv = false)
       cycle() // restart from the checkpoint: absorbs v1, re-arms
-      val rearms = scansMvOnly() &&
-        s2.sql(sql).collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+      val rearms = serves(fromMv = true)
       spark.sql(sql)
         .withColumn("mv_serves_fresh", lit(freshServes))
         .withColumn("mv_stale_disarms", lit(staleDisarms))
         .withColumn("mv_rearms_after_drain", lit(rearms))
         .localCheckpoint(true)
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
+    }
   }
 
   /** MV AUTO-REFRESH VIA COMMIT HOOK — the last manual step of
@@ -1997,7 +1966,6 @@ object Formats {
       }
     }
     val s2 = spark.newSession()
-    graft.plans.MvRewrite.install(s2)
     val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvar_base",
       "graftmem.tmp.mvar_mv", baseDir, mvDir, Seq("cat"),
       Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
@@ -2005,39 +1973,25 @@ object Formats {
     try {
       val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
         "FROM graftmem.tmp.mvar_base GROUP BY cat"
-      // plan gate and answer check share ONE QueryExecution per probe (the
-      // r14 shape compiled the serve query twice per check — once for the
-      // plan inspection, once for the collect)
-      def scansMvOnly(df: DataFrame): Boolean = {
-        val names = df.queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.relation.table.name()
-        }.toSet
-        names == Set(d.mvName)
-      }
-      def matches(df: DataFrame): Boolean =
-        df.collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+      def serves(fromMv: Boolean): Boolean =
+        new graft.plans.MvRewrite.Probe(s2, spark, sql).serves(d.mvName, fromMv)
       // v1: the commit ITSELF triggers maintenance (drains v0 and v1)
       ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 7 WHERE cat = 3")
       MemCatalog.awaitCommitHooks()
-      val served1 = s2.sql(sql)
-      val autoServes = scansMvOnly(served1) && matches(served1)
+      val autoServes = serves(fromMv = true)
       // commit storm: two back-to-back commits coalesce into ≤2 hook
       // runs; the DELETE erases a whole group, exercising the MERGE's
       // group-retiring DELETE leg through the auto path
       ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 11 WHERE cat = 5")
       ss.sql("DELETE FROM graftmem.tmp.mvar_base WHERE cat = 0")
       MemCatalog.awaitCommitHooks()
-      val served2 = s2.sql(sql)
-      val stormServes = scansMvOnly(served2) && matches(served2)
+      val stormServes = serves(fromMv = true)
       // hook dropped: the next commit leaves the MV stale; the watermark
       // gate disarms the rewrite and answers stay correct from base —
       // the maintenance stream is torn down WITH the hook
       teardown()
       ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 1 WHERE cat = 1")
-      val served3 = s2.sql(sql)
-      val droppedDisarms = !scansMvOnly(served3) && matches(served3)
+      val droppedDisarms = serves(fromMv = false)
       val out = spark.sql(sql)
         .withColumn("auto_serves_after_commit", lit(autoServes))
         .withColumn("storm_coalesced_serves", lit(stormServes))
@@ -2047,7 +2001,6 @@ object Formats {
     } finally {
       teardown()
       MemCatalog.deleteRecursively(ckpt)
-      graft.plans.MvRewrite.unregister(d.baseName)
     }
   }
 

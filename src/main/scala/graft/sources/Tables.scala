@@ -27,19 +27,10 @@ object Tables {
     */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** TEST-ONLY seam: when set, every table read is repartitioned n ways at
-    * the source, so specs can prove operator results are partition-layout
-    * invariant UPSTREAM of the whole plan (PropertySpec) — a post-hoc
-    * repartition of the OUTPUT would only test run-to-run determinism.
-    * Never set outside tests.
-    */
-  @volatile private[graft] var testInputPartitions: Option[Int] = None
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-    val df = spark.read.schema(schema).parquet(path)
-    testInputPartitions.fold(df)(n => df.repartition(n))
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -190,7 +190,7 @@ private[v2] class AuditStreamingWrite(path: String, queryId: String,
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     AuditStreamingWrite.commitEpoch(path, queryId, epochId,
-      messages.collect { case m: AuditEpochCommit => m })
+      messages.toSeq.collect { case m: AuditEpochCommit => m })
     if (failOnCommitOfEpoch.contains(epochId))
       throw new RuntimeException(
         s"graft injected crash after the sink published epoch $epochId " +

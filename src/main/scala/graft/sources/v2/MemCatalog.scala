@@ -518,9 +518,9 @@ object MemCatalog {
     */
   class CommitConflictException(msg: String) extends RuntimeException(msg)
 
-  /** `bucket(n, v)` as a V2 catalog function — MUST equal
-    * [[MemPart.Bucket.eval]] bit-for-bit (the write router, the per-file
-    * `pt:` stats and the metadata rollup all assume one arithmetic).
+  /** `bucket(n, v)` as a V2 catalog function: [[MemPart.Bucket]]'s
+    * arithmetic, which the write router, the per-file `pt:` stats and the
+    * metadata rollup use too.
     */
   object BucketFn
       extends org.apache.spark.sql.connector.catalog.functions.UnboundFunction {
@@ -552,15 +552,12 @@ object MemCatalog {
     override def isResultNullable: Boolean = false
     override def isDeterministic: Boolean = true
     override def produceResult(input: InternalRow): java.lang.Long =
-      java.lang.Math.floorMod(input.getLong(1) * 2654435761L, input.getInt(0).toLong)
+      invoke(input.getInt(0), input.getLong(1))
     /** Magic method: codegen calls this with unboxed primitives. */
-    def invoke(n: Int, v: Long): Long =
-      java.lang.Math.floorMod(v * 2654435761L, n.toLong)
+    def invoke(n: Int, v: Long): Long = MemPart.Bucket(n, "").eval(v)
   }
 
-  /** `bucket(n, s)` over strings — MUST equal
-    * [[MemPart.Bucket.evalStr]] (FNV-1a 64 over the UTF-8 bytes, mod n).
-    */
+  /** `bucket(n, s)` over strings: FNV-1a 64 over the UTF-8 bytes, mod n. */
   class BucketStrBound
       extends org.apache.spark.sql.connector.catalog.functions.ScalarFunction[java.lang.Long] {
     override def inputTypes(): Array[DataType] = Array(IntegerType, StringType)
@@ -571,8 +568,7 @@ object MemCatalog {
     override def isDeterministic: Boolean = true
     override def produceResult(input: InternalRow): java.lang.Long =
       invoke(input.getInt(0), input.getUTF8String(1))
-    def invoke(n: Int, v: UTF8String): Long =
-      java.lang.Math.floorMod(MemPart.fnv1a64(v.getBytes), n.toLong)
+    def invoke(n: Int, v: UTF8String): Long = MemPart.Bucket(n, "").evalStr(v)
   }
 
   /** `truncate(n, v)` — [[MemPart.Truncate]]'s width-floor (integral) /
@@ -625,8 +621,8 @@ object MemCatalog {
 
   /** The TIME-transform system-function family beyond days —
     * `hours`/`months`/`years` over epoch-second integrals or TIMESTAMP,
-    * each bit-for-bit equal to its [[MemPart]] spec (one arithmetic for
-    * the router, the stats and SQL). One generic bound class per
+    * each evaluating its [[MemPart]] spec (one arithmetic for the router,
+    * the stats and SQL). One generic bound class per
     * (function, input) pair; `produceResult` is the evaluation surface
     * the write-distribution resolution uses.
     */
@@ -705,8 +701,8 @@ object MemCatalog {
     }
   }
 
-  /** `days(ts TIMESTAMP)` — MUST equal [[MemPart.Days.evalTsMicros]]
-    * (the µs→day divisor; a timestamp's physical value IS micros).
+  /** `days(ts TIMESTAMP)`: the µs→day divisor (a timestamp's physical
+    * value IS micros).
     */
   class DaysTsBound
       extends org.apache.spark.sql.connector.catalog.functions.ScalarFunction[java.lang.Long] {
@@ -718,7 +714,7 @@ object MemCatalog {
     override def isDeterministic: Boolean = true
     override def produceResult(input: InternalRow): java.lang.Long =
       invoke(input.getLong(0))
-    def invoke(us: Long): Long = java.lang.Math.floorDiv(us, 86400000000L)
+    def invoke(us: Long): Long = MemPart.Days("").evalTsMicros(us)
   }
 
   class DaysBound
@@ -730,8 +726,8 @@ object MemCatalog {
     override def isResultNullable: Boolean = false
     override def isDeterministic: Boolean = true
     override def produceResult(input: InternalRow): java.lang.Long =
-      java.lang.Math.floorDiv(input.getLong(0), 86400L)
-    def invoke(v: Long): Long = java.lang.Math.floorDiv(v, 86400L)
+      invoke(input.getLong(0))
+    def invoke(v: Long): Long = MemPart.Days("").eval(v)
   }
 
   def writeSchema(dir: Path, schema: StructType): Unit = {

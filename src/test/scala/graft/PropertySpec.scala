@@ -11,7 +11,7 @@ import graft.functions.TopKAggregator
   * corpora, driven with explicit seeds (each case spins Spark jobs, so a
   * bounded deterministic sample beats the default 100-case loop).
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -97,10 +97,24 @@ class PropertySpec extends AnyFunSuite {
   test("deterministic operators are partition-layout invariant (inputs repartitioned)") {
     // the 100 TB claim behind hash sampling, splits, packing and upsert:
     // results depend only on DATA, never on physical partitioning. The
-    // Tables.testInputPartitions seam repartitions every SOURCE read 7
-    // ways, so every upstream aggregate/window/join stage of the second
-    // run sees a genuinely different partition layout (repartitioning the
-    // OUTPUT would only test run-to-run determinism).
+    // second run reads a copy of the fixture in which every table is a
+    // directory of 7 parquet part files (round-robin rows; region's 5
+    // rows make 5), so every scan, and every upstream aggregate, window
+    // and join stage, sees a genuinely different partition layout. The
+    // layout lives in the data, so it reaches the session clones the
+    // queries make (repartitioning the OUTPUT would only test run-to-run
+    // determinism).
+    val copy = tempDir("graft-prop-parts").toString
+    graft.sources.Tables.names.foreach { t =>
+      spark.read.parquet(s"${TestSpark.sf}/$t.parquet").repartition(7)
+        .write.parquet(s"$copy/$t.parquet")
+    }
+    // the copy really scans as several splits: one file would plan one.
+    // (Spark packs small files into splits by size, so at this session's
+    // files.minPartitionNum = 4 the 7 files plan 4 splits, not 7.)
+    val orders = graft.sources.Tables.orders(spark, copy)
+    assert(orders.inputFiles.length == 7 && orders.rdd.getNumPartitions > 1,
+      s"${orders.inputFiles.length} files, ${orders.rdd.getNumPartitions} input partitions")
     val names = Seq("merge_upsert", "shard_packing", "train_test_split",
       "sample_hash", "text_repetition", "q13_order_histogram",
       "q12_priority_split",
@@ -166,11 +180,8 @@ class PropertySpec extends AnyFunSuite {
       val a = q(spark, TestSpark.sf)
       val cols = a.columns.map(col).toIndexedSeq
       val once = a.orderBy(cols: _*).collect().toSeq
-      graft.sources.Tables.testInputPartitions = Some(7)
-      val again =
-        try q(spark, TestSpark.sf).orderBy(cols: _*).collect().toSeq
-        finally graft.sources.Tables.testInputPartitions = None
-      assert(once == again, s"$name result changed under input repartition")
+      val again = q(spark, copy).orderBy(cols: _*).collect().toSeq
+      assert(once == again, s"$name result changed under a 7-file input layout")
     }
   }
 }

@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`CorpusKey.buildOnce`) and the catalog's commit path (one retrying
   * manifest commit loop, one `#seq` stamp, one staged-part publish and
   * discard). Scans report what they pruned as their own SQL metrics,
-  * never through JVM-global state.
+  * never through JVM-global state, MV registrations live on the session
+  * they arm, and the main tree holds no `@volatile var` at all.
   */
 class WiringGuardSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
@@ -146,7 +147,23 @@ class WiringGuardSpec extends AnyFunSuite {
       volatiles.findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
         .map(m => s"${f.getFileName}:${m.group(1)}")
     }
-    assert(shared == Seq("Tables.scala:testInputPartitions"),
+    assert(shared.isEmpty,
       s"concurrent queries share no mutable object state: ${shared.mkString(", ")}")
+  }
+
+  test("MV registrations live on the session they arm: no global registry, no test seam") {
+    val hits = offenders("extraOptimizations =", "MvRewrite.scala")
+    assert(hits.isEmpty, s"arm a session through MvRewrite.register: ${hits.mkString(", ")}")
+    // the retired names, spelled so this file does not match itself
+    val gone = Seq("install", "unregister").map("MvRewrite." + _) :+ ("test" + "InputPartitions")
+    val text = Set(".scala", ".py", ".sh", ".sbt", ".md", ".json")
+    val found = Seq("src", "perfbench", "scripts").flatMap { root =>
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.toSeq
+        .filter(f => text.exists(f.toString.endsWith) && !f.toString.contains("/target/"))
+        .filter(f => gone.exists(new String(Files.readAllBytes(f), "UTF-8").contains))
+      finally walk.close()
+    }
+    assert(found.isEmpty, s"retired MV registry or input seam still named in: ${found.mkString(", ")}")
   }
 }

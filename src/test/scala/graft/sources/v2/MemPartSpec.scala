@@ -309,6 +309,62 @@ class MemPartSpec extends AnyFunSuite with TempDirs {
     assert(d.evalAny(t).contains(1L))
     // the SQL function twin agrees
     assert(new MemCatalog.DaysTsBound().invoke(86400000000L) == 1L)
+
+    // every bound SQL function evaluates its spec: `invoke` (the codegen
+    // path) and `produceResult` (the interpreted path), on negatives and
+    // at both ends of the range (where a spec throws, the twin throws too)
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.connector.catalog.functions.ScalarFunction
+    import org.apache.spark.sql.types.{DataType, DateType, IntegerType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    def check(what: String, got: => Long, want: => Long): Unit =
+      assert(scala.util.Try(got).toOption == scala.util.Try(want).toOption, what)
+    def bound(fn: org.apache.spark.sql.connector.catalog.functions.UnboundFunction,
+        in: DataType*): ScalarFunction[java.lang.Long] =
+      fn.bind(StructType(in.zipWithIndex.map { case (t, i) => StructField(s"a$i", t) }))
+        .asInstanceOf[ScalarFunction[java.lang.Long]]
+    val longs = Seq(Long.MinValue, -86400000001L, -86401L, -86400L, -1L, 0L, 1L,
+      86399L, 86400L, 86400000000L, Long.MaxValue)
+    for (v <- longs) {
+      for (n <- Seq(1, 7, 16)) {
+        val (b, t) = (MemPart.Bucket(n, "k"), MemPart.Truncate(n, "k"))
+        check(s"bucket($n, $v)", new MemCatalog.BucketBound().invoke(n, v), b.eval(v))
+        check(s"bucket($n, $v) row", bound(MemCatalog.BucketFn, IntegerType, LongType)
+          .produceResult(InternalRow(n, v)), b.eval(v))
+        check(s"truncate($n, $v)", new MemCatalog.TruncateBound().invoke(n, v), t.eval(v))
+        check(s"truncate($n, $v) row", bound(MemCatalog.TruncateFn, IntegerType, LongType)
+          .produceResult(InternalRow(n, v)), t.eval(v))
+      }
+      check(s"days($v)", new MemCatalog.DaysBound().invoke(v), d.eval(v))
+      check(s"days($v) row", bound(MemCatalog.DaysFn, LongType)
+        .produceResult(InternalRow(v)), d.eval(v))
+      check(s"days(ts $v)", new MemCatalog.DaysTsBound().invoke(v), d.evalTsMicros(v))
+      check(s"days(ts $v) row", bound(MemCatalog.DaysFn, TimestampType)
+        .produceResult(InternalRow(v)), d.evalTsMicros(v))
+      Seq(MemCatalog.HoursFn -> MemPart.Hours("ts"), MemCatalog.MonthsFn -> MemPart.Months("ts"),
+          MemCatalog.YearsFn -> MemPart.Years("ts")).foreach { case (fn, spec) =>
+        check(s"${fn.name()}($v)", bound(fn, LongType).produceResult(InternalRow(v)), spec.eval(v))
+        check(s"${fn.name()}(ts $v)", bound(fn, TimestampType).produceResult(InternalRow(v)),
+          spec.evalTsMicros(v))
+      }
+    }
+    for (day <- Seq(Int.MinValue, -719528, -1, 0, 1, 19000, Int.MaxValue)) {
+      Seq(MemCatalog.DaysFn -> d, MemCatalog.MonthsFn -> MemPart.Months("ts"),
+          MemCatalog.YearsFn -> MemPart.Years("ts")).foreach { case (fn, spec) =>
+        check(s"${fn.name()}(date $day)", bound(fn, DateType).produceResult(InternalRow(day)),
+          spec.evalDateDays(day.toLong))
+      }
+    }
+    for (str <- Seq("", "a", "Kelvin \u212A", "İstanbul", "x" * 40); n <- Seq(1, 3, 16)) {
+      val u = UTF8String.fromString(str)
+      val (b, t) = (MemPart.Bucket(n, "k"), MemPart.Truncate(n, "k"))
+      check(s"bucket($n, '$str')", new MemCatalog.BucketStrBound().invoke(n, u), b.evalStr(u))
+      check(s"bucket($n, '$str') row", bound(MemCatalog.BucketFn, IntegerType, StringType)
+        .produceResult(InternalRow(n, u)), b.evalStr(u))
+      check(s"truncate($n, '$str')", new MemCatalog.TruncateStrBound().invoke(n, u), t.evalStr(u))
+      check(s"truncate($n, '$str') row", bound(MemCatalog.TruncateFn, IntegerType, StringType)
+        .produceResult(InternalRow(n, u)), t.evalStr(u))
+    }
   }
 
   test("TIMESTAMP columns carry zone maps and survive row-level DELETE") {
