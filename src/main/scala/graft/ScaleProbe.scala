@@ -227,7 +227,7 @@ object ScaleProbe {
     * point across scales.
     */
   private def geoExtentFor(spark: SparkSession, dir: String): Long = {
-    val n = spark.read.parquet(s"$dir/customer.parquet").count()
+    val n = graft.sources.Tables.customer(spark, dir).count()
     math.max(graft.operators.Geo.Radius * 3,
       math.round(math.sqrt(n.toDouble) * 816.5))
   }

@@ -557,20 +557,6 @@ object Formats {
         |SELECT 3, count(*), sum(cents) FROM graftmem.tmp.tt_bands""".stripMargin)
   }
 
-  /** CHANGE FEED between two snapshots of the versioned catalog table —
-    * the Delta "change data feed" / Iceberg changelog shape, composed
-    * from [[dsv2TimeTravel]]'s machinery instead of stored row-level
-    * change files: diff `VERSION AS OF 0` against the current snapshot
-    * with one full-outer join on the table key and classify each key as
-    * insert / update / delete (value-identical rows drop out). Both
-    * snapshot reads are manifest-pinned scans of the SAME table in one
-    * plan — time travel composing inside a join is the point. At 100 TB
-    * this is the snapshot-diff fallback every lakehouse supports when
-    * CDF wasn't enabled at write time: one co-partitioned join on the
-    * key, file pruning via the manifests, no stored change log. The
-    * oracle replays the DML against the fixture and classifies the same
-    * way.
-    */
   /** `table_changes('<cat.ns.t>', start[, end])` — the SQL TVF surface
     * over the catalog change feed ([[graft.sources.v2.TableChanges]]),
     * the form a SQL-only user reaches for first (Delta's `table_changes`
@@ -602,51 +588,37 @@ object Formats {
     // zero layout assumptions; untouched rows of rewritten files cancel)
     val netW2 = ss.sql(
       """SELECT sum(CASE WHEN _change_type = 'insert' THEN cents ELSE -cents END)
-        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
-      .head().getLong(0)
-    val touched = ss.sql(
-      "SELECT count(*) FROM graftmem.tmp.tvf_t VERSION AS OF 1 WHERE k % 6 = 2")
-      .head().getLong(0)
-    val boundedWindow = netW2 == touched
-    // rider 3: _commit_version covers exactly 0..head and
-    // _commit_timestamp is non-decreasing in version (wall-clock values
-    // can't be oracle-gated; the ORDER contract can)
-    val vc = ss.sql(
-      """SELECT _commit_version, max(CAST(_commit_timestamp AS BIGINT)) AS mx,
-        |       min(CAST(_commit_timestamp AS BIGINT)) AS mn
-        |FROM table_changes('graftmem.tmp.tvf_t', 0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin).collect()
-    val versionsStamped = vc.map(_.getLong(0)).toSet == (0L to 3L).toSet &&
-      vc.forall(r => r.getLong(1) == r.getLong(2)) && // one ts per commit
-      vc.sliding(2).forall {
-        case Array(a, b) => a.getLong(1) <= b.getLong(1)
-        case _ => true
-      }
-    // rider 4: NET mode (4th arg) — the update window emits Delta-CDC
-    // update_preimage/update_postimage rows whose per-key cents delta
-    // matches the raw window's net, and untouched rows of the rewritten
-    // file groups cancel inside the diff (no insert/delete noise)
-    val netRows = ss.sql(
-      """SELECT _change_type,
-        |       sum(CASE WHEN _change_type = 'update_postimage' THEN cents
-        |                WHEN _change_type = 'update_preimage' THEN -cents
-        |                ELSE 0 END) AS d
-        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2, true)
-        |GROUP BY 1""".stripMargin).collect()
-    val netWindow =
-      netRows.map(_.getString(0)).toSet ==
-        Set("update_preimage", "update_postimage") &&
-        netRows.map(_.getLong(1)).sum == netW2
+        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin).scalar()
+    val boundedWindow = netW2 === ss.sql(
+      "SELECT count(*) FROM graftmem.tmp.tvf_t VERSION AS OF 1 WHERE k % 6 = 2").scalar()
+    // rider 3: _commit_version covers exactly 0..3, with one
+    // _commit_timestamp per commit, non-decreasing in version (wall-clock
+    // values can't be oracle-gated; the ORDER contract can): sorted by
+    // (timestamp, version), the versions read 0..3 in order
+    val versionsStamped = ss.sql(
+      """SELECT transform(array_sort(collect_list(struct(mx, v))), s -> s.v) = sequence(0L, 3L)
+        |       AND every(mx = mn)
+        |FROM (SELECT _commit_version AS v, max(CAST(_commit_timestamp AS BIGINT)) AS mx,
+        |             min(CAST(_commit_timestamp AS BIGINT)) AS mn
+        |      FROM table_changes('graftmem.tmp.tvf_t', 0, 3) GROUP BY 1)""".stripMargin).scalar()
+    // rider 4: NET mode (4th arg) — the update window emits only Delta-CDC
+    // update_preimage/update_postimage rows, whose cents delta matches the
+    // raw window's net: untouched rows of the rewritten file groups cancel
+    // inside the diff (no insert/delete noise)
+    val netWindow = ss.sql(
+      """SELECT array_sort(collect_set(_change_type)) AS types,
+        |       sum(CASE WHEN _change_type = 'update_postimage' THEN cents ELSE -cents END) AS d
+        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2, true)""".stripMargin)
+      .select(col("types") === array(lit("update_postimage"), lit("update_preimage")) &&
+        col("d") === netW2).scalar()
     // rider 1: the TVF is multiset-identical to a REAL drained streaming
     // change-feed run over the same versions
     val drained = BoundedDrain.once(
       ss.readStream.option("changefeed", "true").table("graftmem.tmp.tvf_t")
         .select(col("k"), col("n"), col("cents"), col("_change_type")),
       Sink.Memory(OutputMode.Append())).out.get
-    val tvfRows = ss.sql(
-      """SELECT k, n, cents, _change_type
-        |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)""".stripMargin)
-    val equalsStream = Multiset.equal(tvfRows, drained)
+    val equalsStream = Multiset.equal(ss.sql(
+      "SELECT k, n, cents, _change_type FROM table_changes('graftmem.tmp.tvf_t', 0, 3)"), drained)
     // rider 5: `WHERE _commit_version = 2` PUSHES DOWN — the physical
     // scan narrows its planned window to versions=[2, 2] (O(one
     // commit's delta), not a full replay filtered after the fact), and
@@ -656,10 +628,10 @@ object Formats {
         |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)
         |WHERE _commit_version = 2""".stripMargin)
     val explicitW2 = ss.sql(
-      """SELECT k, n, cents, _change_type
-        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
+      "SELECT k, n, cents, _change_type FROM table_changes('graftmem.tmp.tvf_t', 2, 2)")
+    // the planned window is a plan-time fact: reading it runs no job
     val versionPushdown =
-      narrowed.queryExecution.executedPlan.toString.contains("versions=[2, 2]") &&
+      lit(narrowed.queryExecution.executedPlan.toString.contains("versions=[2, 2]")) &&
         Multiset.equal(narrowed, explicitW2)
     // the gate: net reconstruction from the TVF == the final state
     ss.sql(
@@ -669,11 +641,11 @@ object Formats {
         |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)
         |GROUP BY k
         |HAVING sum(CASE WHEN _change_type = 'insert' THEN n ELSE -n END) <> 0""".stripMargin)
-      .withColumn("tvf_equals_stream", lit(equalsStream))
-      .withColumn("tvf_bounded_window", lit(boundedWindow))
-      .withColumn("commit_versions_stamped", lit(versionsStamped))
-      .withColumn("tvf_net_window", lit(netWindow))
-      .withColumn("version_pushdown_narrows", lit(versionPushdown))
+      .withColumn("tvf_equals_stream", equalsStream)
+      .withColumn("tvf_bounded_window", boundedWindow)
+      .withColumn("commit_versions_stamped", versionsStamped)
+      .withColumn("tvf_net_window", netWindow)
+      .withColumn("version_pushdown_narrows", versionPushdown)
   }
 
   /** THE TVF'S STREAMING TWIN — `spark.readStream.table(
@@ -711,19 +683,19 @@ object Formats {
         .select(col("k"), col("n"), col("cents"),
           col("_change_type"), col("_commit_version")),
       Sink.Memory(OutputMode.Append()))
-    // pacing: four commits, four non-empty micro-batches (one each)
+    // pacing: four commits, four non-empty micro-batches (one each); a
+    // progress fact of the finished drain, so reading it runs no job
     val paced = run.progress.count(_.numInputRows > 0) == 4
     val drained = run.out.get
     val batch = ss.sql(
       """SELECT k, n, cents, _change_type, _commit_version
         |FROM table_changes('graftmem.tmp.tvs', 0, 3)""".stripMargin)
-    val equalsTvf = Multiset.equal(drained, batch)
     // fold the drained feed: net reconstruction == the final table
     val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
     drained.groupBy("k")
       .agg(sum(sign * col("n")).as("n"), sum(sign * col("cents")).as("cents"))
       .filter(col("n") =!= 0)
-      .withColumn("stream_equals_tvf", lit(equalsTvf))
+      .withColumn("stream_equals_tvf", Multiset.equal(drained, batch))
       .withColumn("one_commit_per_trigger", lit(paced))
   }
 
@@ -765,10 +737,12 @@ object Formats {
       "SELECT cat, cents, _change_type, _commit_version " +
         "FROM table_changes('graftmem.tmp.sqlivm_base', 1, 3, true)"
     // rider: the single statement folds ALL THREE commits at once
-    val window = spark.sql(tvfSql).select("_commit_version").distinct()
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L)
+    val window = spark.sql(tvfSql)
+      .select(array_sort(collect_set("_commit_version")) === array(lit(1L), lit(2L), lit(3L)))
+      .scalar()
     // rider: the TVF reports DELTA bytes, strictly under the base scan —
-    // the statistic that keeps the maintenance join broadcast-able
+    // the statistic that keeps the maintenance join broadcast-able; plan
+    // statistics and manifest sizes are plan-time facts that run no job
     val baseDir = MemCatalog.tableDir(spark, "graftmem.tmp.sqlivm_base")
     val baseBytes = MemCatalog.liveFiles(baseDir)
       .map(java.nio.file.Files.size).sum
@@ -777,23 +751,32 @@ object Formats {
     // THE maintenance statement: one SQL MERGE over the net window
     spark.sql(graft.plans.MvRewrite.signedDeltaMerge("graftmem.tmp.sqlivm_mv",
       "table_changes('graftmem.tmp.sqlivm_base', 1, 3, true)"))
-    // the gate that makes the timing claim honest: maintained == recompute
-    val bad = spark.sql(
-      """SELECT count(*) FROM (
-        |  (SELECT cat, n_rows, sum_cents FROM graftmem.tmp.sqlivm_mv
-        |   EXCEPT
-        |   SELECT cat, count(*), sum(cents) FROM graftmem.tmp.sqlivm_base GROUP BY cat)
-        |  UNION ALL
-        |  (SELECT cat, count(*), sum(cents) FROM graftmem.tmp.sqlivm_base GROUP BY cat
-        |   EXCEPT
-        |   SELECT cat, n_rows, sum_cents FROM graftmem.tmp.sqlivm_mv))""".stripMargin)
-      .head().getLong(0)
+    // the gate that makes the timing claim honest: maintained == recompute,
+    // read at the versions the MERGE (mv v2) and the DELETE (base v3) made
+    val matches = Multiset.equal(
+      spark.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.sqlivm_mv VERSION AS OF 2"),
+      spark.sql("SELECT cat, count(*), sum(cents) " +
+        "FROM graftmem.tmp.sqlivm_base VERSION AS OF 3 GROUP BY cat"))
     spark.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.sqlivm_mv")
-      .withColumn("mv_matches_recompute", lit(bad == 0L))
-      .withColumn("window_single_statement", lit(window))
+      .withColumn("mv_matches_recompute", matches)
+      .withColumn("window_single_statement", window)
       .withColumn("changes_stats_bounded", lit(statsBounded))
   }
 
+  /** CHANGE FEED between two snapshots of the versioned catalog table —
+    * the Delta "change data feed" / Iceberg changelog shape, composed
+    * from [[dsv2TimeTravel]]'s machinery instead of stored row-level
+    * change files: diff `VERSION AS OF 0` against the current snapshot
+    * with one full-outer join on the table key and classify each key as
+    * insert / update / delete (value-identical rows drop out). Both
+    * snapshot reads are manifest-pinned scans of the SAME table in one
+    * plan — time travel composing inside a join is the point. At 100 TB
+    * this is the snapshot-diff fallback every lakehouse supports when
+    * CDF wasn't enabled at write time: one co-partitioned join on the
+    * key, file pruning via the manifests, no stored change log. The
+    * oracle replays the DML against the fixture and classifies the same
+    * way.
+    */
   def dsv2ChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     Tables.orders(spark, dir).createOrReplaceTempView("graft_cf_orders")
     spark.sql(

@@ -198,7 +198,7 @@ class MemCatalog extends TableCatalog with StagingTableCatalog
       // STALE marker (crashed publisher) or no marker permits the restore.
       val fresh = MemCatalog.publishMarker(root, d).exists { m =>
         System.currentTimeMillis() - Files.getLastModifiedTime(m).toMillis <
-          MemCatalog.publishGraceMs
+          MemCatalog.PublishGraceMs
       }
       MemCatalog.strandedOld(root, d) match {
         case Some(old) if !fresh && !Files.exists(d) =>
@@ -884,9 +884,9 @@ object MemCatalog {
     * this window an absent target + stranded .old- reads as "REPLACE
     * publish in flight" (loadTable throws NoSuchTable rather than
     * restoring); past it, the publisher is presumed crashed and the
-    * stranded table is restored. Overridable for the spec's crash drills.
+    * stranded table is restored.
     */
-  private[v2] var publishGraceMs: Long = 10000L
+  private[v2] val PublishGraceMs = 10000L
 
   private[v2] def publishMarkerPath(root: Path, targetName: String): Path =
     root.resolve(targetName + ".publish-inprogress")

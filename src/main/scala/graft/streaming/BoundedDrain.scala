@@ -26,10 +26,12 @@ import graft.sources.v2.MemCatalog.deleteRecursively
   * a restart gate is two drains in one scope; a single-run gate calls
   * [[BoundedDrain.once]].
   *
-  * The sink is a closed set ([[BoundedDrain.Sink]]). Memory and parquet
-  * outputs are PINNED (`localCheckpoint`) into block storage on first read
-  * of [[BoundedDrain.Drained.out]], which must happen inside the scope:
-  * the pinned rows outlive the view and the directories they came from.
+  * The sink is a closed set ([[BoundedDrain.Sink]]). A memory output is
+  * the sink's own rows, resolved while the view exists: it stays readable
+  * after the scope drops the view, reading it starts no job, and nothing
+  * is persisted. Only a parquet output is PINNED (`localCheckpoint`) into
+  * block storage, on first read of [[BoundedDrain.Drained.out]], which
+  * must happen inside the scope: the sink dir is deleted when it closes.
   *
   * Exactly two streams in the main tree start outside this harness, and
   * the guard spec names them:
@@ -58,11 +60,11 @@ object BoundedDrain {
   }
 
   /** One finished incarnation: its progress reports and, for memory and
-    * parquet sinks, its pinned output (`None` for `foreachBatch`/`toTable`).
+    * parquet sinks, its output (`None` for `foreachBatch`/`toTable`).
     */
   final class Drained private[BoundedDrain] (
-      val progress: Seq[StreamingQueryProgress], pin: () => Option[DataFrame]) {
-    lazy val out: Option[DataFrame] = pin()
+      val progress: Seq[StreamingQueryProgress], read: () => Option[DataFrame]) {
+    lazy val out: Option[DataFrame] = read()
   }
 
   final class Scope private[BoundedDrain] () {
@@ -87,12 +89,13 @@ object BoundedDrain {
       val w = stream.writeStream
         .option("checkpointLocation", checkpoint.toString)
         .trigger(trigger)
-      val (q, pin) = sink match {
+      val (q, read) = sink match {
         case Sink.Memory(mode) =>
           val name = "graft_drain_" + java.util.UUID.randomUUID().toString.replace("-", "")
           views += ss -> name
-          (w.outputMode(mode).format("memory").queryName(name).start(),
-            () => Some(ss.table(name).localCheckpoint(true)))
+          val q = w.outputMode(mode).format("memory").queryName(name).start()
+          val rows = ss.table(name)
+          (q, () => Some(rows))
         case Sink.Parquet =>
           (w.outputMode(OutputMode.Append()).format("parquet")
             .option("path", sinkDir.toString).start(),
@@ -105,7 +108,7 @@ object BoundedDrain {
         if (trigger == Trigger.AvailableNow()) q.awaitTermination()
         else q.processAllAvailable()
       } finally q.stop()
-      new Drained(q.recentProgress.toSeq, pin)
+      new Drained(q.recentProgress.toSeq, read)
     }
 
     private[BoundedDrain] def close(): Unit =
@@ -119,7 +122,7 @@ object BoundedDrain {
     try body(s) finally s.close()
   }
 
-  /** A single-run gate: one incarnation, output pinned before teardown. */
+  /** A single-run gate: one incarnation, output read before teardown. */
   def once(stream: DataFrame, sink: Sink): Drained =
     scope { s =>
       val d = s.drain(stream, sink)

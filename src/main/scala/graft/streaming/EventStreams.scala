@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import java.sql.Timestamp
 import graft.operators.TextPipeline.Oracle
+import graft.sources.Tables
 import graft.streaming.BoundedDrain.{Sink, stageFile}
 
 /** Structured Streaming surface: the streaming twins of the batch event
@@ -34,16 +35,15 @@ object EventStreams {
   /** Max (normalized) event timestamp of `$dir/events.parquet`. */
   private def probeMaxTs(spark: SparkSession, dir: String): Timestamp =
     probeCache.computeIfAbsent(s"tmax:$dir", _ => {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      val tsCol = graft.sources.Tables
-        .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
+      val raw = Tables.table(spark, dir, "events")
+      val tsCol = Tables.normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
       raw.select(max(tsCol).as("m")).head().getTimestamp(0)
     }).asInstanceOf[Timestamp]
 
   /** Midpoint event_id of `$dir/events.parquet` (the two-batch split key). */
   private def probeMidId(spark: SparkSession, dir: String): Long =
     probeCache.computeIfAbsent(s"mid:$dir", _ =>
-      spark.read.parquet(s"$dir/events.parquet")
+      Tables.table(spark, dir, "events")
         .agg(((min("event_id") + max("event_id")) / 2).cast("long")).head().getLong(0)
     ).asInstanceOf[Long]
 
@@ -103,12 +103,12 @@ object EventStreams {
     */
   private def fileStream(ss: SparkSession, srcDir: java.nio.file.Path,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    graft.sources.Tables.normalizeTs(ss.readStream.schema(schema)
+    Tables.normalizeTs(ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
 
   /** Drain `build(stream)` over a source dir that `stage` fills, on a
     * [[streamingSession]] clone sized from the staged bytes its plan scans,
-    * and return the pinned result. Append-mode gates sink to PARQUET and
+    * and return its output. Append-mode gates sink to PARQUET and
     * read back distributed (the memory sink collects every output row onto
     * the driver per batch, the one driver-in-the-data-path posture a 100 TB
     * stream cannot keep); Complete/Update gates keep the memory sink (the
@@ -135,11 +135,9 @@ object EventStreams {
   /** [[drainStaged]] over `copies` links of the fixture `$dir/$table.parquet`. */
   private def drainFixture(spark: SparkSession, dir: String, copies: Int,
       mode: OutputMode, table: String = "events")(
-      build: DataFrame => DataFrame): DataFrame = {
-    val src = s"$dir/$table.parquet"
-    drainStaged(spark, spark.read.parquet(src).schema, mode)(
+      build: DataFrame => DataFrame): DataFrame =
+    drainStaged(spark, Tables.table(spark, dir, table).schema, mode)(
       linkCopies(_, dir, table, copies))(build)
-  }
 
   /** Link the fixture `$fixture/$table.parquet` into `dir` `copies` times. */
   private def linkCopies(dir: java.nio.file.Path, fixture: String, table: String,
@@ -302,9 +300,8 @@ object EventStreams {
     * final unfinished hour), never ∝ stream history.
     */
   def lateDataFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val tsCol = graft.sources.Tables
-      .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
+    val raw = Tables.table(spark, dir, "events")
+    val tsCol = Tables.normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
     val tmax = probeMaxTs(spark, dir)
     val lateCut = Timestamp.from(tmax.toInstant.minus(java.time.Duration.ofDays(1)))
     val isStraggler = col("event_id") % 7 === 0 && tsCol < lit(lateCut)
@@ -340,7 +337,7 @@ object EventStreams {
     */
   def cdcMergeFileSource(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark, tableBytes(dir, "orders"))
-    val o = ss.read.parquet(s"$dir/orders.parquet")
+    val o = Tables.table(ss, dir, "orders")
       .select(col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
     val ins = o.select(col("o_orderkey"), lit(1).as("version"), lit("I").as("op"), col("cents"))
     val upd = o.filter(col("o_orderkey") % 7 === 0)
@@ -475,7 +472,7 @@ object EventStreams {
     */
   def availableNowFileSource(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark, tableBytes(dir, "events"))
-    val raw = ss.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.table(ss, dir, "events")
     val mid = probeMidId(ss, dir)
     BoundedDrain.scope { s =>
       stageFile(s.sourceDir, raw.filter(col("event_id") < mid),
@@ -508,7 +505,7 @@ object EventStreams {
     // sized from the whole fixture both incarnations read, not from the
     // half staged before the first start that freezes the width
     val ss = streamingSession(spark, tableBytes(dir, "events"))
-    val raw = ss.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.table(ss, dir, "events")
     val mid = probeMidId(ss, dir)
     BoundedDrain.scope { s =>
       def incarnation() = s.drain(
@@ -543,9 +540,8 @@ object EventStreams {
   def restartStatefulFileSource(spark: SparkSession, dir: String): DataFrame = {
     // sized from the whole fixture, as in restartResumeFileSource
     val ss = streamingSession(spark, tableBytes(dir, "events"))
-    val raw = ss.read.parquet(s"$dir/events.parquet")
-    val tsCol = graft.sources.Tables
-      .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
+    val raw = Tables.table(ss, dir, "events")
+    val tsCol = Tables.normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
     val tmax = probeMaxTs(ss, dir)
     BoundedDrain.scope { s =>
       def incarnation() =
@@ -578,7 +574,7 @@ object EventStreams {
   def enrichFileSource(spark: SparkSession, dir: String): DataFrame =
     drainFixture(spark, dir, 1, OutputMode.Complete()) { stream =>
       enrichStream(stream,
-        graft.sources.Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"))
+        Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"))
     }
 
   /** Stream-stream inner join: each purchase matched to the same user's
@@ -676,7 +672,7 @@ object EventStreams {
     */
   private def sentinelOuterRun(spark: SparkSession, dir: String)(
       build: DataFrame => DataFrame): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.table(spark, dir, "events")
     val bump = twoDaysLater(raw)
     def sentinels(ids: (Long, Long)): DataFrame =
       raw.agg(max(col("ts")).as("mts")).select(explode(array(
@@ -779,7 +775,7 @@ object EventStreams {
     import graft.operators.Dedup
     drainFixture(spark, dir, 2, OutputMode.Complete(), table = "documents") {
       stream =>
-        val corpus = graft.sources.Tables.documents(stream.sparkSession, dir)
+        val corpus = Tables.documents(stream.sparkSession, dir)
           .filter(col("doc_id") % 10 =!= 7)
         val corpusBands = Dedup.bandRows(Dedup.minhashSignatures(corpus))
           .select(col("doc_id").as("corpus_id"), col("band"), col("band_sig"))
@@ -894,8 +890,7 @@ object EventStreams {
     */
   def observeFileSource(spark: SparkSession, dir: String): DataFrame = {
     val ss = streamingSession(spark, 2 * tableBytes(dir, "events")) // two linked copies
-    val src = s"$dir/events.parquet"
-    val rawSchema = ss.read.parquet(src).schema
+    val rawSchema = Tables.table(ss, dir, "events").schema
     val (progress, table) = BoundedDrain.scope { s =>
       linkCopies(s.sourceDir, dir, "events", 2)
       val d = s.drain(fileStream(ss, s.sourceDir, rawSchema)
@@ -1010,7 +1005,7 @@ object EventStreams {
     * EventTimeWatermark node and stall the watermark).
     */
   def twsTimersFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.table(spark, dir, "events")
     val bump = twoDaysLater(raw)
     def sentinel(id: Long): DataFrame =
       raw.agg(max(col("ts")).as("mts")).select(

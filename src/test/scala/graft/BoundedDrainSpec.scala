@@ -46,7 +46,47 @@ class BoundedDrainSpec extends AnyFunSuite with TempDirs {
     dirs.foreach(d => assert(!Files.exists(d), s"$d left behind"))
   }
 
-  test("once pins a memory sink before dropping its view") {
+  test("a memory drain outlives its scope: the sink's rows, read with no job, nothing pinned") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val ids = spark.range(0, 10).toDF("id")
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val d = BoundedDrain.scope { s =>
+      BoundedDrain.stageFile(s.sourceDir, ids, "a.parquet", System.currentTimeMillis() - 1000)
+      s.drain(fileStream(s.sourceDir, ids.schema), Sink.Memory(OutputMode.Append()))
+    }
+    assert(drainViews().isEmpty)
+    val group = s"memory-drain-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-sentinel" => sentinelSeen.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    val rows = try {
+      sc.setJobGroup(group, "read a memory drain")
+      val rows = d.out.get.collect().map(_.getLong(0)).sorted.toSeq
+      // listener events arrive in order: once the sentinel job's start is
+      // delivered, every job of the read before it has been counted
+      sc.setJobGroup(s"$group-sentinel", "listener sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      rows
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(rows == (0L until 10L))
+    assert(jobs.get == 0, s"reading a memory drain started ${jobs.get} jobs")
+    assert(sc.getPersistentRDDs.keys.forall(persisted), "a memory drain was pinned")
+  }
+
+  test("once drains a memory sink and drops its view") {
     val d = BoundedDrain.once(
       spark.readStream.format("graft.sources.v2.SeqStreamSource")
         .option("n", "1000").option("step", "500").option("parts", "2").load()

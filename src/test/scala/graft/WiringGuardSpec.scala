@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * manifest commit loop, one `#seq` stamp, one staged-part publish and
   * discard). Scans report what they pruned as their own SQL metrics,
   * never through JVM-global state, MV registrations live on the session
-  * they arm, and the main tree holds no `@volatile var` at all.
+  * they arm, and the main tree holds no `@volatile var` and no `var`
+  * member of a top-level object at all. Fixture tables are read only
+  * through `Tables`, which infers each schema once.
   */
 class WiringGuardSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
@@ -147,8 +149,25 @@ class WiringGuardSpec extends AnyFunSuite {
       volatiles.findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
         .map(m => s"${f.getFileName}:${m.group(1)}")
     }
-    assert(shared.isEmpty,
-      s"concurrent queries share no mutable object state: ${shared.mkString(", ")}")
+    // a var member of a top-level object is JVM-global state as well
+    val mods = """(?:(?:private|protected)(?:\[\w+\])?\s+|@\w+\s+|[a-z]+\s+)*"""
+    val topLevel = s"""^$mods(object|class|trait)\\s""".r
+    val memberVar = s"""^  $mods(var)\\s+(\\w+)""".r
+    val objectVars = sources().flatMap { f =>
+      var inObject = false
+      Files.readAllLines(f).asScala.flatMap { line =>
+        topLevel.findFirstMatchIn(line).foreach(m => inObject = m.group(1) == "object")
+        if (inObject) memberVar.findFirstMatchIn(line).map(m => s"${f.getFileName}:${m.group(2)}")
+        else None
+      }
+    }
+    assert(shared.isEmpty && objectVars.isEmpty,
+      s"concurrent queries share no mutable object state: ${(shared ++ objectVars).mkString(", ")}")
+  }
+
+  test("fixture tables are read only through Tables, which infers each schema once") {
+    val hits = offenders(".parquet(s\"$dir/", "Tables.scala")
+    assert(hits.isEmpty, s"read fixture tables with Tables.table: ${hits.mkString(", ")}")
   }
 
   test("MV registrations live on the session they arm: no global registry, no test seam") {

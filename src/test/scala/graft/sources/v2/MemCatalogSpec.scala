@@ -1728,12 +1728,11 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     assert(java.nio.file.Files.exists(root.resolve("t__m.old-cafebabe")),
       "a fresh marker means a live publish — the restore must not have fired")
     // age the marker past the grace period and retry: now it's a crash
-    val old = MemCatalog.publishGraceMs
-    MemCatalog.publishGraceMs = 0L
-    try {
-      assert(spark.sql(s"SELECT count(*) AS n FROM $cat.t.m").collect()(0).getLong(0) == 5,
-        "a stale marker is a crashed publish — the stranded table must restore")
-    } finally MemCatalog.publishGraceMs = old
+    java.nio.file.Files.setLastModifiedTime(MemCatalog.publishMarkerPath(root, "t__m"),
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 2 * MemCatalog.PublishGraceMs))
+    assert(spark.sql(s"SELECT count(*) AS n FROM $cat.t.m").collect()(0).getLong(0) == 5,
+      "a stale marker is a crashed publish — the stranded table must restore")
     assert(!java.nio.file.Files.exists(MemCatalog.publishMarkerPath(root, "t__m")),
       "the restore must clear the crashed publish's marker")
   }

@@ -6,8 +6,9 @@ import graft.TestSpark
 
 /** The `table_changes(...)` TVF's contracts beyond the oracle-gated
   * equivalence query (`dsv2_table_changes_tvf`): argument validation,
-  * bounded windows, the default end = current head, and the loud
-  * vacuumed-version failure inherited from the streaming feed.
+  * bounded windows, the default end = current head, the loud
+  * vacuumed-version failure inherited from the streaming feed, and the
+  * gate's riders, which are subquery columns of its final action.
   */
 class TableChangesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
@@ -18,6 +19,26 @@ class TableChangesSpec extends AnyFunSuite with TempDirs {
     spark.conf.set(s"spark.sql.catalog.$name", classOf[MemCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root.toString)
     (name, root)
+  }
+
+  test("the gate's folded riders run in its final action and read false on a tampered input") {
+    val gate = graft.sources.Formats.dsv2TableChangesTvf(spark, TestSpark.sf)
+    // between the gate's return and its action, REPLACE the table with
+    // versions 0..3 whose UPDATE adds 5 cents, not 1: the version-addressed
+    // riders now read the new table, the drained change feed still holds
+    // the old commits
+    spark.sql("""CREATE OR REPLACE TABLE graftmem.tmp.tvf_t AS
+      |SELECT * FROM graftmem.tmp.tvf_t VERSION AS OF 0""".stripMargin) // v0
+    spark.sql("INSERT INTO graftmem.tmp.tvf_t VALUES (501, 1, 111)") // v1
+    spark.sql("UPDATE graftmem.tmp.tvf_t SET cents = cents + 5 WHERE k % 6 = 2") // v2
+    spark.sql("DELETE FROM graftmem.tmp.tvf_t WHERE k % 9 = 4") // v3
+    def riders(df: org.apache.spark.sql.DataFrame) =
+      df.select("tvf_equals_stream", "tvf_bounded_window", "tvf_net_window").distinct()
+        .collect().map(r => (r.getBoolean(0), r.getBoolean(1), r.getBoolean(2))).toSeq
+    assert(riders(gate) == Seq((false, false, true)))
+    // untampered, the same riders read true
+    assert(riders(graft.sources.Formats.dsv2TableChangesTvf(spark, TestSpark.sf)) ==
+      Seq((true, true, true)))
   }
 
   test("windows: [0,0] is the initial snapshot; [1,1] one commit; end defaults to head") {
