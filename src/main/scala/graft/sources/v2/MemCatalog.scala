@@ -949,6 +949,8 @@ object MemCatalog {
     * positional delete files / Delta's deletion vectors). An entry
     * without a `dv@` token reads the whole file — old manifests parse
     * unchanged, and a pre-DV reader ignores the token (it has no `=`).
+    * Every entry of a written file gets its stats, partition stamps and
+    * sketches from [[MemFileWriter]], whichever statement wrote it.
     */
   /** `sortedBy`: the cluster key this file's ROWS are ordered by (a
     * `sort@col1,col2` token) — the per-file SORT-ORDER metadata Iceberg
@@ -2044,27 +2046,12 @@ object MemCatalog {
       b.size >= 2 || b.exists(e => e.dv.nonEmpty || eqApplies(e) || promoted(e)))
       .map(_.toSeq).toSeq
     if (groups.isEmpty && stale.isEmpty && runFiles.isEmpty) return (0, 0)
-    val statCols = schema.fields.zipWithIndex.collect {
-      case (f, i) if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == TimestampType || f.dataType == DateType => (f.name, i)
-    }
     // write every merged output BEFORE the commit — readers can't see
-    // them until the manifest does
-    // bloom sketches rebuild exactly during the rewrite, like the zone
-    // maps — merged files keep their equality-probe skipping; the
+    // them until the manifest does. Zone maps and bloom, NDV and
+    // histogram sketches rebuild exactly during the rewrite, and the
     // hidden-partitioning transform range re-stamps under the CURRENT
     // spec (rewritten files are new files of the current layout)
-    val ndvCols = MemNdv.colsOf(props).flatMap(c =>
-      schema.fields.zipWithIndex.collectFirst { case (f, i) if f.name == c => (c, i) })
-    val histCols = MemHist.colsOf(props).flatMap(c =>
-      schema.fields.zipWithIndex.collectFirst {
-        case (f, i) if f.name == c &&
-          (f.dataType == LongType || f.dataType == IntegerType) => (c, i)
-      })
-    val bloomCols = MemBloom.colsOf(props).flatMap(c =>
-      schema.fields.zipWithIndex.collectFirst { case (f, i) if f.name == c => (c, i) })
-    val ptSpecs: Seq[(MemPart.Spec, Int)] =
-      MemPart.specsOf(props, schema).map(s => (s, schema.fieldNames.indexOf(s.src)))
+    val policy = MemWritePolicy.of(props, schema)
     val pool = maintenancePoolSize
     // the group's VISIBLE rows (dv-masked rows dropped: the rewrite
     // MATERIALIZES the deletion vector, so the output carries no dv and
@@ -2189,126 +2176,19 @@ object MemCatalog {
     def writeRun(rows: Iterator[Array[Any]], roll: Boolean,
         runId: Option[Long] = None, rollBytes: Long = targetBytes): Seq[FileEntry] = {
       val outs = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-      var fresh: Path = null
-      var out: java.io.DataOutputStream = null
-      var lo: Array[Long] = null
-      var hi: Array[Long] = null
-      var ptLo: Array[Long] = null
-      var ptHi: Array[Long] = null
-      var ptNulls: Array[Long] = null
-      var ptRaw: Array[String] = null
-      var ptRawPure: Array[Boolean] = null
-      var bloomBits: Seq[Array[Long]] = null
-      var ndvTrackers: Seq[MemNdv.Tracker] = null
-      var histTrackers: Seq[MemHist.Tracker] = null
-      var fileRows = 0L
-      def openFile(): Unit = {
-        fresh = Files.createTempFile(dir, "part-opt-", ".bin")
-        out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-          Files.newOutputStream(fresh)))
-        MemCodec.writeHeader(out, schema)
-        lo = Array.fill(statCols.length)(Long.MaxValue)
-        hi = Array.fill(statCols.length)(Long.MinValue)
-        ptLo = Array.fill(ptSpecs.length)(Long.MaxValue)
-        ptHi = Array.fill(ptSpecs.length)(Long.MinValue)
-        ptNulls = Array.fill(ptSpecs.length)(0L)
-        ptRaw = Array.fill[String](ptSpecs.length)(null)
-        ptRawPure = Array.fill(ptSpecs.length)(true)
-        bloomBits = bloomCols.map(_ => Array.fill(MemBloom.Words)(0L))
-        ndvTrackers = ndvCols.map(_ => new MemNdv.Tracker)
-        histTrackers = histCols.map(_ => new MemHist.Tracker)
-        fileRows = 0L
+      def open() = new MemFileWriter(Files.createTempFile(dir, "part-opt-", ".bin"), schema, policy)
+      // stamped with the RESOLVED key only (stampKey): a file can't
+      // honestly claim an order over columns the schema no longer has
+      def close(w: MemFileWriter): Unit = w.finish().foreach { e =>
+        outs += e.copy(sortedBy = stampKey,
+          stats = e.stats ++ runId.map(r => "#run" -> (r, outs.size.toLong)))
       }
-      def closeFile(): Unit = {
-        out.close()
-        if (fileRows == 0) { Files.deleteIfExists(fresh); return }
-        val stats = statCols.indices.collect {
-          case s if lo(s) <= hi(s) => statCols(s)._1 -> (lo(s), hi(s))
-        }.toMap + ("#rows" -> (fileRows, fileRows)) ++
-          ptSpecs.indices.collect { case p if ptLo(p) <= ptHi(p) =>
-            ptSpecs(p)._1.statKey -> (ptLo(p), ptHi(p)) } ++
-          ptSpecs.indices.map(p =>
-            ("ptn:" + ptSpecs(p)._1.render) -> (ptNulls(p), ptNulls(p))) ++
-          runId.map(r => "#run" -> (r, outs.size.toLong))
-        val ptvStamps = ptSpecs.indices.collect {
-          case p if ptRawPure(p) && ptRaw(p) != null && ptNulls(p) == 0L =>
-            ptSpecs(p)._1.statKey -> ptRaw(p)
-        }.toMap
-        // stamped with the RESOLVED key only (stampKey): a file can't
-        // honestly claim an order over columns the schema no longer has
-        outs += FileEntry(fresh.getFileName.toString, stats,
-          blooms = bloomCols.indices.map(bi =>
-            bloomCols(bi)._1 -> MemBloom.encode(bloomBits(bi))).toMap,
-          sortedBy = stampKey,
-          ndvs = ndvCols.indices.map(ni =>
-            ndvCols(ni)._1 -> MemNdv.encode(ndvTrackers(ni).minima)).toMap,
-          hists = histCols.indices.map(hi =>
-            histCols(hi)._1 -> MemHist.encode(histTrackers(hi).snapshot)).toMap,
-          ptvs = ptvStamps)
-      }
-      openFile()
+      var w = open()
       rows.foreach { vals =>
-        MemCodec.writeRow(out, InternalRow.fromSeq(vals.toSeq), schema)
-        fileRows += 1
-        var bi = 0
-        while (bi < bloomCols.length) {
-          val v = vals(bloomCols(bi)._2)
-          if (v != null) MemBloom.add(bloomBits(bi), v)
-          bi += 1
-        }
-        var ni = 0
-        while (ni < ndvCols.length) {
-          val v = vals(ndvCols(ni)._2)
-          if (v != null) ndvTrackers(ni).add(MemNdv.hash(v))
-          ni += 1
-        }
-        var hci = 0
-        while (hci < histCols.length) {
-          vals(histCols(hci)._2) match {
-            case l: java.lang.Long => histTrackers(hci).add(l)
-            case n: java.lang.Integer => histTrackers(hci).add(n.toLong)
-            case _ => ()
-          }
-          hci += 1
-        }
-        var pi = 0
-        while (pi < ptSpecs.length) {
-          val (spec, i) = ptSpecs(pi)
-          if (vals(i) == null) ptNulls(pi) += 1
-          else {
-            MemPart.evalAt(spec, schema.fields(i).dataType, vals(i)).foreach { t =>
-              if (t < ptLo(pi)) ptLo(pi) = t
-              if (t > ptHi(pi)) ptHi(pi) = t
-            }
-            if (ptRawPure(pi) && spec.isInstanceOf[MemPart.Identity] &&
-                schema.fields(i).dataType == StringType) {
-              val raw = vals(i) match {
-                case u: UTF8String => u.toString
-                case x: String => x
-                case _ => null
-              }
-              if (ptRaw(pi) == null) ptRaw(pi) = raw
-              else if (ptRaw(pi) != raw) { ptRaw(pi) = null; ptRawPure(pi) = false }
-            }
-          }
-          pi += 1
-        }
-        var s = 0
-        while (s < statCols.length) {
-          vals(statCols(s)._2) match {
-            case l: java.lang.Long =>
-              if (l < lo(s)) lo(s) = l
-              if (l > hi(s)) hi(s) = l
-            case n: java.lang.Integer =>
-              if (n.toLong < lo(s)) lo(s) = n.toLong
-              if (n.toLong > hi(s)) hi(s) = n.toLong
-            case _ => ()
-          }
-          s += 1
-        }
-        if (roll && out.size() >= rollBytes) { closeFile(); openFile() }
+        w.write(InternalRow.fromSeq(vals.toSeq))
+        if (roll && w.bytes >= rollBytes) { close(w); w = open() }
       }
-      closeFile()
+      close(w)
       outs.toSeq
     }
     def sorted(rows: scala.collection.mutable.ArrayBuffer[Array[Any]]) =
@@ -3080,13 +2960,7 @@ private[v2] class MemTable(ident: String, dir: Path, tblSchema: StructType,
     // data) and the rewritten survivor file materializes the vector,
     // exactly like compact() and MemCowScan do.
     val tests = predicates.flatMap(p => MemDelete.compile(p, tblSchema))
-    val statCols = tblSchema.fields.zipWithIndex.collect {
-      case (f, i) if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == TimestampType || f.dataType == DateType => (f.name, i)
-    }
-    val ptSpecs: Seq[(graft.sources.v2.MemPart.Spec, Int)] =
-      graft.sources.v2.MemPart.specsOf(props, tblSchema)
-        .map(s => (s, tblSchema.fieldNames.indexOf(s.src)))
+    val policy = MemWritePolicy.of(props, tblSchema)
     // equality deletes from a MoR past are honored the same way the DVs
     // are: masked rows are not data — they drop while scanning and the
     // survivor file materializes the mask (fresh #seq exempts it)
@@ -3098,20 +2972,10 @@ private[v2] class MemTable(ident: String, dir: Path, tblSchema: StructType,
       val visible = MemCatalog.eqMask(tblSchema,
         MemCatalog.eqDeletesFor(entry, eqAtScan).map(d => (d.cols, dir.resolve(d.file))))
       val in = MemCodec.open(part, tblSchema)
-      val tmp = Files.createTempFile(dir, "_rewrite", ".tmp")
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        Files.newOutputStream(tmp)))
-      MemCodec.writeHeader(out, tblSchema)
+      val out = new MemFileWriter(Files.createTempFile(dir, "_rewrite", ".tmp"), tblSchema, policy)
       var kept = 0L
       var total = 0L // VISIBLE rows only — dv-masked rows are already gone
       var pos = -1L
-      val lo = Array.fill(statCols.length)(Long.MaxValue)
-      val hi = Array.fill(statCols.length)(Long.MinValue)
-      val ptLo = Array.fill(ptSpecs.length)(Long.MaxValue)
-      val ptHi = Array.fill(ptSpecs.length)(Long.MinValue)
-      val ptNulls = Array.fill(ptSpecs.length)(0L)
-      val ptRaw = Array.fill[String](ptSpecs.length)(null)
-      val ptRawPure = Array.fill(ptSpecs.length)(true)
       try {
         var vals = in.readRow()
         while (vals != null) {
@@ -3119,73 +2983,27 @@ private[v2] class MemTable(ident: String, dir: Path, tblSchema: StructType,
           if (!masked.contains(pos) && visible(vals)) {
             total += 1
             if (!tests.forall(_(vals))) {
-              MemCodec.writeRow(out, InternalRow.fromSeq(vals.toSeq), tblSchema)
-              var s = 0
-              while (s < statCols.length) {
-                vals(statCols(s)._2) match {
-                  case l: java.lang.Long =>
-                    if (l < lo(s)) lo(s) = l
-                    if (l > hi(s)) hi(s) = l
-                  case n: java.lang.Integer =>
-                    if (n.toLong < lo(s)) lo(s) = n.toLong
-                    if (n.toLong > hi(s)) hi(s) = n.toLong
-                  case _ => ()
-                }
-                s += 1
-              }
-              var pi = 0
-              while (pi < ptSpecs.length) {
-                val (spec, i) = ptSpecs(pi)
-                if (vals(i) == null) ptNulls(pi) += 1
-                else {
-                  graft.sources.v2.MemPart.evalAt(
-                    spec, tblSchema.fields(i).dataType, vals(i)).foreach { x =>
-                    if (x < ptLo(pi)) ptLo(pi) = x
-                    if (x > ptHi(pi)) ptHi(pi) = x
-                  }
-                  if (ptRawPure(pi) && spec.isInstanceOf[graft.sources.v2.MemPart.Identity] &&
-                      tblSchema.fields(i).dataType == org.apache.spark.sql.types.StringType) {
-                    val raw = vals(i) match {
-                      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-                      case x: String => x
-                      case _ => null
-                    }
-                    if (ptRaw(pi) == null) ptRaw(pi) = raw
-                    else if (ptRaw(pi) != raw) { ptRaw(pi) = null; ptRawPure(pi) = false }
-                  }
-                }
-                pi += 1
-              }
+              out.write(InternalRow.fromSeq(vals.toSeq))
               kept += 1
             }
           }
           vals = in.readRow()
         }
-      } finally { in.close(); out.close() }
+      } catch { case t: Throwable => out.abort(); throw t }
+      finally in.close()
       // untouched (no visible row matched): survives by name WITH its dv
-      if (kept == total) { Files.delete(tmp); None }
-      else if (kept == 0) { Files.delete(tmp); Some(entry.name -> (entry.dv, None)) }
-      else {
-        val fresh = Files.createTempFile(dir, "part-del-", ".bin")
-        Files.move(tmp, fresh,
-          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-        val stats = statCols.indices.collect {
-          case s if lo(s) <= hi(s) => statCols(s)._1 -> (lo(s), hi(s))
-        }.toMap + ("#rows" -> (kept, kept)) ++
-          ptSpecs.indices.collect { case p if ptLo(p) <= ptHi(p) =>
-            ptSpecs(p)._1.statKey -> (ptLo(p), ptHi(p)) } ++
-          ptSpecs.indices.map(p =>
-            ("ptn:" + ptSpecs(p)._1.render) -> (ptNulls(p), ptNulls(p)))
-        val ptvStamps = ptSpecs.indices.collect {
-          case p if ptRawPure(p) && ptRaw(p) != null && ptNulls(p) == 0L =>
-            ptSpecs(p)._1.statKey -> ptRaw(p)
-        }.toMap
-        // survivor file carries no dv (masked rows were dropped — the
-        // vector is materialized, like OPTIMIZE does) and INHERITS the
-        // input's sort order: filtering preserves row order
-        Some(entry.name ->
-          (entry.dv, Some(MemCatalog.FileEntry(fresh.getFileName.toString, stats,
-            sortedBy = entry.sortedBy, ptvs = ptvStamps))))
+      if (kept == total) { out.abort(); None }
+      else out.finish() match {
+        case None => Some(entry.name -> (entry.dv, None))
+        case Some(survivor) =>
+          val fresh = Files.createTempFile(dir, "part-del-", ".bin")
+          Files.move(out.path, fresh,
+            StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+          // survivor file carries no dv (masked rows were dropped — the
+          // vector is materialized, like OPTIMIZE does) and INHERITS the
+          // input's sort order: filtering preserves row order
+          Some(entry.name -> (entry.dv, Some(survivor.copy(
+            name = fresh.getFileName.toString, sortedBy = entry.sortedBy))))
       }
     }.toMap
     // same conflict rule as MemCowWrite.commit, at (name, dv) granularity:
@@ -3949,11 +3767,11 @@ private[v2] class MemCowWrite(dir: Path, schema: StructType,
         val byName = before.files.map(e => e.name -> e).toMap
         val staged = MemCdcSidecar.stage(dir, schema,
           removed = replaced.keys.toSeq.sorted.flatMap(n => byName.get(n).map(e =>
-            (dir.resolve(e.name), e.dv.map(dir.resolve),
+            (dir.resolve(e.name).toString, e.dv.map(dir.resolve(_).toString),
               MemCatalog.eqDeletesFor(e, before.eqDels)
-                .map(d => (d.cols, dir.resolve(d.file)))))),
+                .map(d => (d.cols, dir.resolve(d.file).toString))))),
           added = fresh.sortBy(_.name).map(e =>
-            (dir.resolve(e.name), None, Seq.empty)))
+            (dir.resolve(e.name).toString, None, Seq.empty)))
         MemCdcSidecar.publish(dir, won, staged)
       }
     } finally {
@@ -4136,8 +3954,8 @@ private[v2] class MemMorWriterFactory(dest: String, schema: StructType, staging:
 
 /** Per-file COLUMN NDV sketches for the cost-based optimizer — the
   * statistic zone maps can't carry: how SELECTIVE an equality predicate
-  * is. `TBLPROPERTIES ('ndvFor'='col[,col...]')` makes every writer keep
-  * a K-MINIMUM-VALUES distinct sketch per (file, column) — the K
+  * is. `TBLPROPERTIES ('ndvFor'='col[,col...]')` makes [[MemFileWriter]]
+  * keep a K-MINIMUM-VALUES distinct sketch per (file, column) — the K
   * smallest 63-bit hashes seen, carried as an `ndv:<col>@<base64>`
   * manifest token (~700 chars). Sketches MERGE exactly (union of minima,
   * keep the K smallest — distinct counts don't add, minima sets do), so
@@ -4214,8 +4032,8 @@ object MemNdv {
   * UNIFORMLY, so on a skewed column (95% of values in one narrow band, a
   * long sparse tail) a range predicate over the tail estimates nearly
   * the whole table and the planner keeps a shuffle join it should have
-  * broadcast. `TBLPROPERTIES ('histFor'='col[,col...]')` makes every
-  * writer count the column's values into a FIXED deterministic
+  * broadcast. `TBLPROPERTIES ('histFor'='col[,col...]')` makes
+  * [[MemFileWriter]] count the column's values into a FIXED deterministic
   * log-bucketing (HDR-histogram style: exact below 16, then 8
   * sub-buckets per power of two — ≤12.5% boundary error, ≤~1000 buckets
   * over the full signed-long domain), carried sparsely as a
@@ -4371,7 +4189,7 @@ object MemHist {
   * ranges, but a tiny per-file membership sketch answers "definitely not
   * in this file" exactly the way Parquet's column bloom filters and
   * Delta's `bloomFilter` indexes do. `TBLPROPERTIES ('bloomFor'='col
-  * [,col...]')` makes every writer build a 1024-bit, 5-probe double-
+  * [,col...]')` makes [[MemFileWriter]] build a 1024-bit, 5-probe double-
   * hashed bloom per (file, column), carried in the manifest entry as a
   * `bloom:<col>@<base64>` token (~176 chars — manifest-resident like the
   * zone-map stats, no sidecar read at plan time); a pushed `EqualTo`
@@ -4663,6 +4481,8 @@ private[sources] object MemPart {
     def monotone: Boolean
     def render: String
     final def statKey: String = "pt:" + render
+    /** The stats key of this transform's per-file NULL source-row count. */
+    final def nullKey: String = "ptn:" + render
   }
   final case class Bucket(n: Int, src: String) extends Spec {
     def eval(v: Long): Long = java.lang.Math.floorMod(v * 2654435761L, n.toLong)
@@ -5276,7 +5096,7 @@ private[v2] class MemScan(dir: Path, full: StructType, required: StructType,
       // (prefix-code equality is not value equality); every other
       // transform needs its `pt:` range collapsed to a point.
       def pureUnder(e: MemCatalog.FileEntry, s: MemPart.Spec): Boolean =
-        e.stats.get("ptn:" + s.render).exists(_._1 == 0L) &&
+        e.stats.get(s.nullKey).exists(_._1 == 0L) &&
           (if (strIdentity(s)) e.ptvs.contains(s.statKey)
            else e.stats.get(s.statKey).exists(r => r._1 == r._2))
       val pure = kept.nonEmpty && kept.forall(e =>
@@ -5568,6 +5388,61 @@ private[v2] case class MemFilePartition(path: String,
     commitVersion: Long = -1L,
     commitTs: Long = -1L) extends InputPartition
 
+/** One rewriting commit's NET row delta: the multiset of VISIBLE rows
+  * in its retired files against those of its added files (deletion
+  * vector positions and applicable equality deletes subtracted, `keep`
+  * the read policy), where rows a COW rewrite merely carried over cancel.
+  * Each side lists (file, dv sidecar, equality deletes); a MoR commit
+  * "rewrites" a file by changing only its DV, so the same base file can
+  * appear on both sides and the diff yields exactly the newly-masked
+  * rows. Returns the leftover retired rows (each with the first file
+  * that held it, insertion-ordered over the sorted files) and the
+  * leftover added rows (with their file). The change-feed reader
+  * ([[MemDiffPartition]]) and the write-time sidecar ([[MemCdcSidecar]])
+  * both net through here.
+  */
+private[v2] object MemNetDelta {
+  type Side = Seq[(String, Option[String], Seq[(Seq[String], String)])]
+
+  private def visibleRows(path: String, dv: Option[String], eq: Seq[(Seq[String], String)],
+      schema: StructType, keep: Array[Any] => Boolean): Iterator[Array[Any]] = {
+    val masked = dv.map(d => MemCatalog.readDv(Paths.get(d))).getOrElse(Set.empty)
+    val visible = MemCatalog.eqMask(schema, eq.map { case (c, p) => (c, Paths.get(p)) })
+    val in = MemCodec.open(Paths.get(path), schema)
+    try Iterator.continually(in.readRow()).takeWhile(_ != null)
+      .zipWithIndex.collect { case (vals, i)
+        if !masked.contains(i.toLong) && visible(vals) && keep(vals) => vals }
+      .toArray.iterator
+    finally in.close()
+  }
+
+  def of(removed: Side, added: Side, schema: StructType, keep: Array[Any] => Boolean)
+      : (Iterator[(Seq[Any], String)], Iterator[(Seq[Any], String)]) = {
+    // value = remaining count + the representative source file for `_file`
+    val pre = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], (Int, String)]
+    removed.foreach { case (path, dv, eq) =>
+      val fn = Paths.get(path).getFileName.toString
+      visibleRows(path, dv, eq, schema, keep).foreach { vals =>
+        val k = vals.toSeq
+        val (n, f) = pre.getOrElse(k, (0, fn))
+        pre(k) = (n + 1, f)
+      }
+    }
+    val post = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], String)]
+    added.foreach { case (path, dv, eq) =>
+      val fn = Paths.get(path).getFileName.toString
+      visibleRows(path, dv, eq, schema, keep).foreach { vals =>
+        val k = vals.toSeq
+        pre.get(k) match {
+          case Some((n, f)) if n > 0 => pre(k) = (n - 1, f) // carried over: cancels
+          case _ => post += ((k, fn))
+        }
+      }
+    }
+    (pre.iterator.flatMap { case (k, (n, f)) => Iterator.fill(n)((k, f)) }, post.iterator)
+  }
+}
+
 /** WRITE-TIME CDC SIDECARS — the 100 TB path for the net change feed
   * (Delta's `_change_data` files): a COW row-level commit computes its
   * net row delta ONCE at commit time — the same retired-vs-added
@@ -5594,43 +5469,14 @@ private[v2] object MemCdcSidecar {
   def existsFor(dir: Path, v: Int): Boolean =
     Files.exists(dir.resolve(preName(v))) && Files.exists(dir.resolve(postName(v)))
 
-  private def readVisible(path: Path, dv: Option[Path],
-      eq: Seq[(Seq[String], Path)], schema: StructType): Iterator[Array[Any]] = {
-    val masked = dv.map(MemCatalog.readDv).getOrElse(Set.empty)
-    val visible = MemCatalog.eqMask(schema, eq)
-    val in = MemCodec.open(path, schema)
-    try Iterator.continually(in.readRow()).takeWhile(_ != null)
-      .zipWithIndex.collect { case (vals, i)
-        if !masked.contains(i.toLong) && visible(vals) => vals }
-      .toArray.iterator
-    finally in.close()
-  }
-
-  /** Stage the commit's net delta as two temp row-codec files (the
-    * multiset diff mirrors the read-side [[MemDiffPartition]] reader:
-    * rows the rewrite merely carried over cancel). Caller links them to
-    * their versioned names after the commit wins.
+  /** Stage the commit's net delta ([[MemNetDelta.of]], the same diff the
+    * change-feed reader runs: rows the rewrite merely carried over
+    * cancel) as two temp row-codec files. Caller links them to their
+    * versioned names after the commit wins.
     */
-  def stage(dir: Path, schema: StructType,
-      removed: Seq[(Path, Option[Path], Seq[(Seq[String], Path)])],
-      added: Seq[(Path, Option[Path], Seq[(Seq[String], Path)])]): (Path, Path) = {
-    val pre = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Int]
-    removed.foreach { case (p, dv, eq) =>
-      readVisible(p, dv, eq, schema).foreach { vals =>
-        val k = vals.toSeq
-        pre(k) = pre.getOrElse(k, 0) + 1
-      }
-    }
-    val post = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    added.foreach { case (p, dv, eq) =>
-      readVisible(p, dv, eq, schema).foreach { vals =>
-        val k = vals.toSeq
-        pre.get(k) match {
-          case Some(n) if n > 0 => pre(k) = n - 1 // carried over: cancels
-          case _ => post += k
-        }
-      }
-    }
+  def stage(dir: Path, schema: StructType, removed: MemNetDelta.Side,
+      added: MemNetDelta.Side): (Path, Path) = {
+    val (pre, post) = MemNetDelta.of(removed, added, schema, _ => true)
     def writeRows(rows: Iterator[Seq[Any]], tag: String): Path = {
       val tmp = Files.createTempFile(dir, s"_cdcstage-$tag", ".tmp")
       val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
@@ -5641,9 +5487,8 @@ private[v2] object MemCdcSidecar {
       } finally out.close()
       tmp
     }
-    val preTmp = writeRows(
-      pre.iterator.collect { case (k, n) if n > 0 => Iterator.fill(n)(k) }.flatten, "pre")
-    val postTmp = writeRows(post.iterator, "post")
+    val preTmp = writeRows(pre.map(_._1), "pre")
+    val postTmp = writeRows(post.map(_._1), "post")
     (preTmp, postTmp)
   }
 
@@ -5668,16 +5513,11 @@ private[v2] object MemCdcSidecar {
   }
 }
 
-/** One rewriting commit's NET row delta: the reader diffs the multiset of
-  * rows in the commit's retired files against its added files locally —
-  * rows a COW rewrite merely carried over cancel inside the task. Each
-  * side is (path, dv sidecar): a MoR commit "rewrites" a file by changing
-  * only its DV, so the same base file can appear on both sides with
-  * different vectors and the diff yields exactly the newly-masked rows.
+/** One rewriting commit's NET row delta, diffed locally in the task by
+  * [[MemNetDelta.of]]: rows a COW rewrite merely carried over cancel
+  * inside the task and never reach the wire.
   */
-private[v2] case class MemDiffPartition(
-    removed: Seq[(String, Option[String], Seq[(Seq[String], String)])],
-    added: Seq[(String, Option[String], Seq[(Seq[String], String)])],
+private[v2] case class MemDiffPartition(removed: MemNetDelta.Side, added: MemNetDelta.Side,
     op: String, commitVersion: Long = -1L,
     commitTs: Long = -1L) extends InputPartition
 
@@ -5719,22 +5559,6 @@ private[v2] class MemReaderFactory(full: StructType, wanted: Array[String],
     case "_commit_version" => -4
     case "_commit_timestamp" => -5
     case c => full.fieldIndex(c)
-  }
-
-  /** All VISIBLE rows of a base file — the deletion vector's positions
-    * (when present) are subtracted here, so the net diff below compares
-    * effective contents, never raw bytes.
-    */
-  private def readAll(path: String, dv: Option[String],
-      eq: Seq[(Seq[String], String)]): Iterator[Array[Any]] = {
-    val masked = dv.map(d => MemCatalog.readDv(Paths.get(d))).getOrElse(Set.empty)
-    val visible = MemCatalog.eqMask(full, eq.map { case (c, p) => (c, Paths.get(p)) })
-    val in = MemCodec.open(Paths.get(path), full)
-    try Iterator.continually(in.readRow()).takeWhile(_ != null)
-      .zipWithIndex.collect { case (vals, i)
-        if !masked.contains(i.toLong) && visible(vals) && policyOk(vals) => vals }
-      .toArray.iterator
-    finally in.close()
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
@@ -5793,33 +5617,10 @@ private[v2] class MemReaderFactory(full: StructType, wanted: Array[String],
         // commit log can't prove
         case _ => ("delete", "insert")
       }
-      // multiset of retired rows (insertion-ordered over sorted files →
-      // deterministic emission); value = remaining count + the
-      // representative source file for `_file`
-      val pre = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], (Int, String)]
-      d.removed.foreach { case (path, dv, eq) =>
-        val fn = Paths.get(path).getFileName.toString
-        readAll(path, dv, eq).foreach { vals =>
-          val k = vals.toSeq
-          val (n, f) = pre.getOrElse(k, (0, fn))
-          pre(k) = (n + 1, f)
-        }
-      }
-      val post = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], String)]
-      d.added.foreach { case (path, dv, eq) =>
-        val fn = Paths.get(path).getFileName.toString
-        readAll(path, dv, eq).foreach { vals =>
-          val k = vals.toSeq
-          pre.get(k) match {
-            case Some((n, f)) if n > 0 => pre(k) = (n - 1, f) // carried over: cancels
-            case _ => post += ((k, fn))
-          }
-        }
-      }
+      // the dv/eq-visible rows the read policy admits, netted in the task
+      val (pre, post) = MemNetDelta.of(d.removed, d.added, full, policyOk)
       val out: Iterator[InternalRow] =
-        (pre.iterator.collect { case (k, (n, f)) if n > 0 =>
-          Iterator.fill(n)((k, f, preType))
-        }.flatten ++ post.iterator.map { case (k, f) => (k, f, postType) })
+        (pre.map { case (k, f) => (k, f, preType) } ++ post.map { case (k, f) => (k, f, postType) })
           .map { case (vals, fn, ct) =>
             val fileName = UTF8String.fromString(fn)
             val changeType = UTF8String.fromString(ct)
@@ -5890,9 +5691,11 @@ private[v2] object MemMultiCommit {
 }
 
 /** What a table's properties ask of every part file a write emits: the
-  * CHECK constraints each row must pass, the columns that get bloom,
-  * NDV and histogram sketches, and the partition spec whose transform
-  * ranges are stamped. Derived once per statement by [[MemWritePolicy.of]].
+  * CHECK constraints each row must pass (the DSv2 task writer enforces
+  * them), and the columns that get bloom, NDV and histogram sketches
+  * plus the partition spec whose transform ranges are stamped (the
+  * [[MemFileWriter]] every part file is written through keeps them).
+  * Derived once per statement by [[MemWritePolicy.of]].
   */
 private[v2] case class MemWritePolicy(checks: Seq[MemCheck.Rule], bloomFor: Seq[String],
     partSpec: Option[String], ndvFor: Seq[String], histFor: Seq[String])
@@ -5903,6 +5706,160 @@ private[v2] object MemWritePolicy {
   def of(props: Map[String, String], schema: StructType): MemWritePolicy =
     MemWritePolicy(MemCheck.compile(props, schema), MemBloom.colsOf(props),
       props.get("graft.partition"), MemNdv.colsOf(props), MemHist.colsOf(props))
+}
+
+/** THE part-file writer: every data file the catalog writes — a DSv2
+  * task's part (batch, streaming, CDC, COW and MoR writes), an OPTIMIZE
+  * rewrite, a metadata DELETE's survivor — is encoded here, so one
+  * file's manifest entry never depends on which statement wrote it.
+  * Opens the row-codec stream at `path` and writes the header; each
+  * [[write]] encodes one row and folds it into every per-file statistic:
+  * the integral MIN/MAX zone maps, `#rows`, the `pt:`/`ptn:`/`ptv:`
+  * partition stamps of `policy`'s spec and its bloom, NDV and histogram
+  * sketches. [[finish]] closes the stream and returns the file's entry,
+  * or None after deleting the file when no row was written. Rows are
+  * not checked here: a task writer enforces `policy.checks` before the
+  * row arrives, and a rewrite re-encodes rows that already passed them.
+  */
+private[v2] final class MemFileWriter(val path: Path, schema: StructType,
+    policy: MemWritePolicy) {
+  private val out = new java.io.DataOutputStream(
+    new java.io.BufferedOutputStream(Files.newOutputStream(path)))
+  MemCodec.writeHeader(out, schema) // the file's write-time column count
+  private var rows = 0L
+  private val types = schema.fields.map(_.dataType)
+  private def colsWhere(p: (StructField, DataType) => Boolean): Array[Int] =
+    schema.fields.indices.filter(i => p(schema.fields(i), types(i))).toArray
+  // the primitive read behind the zone maps and histograms: no boxing
+  private def longAt(row: InternalRow, i: Int): Long = types(i) match {
+    case LongType | TimestampType => row.getLong(i)
+    case _ => row.getInt(i).toLong
+  }
+  // per-file MIN/MAX zone maps over the integral columns — the skipping
+  // metadata the manifest carries per data file
+  private val statCols = colsWhere((_, dt) => dt == LongType || dt == IntegerType ||
+    dt == TimestampType || dt == DateType)
+  private val lo = Array.fill(statCols.length)(Long.MaxValue)
+  private val hi = Array.fill(statCols.length)(Long.MinValue)
+  // bloom and NDV sketches hash the row's Catalyst value (MemNdv.hash's
+  // canonical string); histograms are integral-only, like the zone maps
+  private val bloomCols = colsWhere((f, _) => policy.bloomFor.contains(f.name))
+  private val bloomBits = bloomCols.map(_ => new Array[Long](MemBloom.Words))
+  private val ndvCols = colsWhere((f, _) => policy.ndvFor.contains(f.name))
+  private val ndvs = ndvCols.map(_ => new MemNdv.Tracker)
+  private val histCols = colsWhere((f, dt) => policy.histFor.contains(f.name) &&
+    (dt == LongType || dt == IntegerType))
+  private val hists = histCols.map(_ => new MemHist.Tracker)
+  // hidden-partitioning transform ranges: one per declared transform (a
+  // multi-transform spec stamps several), each riding the stats map as a
+  // virtual column whose KEY carries the spec ("pt:bucket(4,okey)"), so
+  // a file written under an evolved-away spec keeps pruning under the
+  // spec it was actually written with
+  private val pts: Array[(MemPart.Spec, Int)] =
+    MemPart.specsWithIdx(policy.partSpec, schema).toArray
+  private val ptLo = Array.fill(pts.length)(Long.MaxValue)
+  private val ptHi = Array.fill(pts.length)(Long.MinValue)
+  // per-transform NULL row count ("ptn:" stamp): a `pt:` range only
+  // covers NON-NULL source values, so partition-tuple purity (SPJ)
+  // additionally needs PROOF the file holds no null-key rows — stamped
+  // even when zero, because absence must read as unknown
+  private val ptNulls = Array.fill(pts.length)(0L)
+  // string-identity transforms: the ONE raw value every row holds (ptv
+  // stamp) — null until seen; purity drops on a second distinct value
+  // (prefix-code equality is NOT value equality)
+  private val ptStrId = pts.map { case (s, i) =>
+    s.isInstanceOf[MemPart.Identity] && types(i) == StringType
+  }
+  private val ptRaw = Array.fill[String](pts.length)(null)
+  private val ptRawPure = Array.fill(pts.length)(true)
+
+  /** Bytes written so far, header included (OPTIMIZE's roll threshold). */
+  def bytes: Long = out.size().toLong
+
+  def write(row: InternalRow): Unit = {
+    MemCodec.writeRow(out, row, schema)
+    rows += 1
+    var s = 0
+    while (s < statCols.length) {
+      val i = statCols(s)
+      if (!row.isNullAt(i)) {
+        val v = longAt(row, i)
+        if (v < lo(s)) lo(s) = v
+        if (v > hi(s)) hi(s) = v
+      }
+      s += 1
+    }
+    var b = 0
+    while (b < bloomCols.length) {
+      val i = bloomCols(b)
+      if (!row.isNullAt(i)) MemBloom.add(bloomBits(b), row.get(i, types(i)))
+      b += 1
+    }
+    var n = 0
+    while (n < ndvCols.length) {
+      val i = ndvCols(n)
+      if (!row.isNullAt(i)) ndvs(n).add(MemNdv.hash(row.get(i, types(i))))
+      n += 1
+    }
+    var h = 0
+    while (h < histCols.length) {
+      val i = histCols(h)
+      if (!row.isNullAt(i)) hists(h).add(longAt(row, i))
+      h += 1
+    }
+    var p = 0
+    while (p < pts.length) {
+      val (spec, i) = pts(p)
+      if (row.isNullAt(i)) ptNulls(p) += 1
+      else {
+        MemPart.evalAt(spec, types(i), row.get(i, types(i))).foreach { t =>
+          if (t < ptLo(p)) ptLo(p) = t
+          if (t > ptHi(p)) ptHi(p) = t
+        }
+        if (ptStrId(p) && ptRawPure(p)) {
+          val raw = row.getUTF8String(i).toString
+          if (ptRaw(p) == null) ptRaw(p) = raw
+          else if (ptRaw(p) != raw) { ptRaw(p) = null; ptRawPure(p) = false }
+        }
+      }
+      p += 1
+    }
+  }
+
+  /** Close the file and return its manifest entry, named after `path`;
+    * None (the file deleted) when no row was written.
+    */
+  def finish(): Option[MemCatalog.FileEntry] = {
+    out.close()
+    if (rows == 0) { Files.deleteIfExists(path); None }
+    else {
+      val name = (i: Int) => schema.fields(i).name
+      // "#rows" rides the stats map (the '#' can never be a schema
+      // column): exact per-file row counts give the planner a REAL
+      // numRows, not just byte sizes — the cardinality side of CBO
+      val stats = statCols.indices.collect {
+        case s if lo(s) <= hi(s) => name(statCols(s)) -> (lo(s), hi(s))
+      }.toMap + ("#rows" -> (rows, rows)) ++
+        pts.indices.collect { case p if ptLo(p) <= ptHi(p) =>
+          pts(p)._1.statKey -> (ptLo(p), ptHi(p)) } ++
+        pts.indices.map(p => pts(p)._1.nullKey -> (ptNulls(p), ptNulls(p)))
+      Some(MemCatalog.FileEntry(path.getFileName.toString, stats,
+        blooms = bloomCols.indices.map(b =>
+          name(bloomCols(b)) -> MemBloom.encode(bloomBits(b))).toMap,
+        ndvs = ndvCols.indices.map(n => name(ndvCols(n)) -> MemNdv.encode(ndvs(n).minima)).toMap,
+        hists = histCols.indices.map(h =>
+          name(histCols(h)) -> MemHist.encode(hists(h).snapshot)).toMap,
+        ptvs = pts.indices.collect {
+          case p if ptStrId(p) && ptRawPure(p) && ptRaw(p) != null && ptNulls(p) == 0L =>
+            pts(p)._1.statKey -> ptRaw(p)
+        }.toMap))
+    }
+  }
+
+  /** Close and delete the file: the write it belonged to failed or kept
+    * nothing.
+    */
+  def abort(): Unit = { out.close(); Files.deleteIfExists(path); () }
 }
 
 /** `inflight = None`: writers write into the destination dir itself (a
@@ -6188,168 +6145,28 @@ private[v2] class MemWriterFactory(dest: String, schema0: StructType, inflight: 
 
   private def single(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private var rows = 0L
-      // per-file MIN/MAX zone-map stats over the integral columns — the
-      // skipping metadata the manifest carries per data file
-      private val statCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == TimestampType || f.dataType == DateType => (f.name, i)
-      }
-      // hidden-partitioning transform ranges: one per declared transform
-      // (a multi-transform spec stamps several), each riding the stats
-      // map as a virtual column whose KEY carries the spec
-      // ("pt:bucket(4,okey)"), so a file written under an evolved-away
-      // spec keeps pruning under the spec it was actually written with
-      private val pts: Seq[(MemPart.Spec, Int)] = MemPart.specsWithIdx(policy.partSpec, schema)
-      private val ptLo = Array.fill(pts.length)(Long.MaxValue)
-      private val ptHi = Array.fill(pts.length)(Long.MinValue)
-      // per-transform NULL row count ("ptn:" stamp): a `pt:` range only
-      // covers NON-NULL source values, so partition-tuple purity (SPJ)
-      // additionally needs PROOF the file holds no null-key rows —
-      // stamped even when zero, because absence must read as unknown
-      private val ptNulls = Array.fill(pts.length)(0L)
-      // string-identity transforms: the ONE raw value every row holds
-      // (ptv stamp) — null until seen; purity flag drops on a second
-      // distinct value (prefix-code equality is NOT value equality)
-      private val ptStrId: Array[Boolean] = pts.map { case (s, i) =>
-        s.isInstanceOf[MemPart.Identity] && schema.fields(i).dataType == StringType
-      }.toArray
-      private val ptRaw = Array.fill[String](pts.length)(null)
-      private val ptRawPure = Array.fill(pts.length)(true)
-      // per-file bloom sketches for the configured equality-probe columns
-      private val bloomCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if policy.bloomFor.contains(f.name) => (f.name, i, f.dataType)
-      }
-      private val bloomBits = bloomCols.map(_ => Array.fill(MemBloom.Words)(0L))
-      // per-file K-minimum-values distinct sketches for the CBO
-      private val ndvCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if policy.ndvFor.contains(f.name) => (f.name, i, f.dataType)
-      }
-      private val ndvTrackers = ndvCols.map(_ => new MemNdv.Tracker)
-      // per-file value-distribution histograms for the CBO's range
-      // selectivity — integral columns only, like the zone maps
-      private val histCols = schema.fields.zipWithIndex.collect {
-        case (f, i) if policy.histFor.contains(f.name) &&
-          (f.dataType == LongType || f.dataType == IntegerType) => (f.name, i, f.dataType)
-      }
-      private val histTrackers = histCols.map(_ => new MemHist.Tracker)
-      private val lo = Array.fill(statCols.length)(Long.MaxValue)
-      private val hi = Array.fill(statCols.length)(Long.MinValue)
-      private lazy val staged: Path = {
-        val d = inflight.fold(Paths.get(dest))(Paths.get(dest, _))
-        Files.createDirectories(d)
-        Files.createTempFile(d, s"part-$partitionId-$taskId-", ".bin")
-      }
-      private lazy val out = {
-        val o = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(Files.newOutputStream(staged)))
-        MemCodec.writeHeader(o, schema) // the file's write-time column count
-        o
-      }
+      // opened on the first row: a task that writes none stages no file
+      private var file: MemFileWriter = _
 
       override def write(record: InternalRow): Unit = {
         // CHECK constraints gate every row BEFORE it reaches a part file:
         // a violation aborts the task, the driver aborts the statement,
         // and only staged (invisible) files ever held the bad row
         MemCheck.enforce(policy.checks, record)
-        var b = 0
-        while (b < bloomCols.length) {
-          val (_, i, dt) = bloomCols(b)
-          if (!record.isNullAt(i)) MemBloom.add(bloomBits(b), dt match {
-            case LongType | TimestampType => record.getLong(i)
-            case IntegerType => record.getInt(i)
-            case _ => record.getUTF8String(i)
-          })
-          b += 1
+        if (file == null) {
+          val d = inflight.fold(Paths.get(dest))(Paths.get(dest, _))
+          Files.createDirectories(d)
+          file = new MemFileWriter(
+            Files.createTempFile(d, s"part-$partitionId-$taskId-", ".bin"), schema, policy)
         }
-        var n = 0
-        while (n < ndvCols.length) {
-          val (_, i, dt) = ndvCols(n)
-          if (!record.isNullAt(i)) ndvTrackers(n).add(MemNdv.hash(dt match {
-            case LongType | TimestampType => record.getLong(i)
-            case IntegerType => record.getInt(i)
-            case _ => record.getUTF8String(i)
-          }))
-          n += 1
-        }
-        var h = 0
-        while (h < histCols.length) {
-          val (_, i, dt) = histCols(h)
-          if (!record.isNullAt(i)) histTrackers(h).add(dt match {
-            case LongType => record.getLong(i)
-            case _ => record.getInt(i).toLong
-          })
-          h += 1
-        }
-        MemCodec.writeRow(out, record, schema)
-        var s = 0
-        while (s < statCols.length) {
-          val i = statCols(s)._2
-          if (!record.isNullAt(i)) {
-            val v = schema.fields(i).dataType match {
-              case LongType | TimestampType => record.getLong(i)
-              case _ => record.getInt(i).toLong
-            }
-            if (v < lo(s)) lo(s) = v
-            if (v > hi(s)) hi(s) = v
-          }
-          s += 1
-        }
-        var pi = 0
-        while (pi < pts.length) {
-          val (spec, i) = pts(pi)
-          if (record.isNullAt(i)) ptNulls(pi) += 1
-          else {
-            MemPart.evalAt(spec, schema.fields(i).dataType,
-              schema.fields(i).dataType match {
-                case LongType | TimestampType => java.lang.Long.valueOf(record.getLong(i))
-                case IntegerType | DateType => java.lang.Integer.valueOf(record.getInt(i))
-                case _ => record.getUTF8String(i)
-              }).foreach { t =>
-              if (t < ptLo(pi)) ptLo(pi) = t
-              if (t > ptHi(pi)) ptHi(pi) = t
-            }
-            if (ptStrId(pi) && ptRawPure(pi)) {
-              val s = record.getUTF8String(i).toString
-              if (ptRaw(pi) == null) ptRaw(pi) = s
-              else if (ptRaw(pi) != s) { ptRaw(pi) = null; ptRawPure(pi) = false }
-            }
-          }
-          pi += 1
-        }
-        rows += 1
+        file.write(record)
       }
 
       override def commit(): WriterCommitMessage =
-        if (rows == 0) MemCommit("", MemCatalog.FileEntry("", Map.empty))
-        else {
-          out.close()
-          // "#rows" rides the stats map (the '#' can never be a schema
-          // column): exact per-file row counts give the planner a REAL
-          // numRows, not just byte sizes — the cardinality side of CBO
-          val stats = statCols.indices.collect {
-            case s if lo(s) <= hi(s) => statCols(s)._1 -> (lo(s), hi(s))
-          }.toMap + ("#rows" -> (rows, rows)) ++
-            pts.indices.collect { case p if ptLo(p) <= ptHi(p) =>
-              pts(p)._1.statKey -> (ptLo(p), ptHi(p)) } ++
-            pts.indices.map(p => ("ptn:" + pts(p)._1.render) -> (ptNulls(p), ptNulls(p)))
-          val ptvStamps = pts.indices.collect {
-            case p if ptStrId(p) && ptRawPure(p) && ptRaw(p) != null && ptNulls(p) == 0L =>
-              pts(p)._1.statKey -> ptRaw(p)
-          }.toMap
-          MemCommit(staged.toString, MemCatalog.FileEntry(staged.getFileName.toString, stats,
-            blooms = bloomCols.indices.map(b =>
-              bloomCols(b)._1 -> MemBloom.encode(bloomBits(b))).toMap,
-            ndvs = ndvCols.indices.map(n =>
-              ndvCols(n)._1 -> MemNdv.encode(ndvTrackers(n).minima)).toMap,
-            hists = histCols.indices.map(h =>
-              histCols(h)._1 -> MemHist.encode(histTrackers(h).snapshot)).toMap,
-            ptvs = ptvStamps))
-        }
+        Option(file).flatMap(_.finish()).fold(MemCommit("", MemCatalog.FileEntry("", Map.empty)))(
+          MemCommit(file.path.toString, _))
 
-      override def abort(): Unit = {
-        if (rows > 0) { out.close(); Files.deleteIfExists(staged) }
-      }
+      override def abort(): Unit = if (file != null) file.abort()
 
       override def close(): Unit = ()
     }

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (`MemCatalog.proveFilesPruned`), the build-once artifact publish
   * (`CorpusKey.buildOnce`) and the catalog's commit path (one retrying
   * manifest commit loop, one `#seq` stamp, one staged-part publish and
-  * discard). Scans report what they pruned as their own SQL metrics,
+  * discard, one per-file stats accumulator). Scans report what they pruned as their own SQL metrics,
   * never through JVM-global state, MV registrations live on the session
   * they arm, and the main tree holds no `@volatile var` and no `var`
   * member of a top-level object at all. Fixture tables are read only
@@ -133,6 +133,16 @@ class WiringGuardSpec extends AnyFunSuite {
       Set("MemCatalog.scala" -> "publish", "MemCatalog.scala" -> "discard"))
     assert(destructures.isEmpty,
       s"publish or discard staged parts with MemCommit.publish/discard: ${destructures.mkString(", ")}")
+  }
+
+  test("one per-file stats accumulator in the catalog") {
+    // every part file's zone maps, partition stamps and sketches come
+    // from MemFileWriter: one site of each sketch and of the null stamp
+    val sites = Seq("new MemNdv.Tracker", "new MemHist.Tracker", "MemBloom.add(", "\"ptn:\" +")
+      .map(n => n -> offenders(n, allowed = ""))
+    val copies = sites.filter(_._2.size != 1)
+    assert(copies.isEmpty,
+      s"build FileEntry stats only through MemFileWriter: ${copies.mkString(", ")}")
   }
 
   test("scans report pruning only as their own metrics: no JVM-global seam, no @volatile var") {

@@ -1966,6 +1966,63 @@ class MemCatalogSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("INSERT, OPTIMIZE and a metadata DELETE stamp the same entry for the same rows") {
+    // one row set R over every stamped type, written three ways: one
+    // INSERT; two INSERTs merged by OPTIMIZE; R plus extra rows that a
+    // metadata DELETE removes again. Each way leaves one live file
+    // holding exactly R, so its stats, partition stamps and sketches
+    // must match whichever writer produced it.
+    val cat = freshCatalog("onewriter")
+    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    def rows(from: Int, until: Int): String =
+      s"SELECT id AS k, CAST(id * 3 AS INT) AS i, " +
+        "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d, " +
+        "timestamp_seconds(1704067200 + id * 3600) AS ts, concat('s', id) AS s, " +
+        s"CAST(id AS DOUBLE) * 1.5 AS x, 'grp' AS g FROM range($from, $until, 1, 1)"
+    def entryOf(name: String)(write: String => Unit): MemCatalog.FileEntry = {
+      spark.sql(s"CREATE TABLE $cat.t.$name (k BIGINT, i INT, d DATE, ts TIMESTAMP, " +
+        "s STRING, x DOUBLE, g STRING) TBLPROPERTIES ('ndvFor'='k,i,d,ts,s,x', " +
+        "'bloomFor'='k,i,s', 'histFor'='k,i', 'graft.partition'='identity(g),years(d)')")
+      write(s"$cat.t.$name")
+      val entries = MemCatalog.liveEntries(java.nio.file.Paths.get(root, s"t__$name"))
+      assert(entries.size == 1, s"$name: expected one live file holding R, got ${entries.map(_.name)}")
+      entries.head
+    }
+    val inserted = entryOf("ins")(t => spark.sql(s"INSERT INTO $t ${rows(0, 80)}"))
+    val optimized = entryOf("opt") { t =>
+      spark.sql(s"INSERT INTO $t ${rows(0, 40)}")
+      spark.sql(s"INSERT INTO $t ${rows(40, 80)}")
+      val (retired, created) = MemCatalog.compact(java.nio.file.Paths.get(root, "t__opt"))
+      assert((retired, created) == (2, 1), s"expected one merge, got ($retired, $created)")
+    }
+    val deleted = entryOf("del") { t =>
+      spark.sql(s"INSERT INTO $t ${rows(0, 100)}")
+      spark.sql(s"DELETE FROM $t WHERE k IN (${(80 until 100).mkString(", ")})")
+    }
+    assert(deleted.name.startsWith("part-del-"),
+      s"expected the deleteWhere rewrite path, got ${deleted.name}")
+    def stamped(e: MemCatalog.FileEntry) =
+      e.copy(name = "", sortedBy = None, stats = e.stats - "#seq")
+    assert(inserted.ndvs.keySet == Set("k", "i", "d", "ts", "s", "x") &&
+      inserted.blooms.keySet == Set("k", "i", "s") && inserted.hists.keySet == Set("k", "i") &&
+      inserted.ptvs == Map("pt:identity(g)" -> "grp") && inserted.stats("#rows") == (80L, 80L))
+    assert(stamped(optimized) == stamped(inserted),
+      s"OPTIMIZE stamped\n${stamped(optimized).render}\nINSERT stamped\n${stamped(inserted).render}")
+    assert(stamped(deleted) == stamped(inserted),
+      s"DELETE stamped\n${stamped(deleted).render}\nINSERT stamped\n${stamped(inserted).render}")
+    // 80 distinct doubles are not one value: the sketch hashed the row's own
+    assert(MemNdv.estimate(MemNdv.decode(inserted.ndvs("x"))) >= MemNdv.K)
+    // the survivor keeps the CBO's column statistics
+    val key = "spark.sql.cbo.enabled"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      val stats = spark.table(s"$cat.t.del").queryExecution.optimizedPlan.stats.attributeStats
+      assert(stats.exists { case (a, c) => a.name == "k" && c.distinctCount.isDefined },
+        s"k's distinct count must survive the metadata DELETE: $stats")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   // ---- BRANCHES + WRITE-AUDIT-PUBLISH ----
 
   test("branch writes are invisible to main; fast-forward publishes them in one commit") {
